@@ -5,7 +5,8 @@ Reference-parity flows, re-expressed as lazy DataFrame lineages:
 * :func:`level0_to_level1` — the reference's ``level0_to_level1``
   (``cassandra_fs_pp/fs_pp.py:68-106``): per-dataset TOA5 scans (bales /
   onefile / serviced append, ``:109-217``), outer union, all-NaN column
-  prune, exact dedup, deterministic keep-first time dedup.
+  prune, deterministic keep-first time dedup (which subsumes the exact
+  dedup).
 * :func:`normalise_udg` — ``_normalise_udg`` (``fs_pp.py:452-511``): the
   piecewise height-change offset (W9) with auto-derived deltas from
   pre/post-event medians (A1).
@@ -116,8 +117,17 @@ def level0_to_level1(
     (file order, then row order). Spark's ``dropDuplicates`` keeps an
     arbitrary row, so the lineage carries an explicit ``(_seq, RECORD)``
     ordering — ``_seq`` is the global file index, ``RECORD`` the logger's
-    per-file monotone sequence number — and both dedups are keep-first
-    row_number windows over it (SURVEY §7.4).
+    per-file monotone sequence number — and the dedup is a keep-first
+    row_number window over it (SURVEY §7.4).
+
+    The reference's exact-row dedup (P2, ``drop_duplicates()``) runs before
+    its time dedup (P3). Here P3 alone gives the same rows: ``TIMESTAMP``
+    and ``RECORD`` are part of P2's key, so P2 drops a row only in favour
+    of an identical one with the same or a smaller ``_seq``, and never
+    removes P3's pick without keeping an identical copy. Ties on
+    ``(_seq, RECORD)`` are arbitrary in both forms. Skipping P2 saves one
+    all-column shuffle and sort per station (differential-tested in
+    ``tests/test_toa5_pipeline.py``).
     """
     per_dataset = resolve_level0_paths(cfg, data_root)
     flat = [p for ds_paths in per_dataset for p in ds_paths]
@@ -151,11 +161,8 @@ def level0_to_level1(
 
     # P1 all-null column prune (one count pass, then Catalyst prunes the scan)
     union = prune_all_null_columns(union, protect=(TIME, "RECORD", "_seq"))
-    data_cols = [c for c in union.columns if c != "_seq"]
 
-    # P2 exact row dedup, keep-first in concat order (provenance excluded)
-    union = dedup_keep_first(union, keys=data_cols, order_by=["_seq"])
-    # P3 keep-first time dedup
+    # P3 keep-first time dedup; it subsumes P2's exact-row dedup (docstring)
     union = dedup_keep_first(union, keys=[TIME], order_by=["_seq", "RECORD"])
 
     if not keep_provenance:
@@ -183,6 +190,12 @@ def _to_ts(d) -> _dt.datetime:
     if isinstance(d, _dt.date):
         return _dt.datetime(d.year, d.month, d.day)
     return _dt.datetime.fromisoformat(str(d))
+
+
+def _utc(d: _dt.datetime) -> _dt.datetime:
+    """A naive datetime (the reference's tz-naive UTC config dates) as a
+    tz-aware UTC one."""
+    return d if d.tzinfo else d.replace(tzinfo=_dt.timezone.utc)
 
 
 def normalise_udg(
@@ -369,13 +382,16 @@ def fleet_normalise_udg(
     if auto_rows:
         # r18 (VERDICT r17 item 8): LocalTableScan route instead of a
         # pickled-row RDD — the broadcast build below reads it driver-
-        # side with no Python-worker job.  Naive datetimes land as
-        # session-tz (UTC) timestamps on BOTH routes; value equality is
-        # pinned by tests/test_fleet.py::test_udg_event_dims_local_table
+        # side with no Python-worker job.  Dates go in as tz-aware UTC:
+        # the Arrow route reads a naive datetime in the session time zone
+        # but the pickled fallback in the host's, so only aware values
+        # land identically on both (tests/test_fleet.py)
         from cassandra_fs_pp_spark.session import local_table
 
         ev_df = local_table(
-            spark, auto_rows, f"{site_col} string, __k int, __date timestamp"
+            spark,
+            [(site, k, _utc(date)) for site, k, date in auto_rows],
+            f"{site_col} string, __k int, __date timestamp",
         )
         d1 = F.expr("INTERVAL 1 DAY")
         h4 = F.expr("INTERVAL 4 HOURS")
@@ -429,13 +445,14 @@ def fleet_normalise_udg(
     # -- re-enter the lineage: per-site event array via one broadcast join --
     # r18: dict-shaped struct cells so the Arrow/pandas LocalTableScan
     # route can convert them (tuples fall back to the pickled path);
-    # both routes accept dicts, so the fallback stays value-identical
+    # both routes accept dicts and tz-aware dates, so the fallback stays
+    # value-identical
     from cassandra_fs_pp_spark.session import local_table
 
     dim = local_table(
         spark,
         [
-            (site, [{"d": d, "delta": float(dl)} for d, dl in evs])
+            (site, [{"d": _utc(d), "delta": float(dl)} for d, dl in evs])
             for site, evs in deltas_by_site.items()
         ],
         f"{site_col} string, __evs array<struct<d:timestamp,delta:double>>",

@@ -17,13 +17,37 @@ Scale notes (100 TB design stance):
   hand-tuned shuffle sizing when data volume jumps 1000x.
 * shuffle partitions default to cluster parallelism locally; on a real
   cluster AQE's coalescing makes the initial number mostly a ceiling.
+
+Codegen cache: every whole-stage-codegen class Spark generates is compiled
+by Janino, then JIT-compiled, and kept in one JVM-global LRU cache keyed by
+its source text (``spark.sql.codegen.cache.maxEntries``, default 100).  One
+pass of the engine's work generates more classes than that: about 130 for
+the one-station L0->L1->L2 pipeline, 190 for a four-station fleet, 250 for
+one query per registry family and about 1,040 for ``bench.HEADLINE`` plus
+``DIAGNOSTICS`` at sf0.1 (distinct classes over two passes, counted with
+an unbounded cache).  With 100 entries the LRU evicts every class before
+its next use, so a repeated pass recompiles all of them.
+:data:`CODEGEN_CACHE_ENTRIES` sizes the cache to hold that working set.
+The conf is static: it only takes effect when the session (and, for the
+cache itself, the JVM) is built, so :func:`tune` cannot apply it to a
+foreign session and :func:`get_spark` warns when ``getOrCreate()`` hands
+back an existing session built with another size.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+# Entries in Spark's compiled-class cache: the smallest power of two at
+# least twice the largest working set above (bench.HEADLINE + DIAGNOSTICS
+# at sf0.1), so the suite still fits when it grows or runs at another scale.
+CODEGEN_CACHE_ENTRIES = 4096
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 
 # Runtime-settable (SQLConf) knobs — safe to apply to a foreign session.
 RUNTIME_CONF: dict[str, str] = {
@@ -60,7 +84,10 @@ RUNTIME_CONF: dict[str, str] = {
 
 
 def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
-    """Apply engine runtime conf to an existing session (idempotent)."""
+    """Apply engine runtime conf to an existing session (idempotent).
+
+    A key the session refuses (e.g. a static conf on this build) is logged
+    as a warning and skipped."""
     conf = dict(RUNTIME_CONF)
     if shuffle_partitions is None:
         try:
@@ -72,8 +99,8 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     for key, value in conf.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass  # non-runtime-settable on this build; keep going
+        except Exception as exc:
+            log.warning("tune: could not set %s=%s: %s", key, value, exc)
     return spark
 
 
@@ -106,8 +133,9 @@ def local_table(spark: SparkSession, rows, schema: str):
                 {c: [r[i] for r in rows] for i, c in enumerate(cols)}
             )
             return spark.createDataFrame(pdf, schema=schema)
-        except Exception:
-            pass
+        except Exception as exc:
+            log.debug("local_table: Arrow route refused %s (%s); using pickled rows",
+                      schema, exc)
     return spark.createDataFrame(rows, schema)
 
 
@@ -138,6 +166,9 @@ def get_spark(
     """Build (or fetch) a tuned local session.
 
     Honors ``SPARK_GRAFT_CPUS`` for local core count (driver contract).
+    When a session already exists, ``getOrCreate()`` returns it and drops
+    the static confs set here without a word; a codegen cache size other
+    than :data:`CODEGEN_CACHE_ENTRIES` is logged as a warning.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -149,6 +180,14 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
+    have = spark.conf.get(CODEGEN_CACHE_CONF)
+    if have != str(CODEGEN_CACHE_ENTRIES):
+        log.warning(
+            "get_spark: reusing a session whose %s is %s, not %d; every "
+            "generated class past that many is recompiled on each pass",
+            CODEGEN_CACHE_CONF, have, CODEGEN_CACHE_ENTRIES,
+        )
     return tune(spark, shuffle_partitions)

@@ -56,7 +56,8 @@ def test_bench_json_contract():
     """bench.py must print exactly one parseable JSON line with the
     driver's expected keys — including the r11 `calib` drift canary
     and the r15 `calib_io` scan-leg canary
-    (positive, and small relative to any real suite wall). Runs a
+    (positive, and small relative to any real suite wall), and the
+    additive `codegen_compiles` count. Runs a
     1-query subset at sf0.001 in a fresh process, like the driver."""
     import json
     import os
@@ -82,6 +83,7 @@ def test_bench_json_contract():
     r = json.loads(lines[0])
     assert set(r) == {
         "metric", "value", "unit", "queries", "sf", "calib", "calib_io",
+        "codegen_compiles",
     }
     assert r["metric"] == "headline_suite_wall" and r["unit"] == "sec"
     assert r["sf"] == 0.001
@@ -89,6 +91,8 @@ def test_bench_json_contract():
     assert r["value"] == round(sum(r["queries"].values()), 3)
     assert 0 < r["calib"] < 30
     assert 0 < r["calib_io"] < 30
+    # the warm pass compiled the query's classes and the cache kept them
+    assert 0 <= r["codegen_compiles"] <= 5
 
 
 def test_bench_output_keeps_diagnostics_inside_queries():

@@ -223,3 +223,62 @@ def test_fleet_tdr_depth_matches_per_site(spark):
                 r["depth"], abs=1e-12
             )
     assert n == len(got) == 120
+
+
+def test_udg_event_dims_tz_independent(spark, fleet_l1, monkeypatch):
+    """ADVICE r18: on a non-UTC host the Arrow route and the pickled-row
+    fallback of ``local_table`` must land the configured event dates on the
+    same UTC instants, so the normalised series cannot depend on which
+    route ran."""
+    import os
+    import time
+
+    from cassandra_fs_pp_spark import session
+
+    events_by_site = {s: ev for s, (_, _, ev) in SITES.items()}
+    real = session.local_table
+    dims: list = []
+
+    def spy(spark_, rows, schema):
+        df = real(spark_, rows, schema)
+        dims.append(df)
+        return df
+
+    def refuse(schema):
+        raise ValueError("force the pickled-row route")
+
+    def run():
+        dims.clear()
+        out = fleet_normalise_udg(fleet_l1, events_by_site)
+        plans = [d._jdf.queryExecution().executedPlan().toString() for d in dims]
+        # casts render in the session time zone (UTC), not the host's
+        got = sorted(
+            out.select("site", F.col("TIMESTAMP").cast("string"), "TCDT").collect()
+        )
+        ev = sorted(
+            r[0] for d in dims for r in d.select(F.to_json(F.struct("*"))).collect()
+        )
+        return plans, ev, got
+
+    monkeypatch.setattr(session, "local_table", spy)
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Nuuk"
+    time.tzset()
+    try:
+        arrow_plans, arrow_ev, arrow = run()
+        monkeypatch.setattr(session, "_split_ddl", refuse)
+        pickled_plans, pickled_ev, pickled = run()
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+    assert len(arrow_plans) == len(pickled_plans) == 2
+    assert all("LocalTableScan" in p for p in arrow_plans), arrow_plans
+    assert all("ExistingRDD" in p for p in pickled_plans), pickled_plans
+    assert arrow_ev == pickled_ev
+    # the auto event's date, as configured (naive = UTC)
+    assert any('"__date":"2024-01-04T00:00:00.000Z"' in e for e in arrow_ev), arrow_ev
+    assert arrow == pickled

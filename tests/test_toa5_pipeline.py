@@ -184,6 +184,77 @@ def test_level0_to_level1_dedup(l1):
     assert i95["RECORD"] == 95
 
 
+def test_level0_to_level1_one_window_matches_two(spark, tmp_path):
+    """The engine's single keep-first time dedup keeps the same rows as the
+    reference's two steps, exact-row dedup then time dedup, both as
+    keep-first windows over ``(_seq, RECORD)``."""
+    from pyspark.sql import functions as F
+
+    from cassandra_fs_pp_spark.operators.dedup import dedup_keep_first
+
+    ds = tmp_path / "fielddata"
+    (ds / "serviced").mkdir(parents=True)
+    null_ts = _row(0, 100)
+    null_ts[0] = '"2024-01-01 25:00:00"'  # timestamp-shaped, unparseable
+    null_ts_other = _row(0, 101)
+    null_ts_other[0] = null_ts[0]
+    null_ts_other[2] = "55.0"
+    conflict = _row(5, 700)  # bale 1's timestamp 5, other data
+    conflict[2] = "99.0"
+    null_rec = _row(15, 0)  # bale 2's timestamp 15: null RECORD sorts first
+    null_rec[1] = "NAN"
+    null_rec[2] = "77.0"
+    bales = [
+        [_row(i, i) for i in range(0, 12)] + [null_ts],
+        # rows 8..11 and the null-timestamp row repeat bale 1 exactly
+        [_row(i, i) for i in range(8, 20)] + [conflict, null_rec, null_ts, null_ts_other],
+        [_row(i, i) for i in range(18, 24)] + [null_rec],
+    ]
+    files = [ds / "MainTable1.dat", ds / "MainTable2.dat", ds / "serviced" / "MainTable9.dat"]
+    for f, rows in zip(files, bales):
+        _toa5_file(f, rows)
+    cfg_file = tmp_path / "site.toml"
+    cfg_file.write_text(
+        textwrap.dedent(
+            """\
+            site="TESTFS"
+            [level0_1]
+            index_col='TIMESTAMP'
+            [level0]
+            [level0.fielddata]
+            subpath=""
+            type="bales"
+            bales_start=1
+            bales_stop=2
+            """
+        )
+    )
+    one = level0_to_level1(
+        spark, load_config(str(cfg_file)), str(tmp_path), keep_provenance=True
+    )
+    cols = one.columns
+
+    union = None
+    for seq, f in enumerate(files):
+        df = read_toa5(spark, [str(f)], with_provenance=False)
+        df = df.drop("Dead").withColumn("_seq", F.lit(seq))
+        union = df if union is None else union.unionByName(df)
+    data_cols = [c for c in union.columns if c != "_seq"]
+    two = dedup_keep_first(union, keys=data_cols, order_by=["_seq"])
+    two = dedup_keep_first(two, keys=["TIMESTAMP"], order_by=["_seq", "RECORD"])
+
+    def rows(df):
+        return sorted(r[0] for r in df.select(F.to_json(F.struct(*cols))).collect())
+
+    got, want = rows(one), rows(two.select(*cols))
+    assert got == want
+    assert union.count() > len(got) == 24 + 1  # 24 timestamps and one null
+    kept = {(r["TIMESTAMP"], r["RECORD"], r["_seq"]): r["BattV_Min"] for r in one.collect()}
+    assert kept[(T0 + 5 * FREQ, 5, 0)] == pytest.approx(13.04)
+    assert kept[(T0 + 15 * FREQ, None, 1)] == pytest.approx(77.0)
+    assert kept[(None, 100, 0)] == pytest.approx(13.04)
+
+
 def test_level0_to_level1_prunes_all_null(l1):
     assert "Dead" not in l1.columns
     assert "TCDT" in l1.columns
