@@ -3,7 +3,14 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value-hash -> CORRECTNESS_r{N}.json).  The gate checks the first 50
+registry entries.
+
+Both dicts derive from one ordered table, ``_registry()``, near the end
+of this file: one ``(fn, oracle_sql_or_None)`` row per query, named by
+``fn.__name__``.  To add a query, write its function and its DuckDB
+oracle, then add a row.  To rotate a changed query into the gate's
+window, move its row to the top of the table.
 
 Engine: ``cassandra_fs_pp_spark`` (see SURVEY.md §2 for the operator
 inventory each query exercises). Numeric-determinism convention: money-like
@@ -29,6 +36,7 @@ from cassandra_fs_pp_spark.operators.joins import (
     calibration_group_mean,
     calibration_join,
 )
+from cassandra_fs_pp_spark.operators.skew import spread_if_narrow
 from cassandra_fs_pp_spark.operators.validity import null_out_of_range, quality_gate
 from cassandra_fs_pp_spark.operators.windows import (
     rolling_mean,
@@ -61,46 +69,9 @@ SF0001 = "/root/testdata/sf0.001"
 # tpch_q1 +0.3 s when lineitem is spread).  Results are unchanged — no
 # declared query depends on row order or partitioning (the oracle gate
 # compares order-insensitively, and every ranking boundary specifies its
-# own ORDER BY).
+# own ORDER BY).  The guard itself is ``operators.skew.spread_if_narrow``,
+# which sizes the scan from the optimizer's statistics.
 _SPREAD_TABLES = frozenset({"documents", "embeddings"})
-
-_BYTE_SUFFIXES = {
-    "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
-}
-
-
-def _parse_bytes_conf(value: str, default: int = 134217728) -> int:
-    """Spark size confs arrive as '134217728b' / '128MB' / '128m'."""
-    s = str(value).strip().lower()
-    for suf in sorted(_BYTE_SUFFIXES, key=len, reverse=True):
-        if s.endswith(suf):
-            num = s[: -len(suf)].strip()
-            if num.isdigit():
-                return int(num) * _BYTE_SUFFIXES[suf]
-    if s.isdigit():
-        return int(s)
-    return default
-
-
-def _spread_if_narrow(
-    spark: SparkSession, sf_dir: str, name: str, df: DataFrame
-) -> DataFrame:
-    try:
-        par = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect — no SparkContext; keep the scan as-is
-        return df
-    try:
-        nbytes = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
-    except OSError:
-        return df
-    maxpb = _parse_bytes_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    )
-    planned_splits = max(1, (nbytes + maxpb - 1) // maxpb)
-    if planned_splits < par:
-        df = df.repartition(par)
-    return df
 
 
 def _t(
@@ -120,7 +91,7 @@ def _t(
     tune(spark)
     df = load_table(spark, sf_dir, name)
     if spread and name in _SPREAD_TABLES:
-        df = _spread_if_narrow(spark, sf_dir, name, df)
+        df = spread_if_narrow(df)
     return df
 
 
@@ -11320,7 +11291,6 @@ def geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n^2) distance join into a 9-stencil hash equi-join with identical
     results (operators/geo.py); the oracle runs the naive range join."""
     from cassandra_fs_pp_spark.operators.geo import grid_radius_join
-    from cassandra_fs_pp_spark.operators.skew import spread_if_narrow
 
     # r17: the md5 + base-16 point projection is CPU per row; a narrow
     # scan (one parquet split at bench scale) would compute it single-
@@ -14670,573 +14640,318 @@ FROM m
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry ORDER is deliberate: the driver's correctness sweep samples a
-    # prefix window (50 entries) of this dict.  Round-18 rotation (VERDICT
-    # r17 item 2): (a) the queries CHANGED this round — the Arrow-kernel
-    # ANN family (ann_ivf_pq_topk / ann_ivf_adc_topk / ann_adc_topk /
-    # ann_lsh_topk, plus emb_near_dups via the shared spread probe), the
-    # de-skewed dedup_minhash_cluster, the sym_cap-folded batched BPE
-    # trainer and its pipeline twin, the LocalTableScan fleet dims
-    # (fleet_udg_filter / fleet_tdr_depth), the broadcast-gated
-    # emb_semantic_dedup, the geo pair (spread probe) and
-    # curation_decontaminate (plan-pinned barrier) — then (b) the 11
-    # r17-changed queries the driver never re-gated (VERDICT r17
-    # "Correctness gate": their only post-change oracle evidence was the
-    # builder's own sweep): logreg / dsir / repetition / pretrain_pipeline
-    # / fuzzy / the four iterative graph loops / kmeans_assign /
-    # scalar_quantize; then (c) the STALEST remainder (registry positions
-    # 50+ as of r17, which last saw the gate in r15 or earlier) fills the
-    # window to 50.  Beyond the window: the rest of that stale block, then
-    # the r17-window block (freshest driver evidence, gated in r17) — the
-    # 3 native-sketch queries stay pinned last (rows-only by nature,
-    # never in a window).
-    return {
-        "ann_ivf_pq_topk": ann_ivf_pq_topk,
-        "ann_ivf_adc_topk": ann_ivf_adc_topk,
-        "ann_adc_topk": ann_adc_topk,
-        "ann_lsh_topk": ann_lsh_topk,
-        "emb_near_dups": emb_near_dups,
-        "dedup_minhash_cluster": dedup_minhash_cluster,
-        "text_bpe_merges_batched": text_bpe_merges_batched,
-        "text_bpe_pipeline": text_bpe_pipeline,
-        "fleet_udg_filter": fleet_udg_filter,
-        "fleet_tdr_depth": fleet_tdr_depth,
-        "emb_semantic_dedup": emb_semantic_dedup,
-        "geo_grid_join": geo_grid_join,
-        "geo_point_in_polygon": geo_point_in_polygon,
-        "curation_decontaminate": curation_decontaminate,
-        "curation_logreg_trained": curation_logreg_trained,
-        "curation_dsir_select": curation_dsir_select,
-        "text_repetition_flags": text_repetition_flags,
-        "curation_pretrain_pipeline": curation_pretrain_pipeline,
-        "fuzzy_match_join": fuzzy_match_join,
-        "graph_kcore": graph_kcore,
-        "graph_bfs_levels": graph_bfs_levels,
-        "graph_connected_components": graph_connected_components,
-        "graph_pagerank": graph_pagerank,
-        "emb_kmeans_assign": emb_kmeans_assign,
-        "emb_scalar_quantize": emb_scalar_quantize,
-        "p3_dedup_keep_first": p3_dedup_keep_first,
-        "p7_validity_null": p7_validity_null,
-        "r5_pivot": r5_pivot,
-        "tpch_q10_returns": tpch_q10_returns,
-        "tpch_q13_custdist": tpch_q13_custdist,
-        "tpch_q14": tpch_q14,
-        "tpch_q15_top_supplier": tpch_q15_top_supplier,
-        "tpch_q17_small_quantity": tpch_q17_small_quantity,
-        "tpch_q19_disjunctive": tpch_q19_disjunctive,
-        "tpch_q22_idle_customers": tpch_q22_idle_customers,
-        "tpch_q3_top_orders": tpch_q3_top_orders,
-        "tpch_q4_shape": tpch_q4_shape,
-        "tpch_q5_nation_revenue": tpch_q5_nation_revenue,
-        "tpch_q6": tpch_q6,
-        "tpch_q7_nation_volume": tpch_q7_nation_volume,
-        "tpch_q8_market_share": tpch_q8_market_share,
-        "tpch_q9_profit_shape": tpch_q9_profit_shape,
-        "u1_union_by_name": u1_union_by_name,
-        "u_set_ops": u_set_ops,
-        "w5_resample_ffill": w5_resample_ffill,
-        "w6_interpolate": w6_interpolate,
-        "w8_ratchet_depth": w8_ratchet_depth,
-        "w9_piecewise_offset": w9_piecewise_offset,
-        "w_ranking": w_ranking,
-        "a_ks_test": a_ks_test,
-        "ts_holt_linear": ts_holt_linear,
-        "curation_pack_sequences": curation_pack_sequences,
-        "a_mann_kendall": a_mann_kendall,
-        "text_kn5_perplexity": text_kn5_perplexity,
-        "text_bpe_merges": text_bpe_merges,
-        "ngram_jaccard_pairs": ngram_jaccard_pairs,
-        "f_higher_order": f_higher_order,
-        "f_bitwise_suite": f_bitwise_suite,
-        "f_datetime_suite": f_datetime_suite,
-        "f_null_semantics": f_null_semantics,
-        "a_winsorized_stats": a_winsorized_stats,
-        "op_compaction_plan": op_compaction_plan,
-        "text_bm25_topk": text_bm25_topk,
-        "rag_rrf_fusion": rag_rrf_fusion,
-        "curation_mixture_temperature": curation_mixture_temperature,
-        "text_ngram_novelty": text_ngram_novelty,
-        "graph_degree_assortativity": graph_degree_assortativity,
-        "a_hodges_lehmann": a_hodges_lehmann,
-        "graph_clustering_coeff": graph_clustering_coeff,
-        "w_seasonal_naive_error": w_seasonal_naive_error,
-        "text_bigram_entropy": text_bigram_entropy,
-        "mm_phash_pairs": mm_phash_pairs,
-        "emb_pca_project": emb_pca_project,
-        "w_rolling_skewkurt": w_rolling_skewkurt,
-        "p_debounce_burst_keyed": p_debounce_burst_keyed,
-        "w_rolling_skewkurt_keyed": w_rolling_skewkurt_keyed,
-        "stream_debounce_admit": stream_debounce_admit,
-        "dedup_minhash_lsh": dedup_minhash_lsh,
-        "mm_png_roundtrip": mm_png_roundtrip,
-        "tpch_q12_latemode": tpch_q12_latemode,
-        "tpch_q2_min_cost_supplier": tpch_q2_min_cost_supplier,
-        "tpch_q11_important_stock": tpch_q11_important_stock,
-        "tpch_q20_promotion_suppliers": tpch_q20_promotion_suppliers,
-        "tpch_q16_partsupp": tpch_q16_partsupp,
-        "w2_centered_median": w2_centered_median,
-        "w3_count_window_median": w3_count_window_median,
-        "w4_trailing_mean_minp": w4_trailing_mean_minp,
-        "w7_ts_delta": w7_ts_delta,
-        "w10_first_after": w10_first_after,
-        "j3_outer_align": j3_outer_align,
-        "j6_dim_attach": j6_dim_attach,
-        "j4_asof_forward": j4_asof_forward,
-        "a4_distinct_counts": a4_distinct_counts,
-        "a9_head_mean": a9_head_mean,
-        "j1_calibration_fallback": j1_calibration_fallback,
-        "r1_melt": r1_melt,
-        "p5_regex_projection": p5_regex_projection,
-        "stream_dedup_counts": stream_dedup_counts,
-        "stream_session_agg": stream_session_agg,
-        "dedup_exact_docs": dedup_exact_docs,
-        "dedup_simhash": dedup_simhash,
-        "dedup_simhash_banded": dedup_simhash_banded,
-        "text_winnow_fingerprints": text_winnow_fingerprints,
-        "text_stats": text_stats,
-        "text_lang_id": text_lang_id,
-        "text_pii_redact": text_pii_redact,
-        "text_split_assign": text_split_assign,
-        "text_token_topk": text_token_topk,
-        "text_repetition": text_repetition,
-        "text_bigram_pmi": text_bigram_pmi,
-        "curation_stratified_sample": curation_stratified_sample,
-        "curation_quality_filter": curation_quality_filter,
-        "curation_source_budget": curation_source_budget,
-        "curation_weighted_sample": curation_weighted_sample,
-        "mm_image_meta": mm_image_meta,
-        "mm_image_stats": mm_image_stats,
-        "ts_dominant_period": ts_dominant_period,
-        "ts_periodogram_int": ts_periodogram_int,
-        "rag_hybrid_minmax": rag_hybrid_minmax,
-        "stream_geofence_admit": stream_geofence_admit,
-        "a_gini": a_gini,
-        "dedup_spans": dedup_spans,
-        "a8_sliding_window": a8_sliding_window,
-        "emb_label_centroids": emb_label_centroids,
-        "emb_label_inertia": emb_label_inertia,
-        "text_hash_features": text_hash_features,
-        "text_lm_familiarity": text_lm_familiarity,
-        "dedup_url_canonical": dedup_url_canonical,
-        "curation_domain_mix": curation_domain_mix,
-        "ann_bruteforce_topk": ann_bruteforce_topk,
-        "mm_frame_sample": mm_frame_sample,
-        "mm_audio_stats": mm_audio_stats,
-        "stream_fleet_hourly": stream_fleet_hourly,
-        "op_upsert_snapshot": op_upsert_snapshot,
-        "op_scd2_intervals": op_scd2_intervals,
-        "j_temporal_scd2": j_temporal_scd2,
-        "j_skew_salted": j_skew_salted,
-        "a_sessionize": a_sessionize,
-        "ann_ivf_topk": ann_ivf_topk,
-        "curation_semantic_decontaminate": curation_semantic_decontaminate,
-        "text_cdc_chunks": text_cdc_chunks,
-        "a_linreg_trend": a_linreg_trend,
-        "a_quantiles": a_quantiles,
-        "a_cohort_retention": a_cohort_retention,
-        "a_corr_regr": a_corr_regr,
-        "a_funnel": a_funnel,
-        "a_time_weighted_avg": a_time_weighted_avg,
-        "a_histogram": a_histogram,
-        "a_concurrency": a_concurrency,
-        "a_transition_matrix": a_transition_matrix,
-        "a_mad_outliers": a_mad_outliers,
-        "a_basket_lift": a_basket_lift,
-        "a_chi_square": a_chi_square,
-        "a_histogram_equidepth": a_histogram_equidepth,
-        "a_attribution_credit": a_attribution_credit,
-        "a_rfm_segments": a_rfm_segments,
-        "text_rake_keywords": text_rake_keywords,
-        "w_first_last": w_first_last,
-        "w_rolling_corr": w_rolling_corr,
-        "w_step_detect": w_step_detect,
-        "p_debounce_burst": p_debounce_burst,
-        "dq_referential_audit": dq_referential_audit,
-        "dq_null_profile": dq_null_profile,
-        "f_json_parse": f_json_parse,
-        "f_map_suite": f_map_suite,
-        "f_url_suite": f_url_suite,
-        "agg_cube": agg_cube,
-        "agg_grouping_sets": agg_grouping_sets,
-        "tpch_q16_supplier_count": tpch_q16_supplier_count,
-        "tpch_q21_shape": tpch_q21_shape,
-        "a_rfm_segments_banded": a_rfm_segments_banded,
-        "stream_attribution_credit": stream_attribution_credit,
-        "rag_mmr_rerank": rag_mmr_rerank,
-        "rag_prf_expand": rag_prf_expand,
-        "rag_late_interaction": rag_late_interaction,
-        "ml_target_encode_loo": ml_target_encode_loo,
-        "ml_target_encode_prefix": ml_target_encode_prefix,
-        "stream_target_encode": stream_target_encode,
-        "dq_table_digest": dq_table_digest,
-        "ts_cusum_alerts": ts_cusum_alerts,
-        "a_hll_deterministic": a_hll_deterministic,
-        "a_countmin_freq": a_countmin_freq,
-        "a_heavy_hitters_mg": a_heavy_hitters_mg,
-        "rag_chunk_topk": rag_chunk_topk,
-        "op_incremental_rollup": op_incremental_rollup,
-        "ts_ewma": ts_ewma,
-        "layout_zorder_stats": layout_zorder_stats,
-        "a_bitmap_distinct": a_bitmap_distinct,
-        "curation_shuffle_shard": curation_shuffle_shard,
-        "r4_transpose": r4_transpose,
-        "curation_keep_best_in_cluster": curation_keep_best_in_cluster,
-        "j_interval_overlap": j_interval_overlap,
-        "f_collections": f_collections,
-        "j_bloom_semi": j_bloom_semi,
-        "dq_benford": dq_benford,
-        "a_theil_sen": a_theil_sen,
-        "stream_holt_linear": stream_holt_linear,
-        "text_kn_perplexity": text_kn_perplexity,
-        "curation_ccnet_buckets": curation_ccnet_buckets,
-        "w_bollinger_bands": w_bollinger_bands,
-        "a_autocorr": a_autocorr,
-        "layout_file_stats": layout_file_stats,
-        "w_rolling_slope": w_rolling_slope,
-        "op_cdc_merge": op_cdc_merge,
-        "dq_rule_violations": dq_rule_violations,
-        "a_weighted_median": a_weighted_median,
-        "op_snapshot_diff": op_snapshot_diff,
-        "curation_epoch_upsample": curation_epoch_upsample,
-        "a_seasonality_strength": a_seasonality_strength,
-        "w_ohlc": w_ohlc,
-        "w_drawdown": w_drawdown,
-        "a_entropy_transitions": a_entropy_transitions,
-        "a_mann_whitney": a_mann_whitney,
-        "a_runs_test": a_runs_test,
-        "a_kmv_distinct": a_kmv_distinct,
-        "dq_schema_drift": dq_schema_drift,
-        "w_kalman_1d": w_kalman_1d,
-        "ts_sax_symbols": ts_sax_symbols,
-        "w_ewma_irregular": w_ewma_irregular,
-        "graph_jaccard_similarity": graph_jaccard_similarity,
-        "dedup_chain_spans": dedup_chain_spans,
-        "dedup_verbatim_spans": dedup_verbatim_spans,
-        "dedup_strip_verbatim": dedup_strip_verbatim,
-        "dedup_setsim_join": dedup_setsim_join,
-        "dedup_containment": dedup_containment,
-        "text_bpe_tokenize": text_bpe_tokenize,
-        "text_bpe_tokenize_trie": text_bpe_tokenize_trie,
-        "a_bottomk_quantiles": a_bottomk_quantiles,
-        "a_bloom_membership": a_bloom_membership,
-        "tpch_q1": tpch_q1,
-        "tpch_q18_large_orders": tpch_q18_large_orders,
-        "flagship_events_hourly": flagship_events_hourly,
-        "ann_block_topk": ann_block_topk,
-        "ann_matryoshka_topk": ann_matryoshka_topk,
-        "emb_gram_matrix": emb_gram_matrix,
-        "curation_pipeline": curation_pipeline,
-        "curation_quality_logreg": curation_quality_logreg,
-        "text_tfidf": text_tfidf,
-        "text_zipf_fit": text_zipf_fit,
-        "mm_jpeg_roundtrip": mm_jpeg_roundtrip,
-        "stream_cusum_alerts": stream_cusum_alerts,
-        "stream_hourly_agg": stream_hourly_agg,
-        "graph_triangle_count": graph_triangle_count,
-        "w1_rolling_median_2d": w1_rolling_median_2d,
-        "w_hampel_outliers": w_hampel_outliers,
-        "j4_asof_backward": j4_asof_backward,
-        "j_asof_nearest": j_asof_nearest,
-        "text_kn3_perplexity": text_kn3_perplexity,
-        "curation_ccnet_buckets_banded": curation_ccnet_buckets_banded,
-        "a1_median_slice": a1_median_slice,
-        "a3_mode_interval": a3_mode_interval,
-        "a3_per_key_freq": a3_per_key_freq,
-        "a5_positive_sum_slice": a5_positive_sum_slice,
-        "a6_monthly_rollup": a6_monthly_rollup,
-        "a7_daily_profile": a7_daily_profile,
-        "a8_resample_hourly": a8_resample_hourly,
-        "agg_rollup": agg_rollup,
-        "f_scalar_suite": f_scalar_suite,
-        "f_string_suite": f_string_suite,
-        "j_anti_users": j_anti_users,
-        "j_range_interval": j_range_interval,
-        "j_semi_users": j_semi_users,
-        "p10_time_slice": p10_time_slice,
-        "p1_prune_all_null": p1_prune_all_null,
-        "p2_dedup_rows": p2_dedup_rows,
-        "a_approx_distinct": a_approx_distinct,
-        "a_hll_mergeable": a_hll_mergeable,
-        "a_approx_quantiles": a_approx_quantiles,
-    }
+QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+def _registry() -> list[tuple[QueryFn, str | None]]:
+    # The query registry: one row per query, ``(fn, oracle)``.
+    # The query's name is ``fn.__name__``; ``oracle`` is the DuckDB SQL the
+    # correctness gate compares its result with, or None for a rows-only
+    # query.  ``queries()`` and ``oracle_sql()`` both derive from this list.
+    #
+    # Row order is the registry order, and the correctness gate
+    # samples its first 50 rows (the window).  Every window row needs an
+    # oracle.  To add a query, define its function and oracle above and
+    # add a row; to put a changed query back under the gate, move its row
+    # to the top.  Built per call, not at import: some oracles read
+    # ``$SF_DIR`` when built (``_layout_file_stats_oracle``).
+    return [
+        (ann_ivf_pq_topk, ANN_IVF_PQ_ORACLE),
+        (ann_ivf_adc_topk, ANN_IVF_ADC_ORACLE),
+        (ann_adc_topk, ANN_ADC_ORACLE),
+        (ann_lsh_topk, _lsh_topk_sql()),
+        (emb_near_dups, EMB_NEAR_DUPS_ORACLE),
+        (dedup_minhash_cluster, _minhash_cluster_sql()),
+        (text_bpe_merges_batched, TEXT_BPE_MERGES_BATCHED_ORACLE),
+        (text_bpe_pipeline, TEXT_BPE_PIPELINE_ORACLE),
+        (fleet_udg_filter, FLEET_UDG_ORACLE),
+        (fleet_tdr_depth, FLEET_TDR_ORACLE),
+        (emb_semantic_dedup, _semantic_dedup_sql()),
+        (geo_grid_join, GEO_GRID_ORACLE),
+        (geo_point_in_polygon, _geo_pip_oracle_sql()),
+        (curation_decontaminate, CURATION_DECONTAM_ORACLE),
+        (curation_logreg_trained, CURATION_LOGREG_TRAINED_ORACLE),
+        (curation_dsir_select, CURATION_DSIR_ORACLE),
+        (text_repetition_flags, TEXT_REPETITION_FLAGS_ORACLE),
+        (curation_pretrain_pipeline, CURATION_PRETRAIN_PIPELINE_ORACLE),
+        (fuzzy_match_join, FUZZY_MATCH_ORACLE),
+        (graph_kcore, GRAPH_KCORE_ORACLE),
+        (graph_bfs_levels, GRAPH_BFS_ORACLE),
+        (graph_connected_components, GRAPH_CC_ORACLE),
+        (graph_pagerank, _pagerank_sql()),
+        (emb_kmeans_assign, EMB_KMEANS_ORACLE),
+        (emb_scalar_quantize, EMB_SQ_ORACLE),
+        (p3_dedup_keep_first, P3_ORACLE),
+        (p7_validity_null, P7_ORACLE),
+        (r5_pivot, R5_PIVOT_ORACLE),
+        (tpch_q10_returns, TPCH_Q10_ORACLE),
+        (tpch_q13_custdist, TPCH_Q13_ORACLE),
+        (tpch_q14, TPCH_Q14_ORACLE),
+        (tpch_q15_top_supplier, TPCH_Q15_ORACLE),
+        (tpch_q17_small_quantity, TPCH_Q17_ORACLE),
+        (tpch_q19_disjunctive, TPCH_Q19_ORACLE),
+        (tpch_q22_idle_customers, TPCH_Q22_ORACLE),
+        (tpch_q3_top_orders, TPCH_Q3_ORACLE),
+        (tpch_q4_shape, TPCH_Q4_ORACLE),
+        (tpch_q5_nation_revenue, TPCH_Q5_ORACLE),
+        (tpch_q6, TPCH_Q6_ORACLE),
+        (tpch_q7_nation_volume, TPCH_Q7_ORACLE),
+        (tpch_q8_market_share, TPCH_Q8_ORACLE),
+        (tpch_q9_profit_shape, TPCH_Q9_ORACLE),
+        (u1_union_by_name, U1_ORACLE),
+        (u_set_ops, U_SET_OPS_ORACLE),
+        (w5_resample_ffill, W5_ORACLE),
+        (w6_interpolate, W6_ORACLE),
+        (w8_ratchet_depth, W8_ORACLE),
+        (w9_piecewise_offset, W9_ORACLE),
+        (w_ranking, W_RANKING_ORACLE),
+        (a_ks_test, A_KS_ORACLE),
+        (ts_holt_linear, TS_HOLT_ORACLE),
+        (curation_pack_sequences, CURATION_PACK_ORACLE),
+        (a_mann_kendall, A_MANN_KENDALL_ORACLE),
+        (text_kn5_perplexity, TEXT_KN5_PERPLEXITY_ORACLE),
+        (text_bpe_merges, TEXT_BPE_MERGES_ORACLE),
+        (ngram_jaccard_pairs, NGRAM_JACCARD_ORACLE),
+        (f_higher_order, F_HOF_ORACLE),
+        (f_bitwise_suite, F_BITWISE_ORACLE),
+        (f_datetime_suite, F_DATETIME_ORACLE),
+        (f_null_semantics, F_NULL_ORACLE),
+        (a_winsorized_stats, A_WINSOR_ORACLE),
+        (op_compaction_plan, OP_COMPACTION_PLAN_ORACLE),
+        (text_bm25_topk, TEXT_BM25_ORACLE),
+        (rag_rrf_fusion, RAG_RRF_ORACLE),
+        (curation_mixture_temperature, CURATION_MIXTURE_ORACLE),
+        (text_ngram_novelty, TEXT_NOVELTY_ORACLE),
+        (graph_degree_assortativity, GRAPH_ASSORT_ORACLE),
+        (a_hodges_lehmann, A_HODGES_LEHMANN_ORACLE),
+        (graph_clustering_coeff, GRAPH_CLUSTERING_ORACLE),
+        (w_seasonal_naive_error, W_SEASONAL_NAIVE_ORACLE),
+        (text_bigram_entropy, TEXT_BIGRAM_ENTROPY_ORACLE),
+        (mm_phash_pairs, _mm_phash_oracle_sql()),
+        (emb_pca_project, _emb_pca_oracle_sql()),
+        (w_rolling_skewkurt, W_SKEWKURT_ORACLE),
+        (p_debounce_burst_keyed, P_DEBOUNCE_KEYED_ORACLE),
+        (w_rolling_skewkurt_keyed, W_SKEWKURT_KEYED_ORACLE),
+        (stream_debounce_admit, STREAM_DEBOUNCE_ORACLE),
+        (dedup_minhash_lsh, _minhash_sql()),
+        (mm_png_roundtrip, MM_PNG_ORACLE),
+        (tpch_q12_latemode, TPCH_Q12_ORACLE),
+        (tpch_q2_min_cost_supplier, TPCH_Q2_ORACLE),
+        (tpch_q11_important_stock, TPCH_Q11_ORACLE),
+        (tpch_q20_promotion_suppliers, TPCH_Q20_ORACLE),
+        (tpch_q16_partsupp, TPCH_Q16_PS_ORACLE),
+        (w2_centered_median, W2_ORACLE),
+        (w3_count_window_median, W3_ORACLE),
+        (w4_trailing_mean_minp, W4_ORACLE),
+        (w7_ts_delta, W7_ORACLE),
+        (w10_first_after, W10_ORACLE),
+        (j3_outer_align, J3_ORACLE),
+        (j6_dim_attach, J6_ORACLE),
+        (j4_asof_forward, J4_FWD_ORACLE),
+        (a4_distinct_counts, A4_ORACLE),
+        (a9_head_mean, A9_ORACLE),
+        (j1_calibration_fallback, J1_ORACLE),
+        (r1_melt, R1_ORACLE),
+        (p5_regex_projection, P5_ORACLE),
+        (stream_dedup_counts, STREAM_DEDUP_ORACLE),
+        (stream_session_agg, STREAM_SESSION_ORACLE),
+        (dedup_exact_docs, DEDUP_EXACT_ORACLE),
+        (dedup_simhash, SIMHASH_ORACLE),
+        (dedup_simhash_banded, SIMHASH_BANDED_ORACLE),
+        (text_winnow_fingerprints, WINNOW_ORACLE),
+        (text_stats, TEXT_STATS_ORACLE),
+        (text_lang_id, _langid_sql()),
+        (text_pii_redact, PII_ORACLE),
+        (text_split_assign, SPLIT_ORACLE),
+        (text_token_topk, TOKEN_TOPK_ORACLE),
+        (text_repetition, TEXT_REPETITION_ORACLE),
+        (text_bigram_pmi, TEXT_PMI_ORACLE),
+        (curation_stratified_sample, CURATION_SAMPLE_ORACLE),
+        (curation_quality_filter, CURATION_QUALITY_ORACLE),
+        (curation_source_budget, CURATION_BUDGET_ORACLE),
+        (curation_weighted_sample, CURATION_WSAMPLE_ORACLE),
+        (mm_image_meta, MM_META_ORACLE),
+        (mm_image_stats, MM_STATS_ORACLE),
+        (ts_dominant_period, _ts_dominant_sql()),
+        (ts_periodogram_int, _periodogram_sql()),
+        (rag_hybrid_minmax, RAG_HYBRID_ORACLE),
+        (stream_geofence_admit, _stream_geofence_oracle_sql()),
+        (a_gini, A_GINI_ORACLE),
+        (dedup_spans, DEDUP_SPANS_ORACLE),
+        (a8_sliding_window, SLIDING_ORACLE),
+        (emb_label_centroids, EMB_CENTROIDS_ORACLE),
+        (emb_label_inertia, EMB_INERTIA_ORACLE),
+        (text_hash_features, TEXT_HASH_FEATURES_ORACLE),
+        (text_lm_familiarity, TEXT_LM_FAMILIARITY_ORACLE),
+        (dedup_url_canonical, DEDUP_URL_ORACLE),
+        (curation_domain_mix, CURATION_DOMAIN_MIX_ORACLE),
+        (ann_bruteforce_topk, ANN_BRUTE_ORACLE),
+        (mm_frame_sample, MM_FRAMES_ORACLE),
+        (mm_audio_stats, MM_AUDIO_ORACLE),
+        (stream_fleet_hourly, STREAM_FLEET_ORACLE),
+        (op_upsert_snapshot, OP_UPSERT_ORACLE),
+        (op_scd2_intervals, SCD2_ORACLE),
+        (j_temporal_scd2, J_TEMPORAL_SCD2_ORACLE),
+        (j_skew_salted, J_SKEW_ORACLE),
+        (a_sessionize, SESSION_ORACLE),
+        (ann_ivf_topk, ANN_IVF_ORACLE),
+        (curation_semantic_decontaminate, CURATION_SEMDECON_ORACLE),
+        (text_cdc_chunks, TEXT_CDC_ORACLE),
+        (a_linreg_trend, LINREG_ORACLE),
+        (a_quantiles, QUANTILES_ORACLE),
+        (a_cohort_retention, A_COHORT_ORACLE),
+        (a_corr_regr, A_CORR_ORACLE),
+        (a_funnel, A_FUNNEL_ORACLE),
+        (a_time_weighted_avg, A_TWA_ORACLE),
+        (a_histogram, A_HISTOGRAM_ORACLE),
+        (a_concurrency, A_CONCURRENCY_ORACLE),
+        (a_transition_matrix, A_TRANSITION_ORACLE),
+        (a_mad_outliers, A_MAD_ORACLE),
+        (a_basket_lift, A_BASKET_ORACLE),
+        (a_chi_square, A_CHI2_ORACLE),
+        (a_histogram_equidepth, A_EQUIDEPTH_ORACLE),
+        (a_attribution_credit, A_ATTRIBUTION_ORACLE),
+        (a_rfm_segments, A_RFM_ORACLE),
+        (text_rake_keywords, _rake_sql()),
+        (w_first_last, W_FIRST_LAST_ORACLE),
+        (w_rolling_corr, W_ROLLING_CORR_ORACLE),
+        (w_step_detect, W_STEP_ORACLE),
+        (p_debounce_burst, P_DEBOUNCE_ORACLE),
+        (dq_referential_audit, DQ_REF_ORACLE),
+        (dq_null_profile, DQ_NULL_ORACLE),
+        (f_json_parse, F_JSON_ORACLE),
+        (f_map_suite, F_MAP_ORACLE),
+        (f_url_suite, F_URL_ORACLE),
+        (agg_cube, CUBE_ORACLE),
+        (agg_grouping_sets, GROUPING_SETS_ORACLE),
+        (tpch_q16_supplier_count, TPCH_Q16_ORACLE),
+        (tpch_q21_shape, TPCH_Q21_ORACLE),
+        (a_rfm_segments_banded, A_RFM_BANDED_ORACLE),
+        (stream_attribution_credit, A_ATTRIBUTION_ORACLE),
+        (rag_mmr_rerank, _mmr_sql()),
+        (rag_prf_expand, RAG_PRF_ORACLE),
+        (rag_late_interaction, RAG_LATE_ORACLE),
+        (ml_target_encode_loo, ML_TARGET_LOO_ORACLE),
+        (ml_target_encode_prefix, ML_TARGET_PREFIX_ORACLE),
+        (stream_target_encode, ML_TARGET_PREFIX_ORACLE),
+        (dq_table_digest, DQ_DIGEST_ORACLE),
+        (ts_cusum_alerts, TS_CUSUM_ORACLE),
+        (a_hll_deterministic, A_HLL_DETERMINISTIC_ORACLE),
+        (a_countmin_freq, A_COUNTMIN_ORACLE),
+        (a_heavy_hitters_mg, HEAVY_HITTERS_ORACLE),
+        (rag_chunk_topk, _rag_chunk_sql()),
+        (op_incremental_rollup, OP_ROLLUP_ORACLE),
+        (ts_ewma, TS_EWMA_ORACLE),
+        (layout_zorder_stats, _zorder_oracle()),
+        (a_bitmap_distinct, A_BITMAP_ORACLE),
+        (curation_shuffle_shard, CURATION_SHUFFLE_ORACLE),
+        (r4_transpose, R4_ORACLE),
+        (curation_keep_best_in_cluster, _keep_best_sql()),
+        (j_interval_overlap, J_INTERVAL_ORACLE),
+        (f_collections, COLLECTIONS_ORACLE),
+        (j_bloom_semi, J_BLOOM_SEMI_ORACLE),
+        (dq_benford, DQ_BENFORD_ORACLE),
+        (a_theil_sen, A_THEIL_SEN_ORACLE),
+        (stream_holt_linear, TS_HOLT_ORACLE),
+        (text_kn_perplexity, TEXT_KN_PERPLEXITY_ORACLE),
+        (curation_ccnet_buckets, CURATION_CCNET_ORACLE),
+        (w_bollinger_bands, W_BOLLINGER_ORACLE),
+        (a_autocorr, A_AUTOCORR_ORACLE),
+        (layout_file_stats, _layout_file_stats_oracle()),
+        (w_rolling_slope, W_ROLLING_SLOPE_ORACLE),
+        (op_cdc_merge, OP_CDC_MERGE_ORACLE),
+        (dq_rule_violations, _dq_rules_oracle()),
+        (a_weighted_median, A_WEIGHTED_MEDIAN_ORACLE),
+        (op_snapshot_diff, OP_SNAPSHOT_DIFF_ORACLE),
+        (curation_epoch_upsample, CURATION_EPOCH_ORACLE),
+        (a_seasonality_strength, A_SEASONALITY_ORACLE),
+        (w_ohlc, W_OHLC_ORACLE),
+        (w_drawdown, W_DRAWDOWN_ORACLE),
+        (a_entropy_transitions, A_ENTROPY_TRANS_ORACLE),
+        (a_mann_whitney, A_MANN_WHITNEY_ORACLE),
+        (a_runs_test, A_RUNS_ORACLE),
+        (a_kmv_distinct, A_KMV_ORACLE),
+        (dq_schema_drift, DQ_SCHEMA_DRIFT_ORACLE),
+        (w_kalman_1d, W_KALMAN_ORACLE),
+        (ts_sax_symbols, TS_SAX_ORACLE),
+        (w_ewma_irregular, W_EWMA_IRR_ORACLE),
+        (graph_jaccard_similarity, GRAPH_JACCARD_ORACLE),
+        (dedup_chain_spans, DEDUP_CHAIN_SPANS_ORACLE),
+        (dedup_verbatim_spans, DEDUP_VERBATIM_ORACLE),
+        (dedup_strip_verbatim, DEDUP_STRIP_VERBATIM_ORACLE),
+        (dedup_setsim_join, DEDUP_SETSIM_ORACLE),
+        (dedup_containment, DEDUP_CONTAINMENT_ORACLE),
+        (text_bpe_tokenize, TEXT_BPE_TOKENIZE_ORACLE),
+        (text_bpe_tokenize_trie, TEXT_BPE_TOKENIZE_ORACLE),
+        (a_bottomk_quantiles, A_BOTTOMK_QUANTILES_ORACLE),
+        (a_bloom_membership, A_BLOOM_MEMBERSHIP_ORACLE),
+        (tpch_q1, TPCH_Q1_ORACLE),
+        (tpch_q18_large_orders, TPCH_Q18_ORACLE),
+        (flagship_events_hourly, FLAGSHIP_ORACLE),
+        (ann_block_topk, ANN_BLOCK_ORACLE),
+        (ann_matryoshka_topk, ANN_MATRYOSHKA_ORACLE),
+        (emb_gram_matrix, EMB_GRAM_ORACLE),
+        (curation_pipeline, CURATION_PIPELINE_ORACLE),
+        (curation_quality_logreg, CURATION_QUALITY_LOGREG_ORACLE),
+        (text_tfidf, TEXT_TFIDF_ORACLE),
+        (text_zipf_fit, TEXT_ZIPF_ORACLE),
+        (mm_jpeg_roundtrip, MM_JPEG_ORACLE),
+        (stream_cusum_alerts, TS_CUSUM_ORACLE),
+        (stream_hourly_agg, STREAM_A8_ORACLE),
+        (graph_triangle_count, GRAPH_TRIANGLE_ORACLE),
+        (w1_rolling_median_2d, W1_ORACLE),
+        (w_hampel_outliers, W_HAMPEL_ORACLE),
+        (j4_asof_backward, J4_ORACLE),
+        (j_asof_nearest, J_ASOF_NEAREST_ORACLE),
+        (text_kn3_perplexity, TEXT_KN3_PERPLEXITY_ORACLE),
+        (curation_ccnet_buckets_banded, CURATION_CCNET_BANDED_ORACLE),
+        (a1_median_slice, A1_ORACLE),
+        (a3_mode_interval, A3_ORACLE),
+        (a3_per_key_freq, A3_PER_KEY_ORACLE),
+        (a5_positive_sum_slice, A5_ORACLE),
+        (a6_monthly_rollup, A6_ORACLE),
+        (a7_daily_profile, A7_ORACLE),
+        (a8_resample_hourly, A8_ORACLE),
+        (agg_rollup, ROLLUP_ORACLE),
+        (f_scalar_suite, F_SCALAR_ORACLE),
+        (f_string_suite, F_STRING_ORACLE),
+        (j_anti_users, J_ANTI_ORACLE),
+        (j_range_interval, J_RANGE_ORACLE),
+        (j_semi_users, J_SEMI_ORACLE),
+        (p10_time_slice, P10_ORACLE),
+        (p1_prune_all_null, P1_ORACLE),
+        (p2_dedup_rows, P2_ORACLE),
+        # Approximate sketches: rows-only (no exact oracle), so they stay
+        # last, out of the window.
+        (a_approx_distinct, None),
+        (a_hll_mergeable, None),
+        (a_approx_quantiles, None),
+    ]
+
+
+def _index(
+    rows: list[tuple[QueryFn, str | None]],
+) -> tuple[dict[str, QueryFn], dict[str, str]]:
+    """Registry rows -> (name -> query fn, name -> oracle SQL), in row
+    order.  A name listed twice raises ``ValueError``."""
+    fns: dict[str, QueryFn] = {}
+    oracles: dict[str, str] = {}
+    for fn, oracle in rows:
+        name = fn.__name__
+        if name in fns:
+            raise ValueError(f"duplicate registry query: {name}")
+        fns[name] = fn
+        if oracle is not None:
+            oracles[name] = oracle
+    return fns, oracles
+
+
+def queries() -> dict[str, QueryFn]:
+    return _index(_registry())[0]
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "curation_pretrain_pipeline": CURATION_PRETRAIN_PIPELINE_ORACLE,
-        "text_bpe_merges_batched": TEXT_BPE_MERGES_BATCHED_ORACLE,
-        "text_bpe_pipeline": TEXT_BPE_PIPELINE_ORACLE,
-        "a_bottomk_quantiles": A_BOTTOMK_QUANTILES_ORACLE,
-        "a_bloom_membership": A_BLOOM_MEMBERSHIP_ORACLE,
-        "a_hll_deterministic": A_HLL_DETERMINISTIC_ORACLE,
-        "a_countmin_freq": A_COUNTMIN_ORACLE,
-        "ann_ivf_pq_topk": ANN_IVF_PQ_ORACLE,
-        "text_kn5_perplexity": TEXT_KN5_PERPLEXITY_ORACLE,
-        "text_bpe_merges": TEXT_BPE_MERGES_ORACLE,
-        "text_bpe_tokenize": TEXT_BPE_TOKENIZE_ORACLE,
-        "text_bpe_tokenize_trie": TEXT_BPE_TOKENIZE_ORACLE,
-        "curation_dsir_select": CURATION_DSIR_ORACLE,
-        "flagship_events_hourly": FLAGSHIP_ORACLE,
-        "tpch_q1": TPCH_Q1_ORACLE,
-        "p2_dedup_rows": P2_ORACLE,
-        "p3_dedup_keep_first": P3_ORACLE,
-        "p7_validity_null": P7_ORACLE,
-        "p10_time_slice": P10_ORACLE,
-        "a1_median_slice": A1_ORACLE,
-        "a3_mode_interval": A3_ORACLE,
-        "a3_per_key_freq": A3_PER_KEY_ORACLE,
-        "a6_monthly_rollup": A6_ORACLE,
-        "a8_resample_hourly": A8_ORACLE,
-        "w1_rolling_median_2d": W1_ORACLE,
-        "j1_calibration_fallback": J1_ORACLE,
-        "j4_asof_backward": J4_ORACLE,
-        "j_range_interval": J_RANGE_ORACLE,
-        "j_semi_users": J_SEMI_ORACLE,
-        "j_anti_users": J_ANTI_ORACLE,
-        "u1_union_by_name": U1_ORACLE,
-        "u_set_ops": U_SET_OPS_ORACLE,
-        "w_ranking": W_RANKING_ORACLE,
-        "w5_resample_ffill": W5_ORACLE,
-        "w6_interpolate": W6_ORACLE,
-        "w8_ratchet_depth": W8_ORACLE,
-        "w9_piecewise_offset": W9_ORACLE,
-        "a5_positive_sum_slice": A5_ORACLE,
-        "a7_daily_profile": A7_ORACLE,
-        "agg_rollup": ROLLUP_ORACLE,
-        "r5_pivot": R5_PIVOT_ORACLE,
-        "p1_prune_all_null": P1_ORACLE,
-        "f_scalar_suite": F_SCALAR_ORACLE,
-        "f_datetime_suite": F_DATETIME_ORACLE,
-        "f_higher_order": F_HOF_ORACLE,
-        "f_null_semantics": F_NULL_ORACLE,
-        "f_string_suite": F_STRING_ORACLE,
-        "tpch_q3_top_orders": TPCH_Q3_ORACLE,
-        "tpch_q5_nation_revenue": TPCH_Q5_ORACLE,
-        "tpch_q6": TPCH_Q6_ORACLE,
-        "tpch_q14": TPCH_Q14_ORACLE,
-        "tpch_q4_shape": TPCH_Q4_ORACLE,
-        "tpch_q10_returns": TPCH_Q10_ORACLE,
-        "tpch_q7_nation_volume": TPCH_Q7_ORACLE,
-        "tpch_q8_market_share": TPCH_Q8_ORACLE,
-        "tpch_q13_custdist": TPCH_Q13_ORACLE,
-        "tpch_q18_large_orders": TPCH_Q18_ORACLE,
-        "tpch_q19_disjunctive": TPCH_Q19_ORACLE,
-        "tpch_q15_top_supplier": TPCH_Q15_ORACLE,
-        "tpch_q17_small_quantity": TPCH_Q17_ORACLE,
-        "tpch_q22_idle_customers": TPCH_Q22_ORACLE,
-        "tpch_q9_profit_shape": TPCH_Q9_ORACLE,
-        "tpch_q12_latemode": TPCH_Q12_ORACLE,
-        "tpch_q2_min_cost_supplier": TPCH_Q2_ORACLE,
-        "tpch_q11_important_stock": TPCH_Q11_ORACLE,
-        "tpch_q20_promotion_suppliers": TPCH_Q20_ORACLE,
-        "tpch_q16_partsupp": TPCH_Q16_PS_ORACLE,
-        "tpch_q16_supplier_count": TPCH_Q16_ORACLE,
-        "tpch_q21_shape": TPCH_Q21_ORACLE,
-        "w_first_last": W_FIRST_LAST_ORACLE,
-        "text_stats": TEXT_STATS_ORACLE,
-        "text_lang_id": _langid_sql(),
-        "dedup_exact_docs": DEDUP_EXACT_ORACLE,
-        "dedup_minhash_lsh": _minhash_sql(),
-        "dedup_minhash_cluster": _minhash_cluster_sql(),
-        "dedup_simhash": SIMHASH_ORACLE,
-        "dedup_simhash_banded": SIMHASH_BANDED_ORACLE,
-        "text_winnow_fingerprints": WINNOW_ORACLE,
-        "text_pii_redact": PII_ORACLE,
-        "text_split_assign": SPLIT_ORACLE,
-        "curation_stratified_sample": CURATION_SAMPLE_ORACLE,
-        "curation_pack_sequences": CURATION_PACK_ORACLE,
-        "curation_decontaminate": CURATION_DECONTAM_ORACLE,
-        "curation_quality_filter": CURATION_QUALITY_ORACLE,
-        "ngram_jaccard_pairs": NGRAM_JACCARD_ORACLE,
-        "dedup_setsim_join": DEDUP_SETSIM_ORACLE,
-        "dedup_containment": DEDUP_CONTAINMENT_ORACLE,
-        "j_bloom_semi": J_BLOOM_SEMI_ORACLE,
-        "dq_benford": DQ_BENFORD_ORACLE,
-        "text_zipf_fit": TEXT_ZIPF_ORACLE,
-        "ann_bruteforce_topk": ANN_BRUTE_ORACLE,
-        "ann_block_topk": ANN_BLOCK_ORACLE,
-        "ann_matryoshka_topk": ANN_MATRYOSHKA_ORACLE,
-        "curation_source_budget": CURATION_BUDGET_ORACLE,
-        "stream_session_agg": STREAM_SESSION_ORACLE,
-        "fleet_udg_filter": FLEET_UDG_ORACLE,
-        "fleet_tdr_depth": FLEET_TDR_ORACLE,
-        "stream_fleet_hourly": STREAM_FLEET_ORACLE,
-        "emb_kmeans_assign": EMB_KMEANS_ORACLE,
-        "j_skew_salted": J_SKEW_ORACLE,
-        "op_scd2_intervals": SCD2_ORACLE,
-        "text_repetition": TEXT_REPETITION_ORACLE,
-        "text_hash_features": TEXT_HASH_FEATURES_ORACLE,
-        "a_corr_regr": A_CORR_ORACLE,
-        "j4_asof_forward": J4_FWD_ORACLE,
-        "f_url_suite": F_URL_ORACLE,
-        "a_funnel": A_FUNNEL_ORACLE,
-        "a_attribution_credit": A_ATTRIBUTION_ORACLE,
-        "a_rfm_segments": A_RFM_ORACLE,
-        "a_rfm_segments_banded": A_RFM_BANDED_ORACLE,
-        # streaming twin: identical ledger semantics -> identical oracle
-        "stream_attribution_credit": A_ATTRIBUTION_ORACLE,
-        "text_rake_keywords": _rake_sql(),
-        "text_tfidf": TEXT_TFIDF_ORACLE,
-        "text_bm25_topk": TEXT_BM25_ORACLE,
-        "rag_rrf_fusion": RAG_RRF_ORACLE,
-        "rag_hybrid_minmax": RAG_HYBRID_ORACLE,
-        "rag_mmr_rerank": _mmr_sql(),
-        "rag_prf_expand": RAG_PRF_ORACLE,
-        "rag_late_interaction": RAG_LATE_ORACLE,
-        "ml_target_encode_loo": ML_TARGET_LOO_ORACLE,
-        "ml_target_encode_prefix": ML_TARGET_PREFIX_ORACLE,
-        # streaming twin: identical causal-prefix semantics -> identical
-        # oracle
-        "stream_target_encode": ML_TARGET_PREFIX_ORACLE,
-        "curation_mixture_temperature": CURATION_MIXTURE_ORACLE,
-        "text_ngram_novelty": TEXT_NOVELTY_ORACLE,
-        "graph_degree_assortativity": GRAPH_ASSORT_ORACLE,
-        "a_hodges_lehmann": A_HODGES_LEHMANN_ORACLE,
-        "ts_periodogram_int": _periodogram_sql(),
-        "ts_dominant_period": _ts_dominant_sql(),
-        "graph_clustering_coeff": GRAPH_CLUSTERING_ORACLE,
-        "w_seasonal_naive_error": W_SEASONAL_NAIVE_ORACLE,
-        "text_bigram_entropy": TEXT_BIGRAM_ENTROPY_ORACLE,
-        "dedup_url_canonical": DEDUP_URL_ORACLE,
-        "w_rolling_corr": W_ROLLING_CORR_ORACLE,
-        "curation_pipeline": CURATION_PIPELINE_ORACLE,
-        "dedup_spans": DEDUP_SPANS_ORACLE,
-        "dedup_verbatim_spans": DEDUP_VERBATIM_ORACLE,
-        "dedup_chain_spans": DEDUP_CHAIN_SPANS_ORACLE,
-        "dedup_strip_verbatim": DEDUP_STRIP_VERBATIM_ORACLE,
-        "text_lm_familiarity": TEXT_LM_FAMILIARITY_ORACLE,
-        "curation_domain_mix": CURATION_DOMAIN_MIX_ORACLE,
-        "p_debounce_burst": P_DEBOUNCE_ORACLE,
-        "p_debounce_burst_keyed": P_DEBOUNCE_KEYED_ORACLE,
-        "a_time_weighted_avg": A_TWA_ORACLE,
-        "a_histogram": A_HISTOGRAM_ORACLE,
-        "a_concurrency": A_CONCURRENCY_ORACLE,
-        "w_step_detect": W_STEP_ORACLE,
-        "dq_referential_audit": DQ_REF_ORACLE,
-        "dq_null_profile": DQ_NULL_ORACLE,
-        "curation_weighted_sample": CURATION_WSAMPLE_ORACLE,
-        "j_temporal_scd2": J_TEMPORAL_SCD2_ORACLE,
-        "a_transition_matrix": A_TRANSITION_ORACLE,
-        "a_mad_outliers": A_MAD_ORACLE,
-        "a_basket_lift": A_BASKET_ORACLE,
-        "a_gini": A_GINI_ORACLE,
-        "a_chi_square": A_CHI2_ORACLE,
-        "a_winsorized_stats": A_WINSOR_ORACLE,
-        "a_histogram_equidepth": A_EQUIDEPTH_ORACLE,
-        "ann_lsh_topk": _lsh_topk_sql(),
-        "emb_near_dups": EMB_NEAR_DUPS_ORACLE,
-        # graduated from rows-only in r8: fixed-point power-iteration PCA
-        "emb_pca_project": _emb_pca_oracle_sql(),
-        "emb_label_centroids": EMB_CENTROIDS_ORACLE,
-        "emb_label_inertia": EMB_INERTIA_ORACLE,
-        "text_token_topk": TOKEN_TOPK_ORACLE,
-        "graph_connected_components": GRAPH_CC_ORACLE,
-        "w2_centered_median": W2_ORACLE,
-        "w3_count_window_median": W3_ORACLE,
-        "w4_trailing_mean_minp": W4_ORACLE,
-        "w7_ts_delta": W7_ORACLE,
-        "w10_first_after": W10_ORACLE,
-        "j3_outer_align": J3_ORACLE,
-        "j6_dim_attach": J6_ORACLE,
-        "a4_distinct_counts": A4_ORACLE,
-        # a_approx_distinct: HLL++-specific — intentionally no oracle
-        "a9_head_mean": A9_ORACLE,
-        "a8_sliding_window": SLIDING_ORACLE,
-        "a_sessionize": SESSION_ORACLE,
-        "a_linreg_trend": LINREG_ORACLE,
-        "a_quantiles": QUANTILES_ORACLE,
-        "f_collections": COLLECTIONS_ORACLE,
-        "agg_cube": CUBE_ORACLE,
-        "agg_grouping_sets": GROUPING_SETS_ORACLE,
-        "f_json_parse": F_JSON_ORACLE,
-        "f_map_suite": F_MAP_ORACLE,
-        "op_upsert_snapshot": OP_UPSERT_ORACLE,
-        "a_cohort_retention": A_COHORT_ORACLE,
-        "text_bigram_pmi": TEXT_PMI_ORACLE,
-        "r1_melt": R1_ORACLE,
-        "r4_transpose": R4_ORACLE,
-        "p5_regex_projection": P5_ORACLE,
-        "mm_image_meta": MM_META_ORACLE,
-        "mm_image_stats": MM_STATS_ORACLE,
-        "mm_png_roundtrip": MM_PNG_ORACLE,
-        "mm_jpeg_roundtrip": MM_JPEG_ORACLE,
-        "mm_frame_sample": MM_FRAMES_ORACLE,
-        "mm_audio_stats": MM_AUDIO_ORACLE,
-        # graduated from rows-only in r8: integer-exact pHash pipeline
-        "mm_phash_pairs": _mm_phash_oracle_sql(),
-        "stream_hourly_agg": STREAM_A8_ORACLE,
-        "stream_dedup_counts": STREAM_DEDUP_ORACLE,
-        "stream_debounce_admit": STREAM_DEBOUNCE_ORACLE,
-        "stream_geofence_admit": _stream_geofence_oracle_sql(),
-        "emb_scalar_quantize": EMB_SQ_ORACLE,
-        "ann_adc_topk": ANN_ADC_ORACLE,
-        "ann_ivf_adc_topk": ANN_IVF_ADC_ORACLE,
-        "text_kn_perplexity": TEXT_KN_PERPLEXITY_ORACLE,
-        "text_kn3_perplexity": TEXT_KN3_PERPLEXITY_ORACLE,
-        "curation_ccnet_buckets": CURATION_CCNET_ORACLE,
-        "curation_ccnet_buckets_banded": CURATION_CCNET_BANDED_ORACLE,
-        "curation_shuffle_shard": CURATION_SHUFFLE_ORACLE,
-        "curation_quality_logreg": CURATION_QUALITY_LOGREG_ORACLE,
-        "curation_logreg_trained": CURATION_LOGREG_TRAINED_ORACLE,
-        "curation_semantic_decontaminate": CURATION_SEMDECON_ORACLE,
-        "text_repetition_flags": TEXT_REPETITION_FLAGS_ORACLE,
-        "emb_semantic_dedup": _semantic_dedup_sql(),
-        "j_interval_overlap": J_INTERVAL_ORACLE,
-        "ann_ivf_topk": ANN_IVF_ORACLE,
-        "curation_keep_best_in_cluster": _keep_best_sql(),
-        "j_asof_nearest": J_ASOF_NEAREST_ORACLE,
-        "ts_cusum_alerts": TS_CUSUM_ORACLE,
-        "fuzzy_match_join": FUZZY_MATCH_ORACLE,
-        "geo_grid_join": GEO_GRID_ORACLE,
-        "geo_point_in_polygon": _geo_pip_oracle_sql(),
-        "graph_triangle_count": GRAPH_TRIANGLE_ORACLE,
-        "graph_kcore": GRAPH_KCORE_ORACLE,
-        "w_ohlc": W_OHLC_ORACLE,
-        "w_drawdown": W_DRAWDOWN_ORACLE,
-        "a_entropy_transitions": A_ENTROPY_TRANS_ORACLE,
-        "w_rolling_skewkurt": W_SKEWKURT_ORACLE,
-        "w_rolling_skewkurt_keyed": W_SKEWKURT_KEYED_ORACLE,
-        "a_mann_whitney": A_MANN_WHITNEY_ORACLE,
-        "a_runs_test": A_RUNS_ORACLE,
-        "a_kmv_distinct": A_KMV_ORACLE,
-        "graph_bfs_levels": GRAPH_BFS_ORACLE,
-        "dq_schema_drift": DQ_SCHEMA_DRIFT_ORACLE,
-        "w_kalman_1d": W_KALMAN_ORACLE,
-        "ts_sax_symbols": TS_SAX_ORACLE,
-        "a_mann_kendall": A_MANN_KENDALL_ORACLE,
-        "w_ewma_irregular": W_EWMA_IRR_ORACLE,
-        "graph_jaccard_similarity": GRAPH_JACCARD_ORACLE,
-        "graph_pagerank": _pagerank_sql(),
-        "a_heavy_hitters_mg": HEAVY_HITTERS_ORACLE,
-        "rag_chunk_topk": _rag_chunk_sql(),
-        "emb_gram_matrix": EMB_GRAM_ORACLE,
-        "op_incremental_rollup": OP_ROLLUP_ORACLE,
-        "op_compaction_plan": OP_COMPACTION_PLAN_ORACLE,
-        "ts_ewma": TS_EWMA_ORACLE,
-        "ts_holt_linear": TS_HOLT_ORACLE,
-        "stream_holt_linear": TS_HOLT_ORACLE,
-        "f_bitwise_suite": F_BITWISE_ORACLE,
-        "a_theil_sen": A_THEIL_SEN_ORACLE,
-        "w_hampel_outliers": W_HAMPEL_ORACLE,
-        "w_bollinger_bands": W_BOLLINGER_ORACLE,
-        "w_rolling_slope": W_ROLLING_SLOPE_ORACLE,
-        "op_cdc_merge": OP_CDC_MERGE_ORACLE,
-        "dq_rule_violations": _dq_rules_oracle(),
-        "a_weighted_median": A_WEIGHTED_MEDIAN_ORACLE,
-        "op_snapshot_diff": OP_SNAPSHOT_DIFF_ORACLE,
-        "curation_epoch_upsample": CURATION_EPOCH_ORACLE,
-        "a_seasonality_strength": A_SEASONALITY_ORACLE,
-        "a_autocorr": A_AUTOCORR_ORACLE,
-        "layout_file_stats": _layout_file_stats_oracle(),
-        "stream_cusum_alerts": TS_CUSUM_ORACLE,
-        "layout_zorder_stats": _zorder_oracle(),
-        "dq_table_digest": DQ_DIGEST_ORACLE,
-        "a_bitmap_distinct": A_BITMAP_ORACLE,
-        "text_cdc_chunks": TEXT_CDC_ORACLE,
-        "a_ks_test": A_KS_ORACLE,
-    }
+    return _index(_registry())[1]
 
 
 # --------------------------------------------------------------------------

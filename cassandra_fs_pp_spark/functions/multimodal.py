@@ -997,106 +997,3 @@ def synthesize_noise_media(
             yield pdf
 
     return df.mapInPandas(gen, schema=schema)
-
-
-AUDIO_FP_WINDOWS = 65  # 64 energy-delta bits
-AUDIO_FP_WINDOW = 16
-AUDIO_FP_SAMPLES = AUDIO_FP_WINDOWS * AUDIO_FP_WINDOW  # 1040
-
-
-def noise_audio_samples(k: int, n: int = AUDIO_FP_SAMPLES) -> np.ndarray:
-    """Deterministic k-seeded noise audio via a pure-integer mix — the
-    audio twin of :func:`noise_pixels` (SQL-replayable, so the
-    mm_audio_fingerprint oracle reproduces the corpus verbatim). Per
-    sample i: ``h = ((k+1)*48271 + (i+1)*2654435761 + (k*i mod 65536)*179)
-    mod 2^32; h ^= h >> 13; s = h mod 512 - 256``. Measured dispersion:
-    independent clips land ~32 hamming bits apart under
-    :func:`audio_fingerprint64`, min 12 over 20k random pairs."""
-    i = np.arange(n, dtype=np.int64)
-    h = (
-        (k + 1) * 48271 + (i + 1) * 2654435761 + (k * i % 65536) * 179
-    ) % (1 << 32)
-    h = h ^ (h >> 13)
-    return ((h % 512) - 256).astype(np.int16)
-
-
-def encode_noise_audio(k: int) -> bytes:
-    """k-seeded noise clip as a FAUD payload (1040 samples, 16 kHz)."""
-    s = noise_audio_samples(k)
-    return AUD_MAGIC + struct.pack("<IH", len(s), 16000) + s.tobytes()
-
-
-def perturb_audio(payload: bytes, delta: int = 9, head: int = 24) -> bytes:
-    """Near-duplicate mutation: clipped +delta on the first ``head``
-    samples — 'same clip, small edit' for perceptual audio dedup."""
-    samples, rate = decode_real_audio(payload)
-    s = samples[:, 0].astype(np.int32).copy()
-    s[:head] = np.clip(s[:head] + delta, -256, 255)
-    s16 = s.astype(np.int16)
-    return AUD_MAGIC + struct.pack("<IH", len(s16), rate) + s16.tobytes()
-
-
-def audio_fingerprint64(payload: bytes) -> int:
-    """64-bit perceptual audio fingerprint in EXACT integer arithmetic:
-    frame the first 65 non-overlapping 16-sample windows, window energy
-    ``E_w = sum s_i^2`` (int64-exact; max 16 * 256^2 = 2^20), bit ``b``
-    set iff ``E_{b+1} > E_b`` — the energy-contour-delta scheme
-    (public audio-fingerprinting shape, energy bands without the FFT so
-    a SQL oracle replays it bit-for-bit). Signed int64."""
-    samples, _rate = decode_real_audio(payload)
-    s = samples[:, 0].astype(np.int64)[: AUDIO_FP_SAMPLES]
-    if len(s) < AUDIO_FP_SAMPLES:
-        raise ValueError(
-            f"audio fingerprint needs >= {AUDIO_FP_SAMPLES} samples"
-        )
-    E = (s.reshape(AUDIO_FP_WINDOWS, AUDIO_FP_WINDOW) ** 2).sum(axis=1)
-    val = 0
-    for b in range(64):
-        if E[b + 1] > E[b]:
-            val |= 1 << b
-    if val >= 1 << 63:
-        val -= 1 << 64
-    return val
-
-
-def synthesize_noise_audio(
-    df: DataFrame,
-    id_col: str,
-    *,
-    out_col: str = "payload",
-) -> DataFrame:
-    """Attach a k-seeded noise FAUD payload per row (fingerprint corpus)."""
-    schema = StructType(df.schema.fields + [StructField(out_col, BinaryType())])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = [
-                encode_noise_audio(int(k)) for k in pdf[id_col].astype("int64")
-            ]
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
-
-
-def audio_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Per-clip 64-bit fingerprint -> (id, afp bigint); feed into
-    ``operators/textdedup.simhash_band_pairs(bits=64)`` for banded
-    hamming near-dup search — audio dedup on the text-dedup machinery,
-    exactly like :func:`image_phash` for images."""
-    from pyspark.sql.types import LongType
-
-    schema = StructType([df.schema[id_col], StructField("afp", LongType())])
-
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (k, audio_fingerprint64(bytes(p)))
-                for k, p in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(rows, columns=[id_col, "afp"])
-
-    return df.mapInPandas(fp, schema=schema)

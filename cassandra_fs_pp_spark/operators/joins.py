@@ -317,17 +317,6 @@ def asof_join(
     )
 
 
-def align_on_time(
-    series: Sequence[DataFrame], on: str = "time", how: str = "full"
-) -> DataFrame:
-    """J3 — horizontal concat: align several (time, value...) frames into one
-    wide frame by full-outer join on time (pandas ``concat(axis=1)`` parity)."""
-    out = series[0]
-    for df in series[1:]:
-        out = out.join(df, on=on, how=how)
-    return out
-
-
 def upsert_snapshot(
     base: DataFrame,
     changes: DataFrame,

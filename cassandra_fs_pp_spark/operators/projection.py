@@ -1,12 +1,10 @@
-"""Projection-plane operators (SURVEY §2.3 P1, P4-P6).
+"""Projection-plane operators (SURVEY §2.3 P1, P6; P5 is `colRegex`).
 
 * P1 all-null column pruning — the reference's ``dropna(how='all',
   axis='columns')`` after union (``cassandra_fs_pp/fs_pp.py:95``). Data
   dependent, so it costs one aggregate pass (count per column) before the
   projection; Catalyst prunes the dropped columns from the real scan
   afterwards, so the second pass reads only survivors.
-* P5 regex column projection — pandas ``df.filter(regex=...)``
-  (search semantics) recomputed per input schema.
 * P6 regex column rename — the level-2 rename planner
   (``cassandra_fs_pp/fs_pp.py:340-388``): match L1 names against mapping
   regexes; multi-member families extract the sensor id (``(\\d+)$`` or
@@ -45,18 +43,6 @@ def prune_all_null_columns(df: DataFrame, protect: Sequence[str] = ()) -> DataFr
     ).collect()[0]
     keep = [c for c in df.columns if c in protect or counts[c] > 0]
     return df.select(*keep)
-
-
-def select_regex(df: DataFrame, pattern: str) -> DataFrame:
-    """P5 — keep columns whose name matches ``pattern`` (search, like
-    pandas ``df.filter(regex=...)``)."""
-    pat = re.compile(pattern)
-    return df.select(*[c for c in df.columns if pat.search(c)])
-
-
-def columns_regex(columns: Sequence[str], pattern: str) -> list[str]:
-    pat = re.compile(pattern)
-    return [c for c in columns if pat.search(c)]
 
 
 _ID_ARRAY = re.compile(r"\((?P<id>[0-9]+)\)$")

@@ -158,7 +158,8 @@ def ivf_topk(
     fixed while growing vectors, which makes this registry form read
     quadratic there (8x -> 18.8x, SCALE.md r15); re-probed with cells
     grown alongside (labels shifted per copy) it reads 2.8x at 8x
-    (``scripts/r15_probe.py --ivf-cells``). Fixed-budget serving
+    (``scripts/r15_probe.py --ivf-cells``, last present in commit
+    58c3783). Fixed-budget serving
     shapes are the tracked scale path (``ivf_adc_topk`` /
     ``ivf_pq_topk`` with ``fixed_queries``).
     """

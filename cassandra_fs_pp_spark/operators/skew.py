@@ -19,12 +19,22 @@ changes the physical key distribution.
 
 from __future__ import annotations
 
+import logging
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT = "__salt"
+
+log = logging.getLogger(__name__)
+
+# A repartition node (Repartition, RepartitionByExpression) at the start
+# of a line of a logical plan's tree string, after the tree-drawing
+# prefix.  A column or alias whose name merely contains the word sits
+# inside a node's argument list instead.
+_REPARTITION_NODE = re.compile(r"^[ :+|-]*Repartition\w*\b", re.M)
 
 _BYTE_SUFFIXES = {
     "tb": 1 << 40, "gb": 1 << 30, "mb": 1 << 20, "kb": 1 << 10,
@@ -77,7 +87,8 @@ def salted_join(
 def spread_if_narrow(df: DataFrame, n_parts: int | None = None) -> DataFrame:
     """Round-robin repartition ONLY when the input plans fewer splits
     than the cluster's parallelism (r17; probe unified r18 — VERDICT r17
-    item 9).
+    item 9).  The engine's one scan-spread guard: ``__spark_entry__._t``
+    applies it to the documents/embeddings scans.
 
     The guard for small unsplittable inputs feeding CPU-bound stages: a
     bench-scale table arrives as one parquet split and would run its
@@ -85,32 +96,37 @@ def spread_if_narrow(df: DataFrame, n_parts: int | None = None) -> DataFrame:
     has >= cores splits and passes through with NO exchange.
 
     The narrowness probe is the optimizer's size statistic against
-    ``spark.sql.files.maxPartitionBytes`` — the same bytes-based
-    estimate the entry's ``_spread_if_narrow`` file-size guard uses —
-    NOT ``df.rdd.getNumPartitions()``, which converts the whole plan to
-    an RDD on the driver per call.  An input that already carries a
-    user repartition/rebalance anywhere in its lineage passes through
+    ``spark.sql.files.maxPartitionBytes`` — NOT
+    ``df.rdd.getNumPartitions()``, which converts the whole plan to an
+    RDD per call.  An input that already carries a user
+    repartition node anywhere in its lineage passes through
     untouched (its parallelism was chosen deliberately; re-spreading
     would stack a second exchange).  Like the r17 probe this sees only
     the pre-AQE plan, so it cannot fix runtime coalescing of
     post-shuffle stages — pin those with an explicit
     ``repartition(n, key)`` instead (AQE never coalesces a
-    user-specified partition count)."""
+    user-specified partition count).  If the plan cannot be sized, the
+    input is returned as-is and the reason is logged."""
     spark = df.sparkSession
     if n_parts is None:
         try:
             n_parts = spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect — no SparkContext
+        except Exception as exc:  # Spark Connect — no SparkContext
+            log.debug("spread_if_narrow: no SparkContext (%s); not spreading", exc)
             return df
     try:
-        qe = df._jdf.queryExecution()
-        if "Repartition" in qe.optimizedPlan().toString():
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if _REPARTITION_NODE.search(plan.toString()):
             return df
-        size = int(qe.optimizedPlan().stats().sizeInBytes())
+        size = int(plan.stats().sizeInBytes())
         maxpb = _bytes_conf(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
         )
-    except Exception:
+    except Exception as exc:
+        log.warning(
+            "spread_if_narrow: could not size the plan (%s); not spreading",
+            exc, exc_info=True,
+        )
         return df
     planned_splits = max(1, (size + maxpb - 1) // maxpb)
     if planned_splits < n_parts:

@@ -277,13 +277,6 @@ def _unpack_values_np(var) -> np.ndarray:
     return arr.astype("float64")
 
 
-def _unpack_values(var) -> list[float | None]:
-    """List form of :func:`_unpack_values_np` (driver-side callers that
-    build Python rows): NaN positions surface as None."""
-    out = _unpack_values_np(var)
-    return [None if np.isnan(x) else float(x) for x in out]
-
-
 def load_netcdf_fleet(
     spark: SparkSession,
     path_glob: str,

@@ -51,7 +51,6 @@ def main() -> int:
         for q in sorted(unmentioned):
             print(f"  {q}")
         bad = True
-    bad = duplicate_key_lint() or bad
     bad = shadow_lint() or bad
     bad = plans_lint(qs) or bad
     bad = sweep_lint(qs, osql) or bad
@@ -317,42 +316,6 @@ def _id_magnitude_scan(src: str) -> bool:
         return True
     print("id-magnitude lint: no absolute-magnitude id predicates")
     return False
-
-
-def duplicate_key_lint() -> bool:
-    """Fail on duplicate string keys in the queries()/oracle_sql() dict
-    literals.  A Python dict literal silently keeps the LAST binding, so a
-    duplicate key can shadow a different function with no error (the r4
-    w1_rolling_median_2d / tpch_q9_profit_shape collapse).  Parsed with
-    ``ast`` so the literal is checked as written, not as evaluated.
-    """
-    import ast
-    import collections
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "__spark_entry__.py"
-    )
-    tree = ast.parse(open(path).read())
-    bad = False
-    for node in ast.walk(tree):
-        if not (isinstance(node, ast.FunctionDef)
-                and node.name in ("queries", "oracle_sql")):
-            continue
-        for sub in ast.walk(node):
-            if not isinstance(sub, ast.Dict):
-                continue
-            keys = [k.value for k in sub.keys
-                    if isinstance(k, ast.Constant) and isinstance(k.value, str)]
-            if len(keys) < 10:  # only the registry literals, not helpers
-                continue
-            dupes = [k for k, n in collections.Counter(keys).items() if n > 1]
-            if dupes:
-                print(f"duplicate keys in {node.name}() literal: {sorted(dupes)}")
-                bad = True
-            else:
-                print(f"duplicate-key lint: {node.name}() literal "
-                      f"{len(keys)} entries, all unique")
-    return bad
 
 
 def shadow_lint() -> bool:

@@ -1,6 +1,6 @@
-"""Physical-plan audit for the headline queries -> PLANS.md.
+"""Physical-plan audit of the query registry -> PLANS.md.
 
-For each bench headline query (plus the streaming-adjacent spine queries),
+For every registry query (bench headliners first, then registry order),
 capture the plan-health signals the 100 TB stance depends on: every scan's
 pushed filters and read schema, join strategies, and exchange count.
 Regenerate after plan-affecting changes: ``python scripts/plan_audit.py``.
@@ -19,47 +19,6 @@ from bench import HEADLINE
 from cassandra_fs_pp_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-EXTRA = ["w5_resample_ffill", "a_sessionize", "dedup_exact_docs", "mm_image_stats",
-         "tpch_q17_small_quantity", "curation_pack_sequences", "j_skew_salted",
-         "tpch_q2_min_cost_supplier", "tpch_q11_important_stock",
-         "tpch_q20_promotion_suppliers", "tpch_q16_partsupp",
-         "fleet_udg_filter", "fleet_tdr_depth", "dedup_spans",
-         "text_lm_familiarity", "curation_domain_mix", "emb_near_dups",
-         "op_scd2_intervals", "text_tfidf", "a_funnel", "curation_source_budget",
-         "p_debounce_burst", "a_time_weighted_avg", "a_histogram",
-         "a_concurrency", "w_step_detect", "dq_referential_audit",
-         "dq_null_profile", "curation_weighted_sample", "j_temporal_scd2",
-         "a_transition_matrix", "a_mad_outliers", "a_basket_lift", "a_gini",
-         "r4_transpose", "curation_keep_best_in_cluster", "ann_adc_topk",
-         "emb_scalar_quantize", "curation_shuffle_shard",
-         # graph_triangle_count / a_heavy_hitters_mg moved to bench HEADLINE
-         "j_asof_nearest", "ts_cusum_alerts",
-         "rag_chunk_topk", "op_incremental_rollup",
-         "ts_ewma", "layout_zorder_stats", "dq_table_digest",
-         "a_bitmap_distinct", "text_cdc_chunks", "a_ks_test",
-         "dedup_setsim_join", "j_bloom_semi", "dq_benford", "text_zipf_fit",
-         "ts_holt_linear", "w_hampel_outliers", "graph_kcore",
-         "a_approx_quantiles", "mm_phash_pairs", "f_bitwise_suite", "a_theil_sen", "dedup_containment", "emb_pca_project", "stream_holt_linear",
-         "w_bollinger_bands", "a_autocorr", "layout_file_stats",
-         "w_rolling_slope", "op_cdc_merge", "dq_rule_violations",
-         "a_weighted_median", "op_snapshot_diff", "curation_epoch_upsample",
-         "a_seasonality_strength",
-         # r5-new queries (never audited before r7)
-         "w_ohlc", "w_drawdown", "a_entropy_transitions", "w_rolling_skewkurt",
-         "a_mann_whitney", "a_runs_test", "a_kmv_distinct", "graph_bfs_levels",
-         "dq_schema_drift", "w_kalman_1d", "ts_sax_symbols", "a_mann_kendall",
-         "w_ewma_irregular", "graph_jaccard_similarity",
-         # two-level-prefix consumers (refactored r7) + r7-new queries
-         "a_histogram_equidepth", "text_bm25_topk", "op_compaction_plan",
-         "rag_rrf_fusion", "curation_mixture_temperature",
-         "text_ngram_novelty", "graph_degree_assortativity",
-         "graph_pagerank", "a_hodges_lehmann", "ts_periodogram_int",
-         "graph_clustering_coeff", "w_seasonal_naive_error",
-         # r8-new queries (keyed valve variants join via bench HEADLINE)
-         "geo_point_in_polygon", "rag_hybrid_minmax", "text_bigram_entropy",
-         # r9-new / r9-changed queries
-         "rag_mmr_rerank", "ts_dominant_period",
-         "a_attribution_credit", "a_rfm_segments", "text_rake_keywords"]
 
 
 def audit(spark, name, fn) -> str:
@@ -112,7 +71,7 @@ def main() -> None:
         "",
     ]
     seen = set()
-    for name in [*HEADLINE, *EXTRA, *qs]:
+    for name in [*HEADLINE, *qs]:
         if name in qs and name not in seen:
             seen.add(name)
             out.append(audit(spark, name, qs[name]))

@@ -73,7 +73,8 @@ SHIFT = 10_000_000
 # Holding labels fixed while vectors grow Nx makes per-cell candidate
 # lists grow Nx and the corpus-as-queries volume N² — the r15 table's
 # 18.8x/20.6x artifact ratios that needed a footnote
-# (scripts/r15_probe.py --ivf-cells measured 2.8x under the contract).
+# (`scripts/r15_probe.py --ivf-cells`, last present in commit 58c3783,
+# measured 2.8x under the contract).
 CELLS_PROPORTIONAL = ["ann_ivf_topk", "ann_ivf_adc_topk"]
 LABEL_SHIFT = 1000
 

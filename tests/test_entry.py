@@ -17,6 +17,21 @@ def test_queries_and_oracles_aligned(spark):
         assert callable(fn), name
 
 
+def test_registry_names_are_unique():
+    """One ``_registry()`` row per query, named by its function."""
+    names = [fn.__name__ for fn, _ in entrymod._registry()]
+    assert len(names) == len(set(names)) == len(entrymod.queries())
+
+
+def test_registry_duplicate_row_raises():
+    import pytest
+
+    rows = entrymod._registry()
+    name = rows[0][0].__name__
+    with pytest.raises(ValueError, match=name):
+        entrymod._index([*rows, rows[0]])
+
+
 def test_sample_query_runs_at_sf0001(spark, sf_dir):
     qs = entrymod.queries()
     df = qs["tpch_q1"](spark, sf_dir)
@@ -207,3 +222,23 @@ def test_id_magnitude_lint_scanner():
     # and the live registry file itself is clean
     root = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
     assert not scan(open(os.path.join(root, "__spark_entry__.py")).read())
+
+
+def test_doc_check_passes(monkeypatch):
+    """``scripts/doc_check.py``'s docs-vs-registry lints (COVERAGE/PLANS/
+    SWEEP/VARIANTS cross-references, shadowed names, calib history,
+    id-magnitude bands) all pass; the Spark-backed ``--schemas`` lint is
+    left to its own run."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0,
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "..", "scripts"
+        ),
+    )
+    import doc_check
+
+    monkeypatch.setattr(sys, "argv", ["doc_check.py"])
+    assert doc_check.main() == 0

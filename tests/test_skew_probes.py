@@ -8,13 +8,19 @@ worst-case key distribution the docs name, assert the operator stays
 EXACT and finishes within a wall-time bound that a quadratic candidate
 blowup would blow through.  The bounds are deliberately loose (shared
 CI box) — they catch orders-of-magnitude regressions, not noise.
+
+Also pins the scan-spread guard (``skew.spread_if_narrow``): which inputs
+it spreads, which it passes through, and that it logs when it gives up.
 """
 
 from __future__ import annotations
 
+import logging
 import time
 
 from pyspark.sql import functions as F
+
+from cassandra_fs_pp_spark.operators import skew
 
 
 def _master_tail(i: int) -> str:
@@ -111,3 +117,60 @@ def test_geo_grid_join_dense_cell(spark):
     # no sparse point appears in any pair
     assert agg["max_a"] < n_dense and agg["max_b"] < n_dense
     assert wall < 60, f"dense-cell grid join took {wall:.1f}s"
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _one_file_table(spark, tmp_path, column: str):
+    """A small one-file parquet table: one planned split, like the bench
+    documents/embeddings scans."""
+    path = str(tmp_path / "t.parquet")
+    spark.range(200).selectExpr(f"id AS {column}").coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_spread_if_narrow_spreads_a_narrow_scan(spark, tmp_path):
+    df = _one_file_table(spark, tmp_path, "doc_id")
+    par = spark.sparkContext.defaultParallelism
+    assert _optimized(skew.spread_if_narrow(df)).startswith(f"Repartition {par}, true")
+
+
+def test_spread_if_narrow_ignores_repartition_in_a_column_name(spark, tmp_path):
+    """Only a repartition NODE means the input was already spread; a
+    column whose name contains the word must not switch the guard off."""
+    df = _one_file_table(spark, tmp_path, "Repartition_count")
+    par = spark.sparkContext.defaultParallelism
+    assert _optimized(skew.spread_if_narrow(df)).startswith(f"Repartition {par}, true")
+    spread = df.repartition(2)
+    assert skew.spread_if_narrow(spread) is spread
+
+
+def test_spread_if_narrow_leaves_a_wide_scan_alone(spark, tmp_path):
+    """Once the scan plans at least one split per core (here: a tiny
+    maxPartitionBytes), no exchange is added."""
+    df = _one_file_table(spark, tmp_path, "doc_id")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        out = skew.spread_if_narrow(df)
+    finally:
+        spark.conf.set(key, old)
+    assert out is df
+    assert "Repartition" not in _optimized(out)
+
+
+def test_spread_if_narrow_logs_when_it_cannot_size_the_plan(
+    spark, tmp_path, monkeypatch, caplog
+):
+    df = _one_file_table(spark, tmp_path, "doc_id")
+
+    def broken(value, default=0):
+        raise ValueError("unparseable size")
+
+    monkeypatch.setattr(skew, "_bytes_conf", broken)
+    with caplog.at_level(logging.WARNING, logger=skew.__name__):
+        assert skew.spread_if_narrow(df) is df
+    assert "unparseable size" in caplog.text
