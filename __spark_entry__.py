@@ -375,8 +375,8 @@ GROUP BY delta_s ORDER BY n DESC, delta_s ASC LIMIT 1
 
 
 def a3_per_key_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 fleet form — dominant sampling interval PER series key, fully
-    lazy (the scale path behind resample_ffill(freq_s=None))."""
+    """A3 fleet form — dominant sampling interval PER series key (the
+    per-site step filter_udg collects once per lineage)."""
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 25)
     deltas = ev.select(
         "user_id",
@@ -5835,9 +5835,8 @@ FROM despiked d JOIN src ON d.site = src.site AND d.t = src.t
 
 def fleet_tdr_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8 fleet form under the gate: per-site TDR burial depth where the
-    at-install normalization constant is a first-value window instead of
-    the single-station path's per-site driver collect
-    (``fs_pp.py:611-644``); ratchet closed form partitioned by site.
+    at-install normalization constant is a first-value window, no driver
+    collect (``fs_pp.py:611-644``); ratchet closed form partitioned by site.
     Corpus: per-site triangular surface series, a closed-form function of
     (site, k) the oracle recomputes analytically."""
     from cassandra_fs_pp_spark.plans.levels import fleet_calc_depth_tdr

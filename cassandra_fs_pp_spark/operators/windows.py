@@ -25,13 +25,13 @@ optimize and Tungsten can codegen):
 
 Scale notes: every window spec takes ``partition_by`` — per-site/sensor
 series at 100 TB must partition by series key so state never concentrates.
-An unpartitioned ``Window.orderBy`` (single-series parity mode) is accepted
-but Spark will warn: fine for one station's series, wrong for a fleet.
+An unpartitioned ``Window.orderBy`` is accepted but Spark will warn: fine
+for one short series, wrong for a fleet.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -129,32 +129,17 @@ def ts_delta_seconds(
     return _epoch_s(tcol) - F.lag(_epoch_s(tcol)).over(w)
 
 
-def dominant_freq_seconds(df: DataFrame, t: str = "time") -> int:
-    """A3 — mode of successive timestamp deltas (smallest wins ties,
-    matching pandas ``Series.mode()`` order). Driver-side scalar (action)."""
-    row = (
-        df.select(ts_delta_seconds(t).alias("delta"))
-        .filter(F.col("delta").isNotNull())
-        .groupBy("delta")
-        .count()
-        .orderBy(F.desc("count"), F.asc("delta"))
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        raise ValueError("need >=2 rows to detect sampling frequency")
-    return int(row[0]["delta"])
-
-
 def per_key_dominant_freq(
     df: DataFrame, t: str, partition_by: Sequence[str]
 ) -> DataFrame:
-    """A3, fleet form: the dominant sampling interval PER series key.
+    """A3 — the dominant sampling interval PER series key: the mode of
+    successive timestamp deltas, smallest wins ties (pandas
+    ``Series.mode()`` order).
 
-    The single-station pipeline takes one driver-side scalar; a fleet of
-    stations with mixed logger programs (15-min summer / hourly winter)
-    needs each series regularized on ITS OWN grid. Returns
-    ``(*keys, __freq_s)`` — no action, joins back into the lineage."""
+    A fleet of stations with mixed logger programs (15-min summer /
+    hourly winter) needs each series regularized on ITS OWN grid; with no
+    keys the whole frame is one series. Returns ``(*keys, __freq_s)``,
+    one row per key with at least two rows — lazy, O(keys) rows."""
     keys = list(partition_by)
     deltas = df.select(
         *keys, ts_delta_seconds(t, partition_by=keys).alias("delta")
@@ -207,19 +192,13 @@ def resample_grid(
 def resample_ffill(
     df: DataFrame,
     t: str,
-    freq_s: int | None = None,
+    freq_s: int | Mapping[tuple, int],
     *,
     limit: int,
     partition_by: Sequence[str] | None = None,
     origin: str = "min",
 ) -> DataFrame:
     """W5 — pandas ``resample(freq).ffill(limit=n)`` parity (reindex-ffill).
-
-    With ``freq_s=None`` the per-key dominant frequency is inferred; keys
-    with fewer than 2 samples have NO definable grid and are EXCLUDED
-    from the output (the inferred-frequency inner join drops them) — the
-    single-series path raises instead.  Callers needing those keys back
-    should union them in untouched.
 
     Pandas' resample-ffill is a **reindex**, not a value ffill
     (``cassandra_fs_pp/fs_pp.py:559``): grid labels present in the original
@@ -228,11 +207,13 @@ def resample_ffill(
     NaN), for at most ``limit`` consecutive new labels. Off-grid original
     labels are dropped but still act as fill sources.
 
-    ``freq_s``: grid step in seconds. An int applies one global grid (the
-    single-station parity path); ``None`` detects the dominant frequency
-    PER ``partition_by`` key (:func:`per_key_dominant_freq`) so a fleet of
-    stations with mixed logger programs each regularize on their own grid —
-    fully lazy, no driver action.
+    ``freq_s``: grid step in seconds. An int applies one grid step to every
+    key; a ``{key tuple: step}`` dict (e.g. the collected
+    :func:`per_key_dominant_freq`) gives each ``partition_by`` key its own
+    step, so a fleet of stations with mixed logger programs each
+    regularize on their own grid. The dict folds into the plan as a
+    literal ``CASE`` over the key columns — no join. Keys the dict does not
+    list have no grid and are EXCLUDED from the output.
 
     Built as: full-outer join of the grid with the marked original rows,
     one running ``last(original struct)`` window per value column, then
@@ -243,17 +224,11 @@ def resample_ffill(
     value_cols = [c for c in df.columns if c not in keys + [t]]
     tcol = F.col(t)
 
-    if freq_s is None:
-        if not keys:
-            raise ValueError("freq_s=None needs partition_by keys")
-        df = df.join(per_key_dominant_freq(df, t, keys), on=keys)
-    else:
-        df = df.withColumn("__freq_s", F.lit(int(freq_s)))
-
-    bounds = df.groupBy(*keys).agg(
-        F.min(t).alias("__t0"),
-        F.max(t).alias("__t1"),
-        F.first("__freq_s").alias("__fs"),
+    bounds = (
+        df.groupBy(*keys)
+        .agg(F.min(t).alias("__t0"), F.max(t).alias("__t1"))
+        .withColumn("__fs", _grid_step(freq_s, keys))
+        .filter(F.col("__fs").isNotNull())
     )
     bounds = _apply_origin(bounds, origin)
     grid = bounds.select(
@@ -264,7 +239,7 @@ def resample_ffill(
         ).alias(t),
     ).withColumn("__grid", F.lit(True))
 
-    marked = df.drop("__freq_s").withColumn("__orig", F.lit(True))
+    marked = df.withColumn("__orig", F.lit(True))
     joined = grid.join(marked, on=keys + [t], how="full_outer")
 
     base = Window.partitionBy(*keys) if keys else Window
@@ -293,6 +268,20 @@ def resample_ffill(
             F.when(F.col("__orig"), vcol).when(fill_ok, lo["v"]).alias(v)
         )
     return joined.filter(F.col("__grid")).select(*keys, t, *out_cols)
+
+
+def _grid_step(freq_s: int | Mapping[tuple, int], keys: Sequence[str]) -> Column:
+    """The grid step as a column over the key columns: one literal, or a
+    ``CASE`` with one branch per dict entry (NULL for an unlisted key)."""
+    if not isinstance(freq_s, Mapping):
+        return F.lit(int(freq_s))
+    step = None
+    for key, s in freq_s.items():
+        match = F.lit(True)
+        for k, v in zip(keys, key):
+            match = match & (F.col(k) == F.lit(v))
+        step = (F if step is None else step).when(match, F.lit(int(s)))
+    return F.lit(None).cast("long") if step is None else step
 
 
 def _apply_origin(bounds: DataFrame, origin: str) -> DataFrame:

@@ -7,31 +7,36 @@ Reference-parity flows, re-expressed as lazy DataFrame lineages:
   onefile / serviced append, ``:109-217``), outer union, all-NaN column
   prune, deterministic keep-first time dedup (which subsumes the exact
   dedup).
-* :func:`normalise_udg` — ``_normalise_udg`` (``fs_pp.py:452-511``): the
-  piecewise height-change offset (W9) with auto-derived deltas from
+* :func:`fleet_normalise_udg` — ``_normalise_udg`` (``fs_pp.py:452-511``):
+  the piecewise height-change offset (W9) with auto-derived deltas from
   pre/post-event medians (A1).
 * :func:`filter_udg` — ``_filter_udg`` (``fs_pp.py:514-567``): quality gate
   (P8), dominant-frequency regularization + limited ffill (A3/W5), trailing
   rolling-median despike (W1/P9), re-alignment to original timestamps (J2).
 * :func:`calibrate_ec` — ``_calibrate_ec`` (``fs_pp.py:570-608``): per-sensor
   linear calibration with fallback-to-mean coefficients (J1).
-* :func:`level1_to_level2` — ``level1_to_level2`` (``fs_pp.py:263-299``):
+* :func:`fleet_level1_to_level2` — ``level1_to_level2`` (``fs_pp.py:263-299``):
   validity nulling (P7), column drops (P4), regex rename (P6), UDG
   normalize+filter, calibrated EC overwrite (J5), final dedup.
-* :func:`calc_depth_tdr` — ``_calc_depth_tdr`` (``fs_pp.py:611-644``): the
-  surface-ratchet burial depth, via the verified closed form (W8) instead of
-  the reference's sequential loop.
+* :func:`fleet_calc_depth_tdr` — ``_calc_depth_tdr`` (``fs_pp.py:611-644``):
+  the surface-ratchet burial depth, via the verified closed form (W8)
+  instead of the reference's sequential loop.
 * :func:`chain_installation_depths` — ``chain_installation_depths``
   (``fs_pp.py:427-449``): driver-side chain geometry -> sensor dim table (R3).
 
+The L1 -> L2 stage has one implementation, keyed by site: every window
+partitions by the site column, whatever the number of stations. The
+reference's one-station run, :func:`level1_to_level2` /
+:func:`calc_depth_tdr`, is that implementation over a one-site fleet (a
+literal site key added, then dropped).
+
 Scale stance: every per-row transformation stays a single lazy lineage that
-Catalyst optimizes end-to-end; the only driver-side actions are O(#events)
-scalar medians (auto height-change deltas) and O(1) scalars (dominant
-sampling frequency, UDG-at-install) — each computed on a pruned
-two-column projection, so at 100 TB each action scans one column family,
-not the wide table. Single-station series use unpartitioned time windows
-(parity mode); a fleet of stations partitions every window by site —
-all window helpers here accept ``partition_by``.
+Catalyst optimizes end-to-end. Each per-site scalar is computed once per
+lineage, by one build-time job over all sites, and folded back into the
+plan, so no sink recomputes it: the auto height-change medians (one
+aggregation, O(auto events) rows) and the dominant sampling step (one
+collect, O(sites) rows). The at-install UDG reading needs no job: it is a
+``first`` window in the depth lineage.
 """
 
 from __future__ import annotations
@@ -54,7 +59,7 @@ from cassandra_fs_pp_spark.operators.projection import (
 )
 from cassandra_fs_pp_spark.operators.validity import null_out_of_range, quality_gate
 from cassandra_fs_pp_spark.operators.windows import (
-    dominant_freq_seconds,
+    per_key_dominant_freq,
     ratchet_depth,
     resample_ffill,
     rolling_median,
@@ -63,6 +68,8 @@ from cassandra_fs_pp_spark.operators.windows import (
 from cassandra_fs_pp_spark.sources.toa5 import read_toa5
 
 TIME = "TIMESTAMP"
+# the literal site key that runs one station as a one-site fleet
+_SITE = "__site"
 
 
 # --------------------------------------------------------------------------- #
@@ -198,66 +205,6 @@ def _utc(d: _dt.datetime) -> _dt.datetime:
     return d if d.tzinfo else d.replace(tzinfo=_dt.timezone.utc)
 
 
-def normalise_udg(
-    l1: DataFrame,
-    *,
-    udg_col: str = "TCDT",
-    events: Sequence[Sequence] = (),
-    t: str = TIME,
-) -> DataFrame:
-    """W9 — stitch UDG height-change jumps (``fs_pp.py:452-511``).
-
-    ``events``: config ``udg_height_change`` rows, ``[date, delta]`` or
-    ``[date]``. The FIRST event zeroes the series at the install height
-    (delta required). Later events subtract a user delta, or an
-    auto-derived one: ``round(median(date..date+1d]) -
-    median([date-1d..date-4h]), 2)`` with both medians rounded to 2dp
-    first — computed on the series WITH all earlier offsets applied, so
-    events evaluate sequentially driver-side (O(#events) actions, each an
-    aggregate over a pruned (time, udg) projection).
-
-    Returns ``(t, udg_col)`` — the normalized series.
-    """
-    u = l1.select(t, udg_col)
-    first = True
-    for ev in events:
-        if isinstance(ev, (list, tuple)) and len(ev) == 2:
-            date, user_delta = _to_ts(ev[0]), float(ev[1])
-        else:
-            date = _to_ts(ev[0] if isinstance(ev, (list, tuple)) else ev)
-            user_delta = None
-        if first:
-            if user_delta is None:
-                raise ValueError("first udg_height_change event needs a height")
-            delta = user_delta
-            first = False
-        elif user_delta is not None:
-            delta = user_delta
-        else:
-            tc = F.col(t)
-            pre = u.filter(
-                tc.between(
-                    F.lit(date - _dt.timedelta(days=1)),
-                    F.lit(date - _dt.timedelta(hours=4)),
-                )
-            ).agg(F.round(F.median(udg_col), 2).alias("m"))
-            post = u.filter(
-                tc.between(F.lit(date), F.lit(date + _dt.timedelta(days=1)))
-            ).agg(F.round(F.median(udg_col), 2).alias("m"))
-            pre_m = pre.collect()[0]["m"]
-            post_m = post.collect()[0]["m"]
-            if pre_m is None or post_m is None:
-                raise ValueError(f"no UDG data around height change at {date}")
-            delta = round(post_m - pre_m, 2)
-        u = u.withColumn(
-            udg_col,
-            F.when(F.col(t) >= F.lit(date), F.col(udg_col) - F.lit(delta)).otherwise(
-                F.col(udg_col)
-            ),
-        )
-    return u
-
-
 def filter_udg(
     l1: DataFrame,
     *,
@@ -280,8 +227,12 @@ def filter_udg(
     4. null out points ``abs(median - x) >= threshold``;
     5. re-align onto the original (irregular) timestamps.
 
-    ``udg`` (optional) supplies an already-normalized ``(t, udg_col)``
-    series; Q always comes from ``l1``.
+    ``udg`` (optional) supplies already-normalized values for ``l1``'s
+    rows, ``(*partition_by, t, udg_col)``; Q and the original timestamps
+    always come from ``l1``. Every window partitions by
+    ``partition_by`` (none: the frame is one series). Building the
+    lineage runs one job, the per-key dominant step; a key with fewer
+    than two rows has no grid and drops out.
     """
     keys = list(partition_by or [])
     src = (udg if udg is not None else l1.select(*keys, t, udg_col)).join(
@@ -291,11 +242,16 @@ def filter_udg(
         *keys, t, quality_gate(F.col(udg_col), F.col(q_col)).alias(udg_col)
     )
 
-    # fleet mode (partition keys): per-key dominant frequency, fully lazy;
-    # single-station parity mode: one driver-side scalar (A3)
-    freq_s = None if keys else dominant_freq_seconds(gated, t)
+    # A3: every key's dominant step in one build-time job (O(keys) rows),
+    # folded into the plan, so the lineage's sinks do not recompute it
+    steps = {
+        tuple(r[k] for k in keys): r["__freq_s"]
+        for r in per_key_dominant_freq(gated, t, keys).collect()
+    }
+    if not steps:
+        raise ValueError("need >=2 rows to detect sampling frequency")
     filled = resample_ffill(
-        gated, t, freq_s, limit=ffill_limit, partition_by=keys, origin="start_day"
+        gated, t, steps, limit=ffill_limit, partition_by=keys, origin="start_day"
     )
     frame = time_frame(t, before_s=med_window_s - 1, partition_by=keys)
     despiked = filled.select(
@@ -308,8 +264,7 @@ def filter_udg(
         ).alias(udg_col),
     )
     # J2: back to the original sampling instants
-    original_t = (udg if udg is not None else l1).select(*keys, t)
-    return despiked.join(original_t, on=keys + [t], how="inner")
+    return despiked.join(l1.select(*keys, t), on=keys + [t], how="inner")
 
 
 def fleet_normalise_udg(
@@ -320,25 +275,30 @@ def fleet_normalise_udg(
     site_col: str = "site",
     t: str = TIME,
 ) -> DataFrame:
-    """W9, fleet form — :func:`normalise_udg` for N stations at once.
+    """W9 — stitch UDG height-change jumps at N stations at once
+    (``fs_pp.py:452-511``).
 
-    The single-station path (reference ``fs_pp.py:452-511`` parity) takes
-    O(#events) driver-side median actions per site; a fleet would pay
-    O(sites x events) sequential Spark jobs. Here ALL sites' auto-delta
-    medians come from ONE distributed aggregation: a broadcast-sized
-    (site, event, date) table range-joins the fleet frame, pre/post
-    medians aggregate per (site, event) in a single shuffle, and one
-    collect of #auto_events rows lets the driver finish the (cheap,
-    order-dependent) rounding recurrence. Offsets re-enter the lineage as
-    a per-site event array via one broadcast join; the subtraction runs
-    per event in config order (``acc - delta``), matching the sequential
-    path's float arithmetic exactly.
+    ``events_by_site``: per site, the config ``udg_height_change`` rows,
+    ``[date, delta]`` or ``[date]``. The FIRST event zeroes the series at
+    the install height (delta required). Later events subtract a user
+    delta, or an auto-derived one: ``round(median([date..date+1d]) -
+    median([date-1d..date-4h]), 2)`` with both medians rounded to 2dp
+    first, taken on the series with every earlier-listed offset applied.
 
-    Assumes consecutive events at a site sit >2 days apart (true of the
-    reference's field visits) so an event's ±1-day median windows never
-    straddle an earlier step — then the raw medians are offset-invariant
-    and equal the sequential path's (differential-tested in
-    tests/test_fleet.py).
+    All sites' auto-delta medians come from ONE distributed aggregation:
+    a broadcast-sized (site, event, date) table range-joins the fleet
+    frame, pre/post medians aggregate per (site, event) in a single
+    shuffle, and one collect of #auto_events rows lets the driver finish
+    the (cheap, order-dependent) rounding recurrence. Offsets re-enter the
+    lineage as a per-site event array via one broadcast join; the
+    subtraction runs per event in config order (``acc - delta``).
+
+    The medians are taken on the raw series and shifted by the earlier
+    offsets, which equals the reference's sequential recurrence when every
+    earlier-listed event applies to the whole ``[date-1d, date+1d]``
+    window, i.e. sits at or before ``date - 1 day``. An auto event that
+    breaks this raises (tested against a pandas re-statement of the
+    reference loop in tests/test_fleet.py).
 
     Returns ``(site_col, t, udg_col)``.
     """
@@ -361,21 +321,20 @@ def fleet_normalise_udg(
                     f"site {site}: first udg_height_change event needs a height"
                 )
             if user_delta is None:
+                # offset invariance (docstring): every earlier-listed event
+                # at or before date - 1 day (explicit user deltas don't use
+                # the median windows, so they're exempt)
+                late = [d for _, d, _ in out if d > date - _dt.timedelta(days=1)]
+                if late:
+                    raise ValueError(
+                        f"site {site}: auto udg_height_change event at {date} "
+                        "needs every earlier-listed event at least 1 day "
+                        f"before it, but one is at {late[0]}; supply its "
+                        "height explicitly"
+                    )
                 auto_rows.append((site, k, date))
             out.append((k, date, user_delta))
         parsed[site] = out
-        # validate the >2-day spacing the offset-invariance argument
-        # rests on: an AUTO event whose ±1-day median windows straddle
-        # the previous step would silently produce a corrupt delta
-        # (explicit user deltas don't use the windows, so they're exempt)
-        for (_, d0, _), (_, d1_, later_user_delta) in zip(out, out[1:]):
-            if later_user_delta is None and (d1_ - d0) <= _dt.timedelta(days=2):
-                raise ValueError(
-                    f"site {site}: auto udg_height_change event at {d1_} is "
-                    f"<=2 days after the {d0} event — its ±1-day median "
-                    "window would straddle the earlier step; supply the "
-                    "height explicitly"
-                )
 
     # -- one distributed aggregation for every auto event's medians --
     raw_medians: dict[tuple[str, int], tuple[float | None, float | None]] = {}
@@ -430,10 +389,9 @@ def fleet_normalise_udg(
                     raise ValueError(
                         f"site {site}: no UDG data around height change at {date}"
                     )
-                # identical arithmetic to the sequential path, which rounds
-                # the offset-applied medians (median commutes with the shift)
-                # with F.round = HALF_UP — Python round() is banker's and
-                # diverges by 0.01 on exact .xx5 medians, so use HALF_UP here
+                # round the offset-applied medians (median commutes with the
+                # shift) HALF_UP, as Spark's F.round does — Python round() is
+                # banker's and diverges by 0.01 on exact .xx5 medians
                 delta = round(
                     _round2_half_up(post_raw - off) - _round2_half_up(pre_raw - off),
                     2,
@@ -527,6 +485,12 @@ def fleet_level1_to_level2(
     return level2.dropDuplicates()
 
 
+def _after_install(udg: DataFrame, install_date, udg_col: str, t: str) -> DataFrame:
+    """The non-null UDG readings at/after the install date (naive = UTC)."""
+    cut = F.lit(_utc(_to_ts(install_date)))
+    return udg.filter((F.col(t) >= cut) & F.col(udg_col).isNotNull())
+
+
 def fleet_calc_depth_tdr(
     udg: DataFrame,
     install_date,
@@ -537,12 +501,15 @@ def fleet_calc_depth_tdr(
     t: str = TIME,
     out_col: str = "depth",
 ) -> DataFrame:
-    """W8, fleet form — :func:`calc_depth_tdr` for N stations in one pass.
+    """W8 — time-varying TDR burial depth with melt-out ratchet
+    (``fs_pp.py:611-644``), for N stations in one pass.
 
-    The single-station path collects the first at/after-install UDG
-    reading driver-side (one action per site); here the per-site
-    normalization constant is a ``first`` window over (site, time) — no
-    action, no per-site loop — followed by the same ratchet closed form
+    Reference semantics: normalize UDG to its first reading at/after the
+    install date, then walk the series with a mutable offset that resets
+    when the sensor melts out. Here the per-site normalization constant is
+    a ``first`` window over (site, time) — no action, no per-site loop —
+    and the walk is the verified closed form (SURVEY §2.7 W8)
+    ``D_t = min(0, u_t - max(-d0, cummax(u)_t))``, one running-max window
     partitioned by site. Shared install date/depth (the common fleet
     deployment); per-site installs would join a site->install dim first.
 
@@ -550,10 +517,7 @@ def fleet_calc_depth_tdr(
     """
     from pyspark.sql import Window as _W
 
-    date = _to_ts(install_date)
-    after = udg.filter(F.col(t) >= F.lit(date)).filter(
-        F.col(udg_col).isNotNull()
-    )
+    after = _after_install(udg, install_date, udg_col, t)
     w = (
         _W.partitionBy(site_col)
         .orderBy(t)
@@ -662,45 +626,19 @@ def level1_to_level2(
     rename_mapping: Sequence[tuple[str, str]] = DEFAULT_L2_RENAME,
     t: str = TIME,
 ) -> DataFrame:
-    """L1 -> L2 (``fs_pp.py:263-299``): validity nulling -> column drops ->
-    regex rename -> UDG normalize+filter -> calibrated EC overwrite -> dedup.
-
-    One lazy lineage except the O(#events)+O(1) driver scalars documented on
-    :func:`normalise_udg` / :func:`filter_udg`. The UDG series re-enters by
-    an equi-join on time (the reference's index-aligned column assign, J5) —
-    broadcast-sized for a single station, shuffle-on-time for a fleet.
-    """
-    # P7 — validity BEFORE rename: EC ranges apply to raw millivolts
-    bounded = null_out_of_range(l1, valid_ranges)
-
-    # UDG chain runs on the validity-bounded L1 (reference order, :271-287)
-    udg_col = cfg.udg_key
-    norm = normalise_udg(bounded, udg_col=udg_col, events=cfg.udg_height_changes, t=t)
-    udg_l2 = filter_udg(bounded, udg=norm, udg_col=udg_col, t=t)
-
-    # EC calibration on bounded mV (reference :291)
-    ec_exprs = (
-        calibrate_ec(bounded, calibrations) if calibrations else {}
+    """L1 -> L2 for one station (``fs_pp.py:263-299``):
+    :func:`fleet_level1_to_level2` over a one-site fleet."""
+    l2 = fleet_level1_to_level2(
+        l1.withColumn(_SITE, F.lit(cfg.site)),
+        cfg,
+        {cfg.site: cfg.udg_height_changes},
+        calibrations,
+        site_col=_SITE,
+        valid_ranges=valid_ranges,
+        rename_mapping=rename_mapping,
+        t=t,
     )
-
-    level2 = bounded.drop(*cfg.remove_columns)
-    level2 = level2.withColumns(ec_exprs) if ec_exprs else level2
-    rename = build_l2_rename(level2.columns, rename_mapping)
-    level2 = rename_columns(level2, rename)
-
-    # J5: overwrite the renamed UDG column with the normalized+filtered series
-    udg_l2_name = rename.get(udg_col, udg_col)
-    level2 = (
-        level2.drop(udg_l2_name)
-        .join(
-            udg_l2.select(t, F.col(udg_col).alias(udg_l2_name)),
-            on=t,
-            how="left",
-        )
-    )
-    # P2 final dedup (keep-first determinism not needed: L2 rows are unique
-    # by time already; plain dropDuplicates matches the reference)
-    return level2.dropDuplicates()
+    return l2.drop(_SITE)
 
 
 # --------------------------------------------------------------------------- #
@@ -734,25 +672,20 @@ def calc_depth_tdr(
     t: str = TIME,
     out_col: str = "depth",
 ) -> DataFrame:
-    """W8 — time-varying TDR burial depth with melt-out ratchet
-    (``fs_pp.py:611-644``).
-
-    Reference semantics: normalize UDG to its first reading at/after the
-    install date, then walk the series with a mutable offset that resets
-    when the sensor melts out. Implemented via the verified closed form
-    (SURVEY §2.7 W8): ``D_t = min(0, u_t - max(-d0, cummax(u)_t))`` over the
-    normalized series ``u`` — one running-max window, no sequential state.
-
-    ``udg`` is a ``(t, udg_col)`` series (typically L2-filtered). Returns
-    ``(t, out_col)`` from the install date onward.
-    """
-    date = _to_ts(install_date)
-    after = udg.filter(F.col(t) >= F.lit(date)).filter(F.col(udg_col).isNotNull())
-    first_row = after.orderBy(t).limit(1).collect()
-    if not first_row:
-        raise ValueError(f"no UDG data at/after install date {date}")
-    udg_at_install = float(first_row[0][udg_col])
-    norm = after.select(t, (F.col(udg_col) - F.lit(udg_at_install)).alias("__u"))
-    return norm.select(
-        t, ratchet_depth("__u", t, float(install_depth)).alias(out_col)
+    """W8 for one station: :func:`fleet_calc_depth_tdr` over a one-site
+    fleet. ``udg`` is a ``(t, udg_col)`` series (typically L2-filtered);
+    returns ``(t, out_col)`` from the install date onward."""
+    if _after_install(udg, install_date, udg_col, t).isEmpty():
+        raise ValueError(
+            f"no UDG data at/after install date {_to_ts(install_date)}"
+        )
+    depth = fleet_calc_depth_tdr(
+        udg.withColumn(_SITE, F.lit("")),
+        install_date,
+        install_depth,
+        site_col=_SITE,
+        udg_col=udg_col,
+        t=t,
+        out_col=out_col,
     )
+    return depth.drop(_SITE)

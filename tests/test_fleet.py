@@ -2,10 +2,11 @@
 
 The reference processes one station per run (``bin/fs_process_l2.py``).
 The engine's fleet path must (a) produce per-site results identical to
-running the single-site parity path per station, and (b) contain NO
-unpartitioned window or global grid — every Window node partitions by
-site, so the plan scales with the number of stations (the "designed for
-100 TB" claim cashed out on the reference's own workload).
+running each station alone, and to a pandas re-statement of the
+reference's height-change loop, and (b) contain NO unpartitioned window
+or global grid — every Window node partitions by site, so the plan
+scales with the number of stations (the "designed for 100 TB" claim
+cashed out on the reference's own workload).
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from cassandra_fs_pp_spark.plans.levels import (
     fleet_normalise_udg,
     filter_udg,
     level1_to_level2,
-    normalise_udg,
 )
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -122,22 +122,103 @@ def test_fleet_matches_per_site_pipeline(spark, fleet_l1):
     assert n_rows == len(got)
 
 
+def _reference_normalise(series: pd.Series, events) -> pd.Series:
+    """The reference's sequential height-change loop (``fs_pp.py:452-511``)
+    re-stated in pandas: events apply in list order, and an auto delta
+    comes from 2dp-rounded medians of the series with every earlier
+    offset already applied."""
+    s = series.astype(float).copy()
+    for ev in events:
+        date = pd.Timestamp(ev[0])
+        if len(ev) == 2:
+            delta = ev[1]
+        else:
+            pre = s[date - pd.Timedelta(days=1) : date - pd.Timedelta(hours=4)]
+            post = s[date : date + pd.Timedelta(days=1)]
+            delta = round(round(post.median(), 2) - round(pre.median(), 2), 2)
+        s[s.index >= date] -= delta
+    return s
+
+
+def _assert_normalise_matches_reference(fleet, pdfs, events_by_site):
+    got = {(r["site"], r["TIMESTAMP"]): r["TCDT"] for r in fleet.collect()}
+    n = 0
+    for site, pdf in pdfs.items():
+        want = _reference_normalise(
+            pdf.set_index("TIMESTAMP")["TCDT"], events_by_site[site]
+        )
+        for ts, v in want.items():
+            n += 1
+            assert got[(site, ts.to_pydatetime())] == pytest.approx(
+                v, abs=1e-12
+            ), (site, ts)
+    assert n == len(got)
+
+
 def test_fleet_normalise_matches_sequential(spark, fleet_l1):
-    """The one-pass fleet delta aggregation reproduces the sequential
-    per-site driver recurrence (incl. the auto-derived delta at FS_B)."""
+    """The one-pass fleet delta aggregation reproduces the reference's
+    sequential per-site recurrence (incl. the auto-derived delta at FS_B)."""
     events_by_site = {s: ev for s, (_, _, ev) in SITES.items()}
     fleet = fleet_normalise_udg(fleet_l1, events_by_site)
-    got = {
-        (r["site"], r["TIMESTAMP"]): r["TCDT"] for r in fleet.collect()
-    }
-    for site, (_, _, events) in SITES.items():
-        single = normalise_udg(
-            fleet_l1.filter(F.col("site") == site).drop("site"), events=events
-        )
-        for r in single.collect():
-            assert got[(site, r["TIMESTAMP"])] == pytest.approx(
-                r["TCDT"], abs=1e-12, nan_ok=True
-            ), (site, r["TIMESTAMP"])
+    pdfs = {s: _site_frame(*spec) for s, spec in SITES.items()}
+    _assert_normalise_matches_reference(fleet, pdfs, events_by_site)
+
+
+DAY = dt.timedelta(days=1)
+
+
+def _stepped_frame() -> pd.DataFrame:
+    """Hourly TCDT over 6 days with jumps at days 2, 3 and 4 and a small
+    3-hour ripple (no median lands on a rounding tie)."""
+    ts = [T0 + dt.timedelta(hours=h) for h in range(6 * 24)]
+    tcdt = [
+        2.0 + 0.3 * (t >= T0 + 2 * DAY) - 0.2 * (t >= T0 + 3 * DAY)
+        + 0.45 * (t >= T0 + 4 * DAY) + 0.01 * (i % 3)
+        for i, t in enumerate(ts)
+    ]
+    return pd.DataFrame({"TIMESTAMP": ts, "TCDT": tcdt})
+
+
+def _ok(events):
+    return pytest.param(events, True, id="matches")
+
+
+def _raises(events):
+    return pytest.param(events, False, id="raises")
+
+
+@pytest.mark.parametrize(
+    "events, ok",
+    [
+        # an auto event needs every earlier-listed event at or before its
+        # date - 1 day: the TOA5 fixture's 1.5-day step, the bound itself,
+        # then closer ones
+        _ok([[T0 + 1.5 * DAY, 1.0], [T0 + 3 * DAY]]),
+        _ok([[T0 + 2 * DAY, 1.0], [T0 + 3 * DAY]]),
+        _raises([[T0 + 2 * DAY + dt.timedelta(hours=1), 1.0], [T0 + 3 * DAY]]),
+        _raises([[T0 + 3 * DAY - dt.timedelta(hours=2), 1.0], [T0 + 3 * DAY]]),
+        # listed out of date order: the raw-median shortcut holds when every
+        # earlier-listed event is >= 1 day before the auto event ...
+        _ok([[T0 + 2 * DAY, 1.0], [T0, 0.5], [T0 + 4 * DAY]]),
+        _ok([[T0, 1.0], [T0 + 2 * DAY, 0.2], [T0 + DAY, -0.1], [T0 + 4 * DAY]]),
+        # ... and not when one is later (even past the auto event's
+        # windows: its delta is then not in their offset)
+        _raises([[T0, 1.0], [T0 + 4 * DAY, 0.2], [T0 + 2 * DAY]]),
+        _raises([[T0 + 4 * DAY, 1.0], [T0 + 2 * DAY]]),
+        _raises([[T0, 1.0], [T0 + 5 * DAY, 0.2], [T0 + 3 * DAY, -0.1], [T0 + 2 * DAY]]),
+    ],
+)
+def test_fleet_normalise_event_spacing_and_order(spark, events, ok):
+    """An event list either matches the reference recurrence or raises;
+    it never returns a delta taken across an earlier step."""
+    pdf = _stepped_frame()
+    sdf = spark.createDataFrame(pdf).withColumn("site", F.lit("S"))
+    if not ok:
+        with pytest.raises(ValueError, match="at least 1 day before it"):
+            fleet_normalise_udg(sdf, {"S": events})
+        return
+    fleet = fleet_normalise_udg(sdf, {"S": events})
+    _assert_normalise_matches_reference(fleet, {"S": pdf}, {"S": events})
 
 
 def test_udg_event_dims_local_table(spark, fleet_l1):
@@ -192,8 +273,8 @@ def test_fleet_plan_has_no_unpartitioned_window(spark, fleet_l1):
 
 
 def test_fleet_tdr_depth_matches_per_site(spark):
-    """fleet_calc_depth_tdr == calc_depth_tdr run per site (the fleet
-    form swaps the per-site first-reading collect for a window)."""
+    """fleet_calc_depth_tdr over two sites == calc_depth_tdr on each site
+    alone: the at-install window and the ratchet stay within a site."""
     from cassandra_fs_pp_spark.plans.levels import (
         calc_depth_tdr,
         fleet_calc_depth_tdr,

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from cassandra_fs_pp_spark.operators.skew import salted_join
 from cassandra_fs_pp_spark.operators.windows import (
     interpolate_linear,
+    per_key_dominant_freq,
     ratchet_depth,
     resample_ffill,
 )
@@ -148,8 +149,13 @@ def test_per_key_resample_ffill_fleet(spark):
     both = pd.concat([a, b])
 
     sdf = spark.createDataFrame(both)
+    steps = {
+        (r["site"],): r["__freq_s"]
+        for r in per_key_dominant_freq(sdf, "t", ["site"]).collect()
+    }
+    assert steps == {("A",): 900, ("B",): 3600}
     out = (
-        resample_ffill(sdf, "t", None, limit=2, partition_by=["site"])
+        resample_ffill(sdf, "t", steps, limit=2, partition_by=["site"])
         .orderBy("site", "t")
         .toPandas()
     )

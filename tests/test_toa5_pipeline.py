@@ -23,10 +23,10 @@ from cassandra_fs_pp_spark.plans.levels import (
     calc_depth_tdr,
     chain_installation_depths,
     filter_udg,
+    fleet_normalise_udg,
     level0_to_level1,
     level1_to_level2,
     load_calibrations,
-    normalise_udg,
 )
 from cassandra_fs_pp_spark.sinks import encode_fixed_point
 from cassandra_fs_pp_spark.sources.toa5 import (
@@ -266,8 +266,15 @@ def test_level0_to_level1_prunes_all_null(l1):
 
 
 def test_normalise_udg_auto_step(l1, site):
+    from pyspark.sql import functions as F
+
     cfg = load_config(str(site / "site.toml"))
-    norm = normalise_udg(l1, events=cfg.udg_height_changes).orderBy("TIMESTAMP")
+    # the auto step sits 1.5 days after the install event: accepted, as
+    # the install event lies before the step's [date-1d, date+1d] window
+    norm = fleet_normalise_udg(
+        l1.withColumn("site", F.lit(cfg.site)),
+        {cfg.site: cfg.udg_height_changes},
+    ).orderBy("TIMESTAMP")
     rows = norm.collect()
     # zeroed at install height, and the auto-detected -0.24 step re-zeroes
     assert rows[0]["TCDT"] == pytest.approx(0.0, abs=1e-9)
@@ -330,6 +337,91 @@ def test_level1_to_level2(spark, l1, site):
     assert (
         l2.where(l2["TIMESTAMP"] == T0 + 40 * FREQ).collect()[0]["T107_C"] is None
     )
+
+
+def _with_events(cfg, events):
+    """``cfg`` with its height-change events replaced."""
+    import dataclasses
+
+    raw = {**cfg.raw, "level1_2": {**cfg.level1_2, "udg_height_change": events}}
+    return dataclasses.replace(cfg, raw=raw)
+
+
+LATE = T0 + dt.timedelta(days=30)  # after the last reading
+
+
+@pytest.mark.parametrize(
+    "run, match",
+    [
+        pytest.param(
+            lambda l1, cfg: level1_to_level2(l1, _with_events(cfg, [[T0]])),
+            "first udg_height_change event needs a height",
+            id="first-event-without-height",
+        ),
+        pytest.param(
+            lambda l1, cfg: level1_to_level2(
+                l1, _with_events(cfg, [[T0, 2.0], [LATE]])
+            ),
+            "no UDG data around height change",
+            id="no-data-around-auto-event",
+        ),
+        pytest.param(
+            lambda l1, cfg: calc_depth_tdr(l1.select("TIMESTAMP", "TCDT"), LATE, -0.48),
+            "no UDG data at/after install date",
+            id="no-data-after-install",
+        ),
+        pytest.param(
+            lambda l1, cfg: filter_udg(l1.where(l1["TIMESTAMP"] == T0)),
+            "need >=2 rows to detect sampling frequency",
+            id="one-gated-reading",
+        ),
+    ],
+)
+def test_l1_to_l2_error_paths(l1, site, run, match):
+    cfg = load_config(str(site / "site.toml"))
+    with pytest.raises(ValueError, match=match):
+        run(l1, cfg)
+
+
+def test_l1_to_l2_and_depth_independent_of_host_tz(spark, l1, site):
+    """Config dates are naive UTC. On a host whose local zone is not UTC
+    the height-change steps and the install cut must land on the same
+    instants, so L2 and the TDR depth match a UTC host's."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    cfg = load_config(str(site / "site.toml"))
+    cal = load_calibrations(spark, str(site / "cal.csv"))
+    date, depth, _ = cfg.tdr_info["1"]
+
+    def run():
+        l2 = level1_to_level2(l1, cfg, cal)
+        d = calc_depth_tdr(
+            l2.select("TIMESTAMP", "TCDT(m)"), date, depth, udg_col="TCDT(m)"
+        )
+        # JSON renders timestamps in the session time zone, not the host's
+        return [
+            sorted(r[0] for r in df.select(F.to_json(F.struct("*"))).collect())
+            for df in (l2, d)
+        ]
+
+    utc = run()
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Nuuk"
+    time.tzset()
+    try:
+        nuuk = run()
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+    assert len(utc[0]) == N and utc[1]
+    assert nuuk == utc
 
 
 # --------------------------------------------------------------------------- #

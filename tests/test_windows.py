@@ -12,9 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from cassandra_fs_pp_spark.operators.windows import (
-    dominant_freq_seconds,
     ffill_limited,
     interpolate_linear,
+    per_key_dominant_freq,
     piecewise_offset,
     ratchet_depth,
     resample_grid,
@@ -83,7 +83,16 @@ def test_ts_delta_and_dominant_freq(spark):
     df = _series_df(spark, [1.0] * 50, freq_min=15)
     extra = _series_df(spark, [2.0] * 3, freq_min=60)
     union = df.unionByName(extra).dropDuplicates(["time"])
-    assert dominant_freq_seconds(union, "time") == 15 * 60
+    assert per_key_dominant_freq(union, "time", []).collect() == [(15 * 60,)]
+    # per key: the mode of each series' deltas, the smallest on a tie;
+    # a one-row key has no delta and no row
+    minutes = {"a": [0, 15, 30, 45, 105], "b": [0, 10, 30, 40, 60], "c": [0]}
+    keyed = spark.createDataFrame(
+        [(k, T0 + dt.timedelta(minutes=m)) for k, ms in minutes.items() for m in ms],
+        "k string, time timestamp",
+    )
+    got = per_key_dominant_freq(keyed, "time", ["k"]).collect()
+    assert sorted(map(tuple, got)) == [("a", 900), ("b", 600)]
     deltas = (
         df.select(ts_delta_seconds("time").alias("d")).orderBy("d").toPandas()
     )
