@@ -127,7 +127,9 @@ def main(argv: list[str] | None = None) -> int:
             return 1
         l1 = eng.level0_to_level1()
         eng.write_l1(l1, out)
-        print(f"wrote L1: {out} ({l1.count()} rows)")
+        # count the written product: l1.count() would re-run L0 -> L1
+        n = eng.spark.read.csv(out, header=True).count()
+        print(f"wrote L1: {out} ({n} rows)")
         return 0
 
     l1 = eng.load_level1(a.l1)

@@ -3,7 +3,10 @@
 
 A user of the reference drives everything through ``fs(metafile,
 data_root)`` then calls pipeline methods; :class:`SiteEngine` is that
-handle: config-driven, lazy DataFrames out, writes via the engine sinks.
+handle: config-driven, writes via the engine sinks. L1 comes out as a
+lazy DataFrame (it has one sink); L2 is materialised once in
+:meth:`SiteEngine.level1_to_level2`, because the reference builds one
+L2 dataset and writes it twice, to CSV and to NetCDF.
 
     eng = SiteEngine(spark, "ppconfig/fs1.toml", "/data")
     l1 = eng.level0_to_level1()
@@ -68,7 +71,28 @@ class SiteEngine:
         calibrations: dict[str, tuple[float, float]] | None = None,
         **kw,
     ) -> DataFrame:
-        return levels.level1_to_level2(l1, self.config, calibrations, **kw)
+        """L1 -> L2, materialised once (``localCheckpoint``).
+
+        The reference builds L2 once in memory and writes it to CSV and
+        to NetCDF (``bin/fs_process_l2.py:60-204``). A lazy L2 would
+        re-plan and re-run its whole lineage (six exchanges, three
+        broadcasts, five scans of the L1 CSV) for each sink and for a
+        ``count()``; the checkpoint runs it once here and every later
+        action reads the stored rows.
+
+        The barrier sits here, not in :mod:`~cassandra_fs_pp_spark.plans.levels`:
+        ``levels.level1_to_level2`` and ``fleet_level1_to_level2`` stay
+        lazy, since the fleet writes its L2 once and a barrier there would
+        only add a pass.
+
+        Trade-off: checkpoint blocks live in executor storage and have no
+        lineage. If an executor is lost, a later sink fails instead of
+        recomputing. That is acceptable for a per-station product that
+        :meth:`to_netcdf` already collects to the driver.
+        """
+        return levels.level1_to_level2(
+            l1, self.config, calibrations, **kw
+        ).localCheckpoint()
 
     def write_l2_csv(self, l2: DataFrame, path: str) -> str:
         sinks.write_csv_single(l2, path)

@@ -568,9 +568,12 @@ def test_filter_udg_fleet_partitioned(spark):
         assert np.allclose(got.to_numpy()[m], want.to_numpy()[m])
 
 
-def test_engine_facade_and_cli(spark, site, tmp_path):
+def test_engine_facade_and_cli(spark, site, tmp_path, capsys):
     """SiteEngine drives L0->L1->L2 end-to-end; the CLI twins run both
-    stages against the same synthetic site."""
+    stages against the same synthetic site and print each product's row
+    count."""
+    import re
+
     from cassandra_fs_pp_spark.cli import main as cli_main
     from cassandra_fs_pp_spark.engine import SiteEngine
 
@@ -599,6 +602,8 @@ def test_engine_facade_and_cli(spark, site, tmp_path):
         )
         == 0
     )
+    printed = re.findall(r"wrote (L1|L2): \S+ \((\d+) rows\)", capsys.readouterr().out)
+    assert printed == [("L1", str(N)), ("L2", str(N))], printed
     l2cli = spark.read.csv(out2, header=True, inferSchema=True)
     assert l2cli.count() == N
 
@@ -616,6 +621,68 @@ def test_engine_facade_and_cli(spark, site, tmp_path):
             assert vb is None
         else:
             assert vb == pytest.approx(va, abs=0.0005)
+
+
+@pytest.fixture(scope="module")
+def engine_l1(spark, site, l1, tmp_path_factory):
+    """(engine, L1 re-read from its written CSV, calibrations)."""
+    from cassandra_fs_pp_spark.engine import SiteEngine
+
+    eng = SiteEngine(spark, str(site / "site.toml"), str(site))
+    path = eng.write_l1(l1, str(tmp_path_factory.mktemp("engine") / "l1"))
+    return eng, eng.load_level1(path), eng.load_calibrations(str(site / "cal.csv"))
+
+
+def _write_l2(eng, l2, out) -> tuple[bytes, bytes]:
+    """Both L2 sinks for one frame -> (CSV part file bytes, NetCDF bytes)."""
+    out.mkdir()
+    eng.write_l2_csv(l2, str(out / "l2"))
+    eng.to_netcdf(l2, str(out / "l2.nc"))
+    (part,) = (out / "l2").glob("part-*")
+    return part.read_bytes(), (out / "l2.nc").read_bytes()
+
+
+def test_engine_l2_sinks_match_lazy_lineage(engine_l1, tmp_path):
+    """The CSV and NetCDF written from SiteEngine's materialised L2 are
+    byte-identical to those written from the lazy ``levels`` lineage."""
+    eng, back, cal = engine_l1
+    got = _write_l2(eng, eng.level1_to_level2(back, cal), tmp_path / "engine")
+    want = _write_l2(
+        eng, level1_to_level2(back, eng.config, cal), tmp_path / "lazy"
+    )
+    assert got[0] == want[0]
+    assert got[1] == want[1]
+
+
+def test_engine_l2_runs_its_lineage_once(spark, engine_l1, tmp_path):
+    """SiteEngine.level1_to_level2 returns rows read from a checkpoint
+    (ExistingRDD scan, no FileScan of the L1 CSV), so each L2 sink runs
+    at most 3 Spark jobs instead of re-running the lineage (14 jobs)."""
+    eng, back, cal = engine_l1
+    l2 = eng.level1_to_level2(back, cal)
+    plan = l2._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan
+    assert "FileScan" not in plan, plan
+
+    sc = spark.sparkContext
+
+    def jobs(group, action) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    csv_jobs = jobs(
+        "engine-l2-csv", lambda: eng.write_l2_csv(l2, str(tmp_path / "l2"))
+    )
+    nc_jobs = jobs(
+        "engine-l2-nc", lambda: eng.to_netcdf(l2, str(tmp_path / "l2.nc"))
+    )
+    assert 1 <= csv_jobs <= 3, csv_jobs
+    assert 1 <= nc_jobs <= 3, nc_jobs
 
 
 def test_toa5_malformed_rows_tolerated(spark, tmp_path):
