@@ -21,6 +21,7 @@ summation-order differences (~1e-12 relative) can't flip the value hash.
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 from collections.abc import Callable
@@ -29,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+log = logging.getLogger(__name__)
 
 from cassandra_fs_pp_spark.operators.dedup import dedup_keep_first, dedup_rows
 from cassandra_fs_pp_spark.operators.joins import (
@@ -3241,21 +3244,25 @@ def _lsh_bits(n: int) -> int:
 def _parquet_num_rows(sf_dir: str, name: str) -> int | None:
     """Exact row count from parquet FOOTER metadata (no Spark job).  Both
     this and the oracle's ``_gate_embeddings_count`` read the same footer,
-    so the two sides can never disagree on the derived LSH bit count."""
+    so the two sides can never disagree on the derived LSH bit count.
+
+    None (logged) when a file is missing or unreadable; a corrupt footer
+    raises."""
     import glob as _glob
     import os as _os
 
     import pyarrow.parquet as pq
 
     path = _os.path.join(sf_dir, f"{name}.parquet")
+    files = (
+        sorted(_glob.glob(_os.path.join(path, "*.parquet")))
+        if _os.path.isdir(path)
+        else [path]
+    )
     try:
-        files = (
-            sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-            if _os.path.isdir(path)
-            else [path]
-        )
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
+    except OSError as exc:
+        log.warning("parquet footer row count unavailable for %s: %s", path, exc)
         return None
 
 
@@ -3284,17 +3291,24 @@ def _gate_embeddings_count() -> int:
     (no Spark needed).  Reads the SAME directory the gate points Spark at —
     $SF_DIR, defaulting to the driver's sf0.01 — so the oracle's LSH bit
     count always matches the Spark side's live-corpus-derived bits no
-    matter which scale the gate runs (ADVICE r2)."""
+    matter which scale the gate runs (ADVICE r2).
+
+    A missing or unreadable file falls back to 200 rows with a warning
+    naming the path (the oracle's bit count then need not match the
+    Spark side's); a corrupt footer raises."""
     import os as _os
 
     import pyarrow.parquet as pq
 
     sf_dir = _os.environ.get("SF_DIR", "/root/testdata/sf0.01")
+    path = _os.path.join(sf_dir, "embeddings.parquet")
     try:
-        return pq.ParquetFile(
-            _os.path.join(sf_dir, "embeddings.parquet")
-        ).metadata.num_rows
-    except Exception:
+        return pq.ParquetFile(path).metadata.num_rows
+    except OSError as exc:
+        log.warning(
+            "cannot read the gate corpus footer %s (%s): the LSH oracle "
+            "assumes 200 rows", path, exc,
+        )
         return 200
 
 
@@ -5235,9 +5249,8 @@ def _periodogram_rows(
 
 
 def ts_periodogram_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer periodogram at fixed candidate periods (6/12/24/168 h) —
-    the fully-oracled spectral sibling of ``ts_dominant_period``'s
-    rows-only FFT. cos/sin are PRECOMPUTED integer tables keyed on
+    """Integer periodogram at fixed candidate periods (6/12/24/168 h),
+    fully oracled. cos/sin are PRECOMPUTED integer tables keyed on
     ``hour mod period`` (p entries per period, broadcast), so the DFT
     components C = sum(x * cos_int) and S = sum(x * sin_int) are exact
     order-insensitive integer sums over integer cents; the reported
@@ -5346,9 +5359,7 @@ def ts_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DC component doesn't swamp short periods; C/S are
     order-insensitive integer sums against the broadcast cos/sin table;
     the argmax tie-breaks deterministically on (power desc, period
-    asc).  The arbitrary-frequency FFT operator remains available as
-    ``operators/spectral.py::dominant_period`` with its
-    planted-sinusoid tests."""
+    asc)."""
     ev = _t(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & (F.col("user_id") < 10)
     )
@@ -9392,8 +9403,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (``operators/graph.pagerank_exact``): integer sums are
     order-insensitive and ``div`` is engine-identical, so the formerly
     rows-only float iteration is now FULLY oracle-checkable against an
-    unrolled 8-step SQL replay (r7; the float ``pagerank`` operator
-    remains for API parity, pinned by its numpy differential test)."""
+    unrolled 8-step SQL replay (r7; a pytest holds it within 1e-9 of a
+    numpy float power iteration)."""
     from cassandra_fs_pp_spark.operators.graph import pagerank_exact
 
     li = _t(spark, sf_dir, "lineitem")
@@ -11809,9 +11820,8 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 arithmetic with truncating division, so the DuckDB oracle
     unrolls the same 64 power steps per axis and reproduces both the
     integer projections and the data-unit doubles bit-for-bit.  The
-    LAPACK-eigh variant remains available as ``pca_project``; the
-    spectral-gap pytest pins the power axes to eigh at cos >= 0.9999
-    where a gap exists."""
+    spectral-gap pytest pins the power axes to LAPACK eigh at
+    cos >= 0.9999 where a gap exists."""
     from cassandra_fs_pp_spark.operators.similarity import pca_power_project
 
     return pca_power_project(

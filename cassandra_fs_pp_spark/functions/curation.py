@@ -97,26 +97,6 @@ def pack_sequences(
     )
 
 
-def word_ngrams(text_col: Column, n: int = 8) -> Column:
-    """Array of word ``n``-grams (space-joined, lower-cased); empty array
-    for documents shorter than ``n`` tokens.
-
-    CAUTION (hot paths): CollapseProject inlines the tokenization into
-    the transform lambda, re-running the regex split once PER GRAM
-    (measured 7.6x slowdown at sf0.1). Fine for ad-hoc column use; bulk
-    paths go through :func:`ngram_rows`, which barriers the token array
-    behind a repartition so it materializes once per document.
-    """
-    toks = whitespace_tokens(text_col)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def ngram_rows(
     df: DataFrame,
     id_col: str,
@@ -124,15 +104,17 @@ def ngram_rows(
     n: int = 8,
     partition_by_id: bool = True,
 ) -> DataFrame:
-    """Exploded (id, gram) rows with the token array materialized ONCE per
-    document: a CollapseProject barrier prevents Catalyst inlining the
-    regex split into the per-gram lambda (re-splitting once PER GRAM —
-    see :func:`word_ngrams`; measured 7.6x at sf0.1).
+    """Exploded (id, gram) rows — word ``n``-grams, space-joined and
+    lower-cased; no rows for a document shorter than ``n`` tokens — with
+    the token array materialized ONCE per document: a CollapseProject
+    barrier prevents Catalyst inlining the regex split into the per-gram
+    lambda (a plain ``transform`` over the split re-runs it once PER GRAM;
+    measured 7.6x at sf0.1).
 
     ``partition_by_id=True`` (default) barriers via ``repartition(id)``
     — load-bearing for consumers whose next keyed op is satisfied by the
-    id clustering (``ngram_hash_set``'s distinct, a ``groupBy(id)``
-    chain): the one exchange is shared.  ``partition_by_id=False`` (r17)
+    id clustering (a distinct or ``groupBy`` on the id): the one
+    exchange is shared.  ``partition_by_id=False`` (r17)
     skips the exchange entirely: the tokens still materialize once but
     the corpus token arrays are NOT shuffled at all; use it when the
     consumer filters the gram stream before any keyed op
@@ -166,16 +148,6 @@ def ngram_rows(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return toks.select(F.col(id_col), F.explode(grams).alias("gram"))
-
-
-def ngram_hash_set(df: DataFrame, id_col: str, text_col: str, n: int = 8) -> DataFrame:
-    """Distinct (id, gram_hash) pairs — the join-ready decontamination
-    shape. Hashing to 60 bits keeps shuffle keys fixed-width at scale."""
-    return (
-        ngram_rows(df, id_col, text_col, n)
-        .select(F.col(id_col), hash60(F.col("gram")).alias("gram_hash"))
-        .distinct()
-    )
 
 
 def decontaminate(

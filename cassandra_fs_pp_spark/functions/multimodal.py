@@ -13,8 +13,8 @@ Wire format — the deterministic FAKE codec
 The container environment has no image/audio libraries (no PIL/cv2/librosa),
 so the *decode* of real formats is stubbed (:func:`decode_real_image`), and
 the engine ships a self-describing little-endian fake format that exercises
-ALL the real plumbing (binary payloads, header parse, pixel math, resize,
-frame explode) with pure numpy:
+ALL the real plumbing (binary payloads, header parse, pixel math, frame
+explode) with pure numpy:
 
 * ``FIMG`` | u16 width | u16 height | u8 channels | pixels (w*h*c bytes,
   row-major)
@@ -28,8 +28,7 @@ oracle can replicate without touching binary.
 
 Scale stance: media tables partition by item id (payloads are big — keep
 ``spark.sql.files.maxPartitionBytes`` low for media parquet); every op here
-is embarrassingly parallel per item, no shuffle. Feature vectors come back
-as ``array<float>`` ready for the similarity layer (operators/similarity).
+is embarrassingly parallel per item, no shuffle.
 """
 
 from __future__ import annotations
@@ -41,10 +40,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
     StringType,
     StructField,
@@ -149,16 +146,6 @@ def decode_video_frames(payload: bytes) -> Iterator[tuple[int, bytes]]:
     base = 11
     for f in range(nf):
         yield f, head + payload[base + f * n : base + (f + 1) * n]
-
-
-def resize_nearest(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor resize of a FIMG payload (pure numpy gather)."""
-    img = decode_image_pixels(payload)
-    h, w, c = img.shape
-    yi = (np.arange(out_h) * h) // out_h
-    xi = (np.arange(out_w) * w) // out_w
-    out = img[yi][:, xi]
-    return IMG_MAGIC + struct.pack("<HHB", out_w, out_h, c) + out.tobytes()
 
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -677,55 +664,6 @@ def image_stats(
             )
 
     return df.mapInPandas(stats, schema=schema)
-
-
-def image_resize(
-    df: DataFrame,
-    out_w: int,
-    out_h: int,
-    payload_col: str = "payload",
-    out_col: str = "resized",
-) -> DataFrame:
-    """Nearest-neighbor resize -> new payload column (payload-in/payload-out,
-    the map shape of every media transform)."""
-    schema = StructType(df.schema.fields + [StructField(out_col, BinaryType())])
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = [
-                resize_nearest(p, out_w, out_h) for p in pdf[payload_col]
-            ]
-            yield pdf
-
-    return df.mapInPandas(rs, schema=schema)
-
-
-def image_embedding(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str = "payload",
-    bins: int = 16,
-) -> DataFrame:
-    """Deterministic feature vector per image: ``bins``-bucket normalized
-    pixel histogram as ``array<float>`` — the hand-off into the ANN /
-    near-dup similarity layer."""
-    # r17 (guide §4): only (id, payload) cross the JVM->Python boundary —
-    # a wider caller frame would otherwise ship every column through Arrow.
-    df = df.select(id_col, payload_col)
-    schema = StructType(
-        [df.schema[id_col], StructField("embedding", ArrayType(FloatType()))]
-    )
-
-    def emb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for k, p in zip(pdf[id_col], pdf[payload_col]):
-                px = decode_image_pixels(p).ravel()
-                hist, _ = np.histogram(px, bins=bins, range=(0, 256))
-                out.append((k, (hist / max(px.size, 1)).astype(np.float32)))
-            yield pd.DataFrame(out, columns=[id_col, "embedding"])
-
-    return df.mapInPandas(emb, schema=schema)
 
 
 def video_frame_sample(

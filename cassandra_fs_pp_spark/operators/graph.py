@@ -112,70 +112,6 @@ def connected_components(
     return labels
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    damping: float = 0.85,
-    iterations: int = 10,
-) -> DataFrame:
-    """Directed PageRank by fixed-iteration power method.
-
-    Classic Spark formulation: each round, every node ships
-    ``rank/outdegree`` along its out-edges; the new rank is
-    ``(1-d)/N + d * sum(contribs)``. Nodes with no in-edges settle at
-    ``(1-d)/N``; dangling-node mass is not redistributed (the standard
-    Spark-example semantics — callers needing strict stochasticity can
-    add the dangling term with one extra agg per round).
-
-    Rounds are DataFrame joins on the edge key — one shuffle each, and
-    the edge table's partitioning is reused every round. ``localCheckpoint``
-    per round truncates lineage so the physical plan stays O(1)-deep
-    regardless of ``iterations`` (same discipline as
-    :func:`connected_components`). Deterministic up to float summation
-    order; round displayed ranks before comparing across engines.
-    """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    # eager=False (r17): `nodes` is materialized by the n_total count right
-    # below; `e_deg` / per-round `ranks` materialize inside the first job
-    # that consumes them. The iteration count is FIXED (no convergence
-    # action), so the loop needs no blocking job at all — lineage is still
-    # truncated per round, the plan stays O(1)-deep, and the caller's
-    # single action executes the chained rounds back to back.
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("t").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_total = nodes.count()
-    if n_total == 0:
-        return nodes.withColumn("rank", F.lit(0.0))  # empty graph: no rows
-    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg"))
-    e_deg = e.join(outdeg, "s").localCheckpoint(eager=False)
-    base = (1.0 - damping) / n_total
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_total)).localCheckpoint(
-        eager=False
-    )
-    for _ in range(iterations):
-        contribs = (
-            e_deg.join(ranks, e_deg["s"] == ranks["node"])
-            .select(F.col("t").alias("node"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
-
-
 def pagerank_exact(
     edges: DataFrame,
     src: str = "src",
@@ -186,27 +122,35 @@ def pagerank_exact(
     damping_num: int = 17,
     damping_den: int = 20,
 ) -> DataFrame:
-    """PageRank in EXACT fixed-point integer arithmetic — the
-    cross-engine-verifiable sibling of :func:`pagerank`.
+    """Directed PageRank by fixed-iteration power method, in EXACT
+    fixed-point integer arithmetic.
 
     Ranks are scaled to ``scale`` (1e12) and every step is integer-only:
     each node ships ``rank_fp div outdeg`` along its out-edges and the
     new rank is ``base + (17 * sum(contribs)) div 20`` with
-    ``base = (3 * scale) div (20 * N)``. Integer sums are
-    order-insensitive and integer division is identical in every engine,
-    so a fixed-iteration SQL replay reproduces the result BIT-FOR-BIT —
-    unlike the float version, whose aggregation-order-dependent sums
-    have no practical oracle. The per-step truncation deliberately
-    discards < outdeg ulps of 1e-12-scale mass per node (bounded,
-    deterministic); dangling-node mass is not redistributed, matching
-    :func:`pagerank`.
+    ``base = (3 * scale) div (20 * N)``, i.e. ``(1-d)/N + d * sum`` at
+    d = 0.85. Nodes with no in-edges settle at ``base``; dangling-node
+    mass is not redistributed (the standard Spark-example semantics).
+    Integer sums are order-insensitive and integer division is identical
+    in every engine, so a fixed-iteration SQL replay reproduces the
+    result BIT-FOR-BIT — a float power iteration's
+    aggregation-order-dependent sums have no practical oracle. The
+    per-step truncation deliberately discards < outdeg ulps of
+    1e-12-scale mass per node (bounded, deterministic).
 
-    Same plan shape as :func:`pagerank`: one edge-key join + one agg per
-    round, lineage truncated per round with localCheckpoint.
+    Rounds are DataFrame joins on the edge key — one shuffle each, and
+    the edge table's partitioning is reused every round. ``localCheckpoint``
+    per round truncates lineage so the physical plan stays O(1)-deep
+    regardless of ``iterations`` (same discipline as
+    :func:`connected_components`).
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    # eager=False — see :func:`pagerank` (fixed iterations, no blocking
-    # job per round; lineage truncation unchanged).
+    # eager=False (r17): `nodes` is materialized by the n_total count right
+    # below; `e_deg` / per-round `ranks` materialize inside the first job
+    # that consumes them. The iteration count is FIXED (no convergence
+    # action), so the loop needs no blocking job at all — lineage is still
+    # truncated per round, the plan stays O(1)-deep, and the caller's
+    # single action executes the chained rounds back to back.
     nodes = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("t").alias("node")))

@@ -32,44 +32,11 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Same dot product with the loop UNROLLED into a left-associated
-    arithmetic expression — bit-identical to :func:`dot` (addition runs in
-    the same sequential order: ``0 + x0 + x1 + ...``).
-
-    MEASURED SLOWER than :func:`dot` at dim=64 on Spark 4.1 (~3x, at both
-    266k and 31M pair volumes): the 64-term chain exceeds what whole-stage
-    codegen will compile into one method, so it evaluates as a ~260-node
-    interpreted tree, while the compact ``zip_with``/``aggregate`` lambda
-    runs two tight array-specialized loops. Kept for the differential
-    tests that pin the fold-order equivalence; use :func:`dot` in hot
-    paths."""
-    acc: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + F.element_at(a, i).cast("double") * F.element_at(b, i).cast(
-            "double"
-        )
-    return acc
-
-
 def _dlit(x: float) -> str:
     """SQL DOUBLE literal with full round-trip precision (repr is the
     shortest decimal that parses back to the same IEEE double in both
     Python and the JVM)."""
     return repr(float(x)) + "D"
-
-
-def dot_unrolled_sql(a: str, b: str, dim: int) -> str:
-    """SQL text of :func:`dot_unrolled` over column NAMES (one ``F.expr``
-    string instead of ~4*dim py4j calls to build). Same caveat as
-    :func:`dot_unrolled`: interpreted at dim=64, ~3x slower than
-    :func:`dot` — test/differential use only."""
-    terms = "".join(
-        f" + CAST(element_at({a}, {i}) AS DOUBLE)"
-        f" * CAST(element_at({b}, {i}) AS DOUBLE)"
-        for i in range(1, dim + 1)
-    )
-    return "0.0D" + terms
 
 
 def l2_norm(a: Column) -> Column:
@@ -226,12 +193,13 @@ def hyperplane_lsh_perms(bits: int, dim: int, seed: int = 7) -> list[list[float]
 def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-bit bucket id: bit b set when dot(vec, plane_b) >= 0.
 
-    Kept as the compact ``zip_with``/``aggregate`` form on purpose: an
-    unrolled variant (bits x dim explicit terms, x tables call sites)
-    multiplies Catalyst analysis time by seconds-per-query; this runs
-    once per corpus row, so interpreted eval is fine (the candidate-pair
-    rerank likewise uses the compact :func:`dot` — measured ~3x faster
-    than the unrolled form at dim=64, see :func:`dot_unrolled`)."""
+    The Column-API reference form of :func:`lsh_bucket_sql`, which the
+    registry runs; tests pin the two bit-identical. Both keep the compact
+    ``zip_with``/``aggregate`` form on purpose: an unrolled variant
+    (bits x dim explicit terms, x tables call sites) multiplies Catalyst
+    analysis time by seconds-per-query, and at dim=64 evaluates ~3x
+    slower than :func:`dot` because whole-stage codegen gives up on the
+    chain and interprets it."""
     bucket = F.lit(0).cast("long")
     for b, plane in enumerate(planes):
         d = F.aggregate(
@@ -498,27 +466,20 @@ def lsh_topk(
             _arrow_col,
             _mat_arrow,
             _np_col,
+            cosine_array,
+            seq_dot,
         )
 
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
             q_mat = _mat_arrow(_arrow_col(b, "qv"), dim)
             n_mat = _mat_arrow(_arrow_col(b, "nv"), dim)
-            acc = np.zeros(n)
-            for i in range(dim):
-                acc += q_mat[:, i] * n_mat[:, i]
-            cos = acc / (
-                np.asarray(_np_col(b, "qn"), dtype=np.float64)
-                * np.asarray(_np_col(b, "nn"), dtype=np.float64)
+            cos = cosine_array(
+                seq_dot(q_mat, n_mat), _np_col(b, "qn"), _np_col(b, "nn")
             )
             yield pa.RecordBatch.from_arrays(
-                [
-                    _arrow_col(b, "__ga"),
-                    _arrow_col(b, "__gb"),
-                    pa.array(cos, type=pa.float64()),
-                ],
+                [_arrow_col(b, "__ga"), _arrow_col(b, "__gb"), cos],
                 names=["__ga", "__gb", "cos_raw"],
             )
 
@@ -1979,67 +1940,6 @@ def gram_matrix(
     return parts.groupBy("i", "j").agg(F.sum("s").alias("gram_sum"))
 
 
-def pca_project(
-    vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    k: int = 2,
-    scale: int = GRAM_SCALE,
-) -> DataFrame:
-    """Project embeddings onto the top-``k`` principal axes of the
-    UNCENTRED second-moment matrix (truncated SVD of X — the standard
-    embedding-compression / visualization step).
-
-    Scale shape: the only global reduction is :func:`gram_matrix`'s
-    O(parts * d^2) integer partials; the d x d eigenproblem solves on the
-    DRIVER (d^2 scalars — a bounded collect by the same contract as the
-    k x d centroid fetches), and the k eigenvectors ship back inside the
-    Arrow projection closure.  The corpus itself streams map-side twice
-    (Gram pass + projection pass), never shuffles.
-
-    Determinism: the Gram is exact integer (partition-invariant); eigen
-    sign is fixed by forcing each axis's largest-|component| positive.
-    Returns (id, pc1..pck) doubles, unrounded.
-    """
-    import numpy as np
-    import pandas as pd
-
-    g = gram_matrix(vectors, vec_col=vec_col, dim=dim, scale=scale).collect()
-    M = np.zeros((dim, dim), dtype=np.float64)
-    for r in g:
-        M[r["i"], r["j"]] = r["gram_sum"]
-        M[r["j"], r["i"]] = r["gram_sum"]
-    vals, vecs = np.linalg.eigh(M)  # ascending
-    top = vecs[:, ::-1][:, :k].copy()  # descending eigenvalue order
-    for c in range(top.shape[1]):
-        piv = int(np.argmax(np.abs(top[:, c])))
-        if top[piv, c] < 0:
-            top[:, c] = -top[:, c]
-    # undo the fixed-point quantization scale so scores are in data units
-    V = top / float(scale)
-
-    cols = [f"pc{i + 1}" for i in range(k)]
-    out_schema = ", ".join(
-        [f"{id_col} long"] + [f"{c} double" for c in cols]
-    )
-
-    def proj(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Q = np.floor(X * scale).astype(np.int64).astype(np.float64)
-            S = Q @ V
-            out = {id_col: pdf[id_col].to_numpy()}
-            for i, c in enumerate(cols):
-                out[c] = S[:, i]
-            yield pd.DataFrame(out)
-
-    return vectors.select(id_col, vec_col).mapInPandas(proj, out_schema)
-
-
 PCA_POWER_B = 1 << 12  # fixed-point vector scale (|v_i| <= 4096)
 PCA_POWER_ITERS = 64
 
@@ -2053,17 +1953,19 @@ def pca_power_project(
     scale: int = GRAM_SCALE,
     iters: int = PCA_POWER_ITERS,
 ) -> DataFrame:
-    """Top-2 principal-axis projection via ENGINE-EXACT fixed-point power
-    iteration — the hash-oracled sibling of :func:`pca_project`.
+    """Top-2 principal-axis projection of embeddings onto the UNCENTRED
+    second-moment matrix (truncated SVD of X — the standard
+    embedding-compression / visualization step), via ENGINE-EXACT
+    fixed-point power iteration.
 
-    Same scale shape (integer Gram partials -> bounded d^2 driver
-    collect -> Arrow-batched projection; the corpus never shuffles), but
-    the eigensolver is replaced by a deterministic integer power
-    iteration whose every step is specified in int64 arithmetic with
-    truncating division (``tdiv(a,b) = sign(a) * (|a| // b)`` — DuckDB's
-    native ``//``), so a SQL oracle replays the whole computation
-    bit-for-bit (the same fixed-point move that graduated
-    ``graph_pagerank``; see ``operators/graph.py:166``).
+    Scale shape: integer :func:`gram_matrix` partials -> bounded d^2
+    driver collect -> Arrow-batched projection; the corpus never
+    shuffles. In place of a floating-point eigensolver, a deterministic
+    integer power iteration whose every step is specified in int64
+    arithmetic with truncating division (``tdiv(a,b) = sign(a) * (|a|
+    // b)`` — DuckDB's native ``//``), so a SQL oracle replays the whole
+    computation bit-for-bit (the same fixed-point move as
+    ``graph_pagerank``'s :func:`~cassandra_fs_pp_spark.operators.graph.pagerank_exact`).
 
     Spec: ``Gs = tdiv(G, max|G| // (2^20 - 1) + 1)`` (int64/float-exact
     headroom); axis 1 from ``v = ones * 2^12``, iterating

@@ -117,6 +117,20 @@ def seq_l2(A: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
+def cosine_array(dots: np.ndarray, qn: np.ndarray, nn: np.ndarray):
+    """``dots / (qn * nn)`` as a float64 Arrow array, NULL where the
+    denominator is 0 — Spark's non-ANSI ``Divide`` (``try_divide``).
+    numpy gives NaN or +-inf there instead, and under ``desc()`` NaN
+    sorts first while NULL sorts last: a zero-norm vector would jump
+    from the tail of a top-k to its head."""
+    import pyarrow as pa
+
+    denom = np.asarray(qn, dtype=np.float64) * nn
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dots / denom
+    return pa.array(cos, type=pa.float64(), mask=denom == 0.0)
+
+
 def sq_dequantize(X: np.ndarray, mn: np.ndarray, mx: np.ndarray, levels: int) -> np.ndarray:
     """SQ8 dequantize, operation-for-operation ``_dq_vec_sql``:
     per element ``code = round(((v - mn) / rng) * levels)`` (0 where
@@ -135,8 +149,9 @@ def pq_assign_codes(
     """PQ code assignment over residual rows ``X`` (n, m*dsub):
     per subspace j, ``argmin_c sum_p CAST(round((x-c)^2 * 1e9) AS
     BIGINT)`` with ties to the LOWEST code — operation-for-operation
-    ``_pq_code_sql`` (quantized integer distances, exact int64 sums,
-    ``np.argmin`` keeps the first minimum like the strict-< fold)."""
+    ``_pq_code_sql`` under non-ANSI Spark (quantized integer distances,
+    the CAST's saturation, wrapping int64 sums, ``np.argmin`` keeps the
+    first minimum like the strict-< fold)."""
     n = X.shape[0]
     m = len(books)
     codes = np.empty((n, m), dtype=np.int32)
@@ -146,7 +161,13 @@ def pq_assign_codes(
         for c in range(book.shape[0]):
             diff = S - book[c]
             q = round_half_up(diff * diff * 1e9)
-            D[:, c] = q.astype(np.int64).sum(axis=1)
+            # CAST(q AS BIGINT) is Java's saturating narrowing (>= 2^63 ->
+            # Long.MAX_VALUE, NaN -> 0) where astype would wrap around
+            # (residuals above ~9.6e4 reach 2^63)
+            sat = q >= 2.0**63
+            qi = np.where(sat | np.isnan(q), 0.0, q).astype(np.int64)
+            qi[sat] = np.iinfo(np.int64).max
+            D[:, c] = qi.sum(axis=1)
         codes[:, j] = np.argmin(D, axis=1)
     return codes
 
@@ -190,15 +211,9 @@ def score_sq8_map(dim: int, mn, mx, levels: int):
             )
             DQu = sq_dequantize(V[first], mnv, mxv, levels)
             NNu = seq_l2(DQu)
-            cos = seq_dot(Q, DQu[inv]) / (
-                np.asarray(_np_col(b, "qn"), dtype=np.float64) * NNu[inv]
-            )
+            cos = cosine_array(seq_dot(Q, DQu[inv]), _np_col(b, "qn"), NNu[inv])
             yield pa.RecordBatch.from_arrays(
-                [
-                    _arrow_col(b, "query_id"),
-                    _arrow_col(b, "neighbor_id"),
-                    pa.array(cos, type=pa.float64()),
-                ],
+                [_arrow_col(b, "query_id"), _arrow_col(b, "neighbor_id"), cos],
                 names=["query_id", "neighbor_id", "adc_cos"],
             )
 
@@ -246,15 +261,9 @@ def score_pq_map(dim: int, dsub: int, cb, cent_map: dict):
             codes = pq_assign_codes(R, books, dsub)
             PQVu = cent + pq_reconstruct(codes, books)
             NNu = seq_l2(PQVu)
-            cos = seq_dot(Q, PQVu[inv]) / (
-                np.asarray(_np_col(b, "qn"), dtype=np.float64) * NNu[inv]
-            )
+            cos = cosine_array(seq_dot(Q, PQVu[inv]), _np_col(b, "qn"), NNu[inv])
             yield pa.RecordBatch.from_arrays(
-                [
-                    _arrow_col(b, "query_id"),
-                    _arrow_col(b, "neighbor_id"),
-                    pa.array(cos, type=pa.float64()),
-                ],
+                [_arrow_col(b, "query_id"), _arrow_col(b, "neighbor_id"), cos],
                 names=["query_id", "neighbor_id", "adc_cos"],
             )
 
@@ -275,15 +284,9 @@ def score_fp32_map(dim: int):
                 continue
             Q = _mat_arrow(_arrow_col(b, "qv"), dim)
             N = _mat_arrow(_arrow_col(b, "nv"), dim)
-            cos = seq_dot(Q, N) / (
-                np.asarray(_np_col(b, "qn"), dtype=np.float64) * seq_l2(N)
-            )
+            cos = cosine_array(seq_dot(Q, N), _np_col(b, "qn"), seq_l2(N))
             yield pa.RecordBatch.from_arrays(
-                [
-                    _arrow_col(b, "query_id"),
-                    _arrow_col(b, "neighbor_id"),
-                    pa.array(cos, type=pa.float64()),
-                ],
+                [_arrow_col(b, "query_id"), _arrow_col(b, "neighbor_id"), cos],
                 names=["query_id", "neighbor_id", "cos_raw"],
             )
 

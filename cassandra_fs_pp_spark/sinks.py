@@ -40,81 +40,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """ORC interchange sink (Spark-native writer): same partition-pruning
-    / column-pruning / predicate-pushdown properties as the Parquet
-    canonical sink, for pipelines whose downstream (Hive/Trino/legacy
-    warehouse) is ORC-first.  Pushdown on re-read is asserted in
-    tests/test_layout.py."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    *,
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    mode: str = "overwrite",
-) -> None:
-    """XML interchange sink (Spark 4 native ``xml`` datasource — no
-    external package). Row-based text format: no column pruning or
-    predicate pushdown on re-read, so this is strictly an interchange
-    edge (export to legacy/partner systems), never a pipeline-internal
-    handoff — that stays Parquet/ORC. Timestamps round-trip as ISO-8601
-    strings; re-read with an explicit schema for type fidelity."""
-    df.write.mode(mode).format("xml").option("rowTag", row_tag).option(
-        "rootTag", root_tag
-    ).save(path)
-
-
-def read_xml(
-    spark,
-    path: str,
-    *,
-    row_tag: str = "row",
-    schema=None,
-):
-    """Read an XML export back (schema-inferred unless given — pass the
-    writer's schema for exact dtype fidelity)."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    *,
-    bucket_by: Sequence[str],
-    n_buckets: int = 32,
-    sort_by: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed + sorted table layout: the pre-shuffled join/agg format.
-
-    Two tables bucketed on the same key with the same bucket count join
-    with ZERO Exchange (verified in tests/test_layout.py) — the 100 TB
-    co-location lever for repeated joins on a hot key. Registered in the
-    session catalog as ``table`` with data at ``path``.
-    """
-    writer = df.write.bucketBy(int(n_buckets), *bucket_by)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.option("path", path).mode(mode).saveAsTable(table)
-
-
 def write_csv_single(
     df: DataFrame, path: str, *, order_by: str = "TIMESTAMP", mode: str = "overwrite"
 ) -> None:
@@ -317,24 +242,3 @@ def to_netcdf_long(
         variables,
         {**DEFAULT_GLOBAL_ATTRS, **dict(global_attrs or {})},
     )
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: Sequence[str] = (),
-    compression: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Line-delimited JSON export — the corpus interchange format LLM data
-    pipelines exchange (one document object per line). Nested structs/
-    arrays serialize naturally; at scale pair with ``partition_by`` (e.g.
-    split or date) and a splittable ``compression`` (none/'gzip' per-file;
-    prefer none + outer parquet for re-processing)."""
-    writer = df.write.mode(mode)
-    if compression:
-        writer = writer.option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)

@@ -66,41 +66,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    *,
-    corrupt_col: str = "_corrupt_record",
-):
-    """Line-delimited JSON scan.
-
-    ``schema`` (DDL string) is REQUIRED at scale: inference reads every
-    byte once just to guess types, and silently widens/NULLs mixed rows.
-    Malformed lines do not fail the job (PERMISSIVE): they land in
-    ``corrupt_col`` when the schema declares it (pass the extra column in
-    the DDL), preserving audit-ability of bad upstream records.
-    """
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", corrupt_col
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str, *, prefix: str = "") -> list[str]:
-    """SQL facade: register every star-schema table as a temp view so the
-    whole engine surface is reachable from ``spark.sql`` (the reference has
-    no SQL; Spark gives it for free once the scans are normalized). Views
-    go through :func:`load_table`, so the TIMESTAMP(NANOS) defense and
-    lazy scan behavior are identical to the DataFrame path.
-    """
-    names = []
-    for name in TABLES:
-        view = f"{prefix}{name}"
-        load_table(spark, sf_dir, name).createOrReplaceTempView(view)
-        names.append(view)
-    return names

@@ -420,62 +420,6 @@ def run_available_now(
     return spark.table(qname)
 
 
-def stream_static_enrich(
-    stream_df: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-) -> DataFrame:
-    """Stream-static broadcast enrichment: the streaming twin of the J1/J6
-    dimension attach. No state store, no watermark needed for an
-    inner/left equi-join.
-
-    Refresh caveat: a plain-parquet ``dim`` PINS its file listing when
-    the DataFrame is created — micro-batches re-execute the plan but do
-    NOT re-list files, so overwriting the dim directory mid-stream either
-    serves stale rows or fails on deleted part files.  To pick up dim
-    refreshes, back the dim with a format that re-resolves per batch
-    (Delta/Iceberg) or rebuild the stream (foreachBatch re-reading the
-    dim is the plain-parquet workaround)."""
-    return stream_df.join(F.broadcast(dim), on)
-
-
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    watermark: str = "2 hours",
-    within: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream inner join: right-side events matching a left event's
-    key within ``[left.ts_col, left.ts_col + within]`` event time.
-
-    Both sides carry watermarks and the join predicate bounds event time,
-    so Spark can size the state store and evict rows older than the
-    watermark — the required shape for an unbounded stream-stream join
-    (an unconstrained one would buffer both streams forever).
-    """
-    lw = left.withWatermark(ts_col, watermark).alias("l")
-    rw = right.withWatermark(ts_col, watermark).alias("r")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{ts_col}") >= F.col(f"l.{ts_col}"))
-        & (
-            F.col(f"r.{ts_col}")
-            <= F.col(f"l.{ts_col}") + F.expr(f"INTERVAL {within}")
-        )
-    )
-    return lw.join(rw, cond, "inner").select(
-        F.col(f"l.{key}").alias(key),
-        F.col(f"l.{id_col}").alias("left_event"),
-        F.col(f"r.{id_col}").alias("right_event"),
-        F.col(f"l.{ts_col}").alias("left_ts"),
-        F.col(f"r.{ts_col}").alias("right_ts"),
-    )
-
-
 def foreach_batch_upsert(
     stream_df: DataFrame,
     snapshot_dir: str,

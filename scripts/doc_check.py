@@ -57,6 +57,7 @@ def main() -> int:
     bad = variants_lint(qs) or bad
     bad = calib_lint() or bad
     bad = id_magnitude_lint() or bad
+    bad = reach_lint() or bad
     rows_only = qs - osql
     print(f"registry: {len(qs)} queries, {len(osql)} full oracles, "
           f"rows-only: {sorted(rows_only)}")
@@ -315,6 +316,124 @@ def _id_magnitude_scan(src: str) -> bool:
                 print(h)
         return True
     print("id-magnitude lint: no absolute-magnitude id predicates")
+    return False
+
+
+# Top-level package definitions that nothing outside tests/ references,
+# kept on purpose.  Listed names do not count as uses themselves, so a
+# helper only they call needs its own entry.
+REACH_ALLOW = frozenset({
+    # tests compare the registry's SQL-string/Arrow path against this form:
+    "cdc_chunk_expr",  # Column form of functions.text.cdc_chunks
+    "lsh_bucket",  # Column form of similarity.lsh_bucket_sql
+    "_pq_code_sql",  # SQL form veckernels.pq_assign_codes must match
+    "_dq_vec_sql",  # SQL form veckernels.sq_dequantize must match
+    "_pq_reconstruct_sql",  # SQL form veckernels.pq_reconstruct must match
+    "encode_fixed_point",  # column arithmetic to_netcdf's int32 bytes must match
+    "encode_tiff",  # builds the fixtures for multimodal.decode_tiff
+    "encode_wav",  # builds the fixtures for multimodal.decode_wav
+    # paper workflows not wired into SiteEngine or the CLI yet:
+    "load_position_csv",  # S7: EC sensor position CSV
+    "read_beadedstream_csv",  # S12: BeadedStream DTC logger CSV
+    "to_netcdf_long",  # K3: 2-D (time, sensor) NetCDF export
+    "load_netcdf_fleet",  # K3 read-back of a fleet of NetCDF products
+    "_read_any_bytes",  # helper of load_netcdf_fleet
+    "_unpack_values_np",  # helper of load_netcdf_fleet
+    "render_depth_scatter",  # K4: depth-vs-time scatter plot
+})
+
+
+def _ref_names(node) -> set[str]:
+    """Identifiers a node uses: names, attribute names and imported names
+    (docstrings and other strings are not uses)."""
+    import ast
+
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            out.update(a.name.split(".")[-1] for a in n.names)
+    return out
+
+
+def _unreached(root: str):
+    """Top-level definitions (def, class, module constant) of the
+    ``cassandra_fs_pp_spark`` package under ``root`` that no code outside
+    tests reaches.
+
+    Roots are every Python file outside the package that is not a test
+    (``tests/``, ``test_*.py``, ``conftest.py``) and the package's own
+    module-level statements (imports included, so an ``__init__``
+    re-export counts as a use).  Reach then follows the names each
+    reached definition uses.  Names are matched by identifier, not by
+    module, so a name defined twice stays reached if either copy is.
+    Returns ``[(relpath, line, name)]``."""
+    import ast
+
+    pkg = os.path.join(root, "cassandra_fs_pp_spark") + os.sep
+    defs: dict[str, tuple[str, int]] = {}
+    uses: dict[str, set[str]] = {}
+    live: set[str] = set()
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [
+            d for d in dirnames if d != "tests" and not d.startswith((".", "__"))
+        ]
+        for f in filenames:
+            if not f.endswith(".py") or f.startswith("test_") or f == "conftest.py":
+                continue
+            path = os.path.join(dirpath, f)
+            in_pkg = path.startswith(pkg)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in tree.body:
+                names: list[str] = []
+                if in_pkg and isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    names = [node.name]
+                elif in_pkg and isinstance(node, (ast.Assign, ast.AnnAssign)):
+                    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                    names = [
+                        t.id for t in targets
+                        if isinstance(t, ast.Name) and not t.id.startswith("__")
+                    ]
+                if not names:
+                    live |= _ref_names(node)
+                for n in names:
+                    defs[n] = (os.path.relpath(path, root), node.lineno)
+                    uses.setdefault(n, set()).update(_ref_names(node))
+    reached: set[str] = set()
+    todo = [n for n in live if n in defs]
+    while todo:
+        n = todo.pop()
+        if n not in reached:
+            reached.add(n)
+            todo.extend(uses[n] & defs.keys())
+    return sorted((*defs[n], n) for n in defs.keys() - reached)
+
+
+def reach_lint(root: str | None = None) -> bool:
+    """Fail on package code that only tests reach: every top-level
+    definition in ``cassandra_fs_pp_spark/`` must be used by the
+    pipelines, the CLI, the registry, ``bench.py``, ``scripts/`` or
+    ``perfbench/`` (see :func:`_unreached`), or be listed with its reason
+    in ``REACH_ALLOW``.  A listed name that is reached or gone fails too,
+    so the list cannot go stale."""
+    root = root or os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+    dead = _unreached(root)
+    flagged = [d for d in dead if d[2] not in REACH_ALLOW]
+    stale = REACH_ALLOW - {d[2] for d in dead}
+    for path, line, name in flagged:
+        print(f"reach lint: {path}:{line} {name} is reached only from tests")
+    if stale:
+        print(f"reach lint: REACH_ALLOW names reached or undefined: {sorted(stale)}")
+    if flagged or stale:
+        return True
+    print(f"reach lint: every package definition is reached outside tests "
+          f"({len(dead)} allow-listed)")
     return False
 
 

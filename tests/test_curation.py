@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 from cassandra_fs_pp_spark.functions.curation import (
     decontaminate,
     gopher_quality_flags,
+    ngram_rows,
     pack_sequences,
     stratified_sample_keep,
-    word_ngrams,
 )
 
 CTX = 64
@@ -89,10 +89,10 @@ def test_decontaminate_plants(spark):
 
 
 def test_word_ngrams_short_doc_empty(spark):
-    df = spark.createDataFrame([("a b c",)], "text string").select(
-        word_ngrams(F.col("text"), 8).alias("g")
-    )
-    assert df.collect()[0].g == []
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    for by_id in (True, False):
+        grams = ngram_rows(df, "doc_id", "text", 8, partition_by_id=by_id)
+        assert grams.collect() == []
 
 
 def test_stratified_sample_deterministic_and_rated(spark, sf_dir):

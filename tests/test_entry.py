@@ -242,3 +242,90 @@ def test_doc_check_passes(monkeypatch):
 
     monkeypatch.setattr(sys, "argv", ["doc_check.py"])
     assert doc_check.main() == 0
+
+
+def test_reach_lint_flags_test_only_definition(tmp_path, monkeypatch):
+    """``doc_check.reach_lint`` fails on a package definition that only a
+    test uses, follows uses transitively (a helper of a dead function is
+    dead too), counts ``__init__`` re-exports as uses, passes once the
+    test-only names are allow-listed and fails on a stale entry."""
+    import contextlib
+    import io
+    import os
+    import sys
+
+    sys.path.insert(
+        0,
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "..", "scripts"
+        ),
+    )
+    import doc_check
+
+    pkg = tmp_path / "cassandra_fs_pp_spark"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("from .mod import exported\n")
+    (pkg / "mod.py").write_text(
+        "LIMIT = 3\n\n"
+        "def _helper():\n    return LIMIT\n\n"
+        "def used():\n    return _helper()\n\n"
+        "def exported():\n    pass\n\n"
+        "def _dead_helper():\n    pass\n\n"
+        "def test_only():\n"
+        '    """Mentions used() in a docstring only."""\n'
+        "    return _dead_helper()\n"
+    )
+    (tmp_path / "bench.py").write_text(
+        "from cassandra_fs_pp_spark.mod import used\nused()\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from cassandra_fs_pp_spark.mod import test_only\ntest_only()\n"
+    )
+
+    assert [d[2] for d in doc_check._unreached(str(tmp_path))] == [
+        "_dead_helper", "test_only",
+    ]
+    with contextlib.redirect_stdout(io.StringIO()) as out:
+        assert doc_check.reach_lint(str(tmp_path))
+    assert "test_only is reached only from tests" in out.getvalue()
+
+    allow = frozenset({"_dead_helper", "test_only"})
+    monkeypatch.setattr(doc_check, "REACH_ALLOW", allow)
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert not doc_check.reach_lint(str(tmp_path))
+    monkeypatch.setattr(doc_check, "REACH_ALLOW", allow | {"used"})
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert doc_check.reach_lint(str(tmp_path))
+
+
+def test_footer_row_counts_warn_on_missing_and_raise_on_corrupt(
+    tmp_path, monkeypatch, caplog
+):
+    """The LSH query and its oracle size the corpus from the parquet
+    footer. A missing file logs a warning naming the path and falls back
+    (``None`` -> a Spark count; the oracle assumes 200 rows); a corrupt
+    footer raises instead of silently changing the oracle's bit count."""
+    import logging
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    monkeypatch.setenv("SF_DIR", str(tmp_path))
+    path = str(tmp_path / "embeddings.parquet")
+    with caplog.at_level(logging.WARNING, logger=entrymod.__name__):
+        assert entrymod._parquet_num_rows(str(tmp_path), "embeddings") is None
+        assert entrymod._gate_embeddings_count() == 200
+    assert sum(path in r.getMessage() for r in caplog.records) == 2
+
+    pq.write_table(pa.table({"x": list(range(7))}), path)
+    assert entrymod._parquet_num_rows(str(tmp_path), "embeddings") == 7
+    assert entrymod._gate_embeddings_count() == 7
+
+    with open(path, "wb") as f:
+        f.write(b"PAR1 not a parquet footer PAR1")
+    with pytest.raises(pa.ArrowInvalid):
+        entrymod._parquet_num_rows(str(tmp_path), "embeddings")
+    with pytest.raises(pa.ArrowInvalid):
+        entrymod._gate_embeddings_count()

@@ -36,128 +36,3 @@ def test_filter_and_column_pushdown(spark):
     # column pruning: props/value must not be read
     rs = plan.split("ReadSchema:")[1][:200]
     assert "props" not in rs and "value" not in rs
-
-
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """bucketBy co-location: joining two tables bucketed on the key plans
-    NO Exchange on either side (the pre-shuffled 100 TB join layout)."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    ev = load_table(spark, SF, "events")
-    tag = uuid.uuid4().hex[:8]
-    ta, tb = f"ev_a_{tag}", f"ev_b_{tag}"
-    daily = ev.groupBy("user_id").agg(F.sum("value").alias("total"))
-    counts = ev.groupBy("user_id").agg(F.count("*").alias("n"))
-    from cassandra_fs_pp_spark.sinks import write_bucketed
-
-    for name, df in ((ta, daily), (tb, counts)):
-        write_bucketed(
-            df, name, str(tmp_path / name),
-            bucket_by=["user_id"], n_buckets=8, sort_by=["user_id"],
-        )
-    # force the sort-merge path (tiny test tables would auto-broadcast)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table(ta).join(spark.table(tb), on="user_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() == daily.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql(f"DROP TABLE {ta}")
-        spark.sql(f"DROP TABLE {tb}")
-
-
-def test_jsonl_roundtrip_with_corrupt_line(spark, tmp_path):
-    """JSONL interchange: nested structs roundtrip; malformed lines land
-    in the declared corrupt column instead of failing the job."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from cassandra_fs_pp_spark.sinks import write_jsonl
-    from cassandra_fs_pp_spark.sources.tables import read_jsonl
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    shaped = docs.select(
-        "doc_id",
-        "text",
-        F.struct("lang", "source", "n_chars").alias("meta"),
-    )
-    out = str(tmp_path / "docs_jsonl")
-    write_jsonl(shaped, out, partition_by=())
-    ddl = (
-        "doc_id long, text string, "
-        "meta struct<lang:string, source:string, n_chars:long>, "
-        "_corrupt_record string"
-    )
-    # Spark forbids querying ONLY the corrupt column off a raw JSON scan
-    # (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — cache() is the documented out.
-    back = read_jsonl(spark, out, ddl).cache()
-    assert back.filter(F.col("_corrupt_record").isNotNull()).count() == 0
-    a = {r.doc_id: (r.text, r.meta.lang) for r in shaped.collect()}
-    b = {r.doc_id: (r.text, r.meta.lang) for r in back.collect()}
-    assert a == b
-
-    # plant a malformed line in a fresh file
-    bad_dir = str(tmp_path / "bad_jsonl")
-    os.makedirs(bad_dir)
-    with open(os.path.join(bad_dir, "part-0.json"), "w") as f:
-        f.write(json.dumps({"doc_id": 1, "text": "ok", "meta": None}) + "\n")
-        f.write("{not valid json at all\n")
-    bad = read_jsonl(spark, bad_dir, ddl).cache()
-    assert bad.count() == 2
-    assert bad.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-    assert bad.filter(F.col("doc_id") == 1).count() == 1
-
-
-def test_sql_facade_register_views(spark):
-    from cassandra_fs_pp_spark.sources.tables import register_views
-
-    views = register_views(spark, SF, prefix="sqlv_")
-    assert len(views) == 10
-    row = spark.sql(
-        """SELECT o.o_orderpriority, count(*) AS n
-           FROM sqlv_orders o JOIN sqlv_customer c ON o.o_custkey = c.c_custkey
-           WHERE c.c_mktsegment = 'BUILDING'
-           GROUP BY 1 ORDER BY 1 LIMIT 1"""
-    ).collect()
-    assert row and row[0].n > 0
-    # events view must carry the ns->us normalization (plain TIMESTAMP math)
-    assert spark.sql("SELECT max(ts) FROM sqlv_events").collect()[0][0] is not None
-
-
-def test_orc_roundtrip_pushdown_and_partition_pruning(spark, tmp_path):
-    """ORC interchange sink: values round-trip, filters reach the ORC
-    reader (PushedFilters), and partition columns prune at plan time."""
-    from pyspark.sql import functions as F
-
-    from cassandra_fs_pp_spark.sinks import write_orc
-
-    df = spark.range(1000).select(
-        F.col("id"),
-        (F.col("id") % 4).alias("part"),
-        (F.col("id") * 2.5).alias("v"),
-    )
-    path = str(tmp_path / "orc_tbl")
-    write_orc(df, path, partition_by=["part"])
-
-    back = spark.read.orc(path)
-    assert back.count() == 1000
-    assert {r["id"] for r in back.filter("part = 2").limit(5).collect()} <= {
-        i for i in range(1000) if i % 4 == 2
-    }
-
-    q = back.filter((F.col("part") == 2) & (F.col("id") > 500)).select("id", "v")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,500)]" in plan
-    # partition pruning: only the part=2 directory is scanned
-    assert "PartitionFilters" in plan
-    got = sorted(r["id"] for r in q.collect())
-    assert got == [i for i in range(501, 1000) if i % 4 == 2]

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: fake codec roundtrips, Arrow-batched
-decode/resize/frame-sample/embedding ops, batch-shape invariance."""
+decode/stats/frame-sample ops, batch-shape invariance."""
 
 from __future__ import annotations
 
@@ -15,10 +15,7 @@ from cassandra_fs_pp_spark.functions.multimodal import (
     encode_fake_audio,
     encode_fake_image,
     encode_fake_video,
-    image_embedding,
-    image_resize,
     image_stats,
-    resize_nearest,
     synthesize_media,
     video_frame_sample,
     with_media_meta,
@@ -41,13 +38,6 @@ def test_codec_roundtrip():
     a = encode_fake_audio(5, 50, 8000)
     ma = decode_meta(a)
     assert (ma["kind"], ma["n_samples"], ma["sample_rate"]) == ("audio", 50, 8000)
-
-
-def test_resize_nearest_exact():
-    p = encode_fake_image(0, 4, 4, 1)  # pixels 0..15
-    out = decode_image_pixels(resize_nearest(p, 2, 2))
-    # nearest gather: rows 0,2 cols 0,2 -> [[0,2],[8,10]]
-    assert out[:, :, 0].tolist() == [[0, 2], [8, 10]]
 
 
 def test_png_roundtrip_all_channel_counts():
@@ -252,14 +242,6 @@ def test_stats_batch_shape_invariant(spark, media):
     assert a == b
 
 
-def test_resize_pipeline(spark, media):
-    resized = image_resize(media, 8, 8, out_col="payload2")
-    meta = with_media_meta(resized, payload_col="payload2").select(
-        "media_id", "meta.width", "meta.height"
-    )
-    assert meta.where("width = 8 AND height = 8").count() == 64
-
-
 def test_video_frame_sample(spark):
     ids = spark.range(0, 20).withColumnRenamed("id", "media_id")
     vids = synthesize_media(ids, "media_id", kind="video")
@@ -288,15 +270,6 @@ def test_audio_stats(spark):
     assert st["n_samples"] == n
     assert st["mean_amp"] == pytest.approx(float(s.mean()))
     assert st["rms"] == pytest.approx(float(np.sqrt((s.astype(float) ** 2).mean())))
-
-
-def test_image_embedding_feeds_similarity(spark, media):
-    emb = image_embedding(media, "media_id", bins=16)
-    rows = emb.orderBy("media_id").collect()
-    assert len(rows) == 64
-    v = np.array(rows[0]["embedding"])
-    assert v.shape == (16,)
-    assert v.sum() == pytest.approx(1.0, abs=1e-6)
 
 
 def test_phash_planted_near_dups_and_reference(spark):

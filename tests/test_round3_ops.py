@@ -270,21 +270,6 @@ def test_asof_nearest_prefers_backward_on_exact_tie(spark):
     assert out[0]["v"] == 1.0
 
 
-def test_xml_roundtrip_preserves_values(spark, tmp_path):
-    from cassandra_fs_pp_spark.sinks import read_xml, write_xml
-
-    df = spark.createDataFrame(
-        [(1, "a & <b>", 1.5), (2, None, -0.25), (3, "unicode éß", 0.0)],
-        ["id", "name", "v"],
-    )
-    path = str(tmp_path / "xml_out")
-    write_xml(df, path)
-    back = read_xml(spark, path, schema=df.schema)
-    got = sorted(back.collect(), key=lambda r: r["id"])
-    want = sorted(df.collect(), key=lambda r: r["id"])
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-
 def test_stream_cusum_matches_batch_closed_form(spark, tmp_path):
     import numpy as np
     import pandas as pd
@@ -638,46 +623,6 @@ def test_approx_quantiles_within_rank_error(spark):
             lo = vals[max(0, int((q - eps) * n) - 1)]
             hi = vals[min(n - 1, int((q + eps) * n) + 1)]
             assert lo <= got <= hi, (r["event_type"], q, got, lo, hi)
-
-
-def test_pca_project_matches_numpy(spark):
-    """pca_project == full numpy replay (same quantization, eigh, sign
-    convention) to ~1e-9 relative, and pc1 captures more variance than
-    pc2."""
-    import numpy as np
-
-    from cassandra_fs_pp_spark.operators.similarity import GRAM_SCALE, pca_project
-    from cassandra_fs_pp_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    got = {
-        r["vec_id"]: (r["pc1"], r["pc2"])
-        for r in pca_project(emb, dim=64, k=2).collect()
-    }
-
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = [r["vec_id"] for r in rows]
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    Q = np.floor(X * GRAM_SCALE).astype(np.int64)
-    M = (Q.T @ Q).astype(np.float64)
-    vals, vecs = np.linalg.eigh(M)
-    top = vecs[:, ::-1][:, :2].copy()
-    for c in range(2):
-        piv = int(np.argmax(np.abs(top[:, c])))
-        if top[piv, c] < 0:
-            top[:, c] = -top[:, c]
-    S = Q.astype(np.float64) @ (top / GRAM_SCALE)
-    want = {i: (S[r, 0], S[r, 1]) for r, i in enumerate(ids)}
-
-    assert got.keys() == want.keys()
-    for i in got:
-        for a, b in zip(got[i], want[i]):
-            assert abs(a - b) <= 1e-9 * max(1.0, abs(b)), i
-    # variance ordering
-    g1 = np.var([v[0] for v in got.values()])
-    g2 = np.var([v[1] for v in got.values()])
-    assert g1 >= g2
 
 
 def _power_replay(Q, dim=64, B=1 << 12, iters=64):

@@ -288,67 +288,6 @@ def test_stream_toa5_incremental_l1(spark, tmp_path):
     assert a == b
 
 
-def test_stream_static_enrich_matches_batch(spark):
-    """Stream-static broadcast join drain == batch join (J1/J6 twin)."""
-    from cassandra_fs_pp_spark.sources.tables import load_table
-    from cassandra_fs_pp_spark.streaming.filestream import stream_static_enrich
-
-    ev_batch = load_table(spark, SF, "events")
-    dim = (
-        ev_batch.select("user_id")
-        .distinct()
-        .withColumn("user_tier", F.when(F.col("user_id") % 2 == 0, "even").otherwise("odd"))
-    )
-    stream = stream_table(spark, SF, "events")
-    got = run_available_now(
-        stream_static_enrich(
-            stream.select("event_id", "user_id", "value"), dim, "user_id"
-        )
-    )
-    want = ev_batch.select("event_id", "user_id", "value").join(dim, "user_id")
-    assert got.count() == want.count()
-    a = sorted((r.event_id, r.user_tier) for r in got.collect())
-    b = sorted((r.event_id, r.user_tier) for r in want.collect())
-    assert a == b
-
-
-def test_stream_stream_interval_join_matches_batch(spark):
-    """Watermarked stream-stream interval join drain == the batch
-    non-equi join over the same predicate."""
-    from cassandra_fs_pp_spark.sources.tables import load_table
-    from cassandra_fs_pp_spark.streaming.filestream import (
-        stream_stream_interval_join,
-    )
-
-    # left: high-value events; right: any event of the same user within 1h
-    left_s = stream_table(spark, SF, "events").filter(F.col("value") > 250)
-    right_s = stream_table(spark, SF, "events").filter(F.col("value") <= 250)
-    got = run_available_now(
-        stream_stream_interval_join(
-            left_s.select("event_id", "user_id", "ts"),
-            right_s.select("event_id", "user_id", "ts"),
-        )
-    )
-
-    ev = load_table(spark, SF, "events")
-    lb = ev.filter(F.col("value") > 250).select(
-        F.col("user_id"), F.col("event_id").alias("left_event"), F.col("ts").alias("left_ts")
-    )
-    rb = ev.filter(F.col("value") <= 250).select(
-        F.col("user_id").alias("r_user"), F.col("event_id").alias("right_event"), F.col("ts").alias("right_ts")
-    )
-    want = lb.join(
-        rb,
-        (F.col("user_id") == F.col("r_user"))
-        & (F.col("right_ts") >= F.col("left_ts"))
-        & (F.col("right_ts") <= F.col("left_ts") + F.expr("INTERVAL 1 HOUR")),
-    )
-    assert got.count() > 0
-    a = sorted((r.left_event, r.right_event) for r in got.collect())
-    b = sorted((r.left_event, r.right_event) for r in want.collect())
-    assert a == b
-
-
 def test_stream_session_window_matches_batch(spark):
     """availableNow drain of the session window == batch session_window."""
     from cassandra_fs_pp_spark.streaming.filestream import session_window_stream

@@ -205,42 +205,6 @@ def test_lsh_topk_exact_under_replication(spark):
     assert approx == brute
 
 
-def test_normalize_nfc_pandas_udf(spark):
-    from cassandra_fs_pp_spark.functions.udx import normalize_nfc
-
-    composed = "café"          # é as one codepoint
-    decomposed = "café"       # e + combining acute
-    df = spark.createDataFrame(
-        [(1, composed), (2, decomposed), (3, None)], "id long, s string"
-    )
-    rows = {r["id"]: r["n"] for r in df.select(
-        "id", normalize_nfc("s").alias("n")).collect()}
-    assert rows[1] == rows[2] == composed
-    assert rows[3] is None
-
-
-def test_split_sentences_udtf(spark):
-    from pyspark.sql import functions as F
-
-    from cassandra_fs_pp_spark.functions.udx import SplitSentences
-
-    spark.udtf.register("split_sentences", SplitSentences)
-    out = spark.sql(
-        "SELECT s.* FROM (SELECT 'One. Two two! Three' AS t), "
-        "LATERAL split_sentences(t) s"
-    ).collect()
-    assert [r["sentence"] for r in out] == ["One.", "Two two!", "Three"]
-    assert [r["sent_idx"] for r in out] == [0, 1, 2]
-    # offsets delimit the stripped sentence: text[start:end] == sentence
-    text = "One. Two two! Three"
-    for r in out:
-        assert text[r["start_off"] : r["end_off"]] == r["sentence"]
-    assert out[1]["start_off"] == 5
-    # DataFrame-API invocation too
-    df = SplitSentences(F.lit("A? B."))
-    assert df.count() == 2
-
-
 def test_simhash_band_pairs_exact_recall(spark):
     """Pigeonhole guarantee: EVERY pair with hamming <= bands-1 is found
     by the banded search (constructed fingerprints, no hashing)."""
@@ -607,14 +571,11 @@ def test_shuffle_shard_deterministic_and_balanced(spark):
 
 
 def test_dot_and_bucket_sql_forms_bit_identical(spark):
-    """The F.expr string builders produce bit-identical results to the
-    Column builders (same left-to-right fold order): guards the SQL-text
+    """The F.expr string builder produces bit-identical results to the
+    Column builder (same left-to-right fold order): guards the SQL-text
     fast path against accidental reassociation, which would silently
     break oracle hash parity."""
     from cassandra_fs_pp_spark.operators.similarity import (
-        dot,
-        dot_unrolled,
-        dot_unrolled_sql,
         hyperplane_lsh_perms,
         lsh_bucket,
         lsh_bucket_sql,
@@ -628,18 +589,6 @@ def test_dot_and_bucket_sql_forms_bit_identical(spark):
         F.expr(lsh_bucket_sql("embedding", planes)).alias("sql_form"),
     )
     assert buckets.filter(F.col("col_form") != F.col("sql_form")).count() == 0
-
-    pairs = emb.select(F.col("embedding").alias("a")).crossJoin(
-        emb.limit(5).select(F.col("embedding").alias("b"))
-    )
-    dots = pairs.select(
-        dot(F.col("a"), F.col("b")).alias("lam"),
-        dot_unrolled(F.col("a"), F.col("b"), 64).alias("unrl"),
-        F.expr(dot_unrolled_sql("a", "b", 64)).alias("sql"),
-    )
-    assert dots.filter(
-        (F.col("lam") != F.col("unrl")) | (F.col("lam") != F.col("sql"))
-    ).count() == 0
 
 
 def test_semantic_dedup_identical_vectors_collapse(spark):

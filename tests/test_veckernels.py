@@ -436,3 +436,148 @@ def test_ann_kernel_plans_use_arrow_python(spark):
     codes = emb.select(pq_codes_udf(cb0, 8, 64)(F.col("embedding")))
     tplan = codes._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in tplan, tplan
+
+
+def test_kernel_cosines_null_on_zero_denominator(spark):
+    """A zero vector makes ``qn * nn`` 0. Spark's non-ANSI Divide (and
+    ``try_divide``) gives NULL, which sorts LAST under desc(); a numpy
+    division gives NaN, which sorts FIRST. Every Arrow cosine kernel
+    must equal the ``try_divide(dot, qn * l2_norm)`` expression form,
+    NULLs included, and lsh_topk must rank the zero vector last."""
+    from cassandra_fs_pp_spark.operators.similarity import lsh_topk
+    from cassandra_fs_pp_spark.operators.veckernels import (
+        score_fp32_map,
+        score_pq_map,
+        score_sq8_map,
+    )
+
+    dim, dsub = 4, 2
+    emb = spark.createDataFrame(
+        [
+            (0, [1.0, 2.0, 3.0, 4.0]),
+            (1, [0.0, 0.0, 0.0, 0.0]),
+            (2, [-1.0, 0.5, 2.0, 0.0]),
+            (3, [0.25, -3.0, 1.0, 1.0]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    q = emb.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        l2_norm(F.col("embedding")).alias("qn"),
+    )
+    pairs = (
+        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vec"))
+        .crossJoin(q)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+
+    def cos_of(df, vec, out):
+        return {
+            (r["query_id"], r["neighbor_id"]): r[out]
+            for r in df.select(
+                "query_id",
+                "neighbor_id",
+                F.try_divide(
+                    dot(F.col("qv"), F.col(vec)), F.col("qn") * l2_norm(F.col(vec))
+                ).alias(out),
+            ).collect()
+        }
+
+    def kernel(df, fn, cols, out):
+        return {
+            (r["query_id"], r["neighbor_id"]): r[out]
+            for r in df.select("query_id", "neighbor_id", "qn", "qv", *cols)
+            .mapInArrow(fn, schema=f"query_id long, neighbor_id long, {out} double")
+            .collect()
+        }
+
+    want = cos_of(pairs, "vec", "cos_raw")
+    assert want[(0, 1)] is None and want[(1, 0)] is None
+    got = kernel(pairs.withColumnRenamed("vec", "nv"), score_fp32_map(dim), ["nv"], "cos_raw")
+    assert got == want
+
+    stats = _sq_stats_row(emb, vec_col="embedding")
+    st = stats.collect()[0]
+    dq = pairs.crossJoin(F.broadcast(stats)).withColumn(
+        "dqv", F.expr(_dq_vec_sql("vec", 255))
+    )
+    got = kernel(
+        pairs,
+        score_sq8_map(dim, list(st["__mn"]), list(st["__mx"]), 255),
+        ["vec"],
+        "adc_cos",
+    )
+    assert got == cos_of(dq, "dqv", "adc_cos")
+
+    # zero centroid and a zero codeword: the zero vector reconstructs to
+    # zero, so its neighbor-side norm is 0 too
+    cb = [[[0.0, 0.0], [1.0, 1.0]], [[0.0, 0.0], [2.0, -1.0]]]
+    pq = pairs.select(
+        "*",
+        *[
+            F.expr(_pq_code_sql(cb[j], "vec", j * dsub + 1, dsub)).alias(f"__k{j}")
+            for j in range(2)
+        ],
+    ).withColumn(
+        "pqv",
+        F.zip_with(
+            F.array(*[F.lit(0.0)] * dim),
+            F.expr(_pq_reconstruct_sql(cb, "__k")),
+            lambda c, r: c + r,
+        ),
+    )
+    want = cos_of(pq, "pqv", "adc_cos")
+    assert want[(0, 1)] is None
+    got = kernel(
+        pairs.withColumn("cell", F.lit(0)),
+        score_pq_map(dim, dsub, cb, {0: [0.0] * dim}),
+        ["cell", "vec"],
+        "adc_cos",
+    )
+    assert got == want
+
+    top = lsh_topk(emb, k=3, bits=1, tables=8, dim=dim).collect()
+    assert any(1 in (r["query_id"], r["neighbor_id"]) for r in top)
+    exact = cos_of(pairs, "vec", "cosine")
+    assert {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in top} == {
+        (r["query_id"], r["neighbor_id"]): exact[(r["query_id"], r["neighbor_id"])]
+        for r in top
+    }
+    for r in top:
+        if r["neighbor_id"] == 1:
+            n_q = sum(1 for s in top if s["query_id"] == r["query_id"])
+            assert r["rank"] == n_q, r  # NULL cosine ranks last
+
+
+def test_pq_codes_saturate_like_cast(spark):
+    """A residual element above ~9.6e4 quantizes to >= 2^63. Non-ANSI
+    ``CAST(... AS BIGINT)`` saturates it to Long.MAX_VALUE (NaN casts to
+    0) and the BIGINT sum then wraps; numpy's astype wrapped the element
+    itself to INT64_MIN, which flips the argmin of row 0 (code 1 in
+    SQL). ANSI mode raises CAST_OVERFLOW instead, so the reference form
+    runs with it off."""
+    dsub = 2
+    book = [[0.0, 0.0], [0.0, 1.0], [2.0, -3.0]]
+    rows = [
+        (0, [1e5, 0.0]),
+        (1, [float("nan"), 0.9]),
+        (2, [0.2, 0.1]),
+        (3, [-1.5e5, 2.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = {
+            r["vec_id"]: r["c"]
+            for r in df.selectExpr(
+                "vec_id", f"{_pq_code_sql(book, 'v', 1, dsub)} AS c"
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert want[0] == 1
+    X = np.array([r[1] for r in rows])
+    codes = pq_assign_codes(X, [np.asarray(book)], dsub)[:, 0]
+    assert {i: int(c) for (i, _), c in zip(rows, codes)} == want

@@ -173,33 +173,6 @@ def test_piecewise_offset(spark):
     assert out["adj"].tolist() == expected
 
 
-def test_dominant_period_fft(spark):
-    """applyInPandas spectral op recovers a planted daily cycle per key."""
-    import numpy as np
-    import pandas as pd
-
-    from cassandra_fs_pp_spark.operators.spectral import dominant_period
-
-    rng = np.random.default_rng(3)
-    frames = []
-    for sensor, period_h in ((1, 24.0), (2, 12.0)):
-        idx = pd.date_range("2024-01-01", periods=24 * 16, freq="h")
-        y = 5.0 * np.sin(
-            2 * np.pi * np.arange(idx.size) / period_h
-        ) + rng.normal(0, 0.3, idx.size)
-        frames.append(
-            pd.DataFrame({"sensor_id": sensor, "ts": idx, "value": y})
-        )
-    sdf = spark.createDataFrame(pd.concat(frames))
-    out = {
-        r["sensor_id"]: r
-        for r in dominant_period(sdf, ["sensor_id"]).collect()
-    }
-    assert out[1]["period_s"] == pytest.approx(24 * 3600, rel=0.05)
-    assert out[2]["period_s"] == pytest.approx(12 * 3600, rel=0.05)
-    assert out[1]["amplitude"] == pytest.approx(5.0, rel=0.15)
-
-
 def test_rolling_median_approx_close_to_exact(spark):
     import numpy as np
     import pandas as pd
