@@ -37,12 +37,10 @@ from cassandra_fs_pp_spark.operators.dedup import dedup_keep_first, dedup_rows
 from cassandra_fs_pp_spark.operators.joins import (
     asof_join,
     calibration_group_mean,
-    calibration_join,
 )
 from cassandra_fs_pp_spark.operators.skew import spread_if_narrow
 from cassandra_fs_pp_spark.operators.validity import null_out_of_range, quality_gate
 from cassandra_fs_pp_spark.operators.windows import (
-    rolling_mean,
     rolling_median,
     time_frame,
     ts_delta_seconds,
@@ -2272,13 +2270,11 @@ from cassandra_fs_pp_spark.operators.textdedup import (  # noqa: E402
     exact_dup_groups,
     jaccard_verify,
     lsh_candidate_pairs,
-    lsh_cluster,
     lsh_cluster_wide,
     minhash_perms,
     minhash_signatures,
     minhash_signatures_wide,
     simhash,
-    token_set,
 )
 
 

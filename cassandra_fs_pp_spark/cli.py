@@ -62,8 +62,6 @@ def main(argv: list[str] | None = None) -> int:
     a = p.parse_args(argv)
 
     if a.cmd == "plot":
-        from pyspark.sql import functions as F  # noqa: F401
-
         from cassandra_fs_pp_spark.plans.levels import load_level1_csv
         from cassandra_fs_pp_spark.plots import (
             render_heatmap,

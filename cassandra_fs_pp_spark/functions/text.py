@@ -1102,13 +1102,11 @@ def bpe_tokenize_counts_trie(
     # REPARTITION_BY_NUM pins the Python stage at cluster parallelism;
     # the exchange moves only the vocabulary (bounded — word TYPES
     # saturate as the corpus grows), so it stays cheap at any scale.
-    try:
-        _par = docs.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect
-        _par = None
-    types_df = words.select(F.explode("__w").alias("w")).distinct()
-    if _par:
-        types_df = types_df.repartition(_par)
+    types_df = (
+        words.select(F.explode("__w").alias("w"))
+        .distinct()
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    )
 
     def _tokenize_types(batches):
         import pandas as pd

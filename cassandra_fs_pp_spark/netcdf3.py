@@ -1,9 +1,9 @@
-"""Minimal pure-python NetCDF-3 (classic, CDF-1) writer + reader.
+"""Minimal pure-python NetCDF-3 (classic) writer + reader.
 
 The reference exports Level-2 products as NetCDF via xarray
 (``bin/fs_process_l2.py:177-204``) with CF-style attrs and the encoding
 ``dtype=int32, scale_factor=0.001, _FillValue=-9999`` (``:196-200``).
-This container has no xarray/netCDF4, so the K3 sink writes the classic
+The engine needs neither xarray nor netCDF4: the K3 sink writes the classic
 format directly from its public on-disk specification (the NetCDF
 Classic Format Spec published by Unidata): a self-contained binary
 header (dims, attrs, vars) followed by fixed-size data slabs, with
@@ -12,8 +12,9 @@ header (dims, attrs, vars) followed by fixed-size data slabs, with
 
 Scope: what the K3 contract needs — NC_CHAR/NC_INT/NC_FLOAT/NC_DOUBLE,
 one optional record dimension, global + per-variable attributes. The
-reader exists so tests can round-trip files without any external dep;
-files also open in any standard NetCDF tool.
+reader (CDF-1 and CDF-2) is the engine's one NetCDF reader: the S11
+scans in ``sources/netcdf.py`` and the round-trip tests use it. Files
+also open in any standard NetCDF tool.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 
 The reference has no graph surface; this fills the engine's "iterative
 algorithm" slot — the primitive behind transitive duplicate clustering
-(``operators/textdedup.py`` ``lsh_cluster`` is the single-round
+(``operators/textdedup.py`` ``lsh_cluster_wide`` is the single-round
 approximation of exactly this) and entity resolution at corpus scale.
 
 Spark-first shape: min-label propagation (the Pregel/GraphX CC recipe)
@@ -34,7 +34,7 @@ def connected_components(
     Nodes are those appearing in at least one edge (an isolated node has
     no edge row to announce it). Iterates to a true fixpoint (count of
     label changes == 0), unlike the one-round bucket-min used by
-    ``lsh_cluster`` — pairs A~B, B~C with no shared bucket still merge.
+    ``lsh_cluster_wide`` — pairs A~B, B~C with no shared bucket still merge.
 
     Each round couples the neighbor-min update with POINTER JUMPING
     (``component <- component(component)``, a self-join on the label

@@ -50,7 +50,10 @@ def l2_norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """NULL when either vector has zero norm (``try_divide``: the ANSI
+    session would raise ``DIVIDE_BY_ZERO``), as the Arrow kernels
+    (``veckernels.cosine_array``) and the DuckDB oracles return."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def brute_force_topk(
@@ -84,7 +87,7 @@ def brute_force_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cos_raw",
-            dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")),
+            F.try_divide(dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -161,7 +164,7 @@ def ivf_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cos_raw",
-            dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")),
+            F.try_divide(dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -919,8 +922,10 @@ def ivf_adc_topk(
         q.crossJoin(F.broadcast(cent))
         .withColumn(
             "cent_cos",
-            dot(F.col("qv"), F.col("centroid"))
-            / (F.col("qn") * l2_norm(F.col("centroid"))),
+            F.try_divide(
+                dot(F.col("qv"), F.col("centroid")),
+                F.col("qn") * l2_norm(F.col("centroid")),
+            ),
         )
         .withColumn("cr", F.row_number().over(probe_w))
         .filter(F.col("cr") <= nprobe)
@@ -1609,8 +1614,10 @@ def ivf_pq_topk(
         q.crossJoin(F.broadcast(cent))
         .withColumn(
             "cent_cos",
-            dot(F.col("qv"), F.col("centroid"))
-            / (F.col("qn") * l2_norm(F.col("centroid"))),
+            F.try_divide(
+                dot(F.col("qv"), F.col("centroid")),
+                F.col("qn") * l2_norm(F.col("centroid")),
+            ),
         )
         .withColumn("cr", F.row_number().over(probe_w))
         .filter(F.col("cr") <= nprobe)

@@ -109,11 +109,7 @@ def spread_if_narrow(df: DataFrame, n_parts: int | None = None) -> DataFrame:
     input is returned as-is and the reason is logged."""
     spark = df.sparkSession
     if n_parts is None:
-        try:
-            n_parts = spark.sparkContext.defaultParallelism
-        except Exception as exc:  # Spark Connect — no SparkContext
-            log.debug("spread_if_narrow: no SparkContext (%s); not spreading", exc)
-            return df
+        n_parts = spark.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         if _REPARTITION_NODE.search(plan.toString()):

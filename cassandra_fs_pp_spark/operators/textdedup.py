@@ -238,28 +238,8 @@ def lsh_cluster_wide(
     bands: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """:func:`lsh_cluster` on wide signatures — the bench/scale path.
-
-    The bucket representative is a ``groupBy(band, band_sig).agg(min)``
-    joined back to the LAZY-PINNED banded frame (see
-    :func:`_cluster_from_banded` — skew-safe on mega-duplicate buckets;
-    the pin is what makes the join form affordable: without it the
-    signature subtree evaluated twice, measured 2.5x wall at sf0.1).
-    Shuffle volume ∝ docs × bands short strings."""
-    banded = banded_from_wide(
-        wide, num_hashes=num_hashes, bands=bands, id_col=id_col
-    )
-    return _cluster_from_banded(banded, id_col)
-
-
-def lsh_cluster(
-    signatures: DataFrame,
-    *,
-    num_hashes: int,
-    bands: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """THE scalable dedup shape: doc -> duplicate-cluster representative.
+    """THE scalable dedup shape: doc -> duplicate-cluster representative,
+    from wide signatures (:func:`minhash_signatures_wide`).
 
     Emitting all near-dup PAIRS is inherently quadratic on a templated
     corpus (a 7k-doc duplicate class alone is ~25M pairs); cluster
@@ -268,15 +248,17 @@ def lsh_cluster(
     transitive closure would iterate this to a fixpoint, rarely needed when
     duplicates collide in at least one shared band).
 
-    Cost: O(|docs| * bands) rows through one bucket aggregate + the
-    join-back on the pinned banded frame (skew-safe; see
-    :func:`_cluster_from_banded`) — no self-join, no pair
-    materialization. Returns ``(id, cluster_rep, is_dup)``.
-    """
-    return _cluster_from_banded(
-        _band_long(signatures, num_hashes=num_hashes, bands=bands, id_col=id_col),
-        id_col,
+    The bucket representative is a ``groupBy(band, band_sig).agg(min)``
+    joined back to the LAZY-PINNED banded frame (see
+    :func:`_cluster_from_banded` — skew-safe on mega-duplicate buckets;
+    the pin is what makes the join form affordable: without it the
+    signature subtree evaluated twice, measured 2.5x wall at sf0.1).
+    No self-join, no pair materialization; shuffle volume ∝ docs × bands
+    short strings. Returns ``(id, cluster_rep, is_dup)``."""
+    banded = banded_from_wide(
+        wide, num_hashes=num_hashes, bands=bands, id_col=id_col
     )
+    return _cluster_from_banded(banded, id_col)
 
 
 def jaccard_verify(

@@ -104,15 +104,6 @@ def rolling_median(
     return med
 
 
-def rolling_mean(x: str | Column, frame: WindowSpec, *, min_periods: int = 0) -> Column:
-    """W4 — mean over a window frame."""
-    xcol = F.col(x) if isinstance(x, str) else x
-    avg = F.avg(xcol).over(frame)
-    if min_periods > 1:
-        return F.when(F.count(xcol).over(frame) >= min_periods, avg)
-    return avg
-
-
 def ts_delta_seconds(
     t: str | Column,
     partition_by: Sequence[str | Column] | None = None,

@@ -555,8 +555,8 @@ def calibrate_ec(
 
     ``calibrations``: ``{column_name: (m, c)}`` — a broadcast-sized dim
     (<=16 sensors/chain) folded into literal column expressions: zero
-    shuffle, fully codegen'd. The long-form broadcast-join variant lives in
-    ``operators.joins.calibration_join`` (used by the oracle-checked
+    shuffle, fully codegen'd. The long-form broadcast-join variant is
+    ``operators.joins.calibration_group_mean`` (used by the oracle-checked
     ``j1_calibration_fallback`` query).
 
     Returns ``{column: calibrated expr}`` for ``withColumns``.

@@ -90,10 +90,7 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     as a warning and skipped."""
     conf = dict(RUNTIME_CONF)
     if shuffle_partitions is None:
-        try:
-            shuffle_partitions = spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect — no SparkContext
-            shuffle_partitions = None
+        shuffle_partitions = spark.sparkContext.defaultParallelism
     if shuffle_partitions:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     for key, value in conf.items():

@@ -7,11 +7,12 @@
 * :func:`encode_fixed_point` — the NetCDF encoding arithmetic
   (``bin/fs_process_l2.py:196-200``): 3-decimal fixed point as int32 with
   ``_FillValue=-9999``. Pure column expressions, testable without netCDF.
-* :func:`to_netcdf` — driver-side xarray materialization of a (small,
-  final) L2 frame with CF-style attrs. xarray/netCDF4 are OPTIONAL deps;
-  absent -> ImportError with guidance. At 100 TB the canonical output is
-  Parquet; NetCDF is a per-site driver-side export of an already-reduced
-  product (one station's series fits trivially in driver memory).
+* :func:`to_netcdf` — driver-side classic NetCDF export of a (small,
+  final) L2 frame with CF-style attrs through the built-in
+  :mod:`cassandra_fs_pp_spark.netcdf3` writer. At 100 TB the canonical
+  output is Parquet; NetCDF is a per-site driver-side export of an
+  already-reduced product (one station's series fits trivially in driver
+  memory).
 """
 
 from __future__ import annotations

@@ -1,10 +1,8 @@
 """S11 — NetCDF scan (reference ``bin/plot_L2.py:40`` ``xr.open_dataset``).
 
-Reads a ``.nc`` file — classic NetCDF-3 written by :func:`sinks.to_netcdf`
-(or any tool emitting CDF-1/2), or NETCDF4/HDF5 as the reference's
-``to_netcdf`` writes when the netCDF4 library is present (from-spec
-subset reader in ``hdf5.py``) — into a time-indexed wide DataFrame, applying the
-CF unpacking convention on the way in: ``float = int32 * scale_factor``
+Reads a classic NetCDF ``.nc`` file (CDF-1/2, as :func:`sinks.to_netcdf`
+writes it) into a time-indexed wide DataFrame, applying the CF unpacking
+convention on the way in: ``float = int32 * scale_factor``
 with ``_FillValue`` -> null (``bin/fs_process_l2.py:196-200`` encoding,
 inverted). Driver-side materialization — an L2 site product is a reduced
 per-station artifact (thousands of rows), the engine-canonical bulk
@@ -18,7 +16,7 @@ import datetime as _dt
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from cassandra_fs_pp_spark.netcdf3 import read_netcdf3
+from cassandra_fs_pp_spark.netcdf3 import read_netcdf3, read_netcdf3_bytes
 
 # CF epoch-offset units (udunits spellings incl. singular/abbreviated forms)
 _CF_UNIT_SECONDS = {
@@ -32,80 +30,6 @@ _CF_UNIT_SECONDS = {
     "days": 86400.0, "day": 86400.0, "d": 86400.0,
 }
 
-_HDF5_SIGNATURE = b"\x89HDF\r\n\x1a\n"
-
-
-def _sniff_hdf5(head: bytes) -> bool:
-    """True iff ``head`` starts an HDF5 file: the 8-byte signature at
-    offset 0 or any userblock doubling (512, 1024, ...) — the same scan
-    ``hdf5._Reader`` performs, duplicated here so the router can tell
-    "not HDF5 at all" apart from "HDF5 but structurally corrupt"."""
-    base = 0
-    while base + 8 <= len(head):
-        if head[base : base + 8] == _HDF5_SIGNATURE:
-            return True
-        base = 512 if base == 0 else base * 2
-    return False
-
-
-def _read_any(path: str):
-    """Magic-sniffing front end: classic CDF-1/2 routes to the NetCDF-3
-    reader, the HDF5 signature to the from-spec NetCDF-4 subset reader
-    (``hdf5.py`` — covers the reference's ``fs_process_l2.py:198-204``
-    zlib=False encoding plus the standard deflate/shuffle/fletcher32
-    pipeline). Subset-exceeding HDF5 features (non-deflate filters,
-    layout v4, userblocks...) fall back to the optional netCDF4 library
-    when installed, else re-raise the honest NotImplementedError. The
-    signature sniff (incl. userblock doublings) happens HERE, before
-    parsing, so only a genuinely unrecognized file maps to the "neither
-    signature" error — structural/checksum ValueErrors from a valid
-    HDF5 signature (bad B-tree/heap magic, fletcher32 mismatch)
-    propagate with their original message."""
-    with open(path, "rb") as f:
-        head = f.read(1 << 16)
-    if head[:3] == b"CDF":
-        return read_netcdf3(path)
-    if not _sniff_hdf5(head):
-        raise ValueError(
-            f"{path}: neither classic NetCDF nor HDF5 signature"
-        )
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    try:
-        return read_netcdf4(path)
-    except NotImplementedError as gate:
-        try:
-            import netCDF4  # noqa: F401 — optional dependency
-        except ImportError:
-            raise gate from None
-        return _read_via_netcdf4_lib(path)
-
-
-def _read_via_netcdf4_lib(path: str):
-    """Optional-dependency escape hatch for HDF5 features outside the
-    from-spec subset (compressed variables, v4 layouts...)."""
-    import netCDF4
-
-    from cassandra_fs_pp_spark.hdf5 import H5Variable
-
-    ds = netCDF4.Dataset(path, "r")
-    try:
-        dims = {
-            name: (None if d.isunlimited() else d.size)
-            for name, d in ds.dimensions.items()
-        }
-        gattrs = {k: ds.getncattr(k) for k in ds.ncattrs()}
-        variables = []
-        for name, v in ds.variables.items():
-            v.set_auto_maskandscale(False)
-            attrs = {k: v.getncattr(k) for k in v.ncattrs()}
-            variables.append(
-                H5Variable(name, tuple(v.dimensions), attrs, np.asarray(v[:]))
-            )
-        return dims, gattrs, variables
-    finally:
-        ds.close()
-
 
 def load_netcdf(
     spark: SparkSession,
@@ -113,8 +37,7 @@ def load_netcdf(
     *,
     time_col: str = "time",
 ) -> DataFrame:
-    """``.nc`` (classic or NETCDF4/HDF5) -> DataFrame
-    ``(time timestamp, <var> double ...)``.
+    """Classic ``.nc`` -> DataFrame ``(time timestamp, <var> double ...)``.
 
     1-D variables over the record (time) dimension become columns;
     packed int variables with ``scale_factor``/``_FillValue`` attrs are
@@ -123,7 +46,7 @@ def load_netcdf(
     CF ``units`` epoch (``seconds|days since <epoch>``) and returned
     under ``time_col``.
     """
-    dims, _gattrs, variables = _read_any(path)
+    dims, _gattrs, variables = read_netcdf3(path)
     try:
         record_dim, tvals = _record_times(dims, variables)
     except ValueError as e:
@@ -177,7 +100,7 @@ def load_netcdf_long(
     value)`` rows, the engine's canonical chain layout (inverse of
     :func:`sinks.to_netcdf_long`). Sensor ids come from the
     ``sensor_name`` char matrix when present, else the 0-based index."""
-    dims, _gattrs, variables = _read_any(path)
+    dims, _gattrs, variables = read_netcdf3(path)
     record_dim, tvals = _record_times(dims, variables)
     v = {x.name: x for x in variables}
     if var_name not in v:
@@ -216,19 +139,6 @@ def load_netcdf_long(
     return spark.createDataFrame(
         rows, f"`{time_col}` timestamp, `{sensor_col}` string, `{value_col}` double"
     )
-
-
-def _read_any_bytes(raw: bytes):
-    """Bytes-level twin of :func:`_read_any` for executor-side parsing
-    (no netCDF4-library fallback inside executors — subset-exceeding
-    files raise their honest gate)."""
-    if raw[:3] == b"CDF":
-        from cassandra_fs_pp_spark.netcdf3 import read_netcdf3_bytes
-
-        return read_netcdf3_bytes(raw)
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4_bytes
-
-    return read_netcdf4_bytes(raw)
 
 
 def _record_times(dims, variables) -> tuple[str, list]:
@@ -283,16 +193,15 @@ def load_netcdf_fleet(
     *,
     time_col: str = "time",
 ) -> DataFrame:
-    """Distributed fleet ingestion of ``.nc`` station files: Spark's
-    ``binaryFile`` source ships each file's bytes to an executor, where
-    the from-spec classic/NETCDF4 readers parse them (no external
-    library, no driver materialization) and emit the engine's canonical
-    long fleet shape ``(src_file, time, var, value)`` — one task per
-    file batch, so a directory of hundreds of thousands of station
-    products ingests in parallel and lands as an ordinary DataFrame for
-    the L-level pipeline. Mixed classic/HDF5 directories are fine (the
-    magic sniff is per file); a subset-exceeding HDF5 file raises its
-    honest gate in the task rather than silently dropping data.
+    """Distributed fleet ingestion of classic ``.nc`` station files:
+    Spark's ``binaryFile`` source ships each file's bytes to an executor,
+    where the classic NetCDF reader parses them (no external library, no
+    driver materialization) and emits the engine's canonical long fleet
+    shape ``(src_file, time, var, value)`` — one task per file batch, so
+    a directory of hundreds of thousands of station products ingests in
+    parallel and lands as an ordinary DataFrame for the L-level pipeline.
+    A file that is not classic NetCDF raises ``ValueError`` in its task
+    rather than silently dropping data.
 
     1-D record variables only (the wide per-file layout is
     :func:`load_netcdf`); CF unpacking applied per variable.
@@ -314,7 +223,7 @@ def load_netcdf_fleet(
         for pdf in batches:
             frames = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                dims, _g, variables = _read_any_bytes(bytes(content))
+                dims, _g, variables = read_netcdf3_bytes(bytes(content))
                 record_dim, tvals = _record_times(dims, variables)
                 data_vars = [
                     v

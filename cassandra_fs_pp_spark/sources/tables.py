@@ -62,7 +62,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -1,9 +1,7 @@
 from cassandra_fs_pp_spark.streaming.filestream import (  # noqa: F401
     debounce_admit_stateful,
     hourly_agg_stream,
-    ratchet_stateful,
     run_available_now,
     stream_table,
-    stream_toa5,
     watermark_dedup,
 )

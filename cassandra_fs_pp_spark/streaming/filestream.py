@@ -15,12 +15,6 @@ the batch L0->L1 semantics —
   state bounded by the watermark delay instead of growing forever.
 * :func:`hourly_agg_stream` — A8's tumbling-window aggregation with a
   watermark for late data.
-* :func:`ratchet_stateful` — W8's surface-ratchet as a CUSTOM STATEFUL
-  operator (``applyInPandasWithState``): the reference's sequential loop
-  (``cassandra_fs_pp/fs_pp.py:636-641``) carried across micro-batches as
-  per-sensor state. Batch mode uses the closed form
-  (``operators.windows.ratchet_depth``); this is the streaming twin for
-  unbounded ingest, and the two are asserted equivalent in tests.
 
 Scale stance: file-source streams list+checkpoint incrementally (no
 re-scan); dedup/agg state is keyed and watermark-bounded so a 1000-executor
@@ -87,44 +81,6 @@ def stream_table(
         elif dtypes.get(col) == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def stream_toa5(
-    spark: SparkSession,
-    glob_dir: str,
-    schema_ddl: str,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Incremental TOA5 ingest: the reference's real use-case — new bale
-    files landing per field visit (``README.md:55-68`` re-runs everything;
-    here only NEW files are read).
-
-    Same distributed shape as the batch reader (``sources/toa5.py``): text
-    stream + data-shape row predicate drops the 4 interleaved header lines
-    per file, ``from_csv`` parses with the logger-program schema (peek one
-    existing file with ``read_toa5_header``/``toa5_schema_ddl`` to get it).
-    Compose with :func:`watermark_dedup` on TIMESTAMP for the L1 keep-first
-    semantics over late/duplicate deliveries.
-    """
-    from cassandra_fs_pp_spark.sources.toa5 import DATA_ROW_RE
-
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    txt = reader.text(glob_dir)
-    rows = txt.filter(F.col("value").rlike(DATA_ROW_RE))
-    return rows.select(
-        F.from_csv(
-            "value",
-            schema_ddl,
-            {
-                "nullValue": "NAN",
-                "timestampFormat": "yyyy-MM-dd HH:mm:ss",
-                "emptyValue": "",
-            },
-        ).alias("r")
-    ).select("r.*")
 
 
 def watermark_dedup(
@@ -197,71 +153,6 @@ def session_window_stream(
     )
 
 
-def ratchet_stateful(
-    df: DataFrame,
-    install_depths: dict[int, float],
-    *,
-    key_col: str = "sensor_id",
-    ts_col: str = "ts",
-    udg_col: str = "udg",
-) -> DataFrame:
-    """W8 as a custom stateful streaming operator.
-
-    Carries ``(offset, initialized)`` per sensor across micro-batches and
-    replays the reference's sequential semantics
-    (``cassandra_fs_pp/fs_pp.py:636-641``): ``d = min(0, u + offset)``;
-    when ``d`` hits 0 the sensor melted out and ``offset`` resets to ``-u``.
-    Requires in-order arrival per key (file order), the same contract the
-    batch closed form gets from its time sort.
-    """
-    out_schema = StructType(
-        [
-            df.schema[key_col],
-            StructField(ts_col, df.schema[ts_col].dataType),
-            StructField("depth", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("offset", DoubleType()), StructField("init", DoubleType())]
-    )
-    depths = dict(install_depths)
-
-    def step(
-        key: tuple,
-        batches: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        (sensor,) = key
-        if state.exists:
-            offset, init = state.get
-        else:
-            offset, init = float(depths.get(sensor, 0.0)), None
-        for pdf in batches:
-            pdf = pdf.sort_values(ts_col)
-            out_t, out_d = [], []
-            for t, u in zip(pdf[ts_col], pdf[udg_col]):
-                if init is None:
-                    init = float(u)  # normalize to first reading (fs_pp.py:631)
-                un = float(u) - init
-                d = min(0.0, un + offset)
-                if d == 0.0:
-                    offset = -un
-                out_t.append(t)
-                out_d.append(d)
-            yield pd.DataFrame(
-                {key_col: sensor, ts_col: out_t, "depth": out_d}
-            )
-        state.update((offset, init if init is not None else 0.0))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        step,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def cusum_stateful(
     df: DataFrame,
     *,
@@ -279,8 +170,7 @@ def cusum_stateful(
     contrast the batch form's two window passes; streaming CUSUM is the
     textbook O(1)-state detector). Each micro-batch is sorted on
     ``order_cols`` (default ``[ts_col]``) before the fold; requires
-    per-key in-order arrival ACROSS batches (file order), the same
-    contract as ``ratchet_stateful``.
+    per-key in-order arrival ACROSS batches (file order).
     """
     from pyspark.sql.types import LongType
 
@@ -342,7 +232,7 @@ def debounce_admit_stateful(
     State per key is one long (last-seen event time in epoch
     microseconds). Micro-batches are sorted on (ts, id) before the fold;
     requires per-key in-order arrival ACROSS batches (file order), the
-    same contract as ``ratchet_stateful`` / ``cusum_stateful``."""
+    same contract as ``cusum_stateful``."""
     from pyspark.sql.types import LongType
 
     key_fields = [df.schema[k] for k in keys]
@@ -609,7 +499,7 @@ def target_encode_prefix_stateful(
     State per key is the pair ``(sum_cents, n)`` — two longs, O(1) per
     key. Each micro-batch sorts its group slice on ``(ts, id)`` before
     the fold; requires per-key in-order arrival ACROSS batches (file
-    order), the same contract as ``cusum_stateful``/``ratchet_stateful``.
+    order), the same contract as ``cusum_stateful``.
     Integer sums + one exact double division per row, so the drained
     output is bit-identical to the batch window form.
     """

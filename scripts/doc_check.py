@@ -320,8 +320,8 @@ def _id_magnitude_scan(src: str) -> bool:
 
 
 # Top-level package definitions that nothing outside tests/ references,
-# kept on purpose.  Listed names do not count as uses themselves, so a
-# helper only they call needs its own entry.
+# kept on purpose.  Reach is followed from listed names too, so a helper
+# only they call needs no entry of its own.
 REACH_ALLOW = frozenset({
     # tests compare the registry's SQL-string/Arrow path against this form:
     "cdc_chunk_expr",  # Column form of functions.text.cdc_chunks
@@ -329,6 +329,7 @@ REACH_ALLOW = frozenset({
     "_pq_code_sql",  # SQL form veckernels.pq_assign_codes must match
     "_dq_vec_sql",  # SQL form veckernels.sq_dequantize must match
     "_pq_reconstruct_sql",  # SQL form veckernels.pq_reconstruct must match
+    "calibration_join",  # join form calibration_group_mean must match
     "encode_fixed_point",  # column arithmetic to_netcdf's int32 bytes must match
     "encode_tiff",  # builds the fixtures for multimodal.decode_tiff
     "encode_wav",  # builds the fixtures for multimodal.decode_wav
@@ -336,47 +337,47 @@ REACH_ALLOW = frozenset({
     "load_position_csv",  # S7: EC sensor position CSV
     "read_beadedstream_csv",  # S12: BeadedStream DTC logger CSV
     "to_netcdf_long",  # K3: 2-D (time, sensor) NetCDF export
+    "load_netcdf",  # S11: the reference plot_L2.py reading an L2 .nc
+    "load_netcdf_long",  # S11: a 2-D (time, sensor) .nc as long rows
     "load_netcdf_fleet",  # K3 read-back of a fleet of NetCDF products
-    "_read_any_bytes",  # helper of load_netcdf_fleet
-    "_unpack_values_np",  # helper of load_netcdf_fleet
     "render_depth_scatter",  # K4: depth-vs-time scatter plot
 })
 
 
-def _ref_names(node) -> set[str]:
-    """Identifiers a node uses: names, attribute names and imported names
-    (docstrings and other strings are not uses)."""
+def _ref_names(node, alias: dict[str, str]) -> set[str]:
+    """Identifiers a node uses: names and attribute names, with a name
+    bound by ``import ... as`` mapped back to the imported one.  Imports,
+    ``__all__`` and other strings, docstrings included, are not uses."""
     import ast
 
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
-            out.add(n.id)
+            out.add(alias.get(n.id, n.id))
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
-        elif isinstance(n, (ast.Import, ast.ImportFrom)):
-            out.update(a.name.split(".")[-1] for a in n.names)
     return out
 
 
-def _unreached(root: str):
+def _unreached(root: str, allow: frozenset[str] = frozenset()):
     """Top-level definitions (def, class, module constant) of the
     ``cassandra_fs_pp_spark`` package under ``root`` that no code outside
     tests reaches.
 
     Roots are every Python file outside the package that is not a test
-    (``tests/``, ``test_*.py``, ``conftest.py``) and the package's own
-    module-level statements (imports included, so an ``__init__``
-    re-export counts as a use).  Reach then follows the names each
-    reached definition uses.  Names are matched by identifier, not by
-    module, so a name defined twice stays reached if either copy is.
-    Returns ``[(relpath, line, name)]``."""
+    (``tests/``, ``test_*.py``, ``conftest.py``), the package's own
+    module-level statements other than imports, and the names in
+    ``allow``.  An import, an ``__init__`` re-export included, is not a
+    use: only a name or attribute in code is.  Reach then follows the
+    names each reached definition uses.  Names are matched by
+    identifier, not by module, so a name defined twice stays reached if
+    either copy is.  Returns ``[(relpath, line, name)]``."""
     import ast
 
     pkg = os.path.join(root, "cassandra_fs_pp_spark") + os.sep
     defs: dict[str, tuple[str, int]] = {}
     uses: dict[str, set[str]] = {}
-    live: set[str] = set()
+    live: set[str] = set(allow)
     for dirpath, dirnames, filenames in os.walk(root):
         dirnames[:] = [
             d for d in dirnames if d != "tests" and not d.startswith((".", "__"))
@@ -388,6 +389,13 @@ def _unreached(root: str):
             in_pkg = path.startswith(pkg)
             with open(path) as fh:
                 tree = ast.parse(fh.read())
+            alias = {
+                a.asname: a.name.split(".")[-1]
+                for n in ast.walk(tree)
+                if isinstance(n, (ast.Import, ast.ImportFrom))
+                for a in n.names
+                if a.asname
+            }
             for node in tree.body:
                 names: list[str] = []
                 if in_pkg and isinstance(
@@ -401,10 +409,10 @@ def _unreached(root: str):
                         if isinstance(t, ast.Name) and not t.id.startswith("__")
                     ]
                 if not names:
-                    live |= _ref_names(node)
+                    live |= _ref_names(node, alias)
                 for n in names:
                     defs[n] = (os.path.relpath(path, root), node.lineno)
-                    uses.setdefault(n, set()).update(_ref_names(node))
+                    uses.setdefault(n, set()).update(_ref_names(node, alias))
     reached: set[str] = set()
     todo = [n for n in live if n in defs]
     while todo:
@@ -420,20 +428,20 @@ def reach_lint(root: str | None = None) -> bool:
     definition in ``cassandra_fs_pp_spark/`` must be used by the
     pipelines, the CLI, the registry, ``bench.py``, ``scripts/`` or
     ``perfbench/`` (see :func:`_unreached`), or be listed with its reason
-    in ``REACH_ALLOW``.  A listed name that is reached or gone fails too,
-    so the list cannot go stale."""
+    in ``REACH_ALLOW`` or used by a listed name.  A listed name that is
+    reached without the list, or is gone, fails too, so the list cannot
+    go stale."""
     root = root or os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
-    dead = _unreached(root)
-    flagged = [d for d in dead if d[2] not in REACH_ALLOW]
-    stale = REACH_ALLOW - {d[2] for d in dead}
+    flagged = _unreached(root, REACH_ALLOW)
+    stale = REACH_ALLOW - {d[2] for d in _unreached(root)}
     for path, line, name in flagged:
-        print(f"reach lint: {path}:{line} {name} is reached only from tests")
+        print(f"reach lint: {path}:{line} {name} is not reached outside tests")
     if stale:
         print(f"reach lint: REACH_ALLOW names reached or undefined: {sorted(stale)}")
     if flagged or stale:
         return True
     print(f"reach lint: every package definition is reached outside tests "
-          f"({len(dead)} allow-listed)")
+          f"({len(REACH_ALLOW)} allow-listed)")
     return False
 
 

@@ -18,7 +18,6 @@ import sys
 import time
 
 import duckdb
-import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -247,8 +247,11 @@ def test_doc_check_passes(monkeypatch):
 def test_reach_lint_flags_test_only_definition(tmp_path, monkeypatch):
     """``doc_check.reach_lint`` fails on a package definition that only a
     test uses, follows uses transitively (a helper of a dead function is
-    dead too), counts ``__init__`` re-exports as uses, passes once the
-    test-only names are allow-listed and fails on a stale entry."""
+    dead too), does not count an import as a use (an ``__init__``
+    re-export, or a non-test file importing a function it never calls),
+    follows ``import ... as`` aliases, passes once the unreached names
+    are allow-listed (their helpers need no entry) and fails on a stale
+    entry."""
     import contextlib
     import io
     import os
@@ -264,19 +267,25 @@ def test_reach_lint_flags_test_only_definition(tmp_path, monkeypatch):
 
     pkg = tmp_path / "cassandra_fs_pp_spark"
     pkg.mkdir()
-    (pkg / "__init__.py").write_text("from .mod import exported\n")
+    (pkg / "__init__.py").write_text(
+        'from .mod import exported\n\n__all__ = ["exported"]\n'
+    )
     (pkg / "mod.py").write_text(
         "LIMIT = 3\n\n"
         "def _helper():\n    return LIMIT\n\n"
         "def used():\n    return _helper()\n\n"
         "def exported():\n    pass\n\n"
+        "def imported_only():\n    pass\n\n"
+        "def aliased():\n    pass\n\n"
         "def _dead_helper():\n    pass\n\n"
         "def test_only():\n"
         '    """Mentions used() in a docstring only."""\n'
         "    return _dead_helper()\n"
     )
     (tmp_path / "bench.py").write_text(
-        "from cassandra_fs_pp_spark.mod import used\nused()\n"
+        "from cassandra_fs_pp_spark.mod import aliased as _aliased\n"
+        "from cassandra_fs_pp_spark.mod import imported_only, used\n"
+        "used()\n_aliased()\n"
     )
     (tmp_path / "tests").mkdir()
     (tmp_path / "tests" / "test_mod.py").write_text(
@@ -284,13 +293,14 @@ def test_reach_lint_flags_test_only_definition(tmp_path, monkeypatch):
     )
 
     assert [d[2] for d in doc_check._unreached(str(tmp_path))] == [
-        "_dead_helper", "test_only",
+        "exported", "imported_only", "_dead_helper", "test_only",
     ]
     with contextlib.redirect_stdout(io.StringIO()) as out:
         assert doc_check.reach_lint(str(tmp_path))
-    assert "test_only is reached only from tests" in out.getvalue()
+    for name in ("test_only", "exported", "imported_only"):
+        assert f"{name} is not reached outside tests" in out.getvalue()
 
-    allow = frozenset({"_dead_helper", "test_only"})
+    allow = frozenset({"exported", "imported_only", "test_only"})
     monkeypatch.setattr(doc_check, "REACH_ALLOW", allow)
     with contextlib.redirect_stdout(io.StringIO()):
         assert not doc_check.reach_lint(str(tmp_path))

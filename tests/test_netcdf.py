@@ -12,7 +12,6 @@ executed — not just the encode arithmetic.
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 import numpy as np
 import pytest
@@ -363,408 +362,19 @@ def test_netcdf_long_roundtrip(spark, tmp_path):
             assert got[(t, s)] == pytest.approx(val, abs=SCALE_FACTOR / 2)
 
 
-def test_netcdf4_hdf5_reader_structures(tmp_path):
-    """read_netcdf4 parses a real HDF5-layout NETCDF4 file (test-local
-    from-spec writer): superblock v0, symbol-table group, v1 object
-    headers, contiguous + multi-chunk layouts, vlen-string attrs via the
-    global heap, DIMENSION_LIST refs, unlimited record dim, pure dims."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    path = str(tmp_path / "nc4.nc")
-    truth = write_netcdf4(path)
-    dims, _gattrs, variables = read_netcdf4(path)
-    v = {x.name: x for x in variables}
-    assert dims == {"time": None, "sensor": truth["n_sensor"]}
-    assert "sensor" not in v  # pure dimension, not a variable
-    assert np.array_equal(v["time"].data, truth["time"])
-    assert np.array_equal(v["t_air"].data, truth["t_air"])  # contiguous
-    assert np.array_equal(v["batt"].data, truth["batt"])
-    assert np.array_equal(v["depth"].data, truth["depth"])  # 2 chunks
-    assert v["t_air"].dims == ("time",)
-    assert v["depth"].dims == ("time", "sensor")
-    assert v["t_air"].attrs["units"] == "degree_Celsius"  # vlen via GCOL
-    assert v["t_air"].attrs["scale_factor"] == 0.001
-    assert v["t_air"].attrs["_FillValue"] == -9999
-
-
-def test_s11_netcdf4_scan_end_to_end(spark, tmp_path):
-    """load_netcdf on a NETCDF4/HDF5 file: CF unpacking (int32 * 0.001,
-    -9999 -> null) and record-dim time decode work identically to the
-    classic path; load_netcdf_long assembles the 2-D chunked chain var."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.sources.netcdf import (
-        load_netcdf,
-        load_netcdf_long,
-    )
-
-    path = str(tmp_path / "nc4.nc")
-    truth = write_netcdf4(path)
-    df = load_netcdf(spark, path)
-    rows = sorted(df.collect(), key=lambda r: r["time"])
-    assert len(rows) == truth["n_time"]
-    base = dt.datetime(2024, 1, 1)
-    assert rows[0]["time"] == base
-    assert rows[2]["time"] == base + dt.timedelta(hours=2)
-    # packed var unpacks; fill row is null
-    assert rows[5]["t_air"] is None
-    assert rows[0]["t_air"] == pytest.approx(
-        int(truth["t_air"][0]) * 0.001, abs=1e-12
-    )
-    assert rows[7]["batt"] == int(truth["batt"][7])
-
-    long_df = load_netcdf_long(spark, path, var_name="depth")
-    got = {
-        (r["time"], r["sensor_id"]): r["value"] for r in long_df.collect()
-    }
-    assert len(got) == truth["n_time"] * truth["n_sensor"]
-    assert got[(base, "0")] == pytest.approx(truth["depth"][0, 0], abs=0)
-    assert got[
-        (base + dt.timedelta(hours=30), "2")
-    ] == pytest.approx(truth["depth"][30, 2], abs=0)
-
-
-def test_netcdf4_honest_gates(tmp_path):
-    """Subset-exceeding HDF5 features raise NotImplementedError naming
-    the feature (and _read_any re-raises when netCDF4 isn't installed)."""
-    import struct as _struct
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.sources.netcdf import _read_any
-
-    path = str(tmp_path / "nc4.nc")
-    write_netcdf4(path)
-    buf = bytearray(open(path, "rb").read())
-    # corrupt the superblock version -> unsupported version gate
-    bad = bytes(buf[:8]) + bytes([9]) + bytes(buf[9:])
-    p9 = str(tmp_path / "bad_ver.nc")
-    open(p9, "wb").write(bad)
-    with pytest.raises(NotImplementedError, match="superblock version"):
-        _read_any(p9)
-    del _struct
-
-
-def test_netcdf4_deflate_pipeline_roundtrip(tmp_path):
-    """r9: filter pipelines decode from spec with the stdlib — v1
-    deflate on the coordinate, v2 shuffle+deflate+fletcher32 (verified)
-    on the 2-D variable; a defined fill-value message fills the
-    deliberately-unwritten second chunk; result is bit-equal to the
-    uncompressed twin's truth arrays."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    path = str(tmp_path / "nc4_deflate.nc")
-    truth = write_netcdf4(path, compress=True)
-    dims, _gattrs, variables = read_netcdf4(path)
-    v = {x.name: x for x in variables}
-    assert dims == {"time": None, "sensor": truth["n_sensor"]}
-    assert np.array_equal(v["time"].data, truth["time"])  # v1 deflate
-    assert np.array_equal(v["t_air"].data, truth["t_air"])
-    # v2 shuffle+deflate+fletcher32 chunk 0; missing chunk 1 <- fill
-    assert np.array_equal(v["depth"].data, truth["depth"])
-    half = truth["n_time"] // 2
-    assert (truth["depth"][half:] == -1.0).all()  # fill actually exercised
-
-
-def test_netcdf4_deflate_load_matches_uncompressed_twin(spark, tmp_path):
-    """load_netcdf on the deflate-chunked file equals load_netcdf on the
-    uncompressed twin row-for-row (shared columns; depth is chunked so
-    only the 1-D vars flow through load_netcdf)."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.sources.netcdf import load_netcdf
-
-    plain = str(tmp_path / "plain.nc")
-    packed = str(tmp_path / "deflate.nc")
-    write_netcdf4(plain)
-    write_netcdf4(packed, compress=True)
-    a = sorted(load_netcdf(spark, plain).collect(), key=lambda r: r["time"])
-    b = sorted(load_netcdf(spark, packed).collect(), key=lambda r: r["time"])
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
-
-
-def test_netcdf4_v2_headers_superblock_v3_roundtrip(tmp_path):
-    """r9: libver='latest' flavor — superblock v3, OHDR v2 headers whose
-    last message ends exactly at the chunk-0 boundary, link-message root
-    group with an OCHK continuation, attribute v3 messages — parses to
-    the same truth as the v0 layout; compress composes orthogonally."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    for compress in (False, True):
-        path = str(tmp_path / f"nc4_v2_{compress}.nc")
-        truth = write_netcdf4(path, compress=compress, fmt="v2")
-        dims, _gattrs, variables = read_netcdf4(path)
-        v = {x.name: x for x in variables}
-        assert dims == {"time": None, "sensor": truth["n_sensor"]}
-        assert "sensor" not in v
-        assert np.array_equal(v["time"].data, truth["time"])
-        assert np.array_equal(v["t_air"].data, truth["t_air"])
-        assert np.array_equal(v["batt"].data, truth["batt"])  # via OCHK link
-        assert np.array_equal(v["depth"].data, truth["depth"])
-        assert v["t_air"].attrs["units"] == "degree_Celsius"  # attr v3
-        assert v["t_air"].attrs["scale_factor"] == 0.001
-        assert v["t_air"].dims == ("time",)
-        assert v["depth"].dims == ("time", "sensor")
-
-
-def test_netcdf4_dense_attribute_and_link_storage(tmp_path):
-    """r9: REAL dense storage decodes — t_air's attributes live in a
-    fractal heap indexed by a type-8 v2 B-tree (the h5py-'latest'
-    >8-attrs shape) and the root group's links in dense link storage
-    (type-5 B-tree, 7-byte heap IDs); truth arrays, dims, unpacking
-    attrs, and DIMENSION_LIST binding all survive the round-trip."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    path = str(tmp_path / "dense.nc")
-    truth = write_netcdf4(path, fmt="v2", dense_attrs=True)
-    dims, _gattrs, variables = read_netcdf4(path)
-    v = {x.name: x for x in variables}
-    assert dims == {"time": None, "sensor": truth["n_sensor"]}
-    assert np.array_equal(v["t_air"].data, truth["t_air"])
-    assert np.array_equal(v["depth"].data, truth["depth"])
-    assert v["t_air"].attrs["scale_factor"] == 0.001  # from the heap
-    assert v["t_air"].attrs["_FillValue"] == -9999
-    assert v["t_air"].attrs["units"] == "degree_Celsius"  # vlen via GCOL
-    assert v["t_air"].dims == ("time",)  # DIMENSION_LIST from the heap
-
-
-def test_netcdf4_dense_storage_honest_gates(tmp_path):
-    """Dense-storage features beyond the subset gate honestly: a
-    multi-level name B-tree and a filtered fractal heap both raise
-    NotImplementedError (routing to the optional netCDF4 library), never
-    silently dropping attributes."""
-    import struct as _s
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    path = str(tmp_path / "dense.nc")
-    write_netcdf4(path, fmt="v2", dense_attrs=True)
-    orig = open(path, "rb").read()
-
-    # depth=1 in the attribute-name BTHD -> multi-level gate
-    buf = bytearray(orig)
-    at = buf.find(b"BTHD")  # first BTHD is tair_attrs (placed first)
-    _s.pack_into("<H", buf, at + 12, 1)
-    p1 = str(tmp_path / "deep_btree.nc")
-    open(p1, "wb").write(bytes(buf))
-    with pytest.raises(NotImplementedError, match="multi-level"):
-        read_netcdf4(p1)
-
-    # nonzero I/O-filter length in the FRHP header -> filtered-heap gate
-    buf = bytearray(orig)
-    at = buf.find(b"FRHP")
-    _s.pack_into("<H", buf, at + 7, 12)
-    p2 = str(tmp_path / "filtered_heap.nc")
-    open(p2, "wb").write(bytes(buf))
-    with pytest.raises(NotImplementedError, match="filtered fractal heap"):
-        read_netcdf4(p2)
-
-
-def test_netcdf4_fletcher32_checksum():
-    """Engine's vectorized fletcher32 == naive H5checksum.c translation
-    on assorted lengths (even/odd, multi-block), and a corrupted chunk
-    checksum raises instead of returning garbage."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import fletcher32_naive, write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import _fletcher32, read_netcdf4
-
-    rng = np.random.default_rng(11)
-    for n in (0, 1, 2, 3, 7, 719, 720, 721, 1440, 5000):
-        data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
-        assert _fletcher32(data) == fletcher32_naive(data), n
-
-    # corrupt one byte inside the depth chunk payload -> mismatch
-    import struct as _s
-
-    path = "/tmp/_flet.nc"
-    write_netcdf4(path, compress=True)
-    buf = bytearray(open(path, "rb").read())
-    idx = buf.find(b"GCOL") - 40  # somewhere inside stored chunk bytes
-    del idx
-    # locate the depth chunk by recompressing the known payload
-    import zlib as _z
-
-    truth = write_netcdf4(path, compress=True)
-    half = truth["n_time"] // 2
-    raw = truth["depth"][:half].astype("<f8").tobytes()
-    shuffled = (
-        np.frombuffer(raw, dtype=np.uint8)
-        .reshape(len(raw) // 8, 8)
-        .T.tobytes()
-    )
-    comp = _z.compress(shuffled, 6)
-    pos = bytes(buf).find(comp)
-    assert pos > 0
-    buf[pos + 5] ^= 0xFF
-    open(path, "wb").write(bytes(buf))
-    with pytest.raises((ValueError, _z.error)):
-        read_netcdf4(path)
-    del _s
-
-
-def test_netcdf4_layout_v4_indexes(tmp_path):
-    """r9: data layout v4 chunk indexes decode — single chunk (time),
-    implicit dense grid (batt, 4 chunks), fixed array (depth, 2 chunks;
-    filtered client-1 entries + missing-chunk fill under compress);
-    extensible-array and v2-B-tree indexes gate honestly."""
-    import struct as _s
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4_layout_v4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    for compress in (False, True):
-        path = str(tmp_path / f"v4_{compress}.nc")
-        truth = write_netcdf4_layout_v4(path, compress=compress)
-        dims, _gattrs, variables = read_netcdf4(path)
-        v = {x.name: x for x in variables}
-        assert dims == {
-            "time": truth["n_time"],
-            "sensor": truth["n_sensor"],
-        }
-        assert np.array_equal(v["time"].data, truth["time"])  # single
-        assert np.array_equal(v["t_air"].data, truth["t_air"])
-        assert np.array_equal(v["batt"].data, truth["batt"])  # implicit
-        assert np.array_equal(v["depth"].data, truth["depth"])  # farr
-        assert v["t_air"].attrs["scale_factor"] == 0.001
-        assert v["depth"].dims == ("time", "sensor")
-        if compress:
-            half = truth["n_time"] // 2
-            assert (truth["depth"][half:] == -2.5).all()  # fill path
-
-    # patch depth's index type 3 -> 5: v2-B-tree honest gate (the
-    # extensible-array index is implemented as of r17 — see
-    # test_netcdf4_layout_ea below)
-    path = str(tmp_path / "v4_False.nc")
-    buf = bytearray(open(path, "rb").read())
-    # the layout message dims for depth: (24, 3, 8) as 8-byte LE each,
-    # followed by the index-type byte
-    sig = b"".join(_s.pack("<Q", d) for d in (24, 3, 8)) + b"\x03"
-    at = buf.find(sig)
-    assert at > 0
-    buf[at + len(sig) - 1] = 5
-    p = str(tmp_path / "v4_bt2.nc")
-    open(p, "wb").write(bytes(buf))
-    with pytest.raises(NotImplementedError, match="v2 B-tree"):
-        read_netcdf4(p)
-
-
-def test_netcdf4_layout_ea(tmp_path):
-    """r17 (VERDICT r16 item 8): the extensible-array chunk index —
-    libhdf5's pick for unlimited dims under libver='latest' — decodes
-    through every block class the fixture lays out from HAND-WRITTEN
-    literal schedules (never the reader's formula): inline index-block
-    elements, a direct data block (defaults: 6 direct slots + 25
-    super-block slots), client-1 filtered inline records with a
-    never-written chunk reading as fill, and materialized EASB super
-    blocks (custom small params: two 4-element blocks in s2, a partial
-    8-element block in s3) with an intra-block missing chunk."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4_layout_ea
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    path = str(tmp_path / "ea.nc")
-    truth = write_netcdf4_layout_ea(path)
-    dims, _gattrs, variables = read_netcdf4(path)
-    v = {x.name: x for x in variables}
-    # time is the unlimited/record dim -> None (netcdf3-style contract)
-    assert dims == {"time": None, "sensor": truth["n_sensor"]}
-    # defaults params: 4 inline chunks + 4 chunks in the direct dblock
-    assert np.array_equal(v["time"].data, truth["time"])
-    # client 1: deflate records inline; chunk 3 never written -> fill
-    assert np.array_equal(v["press"].data, truth["press"])
-    assert (v["press"].data[15:] == -9.9).all()
-    # custom params: inline + 2 direct dblocks (chunk 5 missing -> fill)
-    # + super blocks s2 (full) and s3 (partial)
-    assert np.array_equal(v["depth"].data, truth["depth"])
-    assert (v["depth"].data[5] == -99).all()
-    assert v["depth"].dims == ("time", "sensor")
-
-
-@pytest.mark.parametrize("n_time,n_sensor", [(6, 1), (47, 2), (96, 5)])
-@pytest.mark.parametrize("fmt", ["v0", "v2"])
-def test_netcdf4_shape_matrix(tmp_path, n_time, n_sensor, fmt):
-    """Round-trip across layouts and odd sizes (47 forces a ragged
-    second chunk) for both header formats, compressed and not."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    for compress in (False, True):
-        path = str(tmp_path / f"m_{n_time}_{n_sensor}_{fmt}_{compress}.nc")
-        truth = write_netcdf4(
-            path, n_time, n_sensor, compress=compress, fmt=fmt
-        )
-        _dims, _g, variables = read_netcdf4(path)
-        v = {x.name: x for x in variables}
-        assert np.array_equal(v["time"].data, truth["time"])
-        assert np.array_equal(v["t_air"].data, truth["t_air"])
-        assert np.array_equal(v["depth"].data, truth["depth"])
-
-
 def test_load_netcdf_fleet_distributed(spark, tmp_path):
-    """r9: distributed .nc ingestion — binaryFile ships bytes to
-    executors where the from-spec readers parse a MIXED directory
-    (classic CDF-1, HDF5 v0, HDF5 v2+deflate) into the long fleet
-    shape with CF unpacking; values match per-file truths exactly."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
+    """Distributed .nc ingestion: binaryFile ships bytes to executors
+    where the classic reader parses a directory holding a CDF-1 and a
+    CDF-2 file into the long fleet shape with CF unpacking; values match
+    per-file truths exactly and a non-record variable is left out."""
     from cassandra_fs_pp_spark.sources.netcdf import load_netcdf_fleet
 
     d = tmp_path / "fleet"
     d.mkdir()
-    t4 = write_netcdf4(str(d / "st_a.nc"), n_time=24)
-    t5 = write_netcdf4(str(d / "st_b.nc"), n_time=24, compress=True, fmt="v2")
     tvals = np.array([0.0, 3600.0, 7200.0], dtype="float64")
     packed = np.array([1234, -9999, 5678], dtype="int32")
     write_netcdf3(
-        str(d / "st_c.nc"),
+        str(d / "st_a.nc"),
         {"time": None},
         [
             Nc3Variable(
@@ -777,6 +387,24 @@ def test_load_netcdf_fleet_distributed(spark, tmp_path):
             ),
         ],
     )
+    batt = np.arange(24, dtype="int32") + 120
+    t_air = np.linspace(-5.0, 3.0, 24)
+    write_netcdf3(
+        str(d / "st_b.nc"),
+        {"time": None, "sensor": 2},
+        [
+            Nc3Variable(
+                "time", ("time",), np.arange(24, dtype="float64"),
+                {"units": "hours since 2024-01-01 00:00:00"},
+            ),
+            Nc3Variable("batt", ("time",), batt),
+            Nc3Variable("t_air", ("time",), t_air),
+            Nc3Variable("depth", ("sensor",), np.array([0.5, 1.0])),
+        ],
+        version=2,
+    )
+    with open(d / "st_b.nc", "rb") as f:
+        assert f.read(4) == b"CDF\x02"
 
     df = load_netcdf_fleet(spark, str(d / "*.nc"))
     rows = df.collect()
@@ -784,42 +412,18 @@ def test_load_netcdf_fleet_distributed(spark, tmp_path):
         (r["src_file"], r["var"], r["time"]): r["value"] for r in rows
     }
     base = dt.datetime(2024, 1, 1)
-    # classic file: packed var unpacks, fill -> null
-    assert got[("st_c.nc", "t107", base)] == pytest.approx(1.234)
-    assert got[("st_c.nc", "t107", base + dt.timedelta(hours=1))] is None
-    # HDF5 v0: t_air at row 0; batt plain int
-    assert got[("st_a.nc", "t_air", base)] == pytest.approx(
-        int(t4["t_air"][0]) * 0.001
-    )
-    assert got[("st_a.nc", "batt", base + dt.timedelta(hours=7))] == float(
-        t4["batt"][7]
-    )
-    # HDF5 v2 + deflate pipeline decoded executor-side
-    assert got[("st_b.nc", "batt", base)] == float(t5["batt"][0])
-    n_files = len({r["src_file"] for r in rows})
-    assert n_files == 3
-
-
-def test_netcdf4_dense_attrs_indirect_heap(tmp_path):
-    """Dense attributes whose fractal heap is rooted at an INDIRECT
-    block (FHIB, one object per row-0/1 direct block) decode through
-    the reader's row/column walk identically to the root-direct form."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import write_netcdf4
-
-    from cassandra_fs_pp_spark.hdf5 import read_netcdf4
-
-    path = str(tmp_path / "dense_ind.nc")
-    truth = write_netcdf4(path, fmt="v2", dense_attrs=True, dense_indirect=True)
-    _dims, _g, variables = read_netcdf4(path)
-    v = {x.name: x for x in variables}
-    assert np.array_equal(v["t_air"].data, truth["t_air"])
-    assert v["t_air"].attrs["scale_factor"] == 0.001
-    assert v["t_air"].attrs["_FillValue"] == -9999
-    assert v["t_air"].attrs["units"] == "degree_Celsius"
-    assert v["t_air"].dims == ("time",)
+    hour = dt.timedelta(hours=1)
+    # CDF-1: packed var unpacks, fill -> null
+    assert got[("st_a.nc", "t107", base)] == pytest.approx(1.234)
+    assert got[("st_a.nc", "t107", base + hour)] is None
+    assert got[("st_a.nc", "t107", base + 2 * hour)] == pytest.approx(5.678)
+    # CDF-2: plain int and float vars, decoded executor-side
+    assert got[("st_b.nc", "batt", base)] == 120.0
+    assert got[("st_b.nc", "batt", base + 7 * hour)] == float(batt[7])
+    assert got[("st_b.nc", "t_air", base + 23 * hour)] == t_air[23]
+    assert len(rows) == 3 + 2 * 24
+    assert {r["var"] for r in rows} == {"t107", "batt", "t_air"}
+    assert {r["src_file"] for r in rows} == {"st_a.nc", "st_b.nc"}
 
 
 def test_load_netcdf_cf_unit_spellings(spark, tmp_path):
@@ -923,19 +527,18 @@ def test_load_netcdf_add_offset_and_unit_errors(spark, tmp_path):
         load_netcdf(spark, bad).collect()
 
 
-def test_read_any_error_routing(tmp_path):
-    """ADVICE r9: only a failed signature sniff maps to the 'neither
-    signature' error; a valid HDF5 signature with corrupt internals
-    propagates its structural message."""
-    from cassandra_fs_pp_spark.sources.netcdf import _read_any
+def test_read_any_error_routing(spark, tmp_path):
+    """Only classic NetCDF is read: an empty file, a file of 64 NUL
+    bytes and a file with the HDF5 (NETCDF4) signature all raise the
+    classic reader's ValueError through ``load_netcdf``."""
+    from cassandra_fs_pp_spark.sources.netcdf import load_netcdf
 
-    junk = tmp_path / "junk.bin"
-    junk.write_bytes(b"\x00" * 64)
-    with pytest.raises(ValueError, match="neither classic NetCDF nor HDF5"):
-        _read_any(str(junk))
-
-    corrupt = tmp_path / "corrupt.h5"
-    corrupt.write_bytes(b"\x89HDF\r\n\x1a\n" + b"\xff" * 256)
-    with pytest.raises((ValueError, NotImplementedError)) as ei:
-        _read_any(str(corrupt))
-    assert "neither" not in str(ei.value)
+    empty = tmp_path / "empty.nc"
+    empty.write_bytes(b"")
+    zeros = tmp_path / "zeros.nc"
+    zeros.write_bytes(b"\x00" * 64)
+    hdf5 = tmp_path / "netcdf4.nc"
+    hdf5.write_bytes(b"\x89HDF\r\n\x1a\n" + b"\xff" * 256)
+    for path in (empty, zeros, hdf5):
+        with pytest.raises(ValueError, match="not a classic NetCDF file"):
+            load_netcdf(spark, str(path))

@@ -364,25 +364,6 @@ def test_interval_overlap_join_matches_naive(spark, data):
 
 
 @given(
-    data=st.binary(min_size=0, max_size=3000),
-)
-@settings(max_examples=60, deadline=None)
-def test_fletcher32_vectorized_matches_naive(data):
-    """hdf5._fletcher32 (numpy-blocked) == the fixture's straight
-    H5checksum.c translation on arbitrary byte strings (even/odd
-    lengths, multi-block folds)."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    from hdf5_fixture import fletcher32_naive
-
-    from cassandra_fs_pp_spark.hdf5 import _fletcher32
-
-    assert _fletcher32(data) == fletcher32_naive(data)
-
-
-@given(
     data=st.data(),
 )
 @settings(

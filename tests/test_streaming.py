@@ -1,21 +1,18 @@
 """Structured Streaming skin: availableNow batch-parity, cross-batch
-watermark dedup, and the stateful ratchet vs the batch closed form."""
+watermark dedup, and the stateful operators vs their batch forms."""
 
 from __future__ import annotations
 
 import os
 import time
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from cassandra_fs_pp_spark.operators.windows import ratchet_depth
 from cassandra_fs_pp_spark.streaming import (
     debounce_admit_stateful,
     hourly_agg_stream,
-    ratchet_stateful,
     run_available_now,
     stream_table,
     watermark_dedup,
@@ -86,79 +83,6 @@ def test_watermark_dedup_across_microbatches(spark, tmp_path):
     assert out.select("ts", "k").distinct().count() == 15
 
 
-def test_ratchet_stateful_matches_batch_closed_form(spark, tmp_path):
-    rng = np.random.default_rng(11)
-    n = 300
-    ts = pd.date_range("2024-06-01", periods=n, freq="h")
-    frames = []
-    series = {}
-    for sensor in (1, 2):
-        udg = np.cumsum(rng.normal(0.004, 0.02, n)) + 2.0
-        series[sensor] = pd.DataFrame(
-            {"sensor_id": sensor, "ts": ts, "udg": udg}
-        )
-    # split each sensor's series across two files (state must carry over)
-    frames = [
-        pd.concat([series[1].iloc[:150], series[2].iloc[:150]]),
-        pd.concat([series[1].iloc[150:], series[2].iloc[150:]]),
-    ]
-    d = _write_stream_files(spark, tmp_path, frames)
-
-    depths = {1: -0.25, 2: -0.4}
-    schema = "sensor_id long, ts timestamp, udg double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    got = (
-        run_available_now(ratchet_stateful(stream, depths))
-        .orderBy("sensor_id", "ts")
-        .toPandas()
-    )
-
-    # batch closed form on the normalized series
-    import pyspark.sql.functions as SF_
-
-    full = spark.createDataFrame(pd.concat(frames))
-    first = {
-        s: float(series[s]["udg"].iloc[0]) for s in (1, 2)
-    }
-    norm = full.withColumn(
-        "u",
-        F.col("udg")
-        - F.when(F.col("sensor_id") == 1, F.lit(first[1])).otherwise(
-            F.lit(first[2])
-        ),
-    )
-    want = (
-        norm.select(
-            "sensor_id",
-            "ts",
-            ratchet_depth(
-                "u",
-                "ts",
-                0.0,  # placeholder; per-sensor floor below
-                partition_by=["sensor_id"],
-            ).alias("_ignore"),
-        )
-    )
-    # closed form per sensor with its own install depth
-    outs = []
-    for s in (1, 2):
-        one = norm.filter(F.col("sensor_id") == s).select(
-            "sensor_id",
-            "ts",
-            ratchet_depth("u", "ts", depths[s]).alias("depth"),
-        )
-        outs.append(one.toPandas())
-    want_pdf = (
-        pd.concat(outs).sort_values(["sensor_id", "ts"]).reset_index(drop=True)
-    )
-    assert np.allclose(got["depth"].to_numpy(), want_pdf["depth"].to_numpy(),
-                       atol=1e-12)
-
-
 def test_stream_dedup_agg_pipeline(spark):
     """Dedup -> agg chained in one streaming query over the test table."""
     stream = stream_table(spark, SF, "events")
@@ -226,66 +150,6 @@ def test_file_sink_exactly_once_resume(spark, tmp_path):
     drain()
     assert spark.read.parquet(out).count() == 80
     assert len(glob.glob(out + "/*.parquet")) == n_files
-
-
-def test_stream_toa5_incremental_l1(spark, tmp_path):
-    """Incremental TOA5 ingest: bale files landing across drains feed an
-    append-only L1 with streaming keep-first dedup; final content equals
-    the batch reader over all files."""
-    from tests.test_toa5_pipeline import COLS, _row, _toa5_file
-
-    from cassandra_fs_pp_spark.sources.toa5 import (
-        read_toa5,
-        read_toa5_header,
-        toa5_schema_ddl,
-    )
-    from cassandra_fs_pp_spark.streaming import stream_toa5, watermark_dedup
-
-    src = tmp_path / "landing"
-    src.mkdir()
-    _toa5_file(src / "MainTable1.dat", [_row(i, i) for i in range(0, 40)])
-    schema = toa5_schema_ddl(read_toa5_header(str(src / "MainTable1.dat")))
-    out = str(tmp_path / "l1")
-    ckpt = str(tmp_path / "ck")
-
-    def drain():
-        stream = stream_toa5(spark, str(src), schema)
-        dd = watermark_dedup(
-            stream, ["TIMESTAMP"], ts_col="TIMESTAMP", delay="1 hour"
-        )
-        q = (
-            dd.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-
-    drain()
-    assert spark.read.parquet(out).count() == 40
-
-    # field visit 2: overlapping bale (rows 30..79 re-deliver 30..39)
-    import time as _t
-
-    f2 = src / "MainTable2.dat"
-    _toa5_file(f2, [_row(i, i) for i in range(30, 80)])
-    os.utime(str(f2), (_t.time() + 5, _t.time() + 5))
-    drain()
-
-    got = spark.read.parquet(out)
-    assert got.count() == 80
-    assert got.select("TIMESTAMP").distinct().count() == 80
-    want = read_toa5(
-        spark,
-        [str(src / "MainTable1.dat"), str(f2)],
-        with_provenance=False,
-    ).dropDuplicates(["TIMESTAMP"])
-    assert got.count() == want.count()
-    a = {r["TIMESTAMP"]: r["TCDT"] for r in got.collect()}
-    b = {r["TIMESTAMP"]: r["TCDT"] for r in want.collect()}
-    assert a == b
 
 
 def test_stream_session_window_matches_batch(spark):

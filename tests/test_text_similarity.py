@@ -13,6 +13,8 @@ from cassandra_fs_pp_spark.functions.text import (
 from cassandra_fs_pp_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dups,
+    ivf_adc_topk,
+    ivf_pq_topk,
     ivf_topk,
 )
 from cassandra_fs_pp_spark.operators.textdedup import (
@@ -114,6 +116,36 @@ def test_brute_force_topk_and_ivf_recall(spark):
 
     per_q = Counter(r["query_id"] for r in exact)
     assert set(per_q.values()) == {3}
+
+
+def test_cosine_null_on_zero_norm_vector(spark):
+    """A zero-norm vector scores NULL (as the Arrow kernels and the DuckDB
+    oracle do) under the session's ANSI mode instead of failing the
+    query with DIVIDE_BY_ZERO, in the exact scores and in the IVF
+    centroid probes; NULL ranks after every real cosine."""
+    df = spark.createDataFrame(
+        [(1, 0, [1.0, 0.0]), (2, 0, [0.0, 1.0]), (3, 0, [0.0, 0.0])],
+        "vec_id long, label int, embedding array<double>",
+    )
+    want = [
+        (1, 2, 0.0, 1), (1, 3, None, 2),
+        (2, 1, 0.0, 1), (2, 3, None, 2),
+        (3, 1, None, 1), (3, 2, None, 2),
+    ]
+    for out in (
+        brute_force_topk(df, k=2),
+        ivf_topk(df, k=2, nprobe=1),
+        ivf_adc_topk(df, k=2, nprobe=1, fixed_queries=4),
+        ivf_pq_topk(
+            df, dim=2, m=1, ks=2, k=2, nprobe=1, fixed_queries=4,
+            codebooks=[[[1.0, 0.0], [0.0, 1.0]]],
+        ),
+    ):
+        got = sorted(
+            (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
+            for r in out.collect()
+        )
+        assert got == want
 
 
 def test_embedding_near_dups_finds_identical(spark):
@@ -303,17 +335,17 @@ def _hot_corpus(spark, n_hot=1500, n_uniq=400):
 
 def test_lsh_cluster_exact_on_hot_bucket(spark):
     """A templated corpus (1500-doc duplicate class) must cluster exactly:
-    the single-pass window form ships (id, band_sig) rows — never pairs —
-    so the hot bucket costs O(n) rows in one window partition, not O(n^2).
+    the bucket-min form ships (id, band_sig) rows — never pairs — so the
+    hot bucket costs O(n) rows, not O(n^2).
     """
     from cassandra_fs_pp_spark.operators.textdedup import (
-        lsh_cluster,
-        minhash_signatures,
+        lsh_cluster_wide,
+        minhash_signatures_wide,
     )
 
     docs = _hot_corpus(spark)
-    sigs = minhash_signatures(docs, num_hashes=16)
-    out = lsh_cluster(sigs, num_hashes=16, bands=8).collect()
+    wide = minhash_signatures_wide(docs, num_hashes=16)
+    out = lsh_cluster_wide(wide, num_hashes=16, bands=8).collect()
     by_id = {r["doc_id"]: r for r in out}
     assert len(by_id) == 1900
     # every hot doc -> representative 0; doc 0 itself is not a dup

@@ -18,7 +18,6 @@ from cassandra_fs_pp_spark.operators.windows import (
     piecewise_offset,
     ratchet_depth,
     resample_grid,
-    rolling_mean,
     rolling_median,
     row_frame,
     time_frame,
@@ -61,22 +60,6 @@ def test_rolling_median_centered(spark):
     s = pd.Series(vals)
     expected = s.rolling(3, center=True, min_periods=1).median()
     assert np.allclose(out["med"].to_numpy(), expected.to_numpy())
-
-
-def test_rolling_mean_min_periods(spark):
-    vals = [1.0, 2.0, None, 4.0, 5.0]
-    df = _series_df(spark, vals)
-    frame = row_frame("time", before=2, after=0)
-    out = (
-        df.withColumn("m", rolling_mean("x", frame, min_periods=2))
-        .orderBy("time")
-        .toPandas()
-    )
-    # first row has only 1 non-null in frame -> null
-    assert np.isnan(out["m"].iloc[0])
-    assert out["m"].iloc[1] == pytest.approx(1.5)
-    # frame rows 2..4 = [None,4,5] -> 2 non-null -> 4.5
-    assert out["m"].iloc[4] == pytest.approx(4.5)
 
 
 def test_ts_delta_and_dominant_freq(spark):
