@@ -25,6 +25,12 @@ def _spark():
     return get_spark("cassandra_fs_pp_spark.cli")
 
 
+def _file_name(name: str) -> str:
+    """A plot file name built from column names, with path separators
+    replaced: L2 columns carry units such as ``TDR1_VWC(m3/m3)``."""
+    return name.replace("/", "_").replace(os.sep, "_")
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="cassandra_fs_pp_spark.cli")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -89,7 +95,7 @@ def main(argv: list[str] | None = None) -> int:
             ]
         os.makedirs(a.outpath, exist_ok=True)
         for v in scalars:
-            out = os.path.join(a.outpath, f"{a.site}_{v}.png")
+            out = os.path.join(a.outpath, _file_name(f"{a.site}_{v}.png"))
             save_png(render_l2_variable(df, a.time_col, v,
                                         width=a.width, height=a.height), out)
             print(f"wrote {out}")
@@ -105,7 +111,9 @@ def main(argv: list[str] | None = None) -> int:
                     args=", ".join(f"'{c}', `{c}`" for c in cols),
                 ),
             )
-            out = os.path.join(a.outpath, f"{a.site}_{pref.rstrip('_')}_heatmap.png")
+            out = os.path.join(
+                a.outpath, _file_name(f"{a.site}_{pref.rstrip('_')}_heatmap.png")
+            )
             save_png(
                 render_heatmap(melted, a.time_col, "sensor", "value",
                                width=a.width, height=a.height,

@@ -13,14 +13,55 @@
 
 All dot products run in double precision over float32 inputs with a fixed
 left-to-right fold, matching DuckDB's list_dot_product element order.
+
+Each shared decision lives in one private function:
+
+* :func:`_rank_topk` — the ranking contract of every top-k operator: per
+  query, score descending with NULL last, ties to the smaller
+  ``neighbor_id``, keep ``rank <= k``;
+* :func:`_probe_cells` — the IVF centroid probe;
+* :func:`_ivf_serve` — the compressed serving path (probe, ADC scan,
+  ``rerank`` survivors, exact fp32 rerank) behind :func:`ivf_adc_topk`
+  and :func:`ivf_pq_topk`, which differ only in their ADC kernel;
+* :func:`_fixed_mean` — the exact fixed-point mean of every centroid.
+
+Every numpy loop over an embedding column is a ``mapInArrow`` kernel in
+:mod:`~cassandra_fs_pp_spark.operators.veckernels`; this module plans
+Spark work and runs only bounded driver-side numpy (the LSH plane table,
+the PCA power iteration).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
+from cassandra_fs_pp_spark.operators.veckernels import (
+    blas_topk_map,
+    gram_partials_map,
+    lsh_buckets_map,
+    pca_project_map,
+    query_matrix,
+    score_fp32_map,
+    score_pq_map,
+    score_sq8_map,
+    unit_cosine_map,
+)
 from cassandra_fs_pp_spark.session import local_table
+
+# Fixed-point scale for cross-row vector reductions. Float sums are
+# order-dependent (partitioning would leak into results); quantizing each
+# per-row term with round(x * SCALE) -> bigint makes every reduction an
+# exact integer sum — bit-identical on 1 partition or 1000. round() ties
+# away from zero in BOTH Spark (HALF_UP) and DuckDB; a double->DECIMAL
+# cast would NOT be safe (DuckDB casts tie differently — verified).
+VEC_FIXED_SCALE = 1_000_000_000
+
+# Scalar-quantizer code range of every SQ8 operator: codes 0..SQ_LEVELS
+# (int8-class).  The registry's oracle SQL hard-codes the same 255.
+SQ_LEVELS = 255
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -49,11 +90,70 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """NULL when either vector has zero norm (``try_divide``: the ANSI
-    session would raise ``DIVIDE_BY_ZERO``), as the Arrow kernels
+def _fixed_mean(v: Column) -> Column:
+    """Exact fixed-point mean aggregate of ``v``: the long sum of
+    ``round(v * VEC_FIXED_SCALE)`` over ``count(*)``, one final double
+    divide — bit-identical at any partitioning and in DuckDB."""
+    return (
+        F.sum(F.round(v.cast("double") * VEC_FIXED_SCALE).cast("long")).cast("double")
+        / F.lit(float(VEC_FIXED_SCALE))
+        / F.count(F.lit(1))
+    )
+
+
+def _queries(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(query_id, qv, qn)``: query vectors with their norms hoisted per
+    ROW (not per pair) — the same float math as folding them per pair."""
+    return df.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        l2_norm(F.col(vec_col)).alias("qn"),
+    )
+
+
+def _pair_cosine() -> Column:
+    """``cos_raw`` of a ``(qv, qn) x (nv, nn)`` pair row: NULL when either
+    vector has zero norm (``try_divide``: the ANSI session would raise
+    ``DIVIDE_BY_ZERO``), as the Arrow kernels
     (``veckernels.cosine_array``) and the DuckDB oracles return."""
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+    return F.try_divide(dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn"))
+
+
+def _rank_topk(
+    scored: DataFrame, score: str, k: int, *out, rank: str = "rank"
+) -> DataFrame:
+    """The one top-k contract: per ``query_id``, ``score`` descending with
+    NULL last, ties to the smaller ``neighbor_id``; keep the first ``k``
+    rows (numbered in column ``rank``) and select ``query_id``,
+    ``neighbor_id`` and ``out``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select("query_id", "neighbor_id", *out)
+    )
+
+
+def _probe_cells(q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+    """IVF coarse probe: each query ``(query_id, qv, qn)`` keeps the
+    ``nprobe`` cells of the centroid table ``(cell, centroid)`` with the
+    highest centroid cosine (NULL last, ties to the smaller cell).  The
+    centroid table is bounded by the codebook, so it is broadcast and
+    probing never shuffles the corpus."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cent_cos"), F.asc("cell"))
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .withColumn(
+            "cent_cos",
+            F.try_divide(
+                dot(F.col("qv"), F.col("centroid")),
+                F.col("qn") * l2_norm(F.col("centroid")),
+            ),
+        )
+        .withColumn("cr", F.row_number().over(w))
+        .filter(F.col("cr") <= nprobe)
+        .select("query_id", "qv", "qn", "cell")
+    )
 
 
 def brute_force_topk(
@@ -70,39 +170,18 @@ def brute_force_topk(
     ordering: (cosine desc, neighbor id asc). Returns
     (query_id, neighbor_id, cosine, rank).
     """
-    # hoist norms per ROW (not per pair): identical float math to
-    # dot/(sqrt*sqrt) but one array fold per pair instead of three
-    q = (queries or vectors).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qn"),
-    )
     c = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("nv"),
         l2_norm(F.col(vec_col)).alias("nn"),
     )
     scored = (
-        q.crossJoin(c)
+        _queries(queries or vectors, id_col, vec_col)
+        .crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_raw",
-            F.try_divide(dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")),
-        )
+        .withColumn("cos_raw", _pair_cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cos_raw").alias("cosine"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, "cos_raw", k, F.col("cos_raw").alias("cosine"), "rank")
 
 
 def ivf_topk(
@@ -138,21 +217,7 @@ def ivf_topk(
     # cent_cos can change WHICH nprobe cells are probed (the r12
     # winsorized/J1 residual class).  Same construction as IVF-PQ.
     cent = coarse_centroids(vectors, cell_col=cell_col, vec_col=vec_col)
-    q = vectors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qn"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_cos"), F.asc("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cosine(F.col("qv"), F.col("centroid")))
-        .withColumn("cr", F.row_number().over(probe_w))
-        .filter(F.col("cr") <= nprobe)
-        .select("query_id", "qv", "qn", "cell")
-    )
+    probes = _probe_cells(_queries(vectors, id_col, vec_col), cent, nprobe)
     c = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("nv"),
@@ -162,24 +227,9 @@ def ivf_topk(
     scored = (
         probes.join(c, on="cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_raw",
-            F.try_divide(dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")),
-        )
+        .withColumn("cos_raw", _pair_cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cos_raw").alias("cosine"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, "cos_raw", k, F.col("cos_raw").alias("cosine"), "rank")
 
 
 def hyperplane_lsh_perms(bits: int, dim: int, seed: int = 7) -> list[list[float]]:
@@ -287,10 +337,6 @@ def lsh_topk(
     n_parts = vectors.sparkSession.sparkContext.defaultParallelism
     if corpus_rows is not None:
         n_parts = max(4, min(n_parts, corpus_rows // 256))
-    # All tables' bucket ids in ONE F.expr string: the Column-builder form
-    # costs tables*bits*dim F.lit py4j round-trips per plan build (~4 s at
-    # 4x6x64) — that flat driver-side latency, not cluster compute, was the
-    # whole headline-bench outlier (BENCH_r02 7.9 s vs the 4.0 s probe).
     # Pass 0 — content grouping. ONE corpus scan feeds the whole query:
     # (id, vector, group hash) is pinned with localCheckpoint, and every
     # later stage derives from the pin (zero re-scans; the plan-health
@@ -322,34 +368,16 @@ def lsh_topk(
     # the result is pinned: the consumers (two bucket-join sides, two
     # score attaches) would otherwise each re-run the grouping shuffle.
     #
-    # Bucket/norm eval is an Arrow-batched mapInPandas, NOT the zip_with/
-    # aggregate SQL form: Catalyst does not codegen lambda (higher-order)
-    # functions, so the fold runs interpreted — measured ~0.55 s for
-    # 2000 rows x 2048 terms vs ~5 ms vectorized. The numpy loop runs
-    # over DIMENSION INDEX in ascending order (`acc += X[:,i] * P[:,i]`),
-    # which reproduces the left-to-right fold's IEEE operation sequence
-    # per element exactly — bit-identical buckets and norms, so the
-    # DuckDB oracle (sequential list fold) is untouched.
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    planes_flat = np.array(
-        [
-            p
-            for t in range(tables)
-            for p in hyperplane_lsh_perms(bits, dim, seed + t)
-        ],
-        dtype=np.float64,
-    )  # (tables*bits, dim)
-    bit_weights = 1 << np.arange(bits, dtype=np.int64)
-
+    # Bucket/norm eval is an Arrow kernel (veckernels.lsh_buckets_map),
+    # NOT the zip_with/aggregate SQL form: Catalyst does not codegen
+    # lambda (higher-order) functions, so the fold runs interpreted —
+    # measured ~0.55 s for 2000 rows x 2048 terms vs ~5 ms vectorized.
+    # The kernel folds over DIMENSION INDEX in ascending order, the
+    # left-to-right fold's IEEE operation sequence — bit-identical buckets
+    # and norms, so the DuckDB oracle (sequential list fold) is untouched.
+    planes = [
+        p for t in range(tables) for p in hyperplane_lsh_perms(bits, dim, seed + t)
+    ]
     agg_df = reps.groupBy("__g").agg(
         F.min_by(F.col(vec_col), F.col(id_col)).alias(vec_col)
     )
@@ -360,34 +388,9 @@ def lsh_topk(
             StructField("__bt", ArrayType(LongType())),
         ]
     )
-
-    def _assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            x_mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            acc = np.zeros((n, planes_flat.shape[0]))
-            nrm = np.zeros(n)
-            for i in range(dim):
-                xi = x_mat[:, i]
-                acc += xi[:, None] * planes_flat[None, :, i]
-                nrm += xi * xi
-            buckets = (
-                (acc >= 0.0).reshape(n, tables, bits) * bit_weights
-            ).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "__g": pdf["__g"].values,
-                    vec_col: pdf[vec_col].values,
-                    "__n": np.sqrt(nrm),
-                    "__bt": list(buckets),
-                }
-            )
-
-    gbase = agg_df.mapInPandas(_assign, schema=assign_schema).localCheckpoint(
+    gbase = agg_df.mapInArrow(
+        lsh_buckets_map(planes, tables, bits), schema=assign_schema
+    ).localCheckpoint(
         eager=False  # same one-barrier saving as the reps pin above
     )
     # Stage 1 — GROUP-level candidate generation stays narrow: the bucket
@@ -454,40 +457,15 @@ def lsh_topk(
         )
     )
 
-    # Cosine rerank, same Arrow-vectorized sequential-fold trick as the
-    # bucket eval above: `acc += Q[:,i] * N[:,i]` ascending i is the
-    # interpreted zip_with/aggregate fold's exact IEEE sequence, then the
-    # identical mul-then-div. Bit-identical scores, no lambda eval cost.
-    # r18: mapInArrow reading the list columns' FLAT values buffers —
-    # the pandas route materialized a Python ndarray per ROW and its
-    # per-pair stacking was the scoring stage's dominant CPU (~1 s per
-    # 250k pairs measured; the flat-buffer view is ~20x cheaper).
-    def _score(batches) -> "Iterator":
-        import pyarrow as pa
-
-        from cassandra_fs_pp_spark.operators.veckernels import (
-            _arrow_col,
-            _mat_arrow,
-            _np_col,
-            cosine_array,
-            seq_dot,
-        )
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            q_mat = _mat_arrow(_arrow_col(b, "qv"), dim)
-            n_mat = _mat_arrow(_arrow_col(b, "nv"), dim)
-            cos = cosine_array(
-                seq_dot(q_mat, n_mat), _np_col(b, "qn"), _np_col(b, "nn")
-            )
-            yield pa.RecordBatch.from_arrays(
-                [_arrow_col(b, "__ga"), _arrow_col(b, "__gb"), cos],
-                names=["__ga", "__gb", "cos_raw"],
-            )
-
+    # Cosine rerank in the exact-fold Arrow kernel (bit-identical to the
+    # interpreted zip_with/aggregate fold, with the stored per-group norm),
+    # reading the list columns' FLAT values buffers — the pandas route
+    # materialized a Python ndarray per ROW and its per-pair stacking was
+    # the scoring stage's dominant CPU (~1 s per 250k pairs measured; the
+    # flat-buffer view is ~20x cheaper).
     scored_g = scored_g.mapInArrow(
-        _score, schema="__ga string, __gb string, cos_raw double"
+        score_fp32_map(dim, ids=("__ga", "__gb")),
+        schema="__ga string, __gb string, cos_raw double",
     )
     # Stage 3 — tie-aware fan-out back to members. Query side: every
     # member of __ga. Neighbor side: only the k+1 smallest ids of __gb
@@ -520,18 +498,9 @@ def lsh_topk(
         .join(_pside(expansion), "__gb")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "cos_raw")
+        .repartition(n_parts, "query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.repartition(n_parts, "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("cos_raw").alias("cosine"), "rank"
-        )
-    )
+    return _rank_topk(scored, "cos_raw", k, F.col("cos_raw").alias("cosine"), "rank")
 
 
 def embedding_near_dups(
@@ -572,8 +541,9 @@ def embedding_near_dups(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cos_raw",
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
+            F.try_divide(dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")),
         )
+        # a zero-norm vector's NULL cosine fails the threshold
         .filter(F.col("cos_raw") >= threshold)
         .select("id_a", "id_b", F.col("cos_raw").alias("cosine"))
     )
@@ -584,10 +554,9 @@ def scalar_quantize(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    levels: int = 255,
 ) -> DataFrame:
     """Per-dimension scalar quantization of an embedding column to integer
-    codes ``0..levels`` (int8-class compression — the standard first step
+    codes ``0..SQ_LEVELS`` (int8-class compression — the standard first step
     for storing billions of vectors: 4x smaller than fp32 at ~0.1% recall
     loss; see also :func:`adc_topk` for searching the compressed corpus).
 
@@ -599,7 +568,7 @@ def scalar_quantize(
 
     Determinism: ``round`` on the non-negative scaled value ties
     away-from-zero in both Spark (HALF_UP) and DuckDB; the dequantized
-    value ``mn + code * ((mx-mn)/levels)`` uses the same operation order
+    value ``mn + code * ((mx-mn)/SQ_LEVELS)`` uses the same operation order
     both sides — bit-identical.
     """
     ex = vectors.select(
@@ -615,7 +584,7 @@ def scalar_quantize(
     code = (
         F.when(rng == 0, F.lit(0))
         .otherwise(
-            F.round(((F.col("v") - F.col("mn")) / rng) * F.lit(float(levels)), 0)
+            F.round(((F.col("v") - F.col("mn")) / rng) * F.lit(float(SQ_LEVELS)), 0)
         )
         .cast("int")
     )
@@ -626,7 +595,7 @@ def scalar_quantize(
         code.alias("code"),
         (
             F.col("mn")
-            + code.cast("double") * (rng / F.lit(float(levels)))
+            + code.cast("double") * (rng / F.lit(float(SQ_LEVELS)))
         ).alias("dq"),
     )
 
@@ -702,7 +671,6 @@ def adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    levels: int = 255,
     query_mod: int = 37,
 ) -> DataFrame:
     """Asymmetric-distance top-k: full-precision QUERIES scored against the
@@ -716,14 +684,13 @@ def adc_topk(
 
     r18 (VERDICT r17 item 3): the quantizer stats are a bounded driver
     collect and the dequantize + candidate cosine run as ONE fused
-    numpy ``mapInPandas`` kernel (:func:`veckernels.score_sq8_map`) —
+    numpy ``mapInArrow`` kernel (:func:`veckernels.score_sq8_map`) —
     bit-identical arithmetic (same rounding, same left-fold order),
     but vectorized instead of interpreted higher-order lambdas, and the
     rank exchange now carries (ids, score) only instead of the float64
     dq vectors.
     """
     from cassandra_fs_pp_spark.operators.skew import spread_if_narrow
-    from cassandra_fs_pp_spark.operators.veckernels import score_sq8_map
 
     mn, mx = _sq_stats_collect(vectors, vec_col=vec_col)
     dim = len(mn)
@@ -734,11 +701,7 @@ def adc_topk(
     corpus = src.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
     )
-    q = vectors.filter((F.col(id_col) % query_mod) == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qn"),
-    )
+    q = _queries(vectors.filter((F.col(id_col) % query_mod) == 0), id_col, vec_col)
     cand = (
         corpus.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -746,22 +709,18 @@ def adc_topk(
     )
     idt = dict(cand.dtypes)
     scored = cand.mapInArrow(
-        score_sq8_map(dim, mn, mx, levels),
+        score_sq8_map(dim, mn, mx, SQ_LEVELS),
         schema=(
             f"query_id {idt['query_id']}, neighbor_id {idt['neighbor_id']},"
             " adc_cos double"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("adc_cos").alias("cosine"), "rank"
-        )
-    )
+    return _rank_topk(scored, "adc_cos", k, F.col("adc_cos").alias("cosine"), "rank")
+
+
+def _spark_order(x: float) -> tuple[bool, float]:
+    """Sort key of Spark's double order: NaN above every number."""
+    return (x != x, x)
 
 
 def _sq_stats_and_centroids(
@@ -769,19 +728,18 @@ def _sq_stats_and_centroids(
     *,
     cell_col: str = "label",
     vec_col: str = "embedding",
-) -> tuple[list[float], list[float], list[tuple[int, list[float]]]]:
+) -> tuple[list, list, list[tuple[int, list]]]:
     """ONE corpus pass computing BOTH bounded index artifacts of the
     IVF,SQ8 path: the per-dimension quantizer stats (min/max) and the
     per-cell exact fixed-point centroids — collected to the driver
     (|cells| x dim rows, bounded by the codebook, never the corpus).
 
     Exactness: the per-(cell, pos) partial min/max fold to the global
-    per-pos min/max exactly (float min/max is associative); the centroid
-    arithmetic replays :func:`coarse_centroids` operation-for-operation —
-    ``round(v * SCALE)`` long sums are exact integers, and the driver
-    computes the same ``cast(double) / SCALE / count`` IEEE divisions.
-    Replaces TWO separate corpus-scan broadcast builds per invocation
-    (r18, guide §1.2)."""
+    per-pos min/max of :func:`_sq_stats_row` in Spark's order (NULL
+    skipped, NaN largest; float min/max is associative), and the
+    centroids are :func:`coarse_centroids`' :func:`_fixed_mean`.  An empty
+    corpus gives empty artifacts.  Replaces TWO separate corpus-scan
+    broadcast builds per invocation (r18, guide §1.2)."""
     per = (
         vectors.select(
             F.col(cell_col).alias("cell"), F.posexplode(F.col(vec_col))
@@ -795,36 +753,92 @@ def _sq_stats_and_centroids(
         .agg(
             F.min("v").alias("mn"),
             F.max("v").alias("mx"),
-            F.sum(
-                F.round(F.col("v") * VEC_FIXED_SCALE).cast("long")
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
+            _fixed_mean(F.col("v")).alias("m"),
         )
         .collect()
     )
-    dim = max(r["pos"] for r in per)
-    mn = [float("inf")] * dim
-    mx = [float("-inf")] * dim
-    sums: dict[int, list] = {}
+    dim = max((r["pos"] for r in per), default=0)
+    mns: list[list[float]] = [[] for _ in range(dim)]
+    mxs: list[list[float]] = [[] for _ in range(dim)]
+    cents: dict[int, list] = {}
     for r in per:
         p = r["pos"] - 1
-        mn[p] = min(mn[p], float(r["mn"]))
-        mx[p] = max(mx[p], float(r["mx"]))
-        sums.setdefault(int(r["cell"]), [None] * dim)[p] = (
-            int(r["s"]),
-            int(r["n"]),
+        if r["mn"] is not None:
+            mns[p].append(r["mn"])
+            mxs[p].append(r["mx"])
+        cents.setdefault(r["cell"], [None] * dim)[p] = r["m"]
+    mn = [min(v, key=_spark_order, default=None) for v in mns]
+    mx = [max(v, key=_spark_order, default=None) for v in mxs]
+    return mn, mx, [(c, cents[c]) for c in sorted(cents)]
+
+
+def _ivf_serve(
+    vectors: DataFrame,
+    cent: DataFrame,
+    kernel,
+    *,
+    with_cell: bool,
+    id_col: str,
+    vec_col: str,
+    cell_col: str,
+    dim: int,
+    k: int,
+    nprobe: int,
+    rerank: int,
+    query_mod: int,
+    fixed_queries: int | None,
+) -> DataFrame:
+    """The compressed IVF serving path of :func:`ivf_adc_topk` and
+    :func:`ivf_pq_topk`, which pass their centroid table ``cent`` and ADC
+    ``kernel`` (a ``mapInArrow`` factory over ``(query_id, neighbor_id,
+    qn, qv[, cell], vec)`` rows giving ``adc_cos``; ``with_cell`` adds the
+    cell column).  Probe the cells, ADC-score the probed candidates, keep
+    ``rerank`` survivors per query, rerank them on exact fp32 cosine and
+    return the final top-``k``."""
+    q_pred = (
+        F.col(id_col) < int(fixed_queries)
+        if fixed_queries is not None
+        else (F.col(id_col) % query_mod) == 0
+    )
+    q = _queries(vectors.filter(q_pred), id_col, vec_col)
+    probes = _probe_cells(q, cent, nprobe)
+    kernel_in = ("qn", "qv", "cell", "vec") if with_cell else ("qn", "qv", "vec")
+    # --- ADC scan of probed cells: the probe table broadcasts into the
+    # corpus scan (no corpus shuffle), then the fused numpy kernel
+    # decodes and scores each candidate (bit-identical arithmetic; the
+    # rank exchange carries only (ids, score)). ---
+    cand = (
+        vectors.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(cell_col).alias("cell"),
+            F.col(vec_col).alias("vec"),
         )
-    cent_rows = [
-        (
-            cell,
-            [
-                float(s) / float(VEC_FIXED_SCALE) / n
-                for s, n in sums[cell]
-            ],
+        .join(F.broadcast(probes), on="cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", *kernel_in)
+    )
+    idt = dict(cand.dtypes)
+    ids = f"query_id {idt['query_id']}, neighbor_id {idt['neighbor_id']}"
+    scored = cand.mapInArrow(kernel, schema=f"{ids}, adc_cos double")
+    survivors = _rank_topk(scored, "adc_cos", int(rerank), rank="ar")
+    # --- exact fp32 rerank of the survivors: re-attach the (bounded)
+    # query table for qv/qn, join the fp32 corpus, score in the numpy
+    # rerank kernel (the fp32 norm folds inside the kernel per survivor
+    # — identical values to the hoisted per-corpus-row projection). ---
+    surv_q = survivors.join(F.broadcast(q), on="query_id")
+    rerank_in = (
+        vectors.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
         )
-        for cell in sorted(sums)
-    ]
-    return mn, mx, cent_rows
+        .join(F.broadcast(surv_q), on="neighbor_id")
+        .select("query_id", "neighbor_id", "qn", "qv", "nv")
+    )
+    reranked = rerank_in.mapInArrow(
+        score_fp32_map(dim), schema=f"{ids}, cos_raw double"
+    )
+    return _rank_topk(
+        reranked, "cos_raw", int(k), F.col("cos_raw").alias("cosine"), "rank"
+    )
 
 
 def ivf_adc_topk(
@@ -836,10 +850,8 @@ def ivf_adc_topk(
     k: int = 5,
     nprobe: int = 2,
     rerank: int = 20,
-    levels: int = 255,
     query_mod: int = 37,
     fixed_queries: int | None = None,
-    hint_broadcast: bool = True,
 ) -> DataFrame:
     """IVF + ADC + exact rerank — the production serving shape for a
     compressed vector store (FAISS ``IVF,SQ8`` search): prune candidate
@@ -847,19 +859,18 @@ def ivf_adc_topk(
     exact-rerank the fp32 survivors.
 
     Composition of :func:`ivf_topk`'s coarse probe and :func:`adc_topk`'s
-    compressed scoring (deliberately self-contained so neither parent's
-    plan changes):
+    compressed scoring, served by :func:`_ivf_serve`:
 
     1. **Coarse probe**: per-cell mean centroids (``cell_col`` stands in
        for the k-means codebook at scale); each query keeps its top
        ``nprobe`` cells by centroid cosine. Centroids are a tiny table —
        broadcast, so probing never shuffles the corpus.
     2. **ADC scan**: full-precision queries against the DEQUANTIZED
-       scalar-quantized corpus (``levels``-step per-dimension codes — the
-       4x-smaller table that is all a 100 TB store keeps hot), restricted
-       to probed cells via a broadcast of the small probe table into the
-       corpus scan — again no corpus shuffle. Keep ``rerank`` (> k)
-       survivors per query; the only wide exchange carries just the
+       scalar-quantized corpus (``SQ_LEVELS``-step per-dimension codes —
+       the 4x-smaller table that is all a 100 TB store keeps hot),
+       restricted to probed cells via a broadcast of the small probe table
+       into the corpus scan — again no corpus shuffle. Keep ``rerank``
+       (> k) survivors per query; the only wide exchange carries just the
        probed-cell candidates.
     3. **Exact rerank**: survivors (|queries| * rerank rows) join back to
        the fp32 vectors on ``neighbor_id`` and the final top-``k`` is
@@ -876,135 +887,24 @@ def ivf_adc_topk(
     left-to-right in both engines, and ties break on neighbor_id — so
     the full SQL oracle reproduces probe, survivor, and final sets
     exactly.
-
-    ``hint_broadcast`` (ADVICE r11): the probe and survivor tables are
-    |q|*nprobe and |q|*rerank rows carrying full fp32 query vectors —
-    genuinely small ONLY when |q| is a fixed serving budget. The
-    default keeps the explicit broadcast hints (corpus never shuffles);
-    pass ``False`` for corpus-proportional query sets at large SF so
-    AQE decides from measured sizes instead of risking a driver OOM on
-    a forced build side. Centroids stay broadcast either way (bounded
-    by the codebook, not the corpus).
     """
     # --- r18 (VERDICT r17 item 3): BOTH bounded index artifacts (the
     # per-dim quantizer stats and the exact fixed-point coarse centroids)
     # come from ONE corpus-pass driver collect, and the centroid table is
     # re-injected as a LocalTableScan — two separate corpus-scan broadcast
     # builds per invocation gone (guide §1.2), values bit-identical. ---
-    from cassandra_fs_pp_spark.session import local_table
-    from cassandra_fs_pp_spark.operators.veckernels import (
-        score_fp32_map,
-        score_sq8_map,
-    )
-
     mn, mx, cent_rows = _sq_stats_and_centroids(
         vectors, cell_col=cell_col, vec_col=vec_col
     )
-    dim = len(mn)
     cent = local_table(
         vectors.sparkSession, cent_rows, "cell int, centroid array<double>"
     )
-    q_pred = (
-        F.col(id_col) < int(fixed_queries)
-        if fixed_queries is not None
-        else (F.col(id_col) % query_mod) == 0
+    return _ivf_serve(
+        vectors, cent, score_sq8_map(len(mn), mn, mx, SQ_LEVELS), with_cell=False,
+        id_col=id_col, vec_col=vec_col, cell_col=cell_col, dim=len(mn), k=k,
+        nprobe=nprobe, rerank=rerank, query_mod=query_mod,
+        fixed_queries=fixed_queries,
     )
-    q = vectors.filter(q_pred).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qn"),
-    )
-    maybe_bcast = F.broadcast if hint_broadcast else (lambda df: df)
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_cos"), F.asc("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "cent_cos",
-            F.try_divide(
-                dot(F.col("qv"), F.col("centroid")),
-                F.col("qn") * l2_norm(F.col("centroid")),
-            ),
-        )
-        .withColumn("cr", F.row_number().over(probe_w))
-        .filter(F.col("cr") <= nprobe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-    # --- ADC scan of probed cells: the probe table broadcasts into the
-    # corpus scan (no corpus shuffle), then dequantize + candidate cosine
-    # run as ONE fused numpy kernel (bit-identical arithmetic; the rank
-    # exchange carries only (ids, score) — narrower than the old
-    # dqv-carrying window input, guide §2.3/§4). Dequantizing per
-    # CANDIDATE recomputes a deterministic function of the row — same
-    # values as the dequantize-once form. ---
-    cand = (
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(cell_col).alias("cell"),
-            F.col(vec_col).alias("vec"),
-        )
-        .join(maybe_bcast(probes), on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qn", "qv", "vec")
-    )
-    idt = dict(cand.dtypes)
-    scored = cand.mapInArrow(
-        score_sq8_map(dim, mn, mx, levels),
-        schema=(
-            f"query_id {idt['query_id']}, neighbor_id {idt['neighbor_id']},"
-            " adc_cos double"
-        ),
-    )
-    adc_w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cos"), F.asc("neighbor_id")
-    )
-    survivors = (
-        scored.withColumn("ar", F.row_number().over(adc_w))
-        .filter(F.col("ar") <= int(rerank))
-        .select("query_id", "neighbor_id")
-    )
-    # --- exact fp32 rerank of the survivors: re-attach the (bounded)
-    # query table for qv/qn, join the fp32 corpus, score in the numpy
-    # rerank kernel (the fp32 norm folds inside the kernel per survivor
-    # — identical values to the hoisted per-corpus-row projection). ---
-    surv_q = survivors.join(maybe_bcast(q), on="query_id")
-    rerank_in = (
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
-        )
-        .join(maybe_bcast(surv_q), on="neighbor_id")
-        .select("query_id", "neighbor_id", "qn", "qv", "nv")
-    )
-    reranked = rerank_in.mapInArrow(
-        score_fp32_map(dim),
-        schema=(
-            f"query_id {idt['query_id']}, neighbor_id {idt['neighbor_id']},"
-            " cos_raw double"
-        ),
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cos_raw").alias("cosine"),
-            "rank",
-        )
-    )
-
-
-# Fixed-point scale for cross-row vector reductions. Float sums are
-# order-dependent (partitioning would leak into results); quantizing each
-# per-row term with round(x * SCALE) -> bigint makes every reduction an
-# exact integer sum — bit-identical on 1 partition or 1000. round() ties
-# away from zero in BOTH Spark (HALF_UP) and DuckDB; a double->DECIMAL
-# cast would NOT be safe (DuckDB casts tie differently — verified).
-VEC_FIXED_SCALE = 1_000_000_000
 
 
 def label_centroids(
@@ -1021,13 +921,8 @@ def label_centroids(
         F.col(label_col).alias("label"),
         F.posexplode(F.col(vec_col)).alias("pos", "c"),
     )
-    scaled = F.round(F.col("c").cast("double") * VEC_FIXED_SCALE).cast("long")
     return ex.groupBy("label", "pos").agg(
-        (
-            F.sum(scaled).cast("double")
-            / F.lit(float(VEC_FIXED_SCALE))
-            / F.count(F.lit(1))
-        ).alias("centroid"),
+        _fixed_mean(F.col("c")).alias("centroid"),
         F.count(F.lit(1)).alias("n_vecs"),
     )
 
@@ -1072,55 +967,11 @@ def label_inertia(
     )
 
 
-def _broadcast_query_matrix(vectors, queries, id_col, vec_col):
-    """Collect + L2-normalize the (small) query set and broadcast it."""
-    import numpy as np
-
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qm = qm / np.where(qn == 0.0, 1.0, qn)
-    return vectors.sparkSession.sparkContext.broadcast((q_ids, qm))
-
-
-def _blas_partial_topk(bc, id_col, vec_col, k, score_name, prefix_dim=None):
-    """mapInPandas mapper: per Arrow batch, one Q×B BLAS matmul (over the
-    first ``prefix_dim`` dims when set) and per-query top-k emit — the
-    map-side prune both block_matmul_topk and matryoshka_topk share."""
-    import numpy as np
-    import pandas as pd
-
-    def mapper(batches):
-        ids, qmat = bc.value
-        q = qmat if prefix_dim is None else qmat[:, :prefix_dim]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cid = pdf[id_col].to_numpy(dtype=np.int64)
-            cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cn = np.linalg.norm(cm, axis=1, keepdims=True)
-            cm = cm / np.where(cn == 0.0, 1.0, cn)
-            c = cm if prefix_dim is None else cm[:, :prefix_dim]
-            scores = q @ c.T  # Q x B
-            scores[ids[:, None] == cid[None, :]] = -np.inf  # self-pairs out
-            kk = min(k, scores.shape[1])
-            # argpartition: O(B) per row instead of a full sort
-            top = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            rows = np.repeat(np.arange(len(ids)), kk)
-            cols = top.ravel()
-            keep = np.isfinite(scores[rows, cols])
-            yield pd.DataFrame(
-                {
-                    "query_id": ids[rows[keep]],
-                    "neighbor_id": cid[cols[keep]],
-                    score_name: scores[rows[keep], cols[keep]],
-                }
-            )
-
-    return mapper
+def _broadcast_queries(vectors: DataFrame, queries: DataFrame, id_col, vec_col):
+    """Collect the (small) query set and broadcast its
+    :func:`~cassandra_fs_pp_spark.operators.veckernels.query_matrix`."""
+    rows = queries.select(id_col, vec_col).collect()
+    return vectors.sparkSession.sparkContext.broadcast(query_matrix(rows))
 
 
 def block_matmul_topk(
@@ -1146,20 +997,16 @@ def block_matmul_topk(
 
     Scores are float64 BLAS sums, so the last ~1 ulp can differ from a
     sequential fold; ranks are stable for any pair separated by more than
-    that (tested differentially vs brute_force_topk). Returns
+    that (tested differentially vs brute_force_topk, zero-norm vectors
+    included: their NULL cosine ranks last). Returns
     (query_id, neighbor_id, rank).
     """
-    bc = _broadcast_query_matrix(vectors, queries, id_col, vec_col)
-    cand = vectors.select(id_col, vec_col).mapInPandas(
-        _blas_partial_topk(bc, id_col, vec_col, k, "cosine"),
+    bc = _broadcast_queries(vectors, queries, id_col, vec_col)
+    cand = vectors.select(id_col, vec_col).mapInArrow(
+        blas_topk_map(bc, k, "cosine"),
         schema="query_id long, neighbor_id long, cosine double",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(cand, "cosine", k, "rank")
 
 
 def _qdist2_sql(vec: str, centroid: list[float]) -> str:
@@ -1255,16 +1102,9 @@ def kmeans_assign(
         ex = assigned.select(
             "cluster", F.posexplode(F.col(vec_col)).alias("pos", "v")
         )
-        q = F.round(F.col("v").cast("double") * VEC_FIXED_SCALE).cast("long")
         mrows = (
             ex.groupBy("cluster", "pos")
-            .agg(
-                (
-                    F.sum(q).cast("double")
-                    / F.lit(float(VEC_FIXED_SCALE))
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
+            .agg(_fixed_mean(F.col("v")).alias("m"))
             .collect()
         )
         nxt: dict[int, dict[int, float]] = {}
@@ -1295,17 +1135,7 @@ def coarse_centroids(
     return (
         vectors.select(F.col(cell_col).alias("cell"), F.posexplode(vec_col))
         .groupBy("cell", "pos")
-        .agg(
-            (
-                F.sum(
-                    F.round(F.col("col").cast("double") * VEC_FIXED_SCALE)
-                    .cast("long")
-                )
-                .cast("double")
-                / F.lit(float(VEC_FIXED_SCALE))
-                / F.count(F.lit(1))
-            ).alias("m")
-        )
+        .agg(_fixed_mean(F.col("col")).alias("m"))
         .groupBy("cell")
         .agg(
             F.transform(
@@ -1416,19 +1246,11 @@ def pq_train_codebooks(
                 "c"
             ),
             F.expr(f"pos0 % {dsub}").alias("p"),
-            F.round(F.col("v").cast("double") * VEC_FIXED_SCALE)
-            .cast("long")
-            .alias("q"),
+            "v",
         )
         mrows = (
             lf.groupBy("sub", "c", "p")
-            .agg(
-                (
-                    F.sum("q").cast("double")
-                    / F.lit(float(VEC_FIXED_SCALE))
-                    / F.count(F.lit(1))
-                ).alias("mv")
-            )
+            .agg(_fixed_mean(F.col("v")).alias("mv"))
             .collect()
         )
         nxt: dict[tuple[int, int], dict[int, float]] = {}
@@ -1504,7 +1326,6 @@ def ivf_pq_topk(
     rerank: int = 20,
     query_mod: int = 37,
     fixed_queries: int | None = None,
-    hint_broadcast: bool = True,
     codebooks: list[list[list[float]]] | None = None,
     centroids: list[tuple] | None = None,
 ) -> DataFrame:
@@ -1534,8 +1355,8 @@ def ivf_pq_topk(
       (:func:`_pq_reconstruct_sql`), so unlike the SQ8 path there is NO
       explode, NO per-dimension aggregate, and NO re-join on the corpus:
       the 100 TB table is scanned once, inside whole-stage codegen.
-    * **Probe / ADC / rerank**: identical plan shape to
-      :func:`ivf_adc_topk` — broadcast centroid probe, broadcast of the
+    * **Probe / ADC / rerank**: the serving path of :func:`ivf_adc_topk`
+      (:func:`_ivf_serve`) — broadcast centroid probe, broadcast of the
       |q|-bounded probe table into the corpus scan, exact fp32 rerank of
       ``rerank`` survivors.
 
@@ -1545,45 +1366,30 @@ def ivf_pq_topk(
     ranking boundary ties on ``neighbor_id`` — so the composition
     carries a FULL SQL oracle that replays training as unrolled CTEs.
     """
-    dsub = dim // m
     # --- coarse centroids: exact fixed-point means; ``centroids`` passes
     # the offline-collected table (serving form — the cell table is part
-    # of the index, so serving skips this corpus scan entirely) ---
-    if centroids is not None:
-        cent_pairs = [(int(c), [float(x) for x in v]) for c, v in centroids]
-        cent = local_table(
-            vectors.sparkSession,
-            [(c, list(v)) for c, v in cent_pairs],
-            "cell int, centroid array<double>",
-        )
-    else:
-        # r17: materialize the |cells|-row centroid table ONCE (bounded by
-        # the codebook, never the corpus — the same driver-collect class as
-        # the trained codebooks below) and re-inject it as a local table,
-        # exactly the ``centroids=`` serving path.  Lazily it sat inside
-        # the lineage of every training action AND twice in the final plan
-        # (probes + residualize), so the corpus-sized centroid aggregate
-        # ran ~5x per invocation.  Values round-trip as IEEE doubles —
-        # bit-identical, oracles unchanged.
-        cent_rows = coarse_centroids(
+    # of the index, so serving skips this corpus scan entirely).  r17:
+    # otherwise the |cells|-row table is collected ONCE (bounded by the
+    # codebook, never the corpus — the same driver-collect class as the
+    # trained codebooks below) and re-injected as a local table.  Lazily
+    # it sat inside the lineage of every training action AND twice in the
+    # final plan (probes + residualize), so the corpus-sized centroid
+    # aggregate ran ~5x per invocation.  Values round-trip as IEEE
+    # doubles — bit-identical, oracles unchanged. ---
+    if centroids is None:
+        centroids = coarse_centroids(
             vectors, cell_col=cell_col, vec_col=vec_col
         ).collect()
-        cent_pairs = [
-            (int(r["cell"]), [float(x) for x in r["centroid"]])
-            for r in cent_rows
-        ]
-        cent = local_table(
-            vectors.sparkSession,
-            [(c, list(v)) for c, v in cent_pairs],
-            "cell int, centroid array<double>",
-        )
+    cent_pairs = [(int(c), [float(x) for x in v]) for c, v in centroids]
+    cent = local_table(
+        vectors.sparkSession, cent_pairs, "cell int, centroid array<double>"
+    )
     # ``codebooks``: pass offline-trained codebooks to skip the training
     # scans — the production serving reality (FAISS never retrains per
     # query batch); training here is deterministic, so a cached table is
     # bit-identical to a fresh one
-    if codebooks is not None:
-        cb = codebooks
-    else:
+    cb = codebooks
+    if cb is None:
         res = residualize(
             vectors, cent, id_col=id_col, vec_col=vec_col, cell_col=cell_col
         )
@@ -1596,100 +1402,16 @@ def ivf_pq_topk(
             ks=ks,
             iterations=iterations,
         )
-    q_pred = (
-        F.col(id_col) < int(fixed_queries)
-        if fixed_queries is not None
-        else (F.col(id_col) % query_mod) == 0
-    )
-    q = vectors.filter(q_pred).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(F.col(vec_col)).alias("qn"),
-    )
-    maybe_bcast = F.broadcast if hint_broadcast else (lambda df: df)
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_cos"), F.asc("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "cent_cos",
-            F.try_divide(
-                dot(F.col("qv"), F.col("centroid")),
-                F.col("qn") * l2_norm(F.col("centroid")),
-            ),
-        )
-        .withColumn("cr", F.row_number().over(probe_w))
-        .filter(F.col("cr") <= nprobe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-    # --- compressed corpus + ADC scan (r18, VERDICT r17 item 3): the
-    # probe table broadcasts into ONE narrow corpus scan, then residual
+    # --- compressed corpus + ADC scan (r18, VERDICT r17 item 3): residual
     # encode + LUT reconstruct + candidate cosine run as ONE fused numpy
     # kernel (operation-for-operation the literal-expression forms:
     # quantized integer argmin with lowest-code ties, exact float64
-    # reconstruct/fold — interpreted higher-order lambdas gone).  The
-    # rank exchange carries only (ids, score). ---
-    from cassandra_fs_pp_spark.operators.veckernels import (
-        score_fp32_map,
-        score_pq_map,
-    )
-
-    cand = (
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(cell_col).alias("cell"),
-            F.col(vec_col).alias("vec"),
-        )
-        .join(maybe_bcast(probes), on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qn", "qv", "cell", "vec")
-    )
-    idt = dict(cand.dtypes)
-    scored = cand.mapInArrow(
-        score_pq_map(dim, dsub, cb, dict(cent_pairs)),
-        schema=(
-            f"query_id {idt['query_id']}, neighbor_id {idt['neighbor_id']},"
-            " adc_cos double"
-        ),
-    )
-    adc_w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cos"), F.asc("neighbor_id")
-    )
-    survivors = (
-        scored.withColumn("ar", F.row_number().over(adc_w))
-        .filter(F.col("ar") <= int(rerank))
-        .select("query_id", "neighbor_id")
-    )
-    # --- exact fp32 rerank (numpy kernel; the fp32 norm folds inside the
-    # kernel per survivor — identical values to the hoisted projection) ---
-    surv_q = survivors.join(maybe_bcast(q), on="query_id")
-    rerank_in = (
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
-        )
-        .join(maybe_bcast(surv_q), on="neighbor_id")
-        .select("query_id", "neighbor_id", "qn", "qv", "nv")
-    )
-    reranked = rerank_in.mapInArrow(
-        score_fp32_map(dim),
-        schema=(
-            f"query_id {idt['query_id']}, neighbor_id {idt['neighbor_id']},"
-            " cos_raw double"
-        ),
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cos_raw").alias("cosine"),
-            "rank",
-        )
+    # reconstruct/fold — interpreted higher-order lambdas gone). ---
+    return _ivf_serve(
+        vectors, cent, score_pq_map(dim, dim // m, cb, dict(cent_pairs)),
+        with_cell=True, id_col=id_col, vec_col=vec_col, cell_col=cell_col,
+        dim=dim, k=k, nprobe=nprobe, rerank=rerank, query_mod=query_mod,
+        fixed_queries=fixed_queries,
     )
 
 
@@ -1756,7 +1478,6 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     tau: float = 0.30,
-    hint_broadcast: bool = True,
 ) -> DataFrame:
     """Embedding-space benchmark decontamination: flag every corpus
     vector whose max cosine against the EVAL set reaches ``tau`` — the
@@ -1776,9 +1497,9 @@ def semantic_decontaminate(
     Deterministic: cosine is the in-order ``aggregate`` fold (bit-equal
     to DuckDB's ``list_dot_product``), the nearest-eval tie breaks on
     ``eval_id`` asc, and ``tau`` compares against bit-identical doubles
-    — full SQL oracle, no rounding valve needed.
+    — full SQL oracle, no rounding valve needed.  A zero-norm vector's
+    cosine is NULL, so a zero eval vector ranks after every real match.
     """
-    maybe_bcast = F.broadcast if hint_broadcast else (lambda d: d)
     ev = evalset.select(
         F.col(id_col).alias("eval_id"),
         F.col(vec_col).alias("__ev"),
@@ -1793,11 +1514,12 @@ def semantic_decontaminate(
             F.col(vec_col).alias("__v"),
             l2_norm(F.col(vec_col)).alias("__vn"),
         )
-        .crossJoin(maybe_bcast(ev))
+        .crossJoin(F.broadcast(ev))
         .withColumn(
             "max_cos",
-            dot(F.col("__v"), F.col("__ev"))
-            / (F.col("__vn") * F.col("__en")),
+            F.try_divide(
+                dot(F.col("__v"), F.col("__ev")), F.col("__vn") * F.col("__en")
+            ),
         )
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -1839,59 +1561,19 @@ def matryoshka_topk(
     At 100 TB the win is stage 1's bandwidth: the prefix slice is the
     only thing dense-scanned at full corpus width. Recall vs the exact
     answer is tested differentially against block_matmul_topk."""
-    import numpy as np
-    import pandas as pd
-
-    bc = _broadcast_query_matrix(vectors, queries, id_col, vec_col)
-    cand = vectors.select(id_col, vec_col).mapInPandas(
-        _blas_partial_topk(
-            bc, id_col, vec_col, coarse_k, "coarse", prefix_dim=prefix_dim
-        ),
+    bc = _broadcast_queries(vectors, queries, id_col, vec_col)
+    cand = vectors.select(id_col, vec_col).mapInArrow(
+        blas_topk_map(bc, coarse_k, "coarse", prefix_dim=prefix_dim),
         schema="query_id long, neighbor_id long, coarse double",
     )
-    wC = Window.partitionBy("query_id").orderBy(
-        F.desc("coarse"), F.asc("neighbor_id")
-    )
-    cand = (
-        cand.withColumn("crank", F.row_number().over(wC))
-        .filter(F.col("crank") <= coarse_k)
-        .select("query_id", "neighbor_id")
-    )
-
+    cand = _rank_topk(cand, "coarse", coarse_k, rank="crank")
     joined = vectors.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     ).join(F.broadcast(cand), "neighbor_id")
-
-    def exact(batches):
-        ids, qmat = bc.value
-        idx = {int(q): i for i, q in enumerate(ids)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cm = np.stack(pdf["__cv"].to_numpy()).astype(np.float64)
-            cn = np.linalg.norm(cm, axis=1, keepdims=True)
-            cm = cm / np.where(cn == 0.0, 1.0, cn)
-            qi = np.array([idx[int(q)] for q in pdf["query_id"]], dtype=np.int64)
-            cos = np.einsum("ij,ij->i", qmat[qi], cm)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "cosine": cos,
-                }
-            )
-
-    res = joined.mapInPandas(
-        exact, schema="query_id long, neighbor_id long, cosine double"
+    res = joined.mapInArrow(
+        unit_cosine_map(bc), schema="query_id long, neighbor_id long, cosine double"
     )
-    wK = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        res.withColumn("rank", F.row_number().over(wK))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(res, "cosine", k, "rank")
 
 
 GRAM_SCALE = 10_000
@@ -1922,28 +1604,9 @@ def gram_matrix(
     At extreme corpus sizes rescale ``scale`` to keep
     ``rows * (max|x| * scale)^2`` inside int64.
     """
-    import numpy as np
-    import pandas as pd
-
-    iu = np.triu_indices(dim)
-
-    def part(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        acc = np.zeros((dim, dim), dtype=np.int64)
-        seen = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Q = np.floor(X * scale).astype(np.int64)
-            acc += Q.T @ Q
-            seen = True
-        if seen:
-            yield pd.DataFrame(
-                {"i": iu[0].astype("int32"), "j": iu[1].astype("int32"),
-                 "s": acc[iu]}
-            )
-
-    parts = vectors.select(vec_col).mapInPandas(part, "i int, j int, s long")
+    parts = vectors.select(vec_col).mapInArrow(
+        gram_partials_map(dim, scale), "i int, j int, s long"
+    )
     return parts.groupBy("i", "j").agg(F.sum("s").alias("gram_sum"))
 
 
@@ -1995,8 +1658,6 @@ def pca_power_project(
     products ``Q . v`` plus data-unit doubles ``fp / (scale * ||v||)``
     (one correctly-rounded IEEE sqrt + divide — deterministic across
     engines)."""
-    import numpy as np
-    import pandas as pd
 
     def tdiv(a: np.ndarray, b: int) -> np.ndarray:
         a = np.asarray(a, dtype=np.int64)
@@ -2038,26 +1699,7 @@ def pca_power_project(
     den_a = float(scale) * float(np.sqrt(float((va * va).sum())))
     den_b = float(scale) * float(np.sqrt(float((vb * vb).sum())))
 
-    out_schema = (
-        f"{id_col} long, pc1_fp long, pc2_fp long, pc1 double, pc2 double"
+    return vectors.select(id_col, vec_col).mapInArrow(
+        pca_project_map(va, vb, den_a, den_b, scale),
+        f"{id_col} long, pc1_fp long, pc2_fp long, pc1 double, pc2 double",
     )
-
-    def proj(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Q = np.floor(X * scale).astype(np.int64)
-            f1 = Q @ va
-            f2 = Q @ vb
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "pc1_fp": f1,
-                    "pc2_fp": f2,
-                    "pc1": f1.astype(np.float64) / den_a,
-                    "pc2": f2.astype(np.float64) / den_b,
-                }
-            )
-
-    return vectors.select(id_col, vec_col).mapInPandas(proj, out_schema)

@@ -9,6 +9,14 @@ the engine handle. Two entry points:
   correctness driver owns its own session; every public query calls this
   defensively so semantics don't depend on who built the session).
 
+Python workers: the Arrow and pandas kernels pickle references to this
+package's modules, so every Python worker must import
+``cassandra_fs_pp_spark``.  Without help a worker finds it only through
+its current directory, which on a cluster executor (or a driver started
+outside the repo root) fails with ``ModuleNotFoundError``.  :func:`tune`
+therefore zips the package once per SparkContext and ships it with
+``addPyFile`` (:func:`_ship_package`).
+
 Scale notes (100 TB design stance):
 * ``spark.sql.session.timeZone=UTC`` pins naive-timestamp semantics to match
   the reference's tz-naive indexes (SURVEY §1.2) and DuckDB's UTC-naive
@@ -36,8 +44,12 @@ back an existing session built with another size.
 
 from __future__ import annotations
 
+import atexit
 import logging
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -98,7 +110,31 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
             spark.conf.set(key, value)
         except Exception as exc:
             log.warning("tune: could not set %s=%s: %s", key, value, exc)
+    _ship_package(spark)
     return spark
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Zip this package's ``.py`` files and ``addPyFile`` the zip, once per
+    SparkContext, so Python workers import the driver's code from any
+    working directory and on any executor.  The zip lives in a temporary
+    directory removed when the driver process exits."""
+    sc = spark.sparkContext
+    if getattr(sc, "_package_zip", None):
+        return
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    tmp = tempfile.mkdtemp(prefix="cassandra_fs_pp_spark-")
+    atexit.register(shutil.rmtree, tmp, True)
+    path = os.path.join(tmp, "cassandra_fs_pp_spark.zip")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        for d, dirs, files in os.walk(pkg):
+            dirs[:] = [x for x in dirs if x != "__pycache__"]
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(d, f)
+                    z.write(full, os.path.relpath(full, os.path.dirname(pkg)))
+    sc.addPyFile(path)
+    sc._package_zip = path
 
 
 def local_table(spark: SparkSession, rows, schema: str):

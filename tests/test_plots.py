@@ -138,6 +138,9 @@ def test_cli_plot_l2_products(spark, tmp_path):
         (F.sin(F.col("id") / 20.0) * 2 + 12).alias("batt"),
         (F.col("id") / 100.0).alias("DTC1_1"),
         (F.col("id") / 100.0 + 3.0).alias("DTC1_2"),
+        (F.col("id") / 1000.0).alias("TDR1_VWC(m3/m3)"),
+        (F.col("id") / 50.0).alias("T/C_1"),
+        (F.col("id") / 50.0 + 1.0).alias("T/C_2"),
     )
     csv = str(tmp_path / "l2csv")
     df.coalesce(1).write.option("header", True).csv(csv)
@@ -153,6 +156,20 @@ def test_cli_plot_l2_products(spark, tmp_path):
     heat = decode_png(open(os.path.join(outdir, "S_DTC1_heatmap.png"), "rb").read())
     assert line.shape == (200, 320, 3)
     assert heat.shape == (200, 320, 3)
+
+    # without --vars every numeric non-chain column is plotted, and a
+    # column or chain prefix with a unit such as m3/m3 still names one
+    # file in outdir
+    outdir = str(tmp_path / "all")
+    rc = cli_main(
+        ["plot", csv, "-o", outdir, "--site", "S", "--chain-prefix", "DTC1_",
+         "--chain-prefix", "T/C_", "--width", "160", "--height", "100"]
+    )
+    assert rc == 0
+    assert sorted(os.listdir(outdir)) == [
+        "S_DTC1_heatmap.png", "S_TDR1_VWC(m3_m3).png", "S_T_C_heatmap.png",
+        "S_batt.png",
+    ]
 
 
 def test_numeric_epoch_seconds_time_column(spark):

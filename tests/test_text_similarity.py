@@ -11,11 +11,14 @@ from cassandra_fs_pp_spark.functions.text import (
     token_count_ws,
 )
 from cassandra_fs_pp_spark.operators.similarity import (
+    block_matmul_topk,
     brute_force_topk,
     embedding_near_dups,
     ivf_adc_topk,
     ivf_pq_topk,
     ivf_topk,
+    matryoshka_topk,
+    semantic_decontaminate,
 )
 from cassandra_fs_pp_spark.operators.textdedup import (
     exact_dup_groups,
@@ -146,6 +149,38 @@ def test_cosine_null_on_zero_norm_vector(spark):
             for r in out.collect()
         )
         assert got == want
+    # a NULL cosine fails the near-dup threshold ...
+    got = embedding_near_dups(df, threshold=-1.0).collect()
+    assert [(r["id_a"], r["id_b"], r["cosine"]) for r in got] == [(1, 2, 0.0)]
+    # ... and ranks after every real eval match
+    evalset = spark.createDataFrame(
+        [(10, [0.0, 0.0]), (11, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    got = semantic_decontaminate(df, evalset, tau=0.5).collect()
+    assert sorted(tuple(r) for r in got) == [
+        (1, 11, 1.0, True), (2, 11, 0.0, False), (3, 10, None, None),
+    ]
+
+
+def test_blas_topk_ranks_zero_norm_last_like_brute_force(spark):
+    """block_matmul_topk and matryoshka_topk normalise rows before their
+    BLAS matmul; a zero-norm row scores NULL there too, so it ranks after
+    every real cosine (and NULL ties break on neighbor_id), exactly as in
+    brute_force_topk."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0]), (4, [-1.0, 0.2])],
+        "vec_id long, embedding array<double>",
+    )
+
+    def ranks(out):
+        return sorted((r["query_id"], r["neighbor_id"], r["rank"]) for r in out.collect())
+
+    want = ranks(brute_force_topk(df, k=3))
+    assert [(n, r) for q, n, r in want if q == 1] == [(2, 1), (3, 3), (4, 2)]
+    assert ranks(block_matmul_topk(df, k=3, queries=df)) == want
+    assert ranks(
+        matryoshka_topk(df, k=3, coarse_k=3, prefix_dim=1, queries=df)
+    ) == want
 
 
 def test_embedding_near_dups_finds_identical(spark):

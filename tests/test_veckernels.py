@@ -581,3 +581,86 @@ def test_pq_codes_saturate_like_cast(spark):
     X = np.array([r[1] for r in rows])
     codes = pq_assign_codes(X, [np.asarray(book)], dsub)[:, 0]
     assert {i: int(c) for (i, _), c in zip(rows, codes)} == want
+
+
+def test_ivf_adc_topk_empty_corpus(spark):
+    """An empty corpus gives an empty top-k on every ANN path; the fused
+    IVF,SQ8 stats/centroid pass used to fold its empty collect with
+    ``max()`` and raise ValueError."""
+    from cassandra_fs_pp_spark.operators.similarity import (
+        adc_topk,
+        ivf_adc_topk,
+        ivf_topk,
+    )
+
+    empty = spark.createDataFrame(
+        [], "vec_id long, label int, embedding array<float>"
+    )
+    assert _sq_stats_and_centroids(empty) == ([], [], [])
+    for out in (ivf_adc_topk(empty), adc_topk(empty), ivf_topk(empty)):
+        assert out.collect() == []
+
+
+def test_sq_stats_fold_matches_spark_min_max(spark):
+    """The per-cell min/max of ``_sq_stats_and_centroids`` fold to the
+    global stats in Spark's order: a NULL element is skipped (a cell whose
+    position is all NULL included) and NaN is the largest double.  ANSI
+    mode is off here: under it the fixed-point centroid sum already
+    raises CAST_OVERFLOW on a NaN element."""
+    df = spark.createDataFrame(
+        [
+            (0, 0, [float("nan"), 1.0]),
+            (1, 0, [1.0, None]),
+            (2, 1, [2.0, None]),
+            (3, 1, [-1.0, None]),
+        ],
+        "vec_id long, label int, embedding array<double>",
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        mn, mx, cent_pairs = _sq_stats_and_centroids(df)
+        st = _sq_stats_row(df).collect()[0]
+        cents = [
+            (r["cell"], list(r["centroid"]))
+            for r in coarse_centroids(df).orderBy("cell").collect()
+        ]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert repr(mn) == repr(list(st["__mn"])) == "[-1.0, 1.0]"
+    assert repr(mx) == repr(list(st["__mx"])) == "[nan, 1.0]"
+    assert cent_pairs == cents
+
+
+def test_python_workers_import_shipped_package(tmp_path):
+    """A driver started outside the repo root, with no PYTHONPATH, still
+    runs the Arrow kernels: ``session.tune`` ships the package zip to the
+    Python workers, which otherwise fail with ModuleNotFoundError."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "drive.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from cassandra_fs_pp_spark.operators.similarity import (\n"
+        "    adc_topk, block_matmul_topk)\n"
+        "from cassandra_fs_pp_spark.session import get_spark\n"
+        "spark = get_spark('workers', master='local[2]', shuffle_partitions=2)\n"
+        "df = spark.createDataFrame(\n"
+        "    [(i, [float(i % 3), 1.0, float(i)]) for i in range(8)],\n"
+        "    'vec_id long, embedding array<float>')\n"
+        "print('rows', adc_topk(df, k=2, query_mod=4).count(),\n"
+        "      block_matmul_topk(df, k=2, queries=df.filter('vec_id < 2')).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "rows 4 4" in out.stdout, out.stdout
