@@ -2272,7 +2272,6 @@ from cassandra_fs_pp_spark.operators.textdedup import (  # noqa: E402
     lsh_candidate_pairs,
     lsh_cluster_wide,
     minhash_perms,
-    minhash_signatures,
     minhash_signatures_wide,
     simhash,
 )
@@ -2742,7 +2741,7 @@ MINHASH_K, MINHASH_BANDS = 16, 4
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _doc_corpus_with_near_dups(spark, sf_dir)
-    sigs = minhash_signatures(corpus, num_hashes=MINHASH_K)
+    sigs = minhash_signatures_wide(corpus, num_hashes=MINHASH_K)
     pairs = lsh_candidate_pairs(sigs, num_hashes=MINHASH_K, bands=MINHASH_BANDS)
     return jaccard_verify(corpus, pairs, threshold=0.9)
 
@@ -6800,7 +6799,7 @@ def text_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r10 item 5)."""
     from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
-    return kn_perplexity(_t(spark, sf_dir, "documents"))
+    return kn_perplexity(_t(spark, sf_dir, "documents"), order=2)
 
 
 # shared KN-scoring CTE prefix (tok -> bg -> types -> lft/rgt/tot -> lp):
@@ -6845,13 +6844,14 @@ GROUP BY 1
 def text_kn3_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated TRIGRAM Kneser-Ney perplexity with recursive
     continuation-count backoff (Chen-Goodman) — the next order up from
-    ``text_kn_perplexity`` toward CCNet's 5-gram signal. All model
-    tables derive from the trigram TYPE table (scale with distinct
-    types, not occurrences); one occurrence-side hash join. New in r12
-    (VERDICT r11 item 4)."""
-    from cassandra_fs_pp_spark.functions.text import kn3_perplexity
+    ``text_kn_perplexity`` toward CCNet's 5-gram signal: the one KN
+    scorer, ``kn_perplexity``, at ``order=3``. All model tables derive
+    from the trigram TYPE table (scale with distinct types, not
+    occurrences); one occurrence-side hash join. New in r12 (VERDICT
+    r11 item 4)."""
+    from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
-    return kn3_perplexity(_t(spark, sf_dir, "documents"))
+    return kn_perplexity(_t(spark, sf_dir, "documents"), order=3)
 
 
 TEXT_KN3_PERPLEXITY_ORACLE = r"""
@@ -6906,13 +6906,14 @@ GROUP BY 1
 def text_kn5_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated 5-GRAM Kneser-Ney perplexity with full recursive
     continuation-count backoff — CCNet's actual signal order; closes the
-    kn ladder (kn2 -> kn3 -> kn5; VERDICT r12 item 6).  Nine model
-    tables, ALL successive group-bys of the 5-gram TYPE table (scale
-    with distinct types, which saturate, not occurrences); one
-    occurrence-side hash join. New in r13."""
-    from cassandra_fs_pp_spark.functions.text import kn5_perplexity
+    kn ladder (kn2 -> kn3 -> kn5; VERDICT r12 item 6): the one KN
+    scorer, ``kn_perplexity``, at ``order=5``.  Nine model tables, ALL
+    successive group-bys of the 5-gram TYPE table (scale with distinct
+    types, which saturate, not occurrences); one occurrence-side hash
+    join. New in r13."""
+    from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
-    return kn5_perplexity(_t(spark, sf_dir, "documents"))
+    return kn_perplexity(_t(spark, sf_dir, "documents"), order=5)
 
 
 TEXT_KN5_PERPLEXITY_ORACLE = r"""
@@ -7073,8 +7074,9 @@ def text_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist (the r15 any-higher-ranked-candidate rule capped fill at
     ~4-6/round) with the same exactness argument: disjointness among
     SELECTED pairs is the only property the count-invariance proof
-    uses. batch=1 still degenerates to text_bpe_merges bit-for-bit
-    (differential pytest). r17 (VERDICT r16 item 4): the candidate
+    uses. text_bpe_merges is this same training loop at batch=1,
+    topk=1 (the plain argmax; pytest pins it against a pure-Python
+    sequential BPE). r17 (VERDICT r16 item 4): the candidate
     pool is symbol-diversified — a pair enters only if its rank within
     its left-symbol AND right-symbol groups is <= sym_cap=4, so one
     hot symbol occupies at most 8 of the 128 pool slots instead of
@@ -7347,8 +7349,10 @@ def text_bpe_tokenize_trie(spark: SparkSession, sf_dir: str) -> DataFrame:
     live in a rank table applied inside ONE Arrow-batched mapInPandas
     over the word-TYPE table — merge depth is a closure constant, not
     an expression tree, so a real 32k vocabulary doesn't explode the
-    plan. Shares the replace-chain's full oracle verbatim (same rules,
-    same greedy left-to-right merge); the differential pytest pins
+    plan. Both tokenizers take their rules from the one BPE training
+    loop at batch=1 (the ``text_bpe_merges`` rules) and share the
+    replace-chain's full oracle verbatim (same rules, same greedy
+    left-to-right merge); the differential pytest pins
     value equality at any depth and the SCALE.md probe runs it at
     merges=1024 where the replace-chain cannot compile."""
     from cassandra_fs_pp_spark.functions.text import bpe_tokenize_counts_trie
@@ -15002,7 +15006,7 @@ _CORPUS_SQL_CAPPED = r"""
 
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _capped_corpus_with_near_dups(spark, sf_dir)
-    sigs = minhash_signatures(corpus, num_hashes=MINHASH_K)
+    sigs = minhash_signatures_wide(corpus, num_hashes=MINHASH_K)
     pairs = lsh_candidate_pairs(sigs, num_hashes=MINHASH_K, bands=MINHASH_BANDS)
     return jaccard_verify(corpus, pairs, threshold=0.9)
 

@@ -389,7 +389,7 @@ def ccnet_buckets(
     """
     from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
-    scored = kn_perplexity(docs, id_col=id_col, text_col=text_col)
+    scored = kn_perplexity(docs, order=2, id_col=id_col, text_col=text_col)
     src = docs.select(id_col, source_col)
     w = Window.partitionBy(source_col).orderBy(
         F.col("ppl").asc(), F.col(id_col).asc()
@@ -451,7 +451,7 @@ def ccnet_buckets_banded(
     from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
     scale = 10 ** int(band_decimals)
-    scored = kn_perplexity(docs, id_col=id_col, text_col=text_col)
+    scored = kn_perplexity(docs, order=2, id_col=id_col, text_col=text_col)
     src = docs.select(id_col, source_col)
     d = (
         scored.join(src, id_col)

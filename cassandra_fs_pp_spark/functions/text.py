@@ -272,217 +272,122 @@ def cdc_chunks(
     return staged
 
 
+# per-document n-gram count column of each order's registry query
+_KN_COUNT_COL = {2: "n_bigrams", 3: "n_trigrams", 5: "n_5grams"}
+
+
 def kn_perplexity(
     docs,
     *,
+    order: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     discount: float = 0.75,
 ):
-    """Per-document perplexity under an interpolated Kneser-Ney bigram LM
-    trained on the whole corpus — the CCNet-style model-based quality
-    signal (`text_lm_familiarity` is the mean-frequency proxy; this is
-    the real smoothed LM).
+    """Per-document perplexity under an interpolated order-``n`` Kneser-Ney
+    LM with recursive continuation-count backoff (Kneser-Ney 1995 /
+    Chen-Goodman 1999) trained on the whole corpus — the CCNet-style
+    model-based quality signal (CCNet scores 5-grams;
+    `text_lm_familiarity` is the mean-frequency proxy).
 
-    Model (Kneser-Ney 1995 / Chen-Goodman 1999, bigram, fixed discount
-    ``D``):
+    Model (fixed discount ``D``; level ``k`` predicts the last word of an
+    n-gram from the ``k - 1`` words before it):
 
-        P(w2|w1) = (c(w1,w2) - D)/c(w1·)
-                 + (D * N1+(w1,·)/c(w1·)) * (N1+(·,w2) / T)
+        P_k = (c_k - D)/s_k + (D · d_k/s_k) · P_{k-1}     for k = n..2
+        P_1 = c_1 / T
 
-    where ``c(w1·)`` is the left-context occurrence total, ``N1+(w1,·)``
-    / ``N1+(·,w2)`` are distinct right/left continuation counts, and
-    ``T`` is the total number of distinct bigram types (so the
-    continuation distribution P_cont(w2) = N1+(·,w2)/T sums to 1).
-    Every scored bigram is observed in the training corpus (the corpus
-    scores itself), so c(w1,w2) >= 1 > D and the max(.-D, 0) clamp is
-    vacuous — P is always positive, no OOV branch needed.
+    The top level counts n-gram occurrences.  Each lower level counts
+    CONTINUATIONS — the distinct left extensions of its k-gram in the
+    level-(k+1) type table — the property that distinguishes KN from
+    plain backoff.  ``s_k`` and ``d_k`` are the sum of ``c_k`` and the
+    number of distinct k-grams over the level's context (the k-gram
+    minus its last word), and ``T`` is the number of distinct bigram
+    types, so P_1 sums to 1.  Every scored n-gram is observed (the corpus
+    scores itself), so every count is >= 1 > D at every level: P is
+    always positive, no clamp or OOV branch.
 
-    Scale shape: one narrow bigram explode, counts on the bigram-type
-    table (|types|, not |occurrences|), two skew-tolerant group-bys on
-    w1/w2, a 1-row type-total broadcast, and ONE occurrence-side hash
-    join back to the per-type log-probability. Identical to the
-    `text_lm_familiarity` join topology — linear in corpus size.
+    Scale shape: one narrow n-gram explode; every model table derives
+    from the order-``n`` type table by successive group-bys (they scale
+    with distinct TYPES, which saturate as the corpus grows, not with
+    occurrences); a 1-row total broadcast; and ONE occurrence-side hash
+    join back to the per-type log-probability.
 
-    Determinism: all model inputs are exact integers; P is a fixed
-    operation-order double expression; each ln(P) term is rounded to
-    integer NANO-NATS before the per-document sum (the
-    `text_bigram_entropy` trick), so the sum is order-insensitive and
-    the oracle matches bit-for-bit. ppl = exp(nll/n) is emitted rounded
-    to 6 dp.
+    Determinism: exact integer counts; P is one fixed-operation-order
+    double expression; each ln(P) term is rounded to integer NANO-NATS
+    before the per-document sum (the `text_bigram_entropy` trick), so the
+    sum is order-insensitive and the oracle matches bit-for-bit.  ppl =
+    exp(nll/n) is rounded to 6 dp (transcendental-derived — round absorbs
+    libm ulps per the SCALE.md class rule).
+
+    Emits ``(id, <count>, nll_nano, ppl)`` with the count column named
+    by ``_KN_COUNT_COL``; a doc with fewer than ``order`` tokens has no
+    n-gram and no row.
     """
+    if order < 2:
+        raise ValueError(f"order must be >= 2, got {order}")
     D = float(discount)
+    w = [f"w{j}" for j in range(1, order + 1)]
+    grams = ", ".join(
+        f"element_at(__ws, {'i + %d' % j if j else 'i'}) AS {x}"
+        for j, x in enumerate(w)
+    )
     ws = whitespace_tokens(F.col(text_col))
-    bg = docs.select(id_col, ws.alias("__ws")).select(
-        id_col,
-        F.explode(
-            F.expr(
-                "CASE WHEN size(__ws) >= 2 THEN"
-                " transform(sequence(1, size(__ws) - 1),"
-                " i -> struct(element_at(__ws, i) AS w1,"
-                " element_at(__ws, i + 1) AS w2))"
-                " ELSE array() END"
-            )
-        ).alias("b"),
-    ).select(id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    types = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    left = types.groupBy("w1").agg(
-        F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_l")
-    )
-    right = types.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_r"))
-    total = types.agg(F.count(F.lit(1)).alias("t"))
-    p = (
-        F.col("c12").cast("double") - F.lit(D)
-    ) / F.col("c1").cast("double") + (
-        F.lit(D) * F.col("n1p_l").cast("double") / F.col("c1").cast("double")
-    ) * (
-        F.col("n1p_r").cast("double") / F.col("t").cast("double")
-    )
-    scored_types = (
-        types.join(left, "w1")
-        .join(right, "w2")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            F.round(F.log(p) * F.lit(1e9)).cast("long").alias("lp_nano"),
-        )
-    )
-    n = F.count(F.lit(1))
-    return (
-        bg.join(scored_types, ["w1", "w2"])
-        .groupBy(id_col)
-        .agg(
-            n.cast("long").alias("n_bigrams"),
-            (-F.sum("lp_nano")).alias("nll_nano"),
-        )
-        .select(
-            id_col,
-            "n_bigrams",
-            "nll_nano",
-            F.round(
-                F.exp(
-                    (F.col("nll_nano").cast("double") / F.lit(1e9))
-                    / F.col("n_bigrams").cast("double")
-                ),
-                6,
-            ).alias("ppl"),
-        )
-    )
-
-
-def kn3_perplexity(
-    docs,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-):
-    """Per-document perplexity under an interpolated TRIGRAM Kneser-Ney
-    LM with recursive continuation-count backoff (Chen-Goodman 1999) —
-    the next honest step from :func:`kn_perplexity` toward CCNet's
-    5-gram signal (VERDICT r11 item 4).
-
-    Model (fixed discount ``D``; all counts from the trigram TYPE
-    table, so the lower orders use CONTINUATION counts, not raw
-    counts — the property that distinguishes KN from plain backoff):
-
-        P(w3|w1,w2) = (c(w1w2w3) - D)/c(w1w2·)
-                    + (D · N1+(w1w2,·)/c(w1w2·)) · P2(w3|w2)
-        P2(w3|w2)   = (N1+(·w2w3) - D)/N1+(·w2·)
-                    + (D · N1+(w2,·)/N1+(·w2·)) · P1(w3)
-        P1(w3)      = N1+(·w3) / N1+(··)
-
-    where N1+(·w2w3) counts distinct w1 preceding the bigram,
-    N1+(·w2·) = Σ_w3 N1+(·w2w3), N1+(w2,·) counts distinct mid-position
-    continuations, and P1 is the continuation-unigram over the distinct
-    (w2,w3) type table. Every scored trigram is observed in the corpus
-    (the corpus scores itself), so c ≥ 1 > D and N1+ ≥ 1 > D at every
-    level — P is always positive, no clamp or OOV branch.
-
-    Scale shape: identical topology to the bigram scorer one order up —
-    one narrow trigram explode, ALL model tables derived from the
-    trigram-type table (they scale with distinct TYPES, which saturate
-    as the corpus grows, not with occurrences), two-key/one-key
-    group-bys that hash-distribute, a 1-row total broadcast, and ONE
-    occurrence-side hash join on (w1,w2,w3).
-
-    Determinism: exact integer counts, one fixed-operation-order double
-    expression, per-trigram ln rounded to integer NANO-NATS before the
-    order-insensitive per-document integer sum; ppl = exp(nll/n)
-    rounded 6 dp (transcendental-derived, so round absorbs libm ulps
-    per the SCALE.md class rule).
-    """
-    D = float(discount)
-    ws = whitespace_tokens(F.col(text_col))
-    tg = (
+    occ = (
         docs.select(id_col, ws.alias("__ws"))
         .select(
             id_col,
             F.explode(
                 F.expr(
-                    "CASE WHEN size(__ws) >= 3 THEN"
-                    " transform(sequence(1, size(__ws) - 2),"
-                    " i -> struct(element_at(__ws, i) AS w1,"
-                    " element_at(__ws, i + 1) AS w2,"
-                    " element_at(__ws, i + 2) AS w3))"
+                    f"CASE WHEN size(__ws) >= {order} THEN"
+                    f" transform(sequence(1, size(__ws) - {order - 1}),"
+                    f" i -> struct({grams}))"
                     " ELSE array() END"
                 )
             ).alias("g"),
         )
-        .select(id_col, "g.w1", "g.w2", "g.w3")
+        .select(id_col, *[f"g.{x}" for x in w])
     )
-    types3 = tg.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c123"))
-    ctx12 = types3.groupBy("w1", "w2").agg(
-        F.sum("c123").alias("c12dot"), F.count(F.lit(1)).alias("n3d")
-    )
-    cont23 = types3.groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("n1p23"))
-    ctx2 = cont23.groupBy("w2").agg(
-        F.sum("n1p23").alias("n1p2dot"), F.count(F.lit(1)).alias("ndw3")
-    )
-    cont3 = cont23.groupBy("w3").agg(F.count(F.lit(1)).alias("n1p3"))
-    tot2 = cont23.agg(F.count(F.lit(1)).alias("t2"))
-    p2 = (F.col("n1p23").cast("double") - F.lit(D)) / F.col("n1p2dot").cast(
-        "double"
-    ) + (
-        F.lit(D) * F.col("ndw3").cast("double") / F.col("n1p2dot").cast("double")
-    ) * (
-        F.col("n1p3").cast("double") / F.col("t2").cast("double")
-    )
-    p = (F.col("c123").cast("double") - F.lit(D)) / F.col("c12dot").cast(
-        "double"
-    ) + (
-        F.lit(D) * F.col("n3d").cast("double") / F.col("c12dot").cast("double")
-    ) * p2
-    scored_types = (
-        types3.join(ctx12, ["w1", "w2"])
-        .join(cont23, ["w2", "w3"])
-        .join(ctx2, "w2")
-        .join(cont3, "w3")
-        .crossJoin(F.broadcast(tot2))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            F.round(F.log(p) * F.lit(1e9)).cast("long").alias("lp_nano"),
+    # level k's type table keys the k-gram w[n-k:]; its context table
+    # aggregates over the k-gram minus its last word, and the level-(k-1)
+    # continuation table counts distinct left extensions
+    level = occ.groupBy(*w).agg(F.count(F.lit(1)).alias(f"c{order}"))
+    model = level
+    for k in range(order, 1, -1):
+        key = w[order - k:]
+        ctx = level.groupBy(*key[:-1]).agg(
+            F.sum(f"c{k}").alias(f"s{k}"), F.count(F.lit(1)).alias(f"d{k}")
         )
+        cont = level.groupBy(*key[1:]).agg(F.count(F.lit(1)).alias(f"c{k - 1}"))
+        model = model.join(ctx, key[:-1]).join(cont, key[1:])
+        if k == 2:  # T: the number of distinct bigram types
+            total = level.agg(F.count(F.lit(1)).alias("t"))
+        level = cont
+
+    p = F.col("c1").cast("double") / F.col("t").cast("double")
+    for k in range(2, order + 1):
+        s = F.col(f"s{k}").cast("double")
+        p = (F.col(f"c{k}").cast("double") - F.lit(D)) / s + (
+            F.lit(D) * F.col(f"d{k}").cast("double") / s
+        ) * p
+    scored_types = model.crossJoin(F.broadcast(total)).select(
+        *w, F.round(F.log(p) * F.lit(1e9)).cast("long").alias("lp_nano")
     )
-    n = F.count(F.lit(1))
+    n_col = _KN_COUNT_COL.get(order, f"n_{order}grams")
     return (
-        tg.join(scored_types, ["w1", "w2", "w3"])
+        occ.join(scored_types, w)
         .groupBy(id_col)
         .agg(
-            n.cast("long").alias("n_trigrams"),
+            F.count(F.lit(1)).cast("long").alias(n_col),
             (-F.sum("lp_nano")).alias("nll_nano"),
         )
         .select(
             id_col,
-            "n_trigrams",
+            n_col,
             "nll_nano",
             F.round(
                 F.exp(
                     (F.col("nll_nano").cast("double") / F.lit(1e9))
-                    / F.col("n_trigrams").cast("double")
+                    / F.col(n_col).cast("double")
                 ),
                 6,
             ).alias("ppl"),
@@ -490,142 +395,25 @@ def kn3_perplexity(
     )
 
 
-def kn5_perplexity(
-    docs,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-):
-    """Per-document perplexity under an interpolated 5-GRAM Kneser-Ney LM
-    with full recursive continuation-count backoff (Chen-Goodman 1999) —
-    CCNet's actual quality signal order (the r13 close of the kn ladder:
-    kn2 -> kn3 -> kn5; VERDICT r12 item 6).
+def _sq(x: str) -> str:
+    """``x`` escaped for a single-quoted Spark SQL string literal."""
+    return x.replace("\\", "\\\\").replace("'", "\\'")
 
-    Model (fixed discount ``D``; level-k counts are continuation counts
-    over the level-(k+1) TYPE table — each backoff level counts distinct
-    LEFT extensions of the level above, the defining KN property):
 
-        P5(w5|w1..w4) = (c(w1..w5)-D)/c(w1..w4·) + D·N1+(w1..w4,·)/c(w1..w4·) · P4
-        P4(w5|w2w3w4) = (N1+(·w2..w5)-D)/N1+(·w2w3w4·) + D·N4d/N1+(·w2w3w4·) · P3
-        P3(w5|w3w4)   = (N1+(·w3w4w5)-D)/N1+(·w3w4·)   + D·N3d/N1+(·w3w4·)   · P2
-        P2(w5|w4)     = (N1+(·w4w5)-D)/N1+(·w4·)       + D·N2d/N1+(·w4·)     · P1
-        P1(w5)        = N1+(·w5) / N1+(··)
+# SQL expression paren-encoding the word ``w`` as one symbol per
+# character: ``low`` -> ``(l)(o)(w)``
+_PAREN_ENC = "concat('(', array_join(split(w, ''), ')('), ')')"
 
-    where each ``N1+(·, context·)`` context total is the row/sum
-    aggregate of the level's type table and each ``Nkd`` lambda numerator
-    is the distinct-continuation count in the SAME table.  Every scored
-    5-gram is observed (the corpus scores itself) so every count >= 1 > D
-    at every level — P is always positive, no clamp or OOV branch.
 
-    Scale shape: the kn3 topology two orders up — one narrow 5-gram
-    explode, NINE model tables ALL derived from the 5-gram type table by
-    successive group-bys (they scale with distinct TYPES, which saturate
-    as the corpus grows, not with occurrences), a 1-row total broadcast,
-    and ONE occurrence-side hash join on (w1..w5).
-
-    Determinism: exact integer counts, one fixed-operation-order double
-    expression, per-5-gram ln rounded to integer NANO-NATS before the
-    order-insensitive per-document integer sum; ppl = exp(nll/n) rounded
-    6 dp (transcendental-derived — round absorbs libm ulps per the
-    SCALE.md class rule).
-    """
-    D = float(discount)
-    ws = whitespace_tokens(F.col(text_col))
-    fg = (
-        docs.select(id_col, ws.alias("__ws"))
-        .select(
-            id_col,
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(__ws) >= 5 THEN"
-                    " transform(sequence(1, size(__ws) - 4),"
-                    " i -> struct(element_at(__ws, i) AS w1,"
-                    " element_at(__ws, i + 1) AS w2,"
-                    " element_at(__ws, i + 2) AS w3,"
-                    " element_at(__ws, i + 3) AS w4,"
-                    " element_at(__ws, i + 4) AS w5))"
-                    " ELSE array() END"
-                )
-            ).alias("g"),
+def _replace_chain(expr: str, rules) -> str:
+    """SQL expression applying the ``(lhs, rhs, merged)`` ``rules`` in
+    order to the paren-encoded symbol string ``expr``: one literal
+    ``replace`` per rule, BPE's greedy left-to-right merge."""
+    for a, b, m in rules:
+        expr = "replace({e}, '({a})({b})', '({m})')".format(
+            e=expr, a=_sq(a), b=_sq(b), m=_sq(m)
         )
-        .select(id_col, "g.w1", "g.w2", "g.w3", "g.w4", "g.w5")
-    )
-    t5 = fg.groupBy("w1", "w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("c5")
-    )
-    ctx1234 = t5.groupBy("w1", "w2", "w3", "w4").agg(
-        F.sum("c5").alias("s5"), F.count(F.lit(1)).alias("n5d")
-    )
-    cont2345 = t5.groupBy("w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("c4")
-    )
-    ctx234 = cont2345.groupBy("w2", "w3", "w4").agg(
-        F.sum("c4").alias("s4"), F.count(F.lit(1)).alias("n4d")
-    )
-    cont345 = cont2345.groupBy("w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("c3")
-    )
-    ctx34 = cont345.groupBy("w3", "w4").agg(
-        F.sum("c3").alias("s3"), F.count(F.lit(1)).alias("n3d")
-    )
-    cont45 = cont345.groupBy("w4", "w5").agg(F.count(F.lit(1)).alias("c2"))
-    ctx4 = cont45.groupBy("w4").agg(
-        F.sum("c2").alias("s2"), F.count(F.lit(1)).alias("n2d")
-    )
-    cont5 = cont45.groupBy("w5").agg(F.count(F.lit(1)).alias("c1"))
-    tot = cont45.agg(F.count(F.lit(1)).alias("t2"))
-
-    def lvl(c, s, nd, lower):
-        return (c.cast("double") - F.lit(D)) / s.cast("double") + (
-            F.lit(D) * nd.cast("double") / s.cast("double")
-        ) * lower
-
-    p1 = F.col("c1").cast("double") / F.col("t2").cast("double")
-    p2 = lvl(F.col("c2"), F.col("s2"), F.col("n2d"), p1)
-    p3 = lvl(F.col("c3"), F.col("s3"), F.col("n3d"), p2)
-    p4 = lvl(F.col("c4"), F.col("s4"), F.col("n4d"), p3)
-    p5 = lvl(F.col("c5"), F.col("s5"), F.col("n5d"), p4)
-    scored_types = (
-        t5.join(ctx1234, ["w1", "w2", "w3", "w4"])
-        .join(cont2345, ["w2", "w3", "w4", "w5"])
-        .join(ctx234, ["w2", "w3", "w4"])
-        .join(cont345, ["w3", "w4", "w5"])
-        .join(ctx34, ["w3", "w4"])
-        .join(cont45, ["w4", "w5"])
-        .join(ctx4, "w4")
-        .join(cont5, "w5")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            "w4",
-            "w5",
-            F.round(F.log(p5) * F.lit(1e9)).cast("long").alias("lp_nano"),
-        )
-    )
-    n = F.count(F.lit(1))
-    return (
-        fg.join(scored_types, ["w1", "w2", "w3", "w4", "w5"])
-        .groupBy(id_col)
-        .agg(
-            n.cast("long").alias("n_5grams"),
-            (-F.sum("lp_nano")).alias("nll_nano"),
-        )
-        .select(
-            id_col,
-            "n_5grams",
-            "nll_nano",
-            F.round(
-                F.exp(
-                    (F.col("nll_nano").cast("double") / F.lit(1e9))
-                    / F.col("n_5grams").cast("double")
-                ),
-                6,
-            ).alias("ppl"),
-        )
-    )
+    return expr
 
 
 def bpe_train_merges(
@@ -644,12 +432,13 @@ def bpe_train_merges(
     ``(round, lhs, rhs, merged, pair_count)`` — the trained artifact a
     tokenizer ships.
 
-    Scale shape (why this survives 100 TB): after ONE corpus pass that
-    builds the word-frequency TYPE table (vocabulary — saturates as the
-    corpus grows, occurrences don't matter past their counts), every
-    round runs on the type table only: a pair-explode + weighted count
-    (map-side combinable, keyed by the pair) and a 1-ROW argmax collect.
-    The corpus is never rescanned; driver traffic is ``merges`` rows.
+    This is :func:`bpe_train_merges_batched`'s loop at ``batch=1,
+    topk=1``: each round's batch is the plain argmax, found by a 1-ROW
+    ordered collect, and applied as ONE literal ``replace``.  After ONE
+    corpus pass that builds the word-frequency TYPE table (vocabulary —
+    saturates as the corpus grows, occurrences don't matter past their
+    counts), every round runs on the type table only.  The corpus is
+    never rescanned; driver traffic is ``merges`` rows.
 
     Determinism (cross-engine): pair counts are exact integers; the
     argmax tie-breaks (count DESC, left ASC, right ASC); the merge is
@@ -662,90 +451,18 @@ def bpe_train_merges(
     ``[^()]`` because words are split to single characters and merges
     concatenate them, so the parentheses can never be ambiguous.
     """
+    rules = [
+        (rnd, a, b, m, cnt)
+        for rnd, _rnk, a, b, m, cnt in _bpe_train_merges_batched_rules(
+            docs, id_col=id_col, text_col=text_col, rounds=merges,
+            batch=1, topk=1,
+        )
+    ]
     return local_table(
         docs.sparkSession,
-        _bpe_train_merge_rules(
-            docs, id_col=id_col, text_col=text_col, merges=merges
-        ),
+        rules,
         "round int, lhs string, rhs string, merged string, pair_count bigint",
     )
-
-
-def _bpe_train_merge_rules(
-    docs,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    merges: int = 8,
-) -> list:
-    """:func:`bpe_train_merges`'s training loop, returning the rule rows
-    as a plain Python list.  The tokenizers consume this directly —
-    wrapping the driver-resident rows in ``createDataFrame`` only to
-    ``collect()`` them straight back launched a defaultParallelism-wide
-    pickled-row job (32 Python worker spin-ups for <= ``merges`` rows,
-    ~280 ms measured at sf0.1) for zero information (r17)."""
-    ws = whitespace_tokens(F.col(text_col))
-    vocab = (
-        docs.select(F.explode(ws).alias("w"))
-        .filter(F.col("w") != "")
-        .filter(~F.col("w").rlike(r"[()]"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            F.expr(
-                "concat('(', array_join(split(w, ''), ')('), ')')"
-            ).alias("sym"),
-            "freq",
-        )
-        # eager=False: the type table materializes inside round 1's count
-        # job instead of as a separate driver-blocking job; the logical
-        # plan is truncated identically (r17).
-        .localCheckpoint(eager=False)
-    )
-    rules: list[tuple[int, str, str, str, int]] = []
-    cur = vocab
-    for rnd in range(1, merges + 1):
-        pairs = cur.select(
-            F.expr(r"regexp_extract_all(sym, '\\(([^)]*)\\)', 1)").alias("ss"),
-            "freq",
-        ).select(
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(ss) >= 2 THEN"
-                    " transform(sequence(1, size(ss) - 1),"
-                    " i -> struct(element_at(ss, i) AS a,"
-                    " element_at(ss, i + 1) AS b))"
-                    " ELSE array() END"
-                )
-            ).alias("p"),
-            "freq",
-        )
-        top = (
-            pairs.groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
-        rules.append((rnd, a, b, a + b, cnt))
-        def _sq(x: str) -> str:
-            return x.replace("\\", "\\\\").replace("'", "\\'")
-
-        # eager=False: round N's replace pass materializes inside round
-        # N+1's count job, and the FINAL round's pass (whose output no one
-        # reads) is never executed at all (r17).
-        cur = cur.select(
-            F.expr(
-                "replace(sym, '({a})({b})', '({m})')".format(
-                    a=_sq(a), b=_sq(b), m=_sq(a + b)
-                )
-            ).alias("sym"),
-            "freq",
-        ).localCheckpoint(eager=False)
-    return rules
 
 
 def bpe_train_merges_batched(
@@ -762,7 +479,8 @@ def bpe_train_merges_batched(
     production-depth trainer VERDICT r14 item 5 asked for): learn up to
     ``batch`` merge rules per counting round instead of one, so a
     1024-merge vocabulary needs ~tens of Spark jobs, not 1024
-    one-row argmax collects (:func:`bpe_train_merges`'s depth wall).
+    one-row argmax collects (the depth wall of :func:`bpe_train_merges`,
+    which is this loop at ``batch=1, topk=1``).
 
     Batch selection rule (deterministic, SQL-replayable; r16 upgrades
     the r15 conservative rule to the GREEDY MAXIMAL disjoint set per
@@ -784,8 +502,8 @@ def bpe_train_merges_batched(
     batch whenever ``topk`` holds enough disjoint pairs, with the same
     exactness argument — disjointness among SELECTED pairs is the only
     property the proof uses.)  With ``batch=1`` the rule degenerates to
-    the plain argmax and this trainer emits bit-identical rules to
-    :func:`bpe_train_merges` (the differential parity test).  Rank-1 is
+    the plain argmax, so the rules are the classic sequential
+    algorithm's (pinned against a pure-Python reference).  Rank-1 is
     always selected, so every non-empty round learns >= 1 rule.
 
     ``sym_cap`` (r17, VERDICT r16 item 4 — the steady-state fill
@@ -889,11 +607,13 @@ def _bpe_train_merges_batched_rules(
     topk: int | None = None,
     sym_cap: int | None = None,
 ) -> list:
-    """:func:`bpe_train_merges_batched`'s training loop, returning the
-    rule rows as a plain Python list in (round, rnk) order — compositions
-    that feed the rules straight into a tokenizer consume this to skip
-    the createDataFrame -> collect round-trip (see
-    :func:`_bpe_train_merge_rules`)."""
+    """The one BPE training loop (:func:`bpe_train_merges_batched`,
+    and :func:`bpe_train_merges` at ``batch=1, topk=1``), returning the
+    rule rows ``(round, rnk, lhs, rhs, merged, pair_count)`` as a plain
+    Python list in (round, rnk) order.  The tokenizers consume the list
+    directly: wrapping the driver-resident rows in ``createDataFrame``
+    only to ``collect()`` them straight back launched a
+    defaultParallelism-wide pickled-row job for zero information (r17)."""
     ws = whitespace_tokens(F.col(text_col))
     vocab = (
         docs.select(F.explode(ws).alias("w"))
@@ -901,19 +621,11 @@ def _bpe_train_merges_batched_rules(
         .filter(~F.col("w").rlike(r"[()]"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            F.expr(
-                "concat('(', array_join(split(w, ''), ')('), ')')"
-            ).alias("sym"),
-            "freq",
-        )
-        # eager=False — see bpe_train_merges (r17)
+        .select(F.expr(_PAREN_ENC).alias("sym"), "freq")
+        # eager=False: the type table materializes inside round 1's count
+        # job instead of as a separate driver-blocking job (r17)
         .localCheckpoint(eager=False)
     )
-
-    def _sq(x: str) -> str:
-        return x.replace("\\", "\\\\").replace("'", "\\'")
-
     rules: list[tuple[int, int, str, str, str, int]] = []
     cur = vocab
     for rnd in range(1, int(rounds) + 1):
@@ -952,13 +664,10 @@ def _bpe_train_merges_batched_rules(
             if row["a"] not in taken and row["b"] not in taken:
                 sel.append((i + 1, row["a"], row["b"], int(row["cnt"])))
                 taken.update((row["a"], row["b"]))
-        expr = "sym"
-        for rnk, a, b, cnt in sel:
-            rules.append((rnd, rnk, a, b, a + b, cnt))
-            expr = "replace({e}, '({a})({b})', '({m})')".format(
-                e=expr, a=_sq(a), b=_sq(b), m=_sq(a + b)
-            )
-        # eager=False — the final round's apply is never materialized (r17)
+        rules.extend((rnd, rnk, a, b, a + b, cnt) for rnk, a, b, cnt in sel)
+        # eager=False: round N's replace pass materializes inside round
+        # N+1's count job, and the final round's pass is never run (r17)
+        expr = _replace_chain("sym", [(a, b, a + b) for _, a, b, _ in sel])
         cur = cur.select(
             F.expr(expr).alias("sym"), "freq"
         ).localCheckpoint(eager=False)
@@ -989,20 +698,13 @@ def bpe_tokenize_counts(
     vocabulary filter.
     """
     rules = [
-        (lhs, rhs, merged)
-        for _rnd, lhs, rhs, merged, _cnt in _bpe_train_merge_rules(
-            docs, id_col=id_col, text_col=text_col, merges=merges
+        (a, b, m)
+        for _rnd, _rnk, a, b, m, _cnt in _bpe_train_merges_batched_rules(
+            docs, id_col=id_col, text_col=text_col, rounds=merges,
+            batch=1, topk=1,
         )
     ]
-
-    def _sq(x: str) -> str:
-        return x.replace("\\", "\\\\").replace("'", "\\'")
-
-    enc = "concat('(', array_join(split(w, ''), ')('), ')')"
-    for a, b, m in rules:
-        enc = "replace({e}, '({a})({b})', '({m})')".format(
-            e=enc, a=_sq(a), b=_sq(b), m=_sq(m)
-        )
+    enc = _replace_chain(_PAREN_ENC, rules)
     ws = whitespace_tokens(F.col(text_col))
     return (
         docs.select(id_col, ws.alias("__ws"))
@@ -1083,9 +785,10 @@ def bpe_tokenize_counts_trie(
 
     if rules is None:
         rules = [
-            (lhs, rhs, merged)
-            for _rnd, lhs, rhs, merged, _cnt in _bpe_train_merge_rules(
-                docs, id_col=id_col, text_col=text_col, merges=merges
+            (a, b, m)
+            for _rnd, _rnk, a, b, m, _cnt in _bpe_train_merges_batched_rules(
+                docs, id_col=id_col, text_col=text_col, rounds=merges,
+                batch=1, topk=1,
             )
         ]
     rule_list = [(str(a), str(b), str(m)) for a, b, m in rules]

@@ -5,11 +5,12 @@ plan stays in whole-stage codegen and shuffles only where set semantics
 require it:
 
 * exact dedup — hash-groupBy on normalized-text fingerprint.
-* MinHash + LSH — token-set minhash signatures (K portable hash perms),
-  banded into B buckets; candidate pairs come from a self-join on
-  (band, band_signature) — at 100 TB this is THE scalable shape: the join
-  key is the bucket, so only colliding docs ever meet, and the shuffle is
-  proportional to candidates, not to |corpus|^2.
+* MinHash + LSH — token-set minhash signatures (K portable hash perms,
+  one wide row per doc), banded into B buckets by plain column concats;
+  candidate pairs come from a self-join on (band, band_signature) — at
+  100 TB this is THE scalable shape: the join key is the bucket, so only
+  colliding docs ever meet, and the shuffle is proportional to
+  candidates, not to |corpus|^2.
 * SimHash — sign-aggregated bit fingerprint; near-dups share the value
   (or low hamming distance).
 * n-gram Jaccard — exact verification on candidate pairs only.
@@ -85,9 +86,12 @@ def minhash_signatures_wide(
 
     All K permutation minima come out of ONE groupBy(doc) pass — the token
     hash is computed once per token and every permutation is a cheap
-    ``min((a*h+b)%P)`` aggregate over it. The long-form/crossJoin layout
-    would shuffle K× the rows for identical values; this is the plan you
-    want at 100 TB (shuffle ∝ tokens, not tokens×K)."""
+    ``min((a*h+b)%P)`` aggregate over it. A long (doc, k) layout would
+    shuffle K× the rows for identical values; this is the plan you want
+    at 100 TB (shuffle ∝ tokens, not tokens×K).  It is the engine's one
+    signature layout: :func:`banded_from_wide` bands it for both the
+    pair form (:func:`lsh_candidate_pairs`) and the cluster form
+    (:func:`lsh_cluster_wide`)."""
     perms = minhash_perms(num_hashes, seed)
     tok = docs.select(
         F.col(id_col), F.explode(token_set(F.col(text_col))).alias("w")
@@ -98,51 +102,6 @@ def minhash_signatures_wide(
         for k, a, b in perms
     ]
     return h.groupBy(id_col).agg(*aggs)
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Long-form minhash signatures: one row per (doc, k). Same values as
-    the wide form (it IS the wide form, unpivoted) — keep long only where a
-    per-k relational layout is genuinely needed."""
-    wide = minhash_signatures_wide(
-        docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes, seed=seed
-    )
-    pairs = ", ".join(f"{k}, mh_{k}" for k in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {pairs}) AS (k, mh)"
-    )
-
-
-def _band_long(
-    signatures: DataFrame, *, num_hashes: int, bands: int, id_col: str
-) -> DataFrame:
-    """Long-form (id, k, mh) signatures -> (id, band, band_sig).  The ONE
-    definition of the band-signature string (sorted k order, ','-joined) —
-    `banded_from_wide` produces identical strings from the wide layout and
-    the DuckDB oracles replicate this exact format."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    rows_per_band = num_hashes // bands
-    return (
-        signatures.withColumn("band", (F.col("k") / rows_per_band).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("k", "mh"))),
-                    lambda s: s["mh"].cast("string"),
-                ),
-                ",",
-            ).alias("band_sig")
-        )
-    )
 
 
 def _cluster_from_banded(banded: DataFrame, id_col: str) -> DataFrame:
@@ -178,20 +137,21 @@ def _cluster_from_banded(banded: DataFrame, id_col: str) -> DataFrame:
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame,
+    wide: DataFrame,
     *,
     num_hashes: int,
     bands: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Band the signatures and self-join on (band, band_sig).
+    """Band wide signatures (:func:`minhash_signatures_wide`) and
+    self-join on (band, band_sig).
 
     Returns distinct (doc_a, doc_b) with doc_a < doc_b. Two docs collide
     when ALL rows of some band agree — the classic LSH S-curve knob
     (bands up = recall up / precision down).
     """
-    banded = _band_long(
-        signatures, num_hashes=num_hashes, bands=bands, id_col=id_col
+    banded = banded_from_wide(
+        wide, num_hashes=num_hashes, bands=bands, id_col=id_col
     )
     a = banded.select(
         F.col("band"), F.col("band_sig"), F.col(id_col).alias("doc_a")
@@ -214,9 +174,10 @@ def banded_from_wide(
     bands: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Wide signatures -> (id, band, band_sig) with NO aggregation: band
-    signatures are plain column concats in k order (identical strings to
-    the long form's sorted collect_list), then one stack. Zero shuffles."""
+    """Wide signatures -> (id, band, band_sig) with NO aggregation: a
+    band signature is its ``mh_k`` values in k order, ','-joined (the
+    string the DuckDB oracles build with ``string_agg(.. ORDER BY k)``),
+    then one stack. Zero shuffles."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     rpb = num_hashes // bands

@@ -51,6 +51,7 @@ import shutil
 import tempfile
 import zipfile
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
@@ -98,8 +99,10 @@ RUNTIME_CONF: dict[str, str] = {
 def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
     """Apply engine runtime conf to an existing session (idempotent).
 
-    A key the session refuses (e.g. a static conf on this build) is logged
-    as a warning and skipped."""
+    A key the session refuses — a static conf on a running session
+    (``AnalysisException``) or a value it rejects
+    (``IllegalArgumentException``) — is logged as a warning and skipped;
+    any other error propagates."""
     conf = dict(RUNTIME_CONF)
     if shuffle_partitions is None:
         shuffle_partitions = spark.sparkContext.defaultParallelism
@@ -108,7 +111,7 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     for key, value in conf.items():
         try:
             spark.conf.set(key, value)
-        except Exception as exc:
+        except PySparkException as exc:
             log.warning("tune: could not set %s=%s: %s", key, value, exc)
     _ship_package(spark)
     return spark

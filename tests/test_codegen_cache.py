@@ -14,7 +14,9 @@ from __future__ import annotations
 import logging
 from functools import reduce
 
+import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.sql.conf import RuntimeConfig
 
 from cassandra_fs_pp_spark import session
 from cassandra_fs_pp_spark.session import (
@@ -105,6 +107,17 @@ def test_tune_logs_conf_it_could_not_set(spark, monkeypatch, caplog):
     hits = [r for r in caplog.records if CODEGEN_CACHE_CONF in r.getMessage()]
     assert len(hits) == 1, caplog.text
     assert spark.conf.get(CODEGEN_CACHE_CONF) == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_tune_propagates_errors_that_are_not_conf_refusals(spark, monkeypatch):
+    # only a PySparkException (the session refusing a key or value) is
+    # logged and skipped; any other failure of conf.set is a bug
+    def boom(self, key, value):
+        raise RuntimeError(f"boom {key}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", boom)
+    with pytest.raises(RuntimeError, match="boom"):
+        tune(spark)
 
 
 def test_get_spark_warns_on_existing_session_with_other_cache_size(

@@ -160,6 +160,16 @@ def test_minhash_cluster_deskewed_bucket_rep(spark):
     assert _n_shuffles(plan) <= 2, plan
 
 
+def test_minhash_lsh_bands_without_aggregation(spark):
+    """dedup_minhash_lsh: candidate pairs band the wide signatures with
+    plain column concats and one stack (``banded_from_wide``), so no
+    per-(doc, band) ``collect_list`` aggregation sits between the
+    signature aggregate and the band self-join."""
+    plan = _formatted_plan(entrymod.queries()["dedup_minhash_lsh"](spark, SF))
+    assert "collect_list" not in plan, plan
+    assert _n(plan, "ObjectHashAggregate") == 0, plan
+
+
 def test_semantic_dedup_deskewed_rep_attach(spark):
     """SemDeDup path (r17 de-skew, the VERDICT r16 item 1 window class):
     the per-bucket representative must be a partial-aggregated

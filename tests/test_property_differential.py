@@ -593,7 +593,7 @@ def test_kn_perplexity_matches_reference_on_random_corpora(spark, spec):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_bigrams"], r["nll_nano"], r["ppl"])
-        for r in kn_perplexity(df).collect()
+        for r in kn_perplexity(df, order=2).collect()
     }
     assert got == _kn_reference(rows)
 
@@ -720,7 +720,7 @@ def test_kn3_perplexity_matches_reference_on_random_corpora(spark, spec):
     both sides."""
     from test_text_similarity import _kn3_reference
 
-    from cassandra_fs_pp_spark.functions.text import kn3_perplexity
+    from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(spec)]
     if not any(len(t.split()) >= 3 for _, t in rows):
@@ -728,7 +728,7 @@ def test_kn3_perplexity_matches_reference_on_random_corpora(spark, spec):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_trigrams"], r["nll_nano"], r["ppl"])
-        for r in kn3_perplexity(df).collect()
+        for r in kn_perplexity(df, order=3).collect()
     }
     assert got == _kn3_reference(rows)
 
@@ -742,7 +742,7 @@ def test_kn5_perplexity_matches_reference_on_random_corpora(spark, spec):
     must drop out of both sides."""
     from test_text_similarity import _kn5_reference
 
-    from cassandra_fs_pp_spark.functions.text import kn5_perplexity
+    from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(spec)]
     if not any(len(t.split()) >= 5 for _, t in rows):
@@ -750,7 +750,7 @@ def test_kn5_perplexity_matches_reference_on_random_corpora(spark, spec):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_5grams"], r["nll_nano"], r["ppl"])
-        for r in kn5_perplexity(df).collect()
+        for r in kn_perplexity(df, order=5).collect()
     }
     assert got == _kn5_reference(rows)
 

@@ -24,7 +24,7 @@ from cassandra_fs_pp_spark.operators.textdedup import (
     exact_dup_groups,
     jaccard_verify,
     lsh_candidate_pairs,
-    minhash_signatures,
+    minhash_signatures_wide,
     simhash,
 )
 
@@ -83,7 +83,7 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
         "completely different words entirely unrelated content here now",
     ]
     df = _docs(spark, texts)
-    sigs = minhash_signatures(df, num_hashes=16)
+    sigs = minhash_signatures_wide(df, num_hashes=16)
     pairs = lsh_candidate_pairs(sigs, num_hashes=16, bands=8)
     got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     assert (0, 1) in got
@@ -396,13 +396,8 @@ def test_lsh_candidate_pairs_exact_on_hot_bucket(spark):
     """The PAIR form on the same corpus is inherently quadratic in the hot
     class — kept correct (AQE splits the skewed bucket join) and exact:
     C(1500,2) pairs, every one inside the duplicate class."""
-    from cassandra_fs_pp_spark.operators.textdedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
     docs = _hot_corpus(spark)
-    sigs = minhash_signatures(docs, num_hashes=16)
+    sigs = minhash_signatures_wide(docs, num_hashes=16)
     pairs = lsh_candidate_pairs(sigs, num_hashes=16, bands=8)
     n_hot = 1500
     expected = n_hot * (n_hot - 1) // 2
@@ -607,7 +602,7 @@ def test_kn_perplexity_vs_python_reference(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         r["doc_id"]: (r["n_bigrams"], r["nll_nano"], r["ppl"])
-        for r in kn_perplexity(df).collect()
+        for r in kn_perplexity(df, order=2).collect()
     }
     want = _kn_reference(rows)
     assert got == want
@@ -932,7 +927,7 @@ def test_strip_verbatim_invariants_corpus(spark):
 
 def _kn3_reference(rows, D=0.75):
     """Pure-Python interpolated trigram Kneser-Ney with continuation-count
-    backoff (Chen-Goodman) — the spec kn3_perplexity must reproduce
+    backoff (Chen-Goodman) — the spec kn_perplexity(order=3) must reproduce
     bit-for-bit, including nano-nat rounding with the away-from-zero tie
     rule both engines share."""
     import math
@@ -986,7 +981,7 @@ def test_kn3_perplexity_vs_python_reference(spark):
     continuations, and sub-trigram docs (dropped). Also checks each
     backoff level's normalization: the continuation distributions sum
     to 1."""
-    from cassandra_fs_pp_spark.functions.text import kn3_perplexity
+    from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
     rows = [
         (1, "the cat sat on the mat"),
@@ -1000,7 +995,7 @@ def test_kn3_perplexity_vs_python_reference(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         r["doc_id"]: (r["n_trigrams"], r["nll_nano"], r["ppl"])
-        for r in kn3_perplexity(df).collect()
+        for r in kn_perplexity(df, order=3).collect()
     }
     want = _kn3_reference(rows)
     assert got == want
@@ -1087,7 +1082,7 @@ def test_ivf_pq_topk_recall_and_codebooks(spark):
 def _kn5_reference(rows, D=0.75):
     """Pure-Python interpolated 5-gram Kneser-Ney with FULL recursive
     continuation-count backoff (orders 5->4->3->2->1, Chen-Goodman) —
-    the spec kn5_perplexity must reproduce bit-for-bit, including
+    the spec kn_perplexity(order=5) must reproduce bit-for-bit, including
     nano-nat rounding with the away-from-zero tie rule both engines
     share."""
     import math
@@ -1157,7 +1152,7 @@ def test_kn5_perplexity_vs_python_reference(spark):
     emitted value — counts exactly, nll to the nano-nat, ppl to 6 dp.
     Corpus exercises repeated 5-grams, shared contexts at every backoff
     order, and sub-5-gram docs (dropped)."""
-    from cassandra_fs_pp_spark.functions.text import kn5_perplexity
+    from cassandra_fs_pp_spark.functions.text import kn_perplexity
 
     rows = [
         (1, "the cat sat on the mat by the door"),
@@ -1171,7 +1166,7 @@ def test_kn5_perplexity_vs_python_reference(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         r["doc_id"]: (r["n_5grams"], r["nll_nano"], r["ppl"])
-        for r in kn5_perplexity(df).collect()
+        for r in kn_perplexity(df, order=5).collect()
     }
     want = _kn5_reference(rows)
     assert got == want
@@ -1217,6 +1212,37 @@ def _bpe_reference(texts, merges=8):
     return rules
 
 
+def _bpe_reference_counts(texts, merges=8):
+    """Per-doc (n_words, n_chars, n_bpe_tokens) of the pure-Python
+    sequential BPE: replay training with :func:`_bpe_reference`, then
+    greedy-apply each rule in learned order to every word."""
+    rules = _bpe_reference(texts, merges=merges)
+
+    def apply(word):
+        syms = list(word)
+        for _, a, b, m, _ in rules:
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                    out.append(m)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            syms = out
+        return len(syms)
+
+    want = {}
+    for i, t in enumerate(texts):
+        ws = [w for w in t.strip().lower().split() if w]
+        want[i] = (
+            len(ws),
+            sum(len(w) for w in ws),
+            sum(apply(w) for w in ws),
+        )
+    return want
+
+
 def test_bpe_train_merges_vs_python_reference(spark):
     """r13: the distributed BPE trainer must reproduce the classic
     single-process algorithm rule-for-rule — including the greedy
@@ -1258,12 +1284,9 @@ def test_bpe_train_merges_vs_python_reference(spark):
 def test_bpe_batched_batch1_equals_sequential(spark):
     """r15 (VERDICT r14 item 5): with batch=1 the batched trainer's
     disjointness rule degenerates to the plain argmax, so it must emit
-    rule-for-rule the sequential trainer's output (and therefore the
-    classic single-process algorithm)."""
-    from cassandra_fs_pp_spark.functions.text import (
-        bpe_train_merges,
-        bpe_train_merges_batched,
-    )
+    rule-for-rule the classic sequential single-process algorithm's
+    output (the pure-Python reference)."""
+    from cassandra_fs_pp_spark.functions.text import bpe_train_merges_batched
 
     texts = [
         "low low low low low",
@@ -1274,17 +1297,13 @@ def test_bpe_batched_batch1_equals_sequential(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    seq = [
-        (r["round"], r["lhs"], r["rhs"], r["merged"], r["pair_count"])
-        for r in bpe_train_merges(df, merges=6).orderBy("round").collect()
-    ]
     bat = [
         (r["round"], r["lhs"], r["rhs"], r["merged"], r["pair_count"])
         for r in bpe_train_merges_batched(df, rounds=6, batch=1)
         .orderBy("round")
         .collect()
     ]
-    assert bat == seq
+    assert bat == _bpe_reference(texts, merges=6)
 
 
 def test_sym_capped_top_matches_window_form(spark):
@@ -1420,11 +1439,9 @@ def test_bpe_sym_cap_batch1_equals_sequential(spark):
     """r17 (VERDICT r16 item 4): the symbol-diversity pool cap must not
     disturb batch=1 parity for ANY cap >= 1 — the global rank-1 pair is
     rank-1 within both of its symbol groups (same order), so it always
-    survives the cap and the greedy degenerates to the plain argmax."""
-    from cassandra_fs_pp_spark.functions.text import (
-        bpe_train_merges,
-        bpe_train_merges_batched,
-    )
+    survives the cap and the greedy degenerates to the plain argmax,
+    i.e. the pure-Python sequential reference."""
+    from cassandra_fs_pp_spark.functions.text import bpe_train_merges_batched
 
     texts = [
         "low low low low low",
@@ -1435,10 +1452,7 @@ def test_bpe_sym_cap_batch1_equals_sequential(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    seq = [
-        (r["round"], r["lhs"], r["rhs"], r["merged"], r["pair_count"])
-        for r in bpe_train_merges(df, merges=6).orderBy("round").collect()
-    ]
+    seq = _bpe_reference(texts, merges=6)
     for cap in (1, 4):
         bat = [
             (r["round"], r["lhs"], r["rhs"], r["merged"], r["pair_count"])
@@ -1487,13 +1501,10 @@ def test_bpe_sym_cap_diversifies_pool(spark):
 
 def test_bpe_pipeline_batch1_equals_sequential_tokenize(spark):
     """The composed train+apply pipeline at batch=1 must equal the
-    sequential replace-chain tokenizer end-to-end: the greedy batched
-    trainer degenerates to the sequential argmax at batch=1 (pinned
-    above) and the rank-table applier is value-identical to the
-    replace chain (pinned below), so the COMPOSITION of the two is the
-    sequential `bpe_tokenize_counts` bit-for-bit."""
+    sequential algorithm end-to-end: train with the pure-Python
+    reference, then greedy-apply each learned rule in order to every
+    word (``_bpe_reference_counts``), bit-for-bit per document."""
     from cassandra_fs_pp_spark.functions.text import (
-        bpe_tokenize_counts,
         bpe_tokenize_counts_trie,
         bpe_train_merges_batched,
     )
@@ -1513,15 +1524,14 @@ def test_bpe_pipeline_batch1_equals_sequential_tokenize(spark):
         .orderBy("round", "rnk")
         .collect()
     ]
-    got = sorted(
-        bpe_tokenize_counts_trie(df, rules=rules).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    want = sorted(
-        bpe_tokenize_counts(df, merges=6).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    assert got == want
+    rows = bpe_tokenize_counts_trie(df, rules=rules).collect()
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
+        for r in rows
+    }
+    assert got == _bpe_reference_counts(texts, merges=6)
+    for r in rows:
+        assert r["compression"] == round(r["n_chars"] / r["n_bpe_tokens"], 6)
 
 
 def test_bpe_pipeline_blank_doc_oracle_parity(spark, tmp_path):
@@ -1598,34 +1608,7 @@ def test_bpe_tokenize_counts_vs_python_reference(spark):
         r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
         for r in bpe_tokenize_counts(df, merges=8).collect()
     }
-
-    # python reference: replay training, then greedy-apply each rule in
-    # learned order to every word
-    rules = _bpe_reference(texts, merges=8)
-
-    def apply(word):
-        syms = list(word)
-        for _, a, b, m, _ in rules:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(m)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return len(syms)
-
-    want = {}
-    for i, t in enumerate(texts):
-        ws = [w for w in t.strip().lower().split() if w]
-        want[i] = (
-            len(ws),
-            sum(len(w) for w in ws),
-            sum(apply(w) for w in ws),
-        )
-    assert got == want
+    assert got == _bpe_reference_counts(texts, merges=8)
     # merged runs compress: 'aaaa' must count fewer tokens than chars
     assert got[2][2] < got[2][1]
 
