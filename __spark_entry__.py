@@ -1068,11 +1068,16 @@ FROM events
 """
 
 
+# Id bands are taken modulo this stride (the oracles hard-code
+# `% 10000000`), so a band keeps its share on id-shifted table copies.
+_ID_STRIDE = 10_000_000
+
+
 def f_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions (transform/filter/aggregate/sort) —
     the per-row vector algebra the similarity layer builds on."""
     ev = _t(spark, sf_dir, "events").filter(
-        F.pmod(F.col("event_id"), F.lit(_SWEEP_SHIFT)) < 1000
+        F.pmod(F.col("event_id"), F.lit(_ID_STRIDE)) < 1000
     )
     arr = F.sequence(F.lit(1), (F.col("user_id") % 5 + 2).cast("int"))
     squares = F.transform(arr, lambda x: x * x)
@@ -1117,7 +1122,7 @@ FROM events WHERE event_id % 10000000 < 1000
 def f_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-handling family: coalesce/nullif/nvl2/null-safe equality."""
     ev = _t(spark, sf_dir, "events").filter(
-        F.pmod(F.col("event_id"), F.lit(_SWEEP_SHIFT)) < 2000
+        F.pmod(F.col("event_id"), F.lit(_ID_STRIDE)) < 2000
     )
     v = F.when(F.col("value") > 100, F.col("value"))  # null-y column
     return ev.select(
@@ -1183,7 +1188,7 @@ def f_datetime_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbering pinned explicitly (Spark dayofweek is 1=Sunday; DuckDB's is
     0=Sunday)."""
     ev = _t(spark, sf_dir, "events").filter(
-        F.pmod(F.col("event_id"), F.lit(_SWEEP_SHIFT)) < 2000
+        F.pmod(F.col("event_id"), F.lit(_ID_STRIDE)) < 2000
     )
     t = F.col("ts")
     return ev.select(
@@ -2746,12 +2751,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_verify(corpus, pairs, threshold=0.9)
 
 
-def _minhash_sql(corpus_sql: str = None) -> str:
+def _minhash_sql() -> str:
     perms = ", ".join(f"({k}, {a}, {b})" for k, a, b in minhash_perms(MINHASH_K))
     rpb = MINHASH_K // MINHASH_BANDS
-    _corpus = corpus_sql if corpus_sql is not None else _CORPUS_SQL
     return f"""
-WITH corpus AS ({_corpus}),
+WITH corpus AS ({_CORPUS_SQL}),
 tok AS (
   SELECT doc_id,
          unnest(list_distinct(string_split_regex(lower(trim(text)), '\\s+'))) AS w
@@ -2973,7 +2977,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = corpus.select(
         "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("__ws")
     ).select("doc_id", bigrams.alias("grams"))
-    local = F.pmod(F.col("doc_id"), F.lit(_SWEEP_SHIFT))
+    local = F.pmod(F.col("doc_id"), F.lit(_ID_STRIDE))
     a = g.filter(local < 100000).select(
         F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga")
     )
@@ -5469,7 +5473,7 @@ def f_bitwise_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a first-class projection suite (integer-exact, trivially
     portable)."""
     ev = _t(spark, sf_dir, "events").filter(
-        F.pmod(F.col("event_id"), F.lit(_SWEEP_SHIFT)) < 2000
+        F.pmod(F.col("event_id"), F.lit(_ID_STRIDE)) < 2000
     )
     a = F.col("user_id").cast("long")
     b = F.col("event_id").cast("long")
@@ -14961,203 +14965,3 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return _index(_registry())[1]
-
-
-# --------------------------------------------------------------------------
-# 8x-sweep capped variants (VERDICT r11 item 5) — NOT part of the driver
-# contract. The 5 pair-enumeration queries have quadratic OUTPUT on the
-# scale_probe corpora BY DESIGN (every doc there has N verbatim copies, so
-# pair output is O(cluster^2) per original); their linear cluster/strip
-# forms are the documented 100 TB paths. These variants cap the corpus to a
-# SHIFT-SAFE doc band (doc_id % 10_000_000 < SWEEP_CAP — every probe shift
-# keeps its share, so the N-way cluster structure under test is preserved)
-# to bound pair output, giving each of the 5 real >=8x oracle evidence.
-# Consumed by `scripts/oracle_check.py --variants`; doc_check asserts the
-# accounting (every registry query: swept directly or owns a capped twin).
-# --------------------------------------------------------------------------
-
-SWEEP_CAP = 120
-_SWEEP_SHIFT = 10_000_000  # scripts/scale_probe.py FACT_SHIFT stride
-
-
-def _capped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "documents").filter(
-        F.pmod(F.col("doc_id"), F.lit(_SWEEP_SHIFT)) < SWEEP_CAP
-    )
-
-
-def _capped_corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _capped_docs(spark, sf_dir).select("doc_id", "text")
-    mutated = docs.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.regexp_replace("text", r"^\S+\s+", "").alias("text"),
-    )
-    return docs.unionByName(mutated)
-
-
-_CORPUS_SQL_CAPPED = r"""
-  SELECT doc_id, text FROM documents WHERE doc_id % 10000000 < 120
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id,
-         regexp_replace(text, '^\S+\s+', '') AS text
-  FROM documents WHERE doc_id % 10000000 < 120
-"""
-
-
-def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _capped_corpus_with_near_dups(spark, sf_dir)
-    sigs = minhash_signatures_wide(corpus, num_hashes=MINHASH_K)
-    pairs = lsh_candidate_pairs(sigs, num_hashes=MINHASH_K, bands=MINHASH_BANDS)
-    return jaccard_verify(corpus, pairs, threshold=0.9)
-
-
-def dedup_simhash_banded_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cassandra_fs_pp_spark.operators.textdedup import simhash_band_pairs
-
-    corpus = _capped_corpus_with_near_dups(spark, sf_dir)
-    sh = simhash(corpus, bits=SIMHASH_BITS)
-    return simhash_band_pairs(sh, bits=SIMHASH_BITS, bands=4, max_hamming=3)
-
-
-def ngram_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capped twin of ngram_jaccard_pairs (same shift-safe ``id % SHIFT``
-    split as the r13 registry form — the registry form itself migrated
-    off the absolute-magnitude split in r13; this twin remains the
-    bounded-output probe variant). Bigram expression kept identical to
-    the registry form: size-1 enumeration, <2-token guard."""
-    corpus = _capped_corpus_with_near_dups(spark, sf_dir)
-    bigrams = F.array_distinct(
-        F.expr(
-            "case when size(__ws) >= 2 then"
-            " transform(sequence(0, size(__ws) - 2),"
-            " i -> concat_ws(' ', __ws[i], __ws[i+1]))"
-            " else cast(array() as array<string>) end"
-        )
-    )
-    g = corpus.select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("__ws")
-    ).select("doc_id", bigrams.alias("grams"))
-    local = F.pmod(F.col("doc_id"), F.lit(_SWEEP_SHIFT))
-    a = g.filter(local < 100000).select(
-        F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga")
-    )
-    b = g.filter(local >= 100000).select(
-        (F.col("doc_id") - 100000).alias("doc_a"), F.col("grams").alias("gb")
-    )
-    return a.join(b, on="doc_a").select(
-        "doc_a",
-        F.size(F.array_intersect("ga", "gb")).alias("n_inter"),
-        F.size(F.array_union("ga", "gb")).alias("n_union"),
-        (
-            F.size(F.array_intersect("ga", "gb"))
-            / F.size(F.array_union("ga", "gb"))
-        ).alias("jaccard"),
-    )
-
-
-NGRAM_JACCARD_CAPPED_ORACLE = f"""
-WITH corpus AS ({_CORPUS_SQL_CAPPED}),
-g AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(ws) >= 2 THEN
-           list_transform(range(1, len(ws)),
-             i -> ws[i] || ' ' || ws[i + 1])
-           ELSE CAST([] AS VARCHAR[]) END) AS grams
-  FROM (SELECT doc_id,
-               string_split_regex(lower(trim(text)), '\\s+') AS ws
-        FROM corpus)
-)
-SELECT a.doc_id AS doc_a,
-       len(list_intersect(a.grams, b.grams)) AS n_inter,
-       len(list_distinct(a.grams || b.grams)) AS n_union,
-       len(list_intersect(a.grams, b.grams))
-         / len(list_distinct(a.grams || b.grams)) AS jaccard
-FROM g a JOIN g b ON b.doc_id = a.doc_id + 100000
-WHERE a.doc_id % 10000000 < 100000
-"""
-
-
-def emb_near_dups_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.pmod(F.col("vec_id"), F.lit(_SWEEP_SHIFT)) < SWEEP_CAP)
-        .select("vec_id", "embedding")
-    )
-    shadow = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding")
-    )
-    return embedding_near_dups(emb.unionByName(shadow), threshold=0.45)
-
-
-EMB_NEAR_DUPS_CAPPED_ORACLE = """
-WITH base AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10000000 < 120
-), corpus AS (
-  SELECT vec_id, embedding FROM base
-  UNION ALL
-  SELECT vec_id + 100000 AS vec_id, embedding FROM base
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-       / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-        * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-         AS cosine
-FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-WHERE list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-      / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-       * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-      >= 0.45
-"""
-
-
-def dedup_spans_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _capped_docs(spark, sf_dir)
-    ws = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    chunks = docs.select("doc_id", ws.alias("__ws")).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, cast(ceil(size(__ws)/{SPAN_WORDS}.0) as int) - 1),"
-                f" ci -> array_join(slice(__ws, ci*{SPAN_WORDS}+1, {SPAN_WORDS}), ' '))"
-            )
-        ).alias("ci", "chunk"),
-    )
-    w = Window.partitionBy("chunk").orderBy("doc_id", "ci")
-    ranked = chunks.withColumn("__rn", F.row_number().over(w))
-    dup = F.when(F.col("__rn") > 1, 1).otherwise(0)
-    cnt = F.count(F.lit(1))
-    ndup = F.sum(dup)
-    return ranked.groupBy("doc_id").agg(
-        cnt.alias("n_chunks"),
-        ndup.cast("bigint").alias("n_dup_chunks"),
-        (F.lit(1.0) - ndup.cast("double") / cnt.cast("double")).alias(
-            "retained_ratio"
-        ),
-    )
-
-
-def sweep_variants() -> "dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]":
-    """Capped (callable, oracle) twins keyed by the registry query they
-    stand in for in >=8x sweeps."""
-    return {
-        "dedup_minhash_lsh": (
-            dedup_minhash_lsh_capped,
-            _minhash_sql(_CORPUS_SQL_CAPPED),
-        ),
-        "dedup_simhash_banded": (
-            dedup_simhash_banded_capped,
-            SIMHASH_BANDED_ORACLE.replace(_CORPUS_SQL, _CORPUS_SQL_CAPPED),
-        ),
-        "ngram_jaccard_pairs": (
-            ngram_jaccard_pairs_capped,
-            NGRAM_JACCARD_CAPPED_ORACLE,
-        ),
-        "emb_near_dups": (emb_near_dups_capped, EMB_NEAR_DUPS_CAPPED_ORACLE),
-        "dedup_spans": (
-            dedup_spans_capped,
-            DEDUP_SPANS_ORACLE.replace(
-                "FROM documents)",
-                "FROM documents WHERE doc_id % 10000000 < 120)",
-            ),
-        ),
-    }

@@ -263,13 +263,7 @@ def read_netcdf3(path: str) -> tuple[dict[str, int | None], dict[str, object], l
     of any record variable), mirroring :func:`write_netcdf3`'s input.
     """
     with open(path, "rb") as f:
-        return read_netcdf3_bytes(f.read())
-
-
-def read_netcdf3_bytes(raw: bytes):
-    """Bytes-level entry point (same contract as :func:`read_netcdf3`)
-    — lets executors parse file contents shipped by Spark's binaryFile
-    source without touching a local filesystem path."""
+        raw = f.read()
     try:
         return _read_netcdf3(raw)
     except (struct.error, IndexError, KeyError) as e:

@@ -238,7 +238,12 @@ def jaccard_verify(
     tokens), never O(corpus tokens), never O(corpus^2).  A disjoint pair
     (zero shared tokens) is REPORTED with jaccard = 0.0, not dropped —
     callers can tell "verified, not a dup" from "never checked".
+
+    ``pairs`` is used four times below; it is pinned once with a lazy
+    ``localCheckpoint`` so its lineage (corpus scan, signatures, band
+    self-join) runs once instead of being re-planned at every use.
     """
+    pairs = pairs.localCheckpoint(eager=False)
     cand_ids = (
         pairs.select(F.col("doc_a").alias(id_col))
         .union(pairs.select(F.col("doc_b").alias(id_col)))

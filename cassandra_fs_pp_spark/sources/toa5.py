@@ -129,54 +129,6 @@ def read_toa5(
     return parsed
 
 
-def read_beadedstream_csv(
-    spark: SparkSession,
-    paths: list[str] | str,
-    *,
-    skiprows: int = 1,
-    ts_col: str = "TIMESTAMP",
-    ts_format: str = "yyyy-MM-dd HH:mm:ss",
-) -> DataFrame:
-    """S12 — BeadedStream DTC logger CSV (the reference's alternate format:
-    plain CSV, 1-2 junk lines before the header, timestamp index —
-    ``pp_dtcs.py:46-47``, ``investigate_2022_fs_data.py:26-34``).
-
-    Same distributed shape as :func:`read_toa5`: text scan + driver-side
-    header peek; the junk prologue is dropped by the data-shape predicate
-    (rows starting with a timestamp), so multi-file reads distribute freely.
-    """
-    if isinstance(paths, str):
-        paths = [paths]
-    head = _head_lines(paths[0], skiprows + 1, spark)
-    names = next(csv.reader([head[skiprows]]))
-    parts = [
-        f"`{n}` timestamp" if n == ts_col else f"`{n}` double" for n in names
-    ]
-    schema_ddl = ", ".join(parts)
-    txt = spark.read.text(paths)
-    # the ISO-shape prologue filter only applies when ts_format IS the
-    # ISO default — a non-ISO format (e.g. MM/dd/yyyy) would silently
-    # drop every data row; fall back to "starts with a digit" there
-    row_re = (
-        DATA_ROW_RE
-        if ts_format.startswith("yyyy-MM-dd")
-        else r'^"?\d'
-    )
-    rows = txt.filter(F.col("value").rlike(row_re))
-    parsed = rows.select(
-        F.from_csv(
-            "value",
-            schema_ddl,
-            {"nullValue": "NAN", "timestampFormat": ts_format, "emptyValue": ""},
-        ).alias("r")
-    ).select("r.*")
-    # non-ISO path: the header line also starts with a digit-free name,
-    # but junk rows that slip the looser filter parse to all-null; drop them
-    if row_re != DATA_ROW_RE:
-        parsed = parsed.where(F.col(ts_col).isNotNull())
-    return parsed
-
-
 def read_toa5_positions(
     spark: SparkSession, path: str, *, drop: tuple[str, ...] = ("RECORD",)
 ) -> "list[float]":

@@ -53,9 +53,6 @@ def main() -> int:
         bad = True
     bad = shadow_lint() or bad
     bad = plans_lint(qs) or bad
-    bad = sweep_lint(qs, osql) or bad
-    bad = variants_lint(qs) or bad
-    bad = calib_lint() or bad
     bad = id_magnitude_lint() or bad
     bad = reach_lint() or bad
     rows_only = qs - osql
@@ -88,149 +85,6 @@ def plans_lint(qs: set[str]) -> bool:
         bad = True
     print(f"PLANS.md audits {len(sections & qs)} of {len(qs)} queries")
     return bad
-
-
-def sweep_lint(qs: set[str], osql: set[str]) -> bool:
-    """Newest committed SWEEP_r*.json × registry cross-reference (VERDICT
-    r10 item 8): the end-of-round full oracle sweep artifact must name
-    every registry query (full oracles as ok, rows-only as rows_only) so
-    out-of-window correctness evidence is auditable at a glance."""
-    import glob
-    import json
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    # numeric round sort (ADVICE r11): lexicographic would pick SWEEP_r9
-    # over SWEEP_r11, or SWEEP_r99 over SWEEP_r100
-    sweeps = sorted(
-        glob.glob(os.path.join(root, "SWEEP_r*.json")),
-        key=lambda p: int(re.search(r"SWEEP_r(\d+)", p).group(1)),
-    )
-    if not sweeps:
-        print("sweep lint: no SWEEP_r*.json artifact yet")
-        return False  # advisory until the first artifact lands
-    newest = sweeps[-1]
-    data = json.load(open(newest))
-    swept = set(data.get("queries", {}))
-    missing = qs - swept
-    n_ok = data.get("n_ok")
-    n_fail = data.get("n_fail")
-    bad = False
-    if missing:
-        print(f"{os.path.basename(newest)} missing registry queries "
-              f"({len(missing)}): {sorted(missing)[:10]}…")
-        bad = True
-    if n_fail:
-        print(f"{os.path.basename(newest)} records {n_fail} FAILURES")
-        bad = True
-    print(f"sweep lint: {os.path.basename(newest)} names {len(swept & qs)} "
-          f"of {len(qs)} queries, {n_ok} ok / {n_fail} fail")
-
-    # SCALE.md sweep-paragraph staleness (VERDICT r15 item 7): a late
-    # patched-in query bumps the JSON counts but not the prose — require
-    # every SCALE.md sentence naming a sweep artifact to carry that
-    # artifact's own n_checked/n_ok numbers.
-    scale = open(os.path.join(root, "SCALE.md")).read()
-    for path in sweeps:
-        base = os.path.basename(path)
-        d = json.load(open(path))
-        nc, nk = d.get("n_checked"), d.get("n_ok")
-        for m in re.finditer(re.escape(base), scale):
-            # counts sentence = context mentions queries/checked/ok counts.
-            # Scan BOTH sides of the citation (ADVICE r16: '268 checked
-            # ... (`SWEEP_r16.json`)' phrases the counts BEFORE the
-            # citation, which an after-only window silently skipped),
-            # bounded by the neighboring artifact citations so a
-            # neighbor's numbers aren't credited to this one.
-            after = scale[m.end(): m.end() + 220].split("`SWEEP", 1)[0]
-            before = scale[max(0, m.start() - 160): m.start()]
-            if "SWEEP_r" in before:
-                before = before[
-                    before.rindex("SWEEP_r") + len("SWEEP_r"):
-                ]
-                # drop the previous citation's own tail (its filename
-                # suffix and any counts that sentence carried)
-                before = before.split("\n", 1)[-1] if "\n" in before else ""
-            ctx = before + " " + after
-            if not re.search(r"\d+\s*(queries|checked)\b", ctx):
-                continue  # a non-counts mention (e.g. tooling prose)
-            nums = set(re.findall(r"\d+", ctx))
-            if not (str(nc) in nums and str(nk) in nums):
-                print(f"SCALE.md paragraph citing {base} does not match "
-                      f"its counts ({nc} checked / {nk} ok): …{ctx[:120]}…")
-                bad = True
-    return bad
-
-
-def variants_lint(qs: set[str]) -> bool:
-    """>=8x sweep accounting, machine-asserted (VERDICT r11 item 5): the
-    pair-enumeration queries whose registry output is quadratic on the
-    replicated probe corpora each own a capped twin in
-    ``sweep_variants()`` — so 8x coverage closes to 249/249 as
-    checked-directly or checked-via-named-variant, never prose.  Also
-    cross-checks the newest committed VARIANTS8X_r*.json artifact (the
-    ``oracle_check.py --variants`` run on the 8x corpus): every variant
-    present and green."""
-    import glob
-    import json
-
-    sv = entrymod.sweep_variants()
-    bad = False
-    orphans = set(sv) - qs
-    if orphans:
-        print(f"sweep_variants for nonexistent queries: {sorted(orphans)}")
-        bad = True
-    for name, (fn, sql) in sv.items():
-        if not callable(fn) or not isinstance(sql, str) or "SELECT" not in sql:
-            print(f"sweep_variants[{name}]: malformed (callable, sql) pair")
-            bad = True
-    root = os.path.join(os.path.dirname(__file__), "..")
-    arts = sorted(
-        glob.glob(os.path.join(root, "VARIANTS8X_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
-    )
-    if not arts:
-        print(f"variants lint: {len(sv)} capped twins registered, no "
-              "VARIANTS8X artifact yet")
-        return bad
-    data = json.load(open(arts[-1]))
-    checked = data.get("queries", {})
-    for name in sv:
-        rec = checked.get(f"{name}__capped")
-        if rec is None:
-            print(f"{os.path.basename(arts[-1])} missing {name}__capped")
-            bad = True
-        elif rec.get("status") != "ok":
-            print(f"{os.path.basename(arts[-1])}: {name}__capped is "
-                  f"{rec.get('status')}")
-            bad = True
-    print(f"variants lint: {os.path.basename(arts[-1])} covers "
-          f"{len(checked)} capped twins for {len(sv)} registered")
-    return bad
-
-
-def calib_lint() -> bool:
-    """Calib-history discipline (VERDICT r11 item 8): the newest committed
-    BENCH_rN.json round must have a row in SCALE.md's cross-round
-    headline-wall table — so every round's wall lands in the drift-canary
-    context and a judge never reconstructs the history again."""
-    import glob
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    benches = sorted(
-        glob.glob(os.path.join(root, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
-    )
-    if not benches:
-        print("calib lint: no BENCH_r*.json yet")
-        return False
-    n = int(re.search(r"BENCH_r(\d+)", benches[-1]).group(1))
-    scale = open(os.path.join(root, "SCALE.md")).read()
-    if not re.search(rf"^\s*\| r{n}\b", scale, re.M):
-        print(f"calib lint: BENCH_r{n:02d}.json exists but SCALE.md's "
-              f"cross-round wall table has no | r{n} | row")
-        return True
-    print(f"calib lint: newest bench round r{n} present in SCALE.md table")
-    return False
 
 
 def id_magnitude_lint() -> bool:
@@ -335,11 +189,9 @@ REACH_ALLOW = frozenset({
     "encode_wav",  # builds the fixtures for multimodal.decode_wav
     # paper workflows not wired into SiteEngine or the CLI yet:
     "load_position_csv",  # S7: EC sensor position CSV
-    "read_beadedstream_csv",  # S12: BeadedStream DTC logger CSV
     "to_netcdf_long",  # K3: 2-D (time, sensor) NetCDF export
     "load_netcdf",  # S11: the reference plot_L2.py reading an L2 .nc
     "load_netcdf_long",  # S11: a 2-D (time, sensor) .nc as long rows
-    "load_netcdf_fleet",  # K3 read-back of a fleet of NetCDF products
     "render_depth_scatter",  # K4: depth-vs-time scatter plot
 })
 

@@ -7,8 +7,9 @@ Spark AND its ``oracle_sql()`` on DuckDB, then compares:
   * exact values (columns sorted by name, rows sorted by all columns),
     reporting per-column max abs diff for floats on mismatch.
 
-Usage: python scripts/oracle_check.py [query ...]
-Exit code 0 iff all checked queries match exactly.
+Usage: python scripts/oracle_check.py [--json=PATH] [query ...]
+Exit code 0 iff all checked queries match exactly; 2 on an unknown
+query name or option.
 """
 
 from __future__ import annotations
@@ -131,27 +132,21 @@ def main(argv: list[str]) -> int:
     # query, so out-of-window freshness is auditable at a glance instead
     # of re-derived from window history.
     json_path = None
-    variants = False
     rest = []
     for a in argv:
         if a.startswith("--json="):
             json_path = a.split("=", 1)[1]
-        elif a == "--variants":
-            # check the capped >=8x sweep twins (sweep_variants()) instead
-            # of the registry forms — the 5 pair queries whose registry
-            # output is quadratic on replicated probe corpora by design
-            variants = True
         else:
             rest.append(a)
     only = set(rest)
     report: dict[str, dict] = {}
-    if variants:
-        sv = entrymod.sweep_variants()
-        qs = {f"{k}__capped": fn for k, (fn, _sql) in sv.items()}
-        oracles = {f"{k}__capped": sql for k, (_fn, sql) in sv.items()}
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    # a misspelt name or flag would otherwise check nothing and pass
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries or options: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark("oracle_check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:

@@ -150,11 +150,11 @@ def test_local_table_plans_jvm_local_scan(spark):
 
 
 def test_oracle_check_comparator_catches_failure_classes():
-    """The sweep comparator is load-bearing (SWEEP artifacts gate
-    doc_check): pin that it flags each failure class the r11 sweeps
-    actually hit — row-count drift, float value drift (the round-tie
-    class), dtype-kind drift (int vs float), column-set drift — and
-    passes identical frames, including NaN==NaN."""
+    """The oracle comparator is load-bearing (perfbench's registry
+    digests are written only after it passes): pin that it flags each
+    failure class the r11 sweeps actually hit — row-count drift, float
+    value drift (the round-tie class), dtype-kind drift (int vs float),
+    column-set drift — and passes identical frames, including NaN==NaN."""
     import os
     import sys
 
@@ -179,6 +179,30 @@ def test_oracle_check_comparator_catches_failure_classes():
     assert any("dtype kind" in p for p in compare("kind", base, kinds))
     cols = base.rename(columns={"v": "w"})
     assert any("columns" in p for p in compare("cols", base, cols))
+
+
+def test_oracle_check_rejects_unknown_names_before_spark(monkeypatch, capsys):
+    """A misspelt query name or an unknown option selects no query; it
+    must fail instead of printing ALL GREEN, and before Spark starts."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0,
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "..", "scripts"
+        ),
+    )
+    import oracle_check
+
+    def no_spark(*a, **k):
+        raise AssertionError("oracle_check started Spark")
+
+    monkeypatch.setattr(oracle_check, "get_spark", no_spark)
+    assert oracle_check.main(["tpch_q1_typo"]) != 0
+    assert oracle_check.main(["--variants", "tpch_q1"]) != 0
+    err = capsys.readouterr().err
+    assert "tpch_q1_typo" in err and "--variants" in err
 
 
 def test_id_magnitude_lint_scanner():

@@ -362,70 +362,6 @@ def test_netcdf_long_roundtrip(spark, tmp_path):
             assert got[(t, s)] == pytest.approx(val, abs=SCALE_FACTOR / 2)
 
 
-def test_load_netcdf_fleet_distributed(spark, tmp_path):
-    """Distributed .nc ingestion: binaryFile ships bytes to executors
-    where the classic reader parses a directory holding a CDF-1 and a
-    CDF-2 file into the long fleet shape with CF unpacking; values match
-    per-file truths exactly and a non-record variable is left out."""
-    from cassandra_fs_pp_spark.sources.netcdf import load_netcdf_fleet
-
-    d = tmp_path / "fleet"
-    d.mkdir()
-    tvals = np.array([0.0, 3600.0, 7200.0], dtype="float64")
-    packed = np.array([1234, -9999, 5678], dtype="int32")
-    write_netcdf3(
-        str(d / "st_a.nc"),
-        {"time": None},
-        [
-            Nc3Variable(
-                "time", ("time",), tvals,
-                {"units": "seconds since 2024-01-01 00:00:00"},
-            ),
-            Nc3Variable(
-                "t107", ("time",), packed,
-                {"scale_factor": 0.001, "_FillValue": -9999},
-            ),
-        ],
-    )
-    batt = np.arange(24, dtype="int32") + 120
-    t_air = np.linspace(-5.0, 3.0, 24)
-    write_netcdf3(
-        str(d / "st_b.nc"),
-        {"time": None, "sensor": 2},
-        [
-            Nc3Variable(
-                "time", ("time",), np.arange(24, dtype="float64"),
-                {"units": "hours since 2024-01-01 00:00:00"},
-            ),
-            Nc3Variable("batt", ("time",), batt),
-            Nc3Variable("t_air", ("time",), t_air),
-            Nc3Variable("depth", ("sensor",), np.array([0.5, 1.0])),
-        ],
-        version=2,
-    )
-    with open(d / "st_b.nc", "rb") as f:
-        assert f.read(4) == b"CDF\x02"
-
-    df = load_netcdf_fleet(spark, str(d / "*.nc"))
-    rows = df.collect()
-    got = {
-        (r["src_file"], r["var"], r["time"]): r["value"] for r in rows
-    }
-    base = dt.datetime(2024, 1, 1)
-    hour = dt.timedelta(hours=1)
-    # CDF-1: packed var unpacks, fill -> null
-    assert got[("st_a.nc", "t107", base)] == pytest.approx(1.234)
-    assert got[("st_a.nc", "t107", base + hour)] is None
-    assert got[("st_a.nc", "t107", base + 2 * hour)] == pytest.approx(5.678)
-    # CDF-2: plain int and float vars, decoded executor-side
-    assert got[("st_b.nc", "batt", base)] == 120.0
-    assert got[("st_b.nc", "batt", base + 7 * hour)] == float(batt[7])
-    assert got[("st_b.nc", "t_air", base + 23 * hour)] == t_air[23]
-    assert len(rows) == 3 + 2 * 24
-    assert {r["var"] for r in rows} == {"t107", "batt", "t_air"}
-    assert {r["src_file"] for r in rows} == {"st_a.nc", "st_b.nc"}
-
-
 def test_load_netcdf_cf_unit_spellings(spark, tmp_path):
     """CF epoch units beyond 'seconds/days/hours': minutes and
     milliseconds (and singular spellings) decode to the same instants."""
@@ -457,13 +393,10 @@ def test_load_netcdf_cf_unit_spellings(spark, tmp_path):
 
 def test_load_netcdf_add_offset_and_unit_errors(spark, tmp_path):
     """ADVICE r9: CF unpacking applies add_offset (raw*scale+offset,
-    _FillValue -> null) on every load path; an unknown CF time unit
+    _FillValue -> null); an unknown CF time unit
     raises a named ValueError, not a bare KeyError; 'ms'/'usec'
     spellings decode."""
-    from cassandra_fs_pp_spark.sources.netcdf import (
-        load_netcdf,
-        load_netcdf_fleet,
-    )
+    from cassandra_fs_pp_spark.sources.netcdf import load_netcdf
 
     path = str(tmp_path / "packed.nc")
     write_netcdf3(
@@ -494,16 +427,6 @@ def test_load_netcdf_add_offset_and_unit_errors(spark, tmp_path):
         base + dt.timedelta(seconds=s) for s in (0, 1, 2)
     ]
     assert [r["t_air"] for r in rows] == [
-        pytest.approx(2.1),
-        None,
-        pytest.approx(2.3),
-    ]
-    # fleet path: same unpacking, vectorized
-    fleet = sorted(
-        load_netcdf_fleet(spark, str(tmp_path / "*.nc")).collect(),
-        key=lambda r: r["time"],
-    )
-    assert [r["value"] for r in fleet] == [
         pytest.approx(2.1),
         None,
         pytest.approx(2.3),

@@ -164,10 +164,32 @@ def test_minhash_lsh_bands_without_aggregation(spark):
     """dedup_minhash_lsh: candidate pairs band the wide signatures with
     plain column concats and one stack (``banded_from_wide``), so no
     per-(doc, band) ``collect_list`` aggregation sits between the
-    signature aggregate and the band self-join."""
-    plan = _formatted_plan(entrymod.queries()["dedup_minhash_lsh"](spark, SF))
+    signature aggregate and the band self-join.  Asserted on the pairs'
+    own plan, built as the query builds it: the query's plan reads the
+    pairs from a checkpoint."""
+    corpus = entrymod._doc_corpus_with_near_dups(spark, SF)
+    k = entrymod.MINHASH_K
+    sigs = entrymod.minhash_signatures_wide(corpus, num_hashes=k)
+    pairs = entrymod.lsh_candidate_pairs(
+        sigs, num_hashes=k, bands=entrymod.MINHASH_BANDS
+    )
+    plan = _formatted_plan(pairs)
+    assert _n(plan, "Scan parquet") > 0, plan  # the banding lineage itself
+    assert _n(plan, "HashAggregate") > 0, plan  # the signature aggregate
     assert "collect_list" not in plan, plan
     assert _n(plan, "ObjectHashAggregate") == 0, plan
+
+
+def test_minhash_lsh_plans_candidate_pairs_once(spark):
+    """jaccard_verify pins its candidate pairs (lazy ``localCheckpoint``):
+    dedup_minhash_lsh's plan reads them from the checkpoint instead of
+    re-planning the corpus scans, signatures and band self-join at each
+    of their four uses (80 parquet scans before the pin).  What remains
+    is the candidate documents' token frame: 2 corpus scans at each of
+    its 4 uses."""
+    plan = _formatted_plan(entrymod.queries()["dedup_minhash_lsh"](spark, SF))
+    assert "ExistingRDD" in plan, plan
+    assert _n(plan, "Scan parquet") <= 8, plan
 
 
 def test_semantic_dedup_deskewed_rep_attach(spark):

@@ -478,30 +478,6 @@ def test_encode_fixed_point(spark):
     assert vals == {(1234, -9999), (-9999, 2000)}
 
 
-# --------------------------------------------------------------------------- #
-# S12 BeadedStream CSV variant
-# --------------------------------------------------------------------------- #
-
-
-def test_beadedstream_csv(spark, tmp_path):
-    from cassandra_fs_pp_spark.sources.toa5 import read_beadedstream_csv
-
-    f = tmp_path / "dtc.csv"
-    f.write_text(
-        "exported by beadedstream v2\n"
-        "TIMESTAMP,0.05 m,0.35 m,0.65 m\n"
-        "2022-04-01 00:00:00,-8.0,-9.5,NAN\n"
-        "2022-04-01 01:00:00,-7.9,-9.4,-10.1\n"
-    )
-    df = read_beadedstream_csv(spark, str(f), skiprows=1)
-    assert df.columns == ["TIMESTAMP", "0.05 m", "0.35 m", "0.65 m"]
-    rows = df.orderBy("TIMESTAMP").collect()
-    assert len(rows) == 2
-    assert rows[0]["0.05 m"] == -8.0
-    assert rows[0]["0.65 m"] is None
-    assert df.schema["TIMESTAMP"].dataType.typeName() == "timestamp"
-
-
 def test_l1_csv_roundtrip(spark, l1, tmp_path):
     """K1 write -> S4 re-read preserves rows, columns, timestamps."""
     from cassandra_fs_pp_spark.plans.levels import load_level1_csv
