@@ -6100,8 +6100,7 @@ def mm_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                         (8 * (1 + int(k) % 3), 16),
                         2 * (int(k) % 128),
                         dtype=_np.uint8,
-                    ),
-                    quality=50,
+                    )
                 )
                 for k in pdf["doc_id"]
             ]

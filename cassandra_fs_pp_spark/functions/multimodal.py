@@ -8,19 +8,23 @@ row-at-a-time Python, and batch shape is controlled by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set in session.tune) so a
 batch of ~100 MB payloads can't OOM an executor.
 
-Wire format — the deterministic FAKE codec
-------------------------------------------
-The container environment has no image/audio libraries (no PIL/cv2/librosa),
-so the *decode* of real formats is stubbed (:func:`decode_real_image`), and
-the engine ships a self-describing little-endian fake format that exercises
-ALL the real plumbing (binary payloads, header parse, pixel math, frame
-explode) with pure numpy:
+Wire formats
+------------
+The engine decodes the media it encodes, with stdlib zlib + numpy and no
+imaging or audio library; :func:`decode_real_image` dispatches on the magic
+bytes, and any other format raises ``ValueError``, as corrupt input does:
 
-* ``FIMG`` | u16 width | u16 height | u8 channels | pixels (w*h*c bytes,
-  row-major)
-* ``FVID`` | u16 n_frames | u16 width | u16 height | u8 channels | frames
-  (n_frames consecutive FIMG pixel planes)
-* ``FAUD`` | u32 n_samples | u16 sample_rate_hz | samples (n int16 LE)
+* PNG — :func:`encode_png` (8-bit, filter 0, not interlaced; also the
+  plot format of ``plots.py``) and the :func:`decode_png` that reads it back;
+* JPEG — grayscale baseline, ``jpeg.py``;
+* the deterministic FAKE codec, a self-describing little-endian format
+  that exercises the plumbing (binary payloads, header parse, pixel math,
+  frame explode):
+  * ``FIMG`` | u16 width | u16 height | u8 channels | pixels (w*h*c
+    bytes, row-major)
+  * ``FVID`` | u16 n_frames | u16 width | u16 height | u8 channels |
+    frames (n_frames consecutive FIMG pixel planes)
+  * ``FAUD`` | u32 n_samples | u16 sample_rate_hz | samples (n int16 LE)
 
 Deterministic generation: pixel ``i`` of item ``k`` is ``(k + i) % 256``;
 audio sample ``i`` is ``((k * 7 + i * 3) % 512) - 256`` — closed forms a SQL
@@ -100,25 +104,39 @@ def encode_fake_audio(k: int, n_samples: int, sample_rate: int = 16000) -> bytes
     return AUD_MAGIC + struct.pack("<IH", n_samples, sample_rate) + s.tobytes()
 
 
+_HEADERS = {IMG_MAGIC: "<HHB", VID_MAGIC: "<HHHB", AUD_MAGIC: "<IH"}
+
+
+def _header(payload: bytes, magic: bytes) -> tuple[int, ...]:
+    """The fixed header fields after ``magic``. A payload too short to hold
+    them is corrupt input: ``ValueError``, not a leaked ``struct.error``."""
+    if payload[:4] != magic:
+        raise ValueError(f"not a {magic.decode()} payload")
+    fmt = _HEADERS[magic]
+    if len(payload) < 4 + struct.calcsize(fmt):
+        raise ValueError(f"truncated {magic.decode()} header ({len(payload)} bytes)")
+    return struct.unpack_from(fmt, payload, 4)
+
+
 def decode_meta(payload: bytes) -> dict:
     """Parse the typed header of any FAKE payload -> MEDIA_META dict."""
     magic = payload[:4]
     if magic == IMG_MAGIC:
-        w, h, c = struct.unpack_from("<HHB", payload, 4)
+        w, h, c = _header(payload, magic)
         return {
             "kind": "image", "width": w, "height": h, "channels": c,
             "n_frames": None, "n_samples": None, "sample_rate": None,
             "n_bytes": len(payload),
         }
     if magic == VID_MAGIC:
-        nf, w, h, c = struct.unpack_from("<HHHB", payload, 4)
+        nf, w, h, c = _header(payload, magic)
         return {
             "kind": "video", "width": w, "height": h, "channels": c,
             "n_frames": nf, "n_samples": None, "sample_rate": None,
             "n_bytes": len(payload),
         }
     if magic == AUD_MAGIC:
-        n, sr = struct.unpack_from("<IH", payload, 4)
+        n, sr = _header(payload, magic)
         return {
             "kind": "audio", "width": None, "height": None, "channels": None,
             "n_frames": None, "n_samples": n, "sample_rate": sr,
@@ -129,21 +147,22 @@ def decode_meta(payload: bytes) -> dict:
 
 def decode_image_pixels(payload: bytes) -> np.ndarray:
     """FIMG payload -> (height, width, channels) uint8 array."""
-    if payload[:4] != IMG_MAGIC:
-        raise ValueError("not a FIMG payload")
-    w, h, c = struct.unpack_from("<HHB", payload, 4)
+    w, h, c = _header(payload, IMG_MAGIC)
     px = np.frombuffer(payload, dtype=np.uint8, offset=9)
     return px.reshape(h, w, c)
 
 
 def decode_video_frames(payload: bytes) -> Iterator[tuple[int, bytes]]:
     """FVID payload -> yields (frame_index, FIMG payload) per frame."""
-    if payload[:4] != VID_MAGIC:
-        raise ValueError("not a FVID payload")
-    nf, w, h, c = struct.unpack_from("<HHHB", payload, 4)
-    head = IMG_MAGIC + struct.pack("<HHB", w, h, c)
+    nf, w, h, c = _header(payload, VID_MAGIC)
     n = w * h * c
     base = 11
+    if len(payload) != base + nf * n:
+        raise ValueError(
+            f"FVID header promises {nf} frames of {n} bytes; "
+            f"payload holds {len(payload) - base}"
+        )
+    head = IMG_MAGIC + struct.pack("<HHB", w, h, c)
     for f in range(nf):
         yield f, head + payload[base + f * n : base + (f + 1) * n]
 
@@ -153,11 +172,11 @@ _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples/pixel
 
 
 def decode_png(payload: bytes) -> np.ndarray:
-    """Pure-python PNG decode (8-bit gray/RGB/gray+alpha/RGBA,
-    sequential OR Adam7-interlaced) from the public PNG spec — stdlib
-    zlib + numpy, no imaging library. Returns (h, w, channels) uint8
-    (channels axis kept even for grayscale).  Corrupt/truncated input
-    raises ValueError — one exception type for pipelines to catch."""
+    """Decode the PNGs :func:`encode_png` writes (8-bit gray, gray+alpha,
+    RGB or RGBA; not interlaced; every scanline filter 0) with stdlib zlib
+    + numpy. Returns (h, w, channels) uint8 (channels axis kept even for
+    grayscale). Corrupt input and every other PNG variant raise
+    ValueError — one exception type for pipelines to catch."""
     import zlib
 
     try:
@@ -181,9 +200,10 @@ def _decode_png(payload: bytes) -> np.ndarray:
             w, h, depth, color, _comp, _filt, interlace = struct.unpack(
                 ">IIBBBBB", data
             )
-            if depth != 8 or color not in _PNG_CHANNELS or interlace > 1:
-                raise NotImplementedError(
-                    f"PNG depth={depth} color={color} interlace={interlace}"
+            if depth != 8 or color not in _PNG_CHANNELS or interlace:
+                raise ValueError(
+                    f"unsupported PNG depth={depth} color={color} "
+                    f"interlace={interlace}"
                 )
             c = _PNG_CHANNELS[color]
         elif ctype == b"IDAT":
@@ -193,69 +213,11 @@ def _decode_png(payload: bytes) -> np.ndarray:
         pos += 12 + length
     if w is None:
         raise ValueError("PNG without IHDR")
-    raw = zlib.decompress(bytes(idat))
-    if not interlace:
-        out = _png_unfilter(raw, 0, h, w * c, c)[0]
-        return out.reshape(h, w, c)
-    # Adam7 (interlace=1): seven independently-filtered sub-images,
-    # scattered onto the full grid by the fixed (x0, dx, y0, dy) lattice.
-    full = np.zeros((h, w, c), dtype=np.uint8)
-    pos2 = 0
-    for x0, dx, y0, dy in _ADAM7:
-        pw = (w - x0 + dx - 1) // dx
-        ph = (h - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        sub, pos2 = _png_unfilter(raw, pos2, ph, pw * c, c)
-        full[y0::dy, x0::dx] = sub.reshape(ph, pw, c)
-    return full
-
-
-_ADAM7 = [
-    (0, 8, 0, 8), (4, 8, 0, 8), (0, 4, 4, 8), (2, 4, 0, 4),
-    (0, 2, 2, 4), (1, 2, 0, 2), (0, 1, 1, 2),
-]
-
-
-def _png_unfilter(
-    raw: bytes, offset: int, h: int, stride: int, c: int
-) -> tuple[np.ndarray, int]:
-    """Undo per-row PNG filtering for one (sub-)image of ``h`` rows of
-    ``stride`` bytes starting at ``offset``; returns (rows, next offset)."""
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        f = raw[offset + y * (stride + 1)]
-        line = np.frombuffer(
-            raw,
-            dtype=np.uint8,
-            count=stride,
-            offset=offset + y * (stride + 1) + 1,
-        ).copy()
-        if f == 0:
-            cur = line
-        elif f == 2:  # Up
-            cur = line + prev  # uint8 wraps mod 256, per spec
-        elif f in (1, 3, 4):  # Sub / Average / Paeth need left-to-right
-            cur = line
-            for x in range(stride):
-                a = int(cur[x - c]) if x >= c else 0
-                b = int(prev[x])
-                if f == 1:
-                    cur[x] = (cur[x] + a) & 0xFF
-                elif f == 3:
-                    cur[x] = (cur[x] + ((a + b) >> 1)) & 0xFF
-                else:
-                    cc = int(prev[x - c]) if x >= c else 0
-                    p = a + b - cc
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                    pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                    cur[x] = (cur[x] + pr) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter {f}")
-        out[y] = cur
-        prev = out[y]
-    return out, offset + h * (stride + 1)
+    rows = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
+    rows = rows.reshape(h, w * c + 1)  # ValueError on a short/long stream
+    if rows[:, 0].any():
+        raise ValueError(f"unsupported PNG filter {int(rows[:, 0].max())}")
+    return rows[:, 1:].reshape(h, w, c).copy()
 
 
 def encode_png(img: np.ndarray) -> bytes:
@@ -286,288 +248,19 @@ def encode_png(img: np.ndarray) -> bytes:
     )
 
 
-def _tiff_lzw_decode(data: bytes) -> bytes:
-    """TIFF-flavor LZW (spec §13): MSB-first variable-width codes 9->12
-    bits, ClearCode 256 / EOI 257, and the TIFF "early change" — the code
-    width bumps when the table reaches 2^n - 1, one entry EARLIER than
-    vanilla LZW."""
-    out = bytearray()
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    width, buf, nbits = 9, 0, 0
-    prev: bytes | None = None
-    for byte in data:
-        buf = (buf << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            code = (buf >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            if code == 256:  # Clear
-                table = table[:258]
-                width, prev = 9, None
-                continue
-            if code == 257:  # EOI
-                return bytes(out)
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            else:  # KwKwK case
-                entry = prev + prev[:1]
-                table.append(entry)
-            out += entry
-            prev = entry
-            # TIFF early change, decoder side: the decoder's table lags
-            # the encoder's by one entry (it appends the PREVIOUS word's
-            # entry on each read), so the encoder's "bump when the next
-            # assigned code is 2^w - 1" lands here at len == 2^w - 2.
-            # The old == 2^w - 1 check was one code late — unexercised
-            # until a >510-entry stream (found by the 768-byte tile
-            # fixtures; the earlier strip fixtures never grew the table
-            # past the 9-bit boundary).
-            if len(table) == (1 << width) - 2 and width < 12:
-                width += 1
-    return bytes(out)
-
-
-def _packbits_decode(data: bytes, expected: int) -> bytes:
-    """Apple PackBits (TIFF compression 32773)."""
-    out = bytearray()
-    i = 0
-    while i < len(data) and len(out) < expected:
-        n = data[i]
-        i += 1
-        if n < 128:
-            out += data[i : i + n + 1]
-            i += n + 1
-        elif n > 128:
-            out += bytes([data[i]]) * (257 - n)
-            i += 1
-        # n == 128: no-op
-    return bytes(out)
-
-
-def decode_tiff(payload: bytes) -> np.ndarray:
-    """From-spec TIFF decode (TIFF 6.0): both byte orders, strip- AND
-    tile-organized (§15) 8- or 16-bit, Compression 1 (none), 5 (LZW, with
-    Predictor 2 horizontal differencing — restarting per tile row in
-    tiled files) and 32773 (PackBits); photometrics BlackIsZero, RGB,
-    WhiteIsZero (inverted on decode), and palette-color (expanded through
-    the 16-bit ColorMap to RGB); PlanarConfiguration 2 reassembles its
-    per-channel planes in both strip and tile organization. Anything
-    outside (exotic compressions/photometrics) raises
-    NotImplementedError -> optional Pillow fallback. 16-bit output comes
-    back as native-order uint16."""
-    if payload[:4] not in (b"II*\x00", b"MM\x00*"):
-        raise ValueError("not a TIFF payload")
-    bo = "<" if payload[:2] == b"II" else ">"
-
-    def u16(off: int) -> int:
-        return struct.unpack_from(bo + "H", payload, off)[0]
-
-    def u32(off: int) -> int:
-        return struct.unpack_from(bo + "I", payload, off)[0]
-
-    ifd = u32(4)
-    n_entries = u16(ifd)
-    tags: dict[int, list[int]] = {}
-    for i in range(n_entries):
-        e = ifd + 2 + 12 * i
-        tag, typ, cnt = u16(e), u16(e + 2), u32(e + 4)
-        size = {1: 1, 3: 2, 4: 4}.get(typ)
-        if size is None:  # RATIONAL etc. — not needed for baseline strips
-            continue
-        off = e + 8 if size * cnt <= 4 else u32(e + 8)
-        rd = {1: lambda o: payload[o], 3: u16, 4: u32}[typ]
-        tags[tag] = [rd(off + j * size) for j in range(cnt)]
-
-    w, h = tags[256][0], tags[257][0]
-    spp = tags.get(277, [1])[0]
-    bps = tags.get(258, [8])
-    if any(b != bps[0] for b in bps) or bps[0] not in (8, 16):
-        raise NotImplementedError(
-            f"TIFF BitsPerSample {bps} unsupported (8/16-bit only)"
-        )
-    dt = np.dtype(np.uint8) if bps[0] == 8 else np.dtype(bo + "u2")
-    item = dt.itemsize
-    photometric = tags.get(262, [1])[0]
-    planar = tags.get(284, [1])[0]
-    if photometric not in (0, 1, 2, 3):
-        raise NotImplementedError(
-            f"TIFF photometric {photometric} unsupported"
-        )
-    if photometric == 3 and (320 not in tags or spp != 1):
-        raise NotImplementedError("palette TIFF without a valid ColorMap")
-    if planar not in (1, 2):
-        raise NotImplementedError(f"TIFF PlanarConfiguration {planar}")
-    comp = tags.get(259, [1])[0]
-    predictor = tags.get(317, [1])[0]
-
-    def unblock(blob: bytes, n_px: int) -> bytes:
-        if comp == 1:
-            return blob[: n_px * item]
-        if comp == 5:
-            return _tiff_lzw_decode(blob)[: n_px * item]
-        if comp == 32773:
-            return _packbits_decode(blob, n_px * item)
-        raise NotImplementedError(f"TIFF compression {comp} unsupported")
-
-    if 322 in tags:  # tile-organized (TIFF 6.0 §15)
-        tw, tl = tags[322][0], tags[323][0]
-        out = np.zeros((h, w, spp), dtype=dt)
-        ntx, nty = (w + tw - 1) // tw, (h + tl - 1) // tl
-        # PlanarConfiguration=2: tile list is plane-major — each channel's
-        # full tile grid before the next channel's; per-tile pixels carry
-        # one sample
-        tsp = spp if planar == 1 else 1  # samples per tile pixel
-        tpp = ntx * nty  # tiles per plane
-        for idx, (off, cnt) in enumerate(zip(tags[324], tags[325])):
-            plane, tidx = divmod(idx, tpp) if planar == 2 else (None, idx)
-            ty, tx = divmod(tidx, ntx)
-            blob = unblock(bytes(payload[off : off + cnt]), tl * tw * tsp)
-            tile = np.frombuffer(blob, dt, count=tl * tw * tsp).reshape(
-                tl, tw, tsp
-            )
-            if predictor == 2:  # differencing restarts per tile row
-                tile = np.cumsum(tile.astype(np.uint64), axis=1).astype(dt)
-            ys, xs = ty * tl, tx * tw
-            hh, ww = min(tl, h - ys), min(tw, w - xs)
-            if planar == 2:
-                out[ys : ys + hh, xs : xs + ww, plane] = tile[:hh, :ww, 0]
-            else:
-                out[ys : ys + hh, xs : xs + ww] = tile[:hh, :ww]
-        img = out
-    else:  # strip-organized
-        rows_per_strip = tags.get(278, [h])[0]
-        offsets, counts = tags[273], tags[279]
-        # PlanarConfiguration=2 (TIFF 6.0 §official): the strip list is
-        # plane-major — all of channel 0's strips, then channel 1's, ...
-        spc = spp if planar == 1 else 1  # samples per strip row
-        planes = 1 if planar == 1 else spp
-        per_plane = len(offsets) // planes
-        plane_arrays = []
-        for p in range(planes):
-            raw = bytearray()
-            for off, cnt in zip(
-                offsets[p * per_plane : (p + 1) * per_plane],
-                counts[p * per_plane : (p + 1) * per_plane],
-            ):
-                rows = min(rows_per_strip, h - len(raw) // (w * spc * item))
-                raw += unblock(bytes(payload[off : off + cnt]), rows * w * spc)
-            plane_arrays.append(
-                np.frombuffer(bytes(raw[: h * w * spc * item]), dt).reshape(
-                    h, w, spc
-                )
-            )
-        img = (
-            plane_arrays[0]
-            if planes == 1
-            else np.concatenate(plane_arrays, axis=2)
-        )
-        if predictor == 2:
-            img = np.cumsum(img.astype(np.uint64), axis=1).astype(dt)
-    img = img.astype(img.dtype.newbyteorder("="), copy=False)
-    if photometric == 0:  # WhiteIsZero: invert to BlackIsZero convention
-        img = ((1 << bps[0]) - 1 - img.astype(np.int64)).astype(dt)
-    elif photometric == 3:  # palette indices -> RGB via the 16-bit ColorMap
-        cmap = np.asarray(tags[320], dtype=np.uint32)
-        n = 1 << bps[0]
-        idx = img[:, :, 0].astype(np.int64)
-        img = np.stack(
-            [(cmap[plane * n + idx] >> 8).astype(np.uint8) for plane in range(3)],
-            axis=2,
-        )
-        return img
-    return img[:, :, 0] if spp == 1 else img
-
-
-def encode_tiff(img: np.ndarray) -> bytes:
-    """Minimal from-spec TIFF encode (little-endian, uncompressed, one
-    strip) of an (h, w[, c]) uint8 array — the interchange twin of
-    :func:`encode_png` for TIFF-speaking tools."""
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, c = img.shape
-    data = img.tobytes()
-    # TIFF 6.0 §18: gray+alpha is photometric 1 + ExtraSamples, RGBA is
-    # photometric 2 + ExtraSamples; without tag 338 the extra channel is
-    # nonconforming and strict readers may reject or misread it.
-    photometric = 1 if c <= 2 else 2
-    has_alpha = c in (2, 4)
-    n = 10 + (1 if has_alpha else 0)
-    ifd_off = 8
-    bps_off = ifd_off + 2 + n * 12 + 4
-    data_off = bps_off + 2 * c
-
-    def entry(tag: int, typ: int, cnt: int, val: int) -> bytes:
-        return struct.pack("<HHII", tag, typ, cnt, val)
-
-    entries = [
-        entry(256, 4, 1, w),
-        entry(257, 4, 1, h),
-        (
-            entry(258, 3, c, bps_off)
-            if c > 2
-            else entry(258, 3, c, 8 | (8 << 16) if c == 2 else 8)
-        ),
-        entry(259, 3, 1, 1),
-        entry(262, 3, 1, photometric),
-        entry(273, 4, 1, data_off),
-        entry(277, 3, 1, c),
-        entry(278, 4, 1, h),
-        entry(279, 4, 1, len(data)),
-        entry(284, 3, 1, 1),  # chunky planar config
-    ]
-    if has_alpha:
-        entries.append(entry(338, 3, 1, 2))  # unassociated alpha
-    entries.sort(key=lambda e: struct.unpack("<H", e[:2])[0])
-    ifd = struct.pack("<H", n) + b"".join(entries) + struct.pack("<I", 0)
-    bps_arr = struct.pack(f"<{c}H", *([8] * c))
-    return b"II*\x00" + struct.pack("<I", ifd_off) + ifd + bps_arr + data
-
-
 def decode_real_image(payload: bytes) -> np.ndarray:
-    """Decode a REAL image payload: PNG (sequential or Adam7), baseline +
-    progressive + 12-bit JPEG, strip/tiled 8/16-bit (incl. palette,
-    WhiteIsZero, planar) TIFF and lossless WebP (VP8L) via the built-in
-    from-spec pure-python decoders (no imaging library needed); FIMG via
-    the fake codec; anything else (lossy WebP, arithmetic
-    JPEG, JPEG-in-TIFF, ...) via optional Pillow when present.
-    Animated LOSSLESS WebP composes via webp.decode_webp_frames (first
-    frame here)."""
+    """Decode an image payload the engine wrote: PNG (:func:`encode_png`),
+    grayscale baseline JPEG (``jpeg.encode_jpeg``) or FIMG (the fake
+    codec). Any other format raises ValueError, as corrupt input does."""
     if payload[:8] == PNG_SIG:
         return decode_png(payload)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        try:
-            return decode_tiff(payload)
-        except NotImplementedError:
-            pass  # JPEG-in-TIFF / exotic compression or photometric -> Pillow below
     if payload[:4] == IMG_MAGIC:
         return decode_image_pixels(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from ..webp import decode_webp
-
-        try:
-            return decode_webp(payload)
-        except NotImplementedError:
-            pass  # lossy VP8 (incl. lossy animation frames) -> Pillow below
     if payload[:2] == b"\xff\xd8":
         from ..jpeg import decode_jpeg
 
-        try:
-            return decode_jpeg(payload)
-        except NotImplementedError:
-            pass  # 12-bit / CMYK / arithmetic -> Pillow fallback below
-    try:
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - optional dep
-        raise NotImplementedError(
-            "this image format needs the optional 'Pillow' dependency "
-            "(PNG, baseline JPEG and FIMG decode built-in)"
-        ) from e
-    import io
-
-    return np.asarray(Image.open(io.BytesIO(payload)))
+        return decode_jpeg(payload)
+    raise ValueError(f"unsupported image format {payload[:12]!r}")
 
 
 # --------------------------------------------------------------------------- #
@@ -697,66 +390,12 @@ def video_frame_sample(
     return df.mapInPandas(frames, schema=schema)
 
 
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """From-spec RIFF/WAVE PCM decode -> ((n_samples, n_channels) int16
-    array, sample_rate). 8-bit (unsigned, rescaled to int16) and 16-bit
-    integer PCM; float/ADPCM formats raise NotImplementedError."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAVE payload")
-    fmt = data = None
-    pos = 12
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("WAVE missing fmt/data chunk")
-    audio_format, ch, rate, _br, _ba, bps = struct.unpack_from("<HHIIHH", fmt, 0)
-    if audio_format != 1:
-        raise NotImplementedError(f"WAVE format {audio_format} (non-PCM)")
-    if bps == 16:
-        s = np.frombuffer(data, dtype="<i2")
-    elif bps == 8:
-        s = ((np.frombuffer(data, dtype=np.uint8).astype(np.int16) - 128) << 8)
-    else:
-        raise NotImplementedError(f"{bps}-bit WAVE unsupported")
-    return s.reshape(-1, ch), rate
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
-    """(n_samples,) or (n_samples, n_channels) int16 -> 16-bit PCM WAVE
-    bytes — the interchange twin of :func:`decode_wav`."""
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    data = samples.astype("<i2").tobytes()
-    fmt = struct.pack(
-        "<HHIIHH", 1, ch, sample_rate, sample_rate * ch * 2, ch * 2, 16
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
 def decode_real_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    """Real-audio twin of :func:`decode_real_image`: WAVE via the
-    built-in from-spec PCM decoder, FAUD via the fake codec. Returns
-    ((n_samples, n_channels) int16, sample_rate)."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload)
-    if payload[:4] == AUD_MAGIC:
-        n, sr = struct.unpack_from("<IH", payload, 4)
-        s = np.frombuffer(payload, dtype="<i2", offset=10, count=n)
-        return s[:, None], sr
-    raise ValueError(f"unknown audio magic {payload[:4]!r}")
+    """FAUD payload -> ((n_samples, 1) int16, sample_rate). Any other
+    format raises ValueError, as in :func:`decode_real_image`."""
+    n, sr = _header(payload, AUD_MAGIC)
+    s = np.frombuffer(payload, dtype="<i2", offset=10, count=n)
+    return s[:, None], sr
 
 
 def audio_stats(
@@ -764,9 +403,8 @@ def audio_stats(
     id_col: str,
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Decode audio (fake FAUD or real WAVE, via
-    :func:`decode_real_audio`) -> (id, n_samples, sample_rate, mean_amp,
-    rms) over all channels."""
+    """Decode FAUD audio (:func:`decode_real_audio`) -> (id, n_samples,
+    sample_rate, mean_amp, rms)."""
     # r17 (guide §4): only (id, payload) cross the JVM->Python boundary —
     # a wider caller frame would otherwise ship every column through Arrow.
     df = df.select(id_col, payload_col)

@@ -1,27 +1,21 @@
-"""Pure-python baseline JPEG codec, written from the public ITU-T T.81
-(ISO/IEC 10918-1) specification — no Pillow, no scipy.
+"""Pure-python grayscale baseline JPEG codec, written from the public
+ITU-T T.81 (ISO/IEC 10918-1) specification — no Pillow, no scipy.
 
-Scope: baseline sequential DCT, 8-bit, Huffman entropy coding.
-* decoder: grayscale and YCbCr (any sampling factors up to 2×2 —
-  4:4:4 / 4:2:2 / 4:2:0), restart markers, APPn/COM skip;
-* encoder: grayscale or YCbCr with 4:4:4 or 4:2:0 subsampling, spec
-  Annex K quantization + Huffman tables (the public example tables),
-  quality scaling per the common IJG percent convention.
+Scope: what the engine writes and reads back — baseline sequential DCT,
+8-bit, one component (grayscale), Huffman entropy coding, no restart
+intervals.
+* encoder: fixed at IJG quality 50, i.e. the spec's Annex K luminance
+  quantization and Huffman tables (the public example tables), unscaled;
+* decoder: any stream of that shape, whatever tables it carries. Every
+  other JPEG (progressive, 12-bit, colour, restart markers, arithmetic
+  coding, ...) raises ``ValueError``, as corrupt input does.
 
-Used by :mod:`.functions.multimodal` as the real-decode path for
+Used by :mod:`.functions.multimodal` as the decode path for
 ``image/jpeg`` payloads (the reference has no image pipeline at all —
 this is beyond-parity capability for multimodal training-data columns).
-Flat 8×8-aligned grayscale frames with even sample values round-trip
-EXACTLY (the DC coefficient 8·(v−128) is a multiple of the DC quantum
-16), which is what the correctness-gate query relies on.
-
-Why arithmetic coding stays gated: T.81's QM-coder depends on the
-113-row Qe state-transition table (Table D.3). In this container there
-is no third-party arithmetic-JPEG artifact or decoder to validate a
-transcription against, and a from-spec encoder+decoder PAIR sharing one
-mistranscribed table would round-trip green while misreading every real
-file — a self-consistent wrong codec is worse than an honest gate. The
-deliberately-out-of-scope variants route to optional Pillow instead.
+Flat 8×8-aligned frames with even sample values round-trip EXACTLY (the
+DC coefficient 8·(v−128) is a multiple of the DC quantum 16), which is
+what the ``mm_jpeg_roundtrip`` correctness-gate query relies on.
 """
 
 from __future__ import annotations
@@ -62,6 +56,7 @@ def _zigzag_order() -> np.ndarray:
 ZIGZAG = _zigzag_order()
 UNZIGZAG = np.argsort(ZIGZAG)
 
+# IJG quality 50 is this table unscaled; the encoder writes it as is.
 QUANT_LUMA = np.array(
     [
         [16, 11, 10, 16, 24, 40, 51, 61],
@@ -76,25 +71,9 @@ QUANT_LUMA = np.array(
     dtype=np.int32,
 )
 
-QUANT_CHROMA = np.array(
-    [
-        [17, 18, 24, 47, 99, 99, 99, 99],
-        [18, 21, 26, 66, 99, 99, 99, 99],
-        [24, 26, 56, 99, 99, 99, 99, 99],
-        [47, 66, 99, 99, 99, 99, 99, 99],
-        [99, 99, 99, 99, 99, 99, 99, 99],
-        [99, 99, 99, 99, 99, 99, 99, 99],
-        [99, 99, 99, 99, 99, 99, 99, 99],
-        [99, 99, 99, 99, 99, 99, 99, 99],
-    ],
-    dtype=np.int32,
-)
-
 # Annex K Huffman specifications: (BITS[1..16], HUFFVAL)
 DC_LUMA_BITS = (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
 DC_LUMA_VALS = tuple(range(12))
-DC_CHROMA_BITS = (0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0)
-DC_CHROMA_VALS = tuple(range(12))
 
 AC_LUMA_BITS = (0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125)
 AC_LUMA_VALS = tuple(
@@ -107,21 +86,6 @@ AC_LUMA_VALS = tuple(
         "86 87 88 89 8a 92 93 94 95 96 97 98 99 9a a2 a3 a4 a5 a6 a7 a8 a9 aa "
         "b2 b3 b4 b5 b6 b7 b8 b9 ba c2 c3 c4 c5 c6 c7 c8 c9 ca d2 d3 d4 d5 d6 "
         "d7 d8 d9 da e1 e2 e3 e4 e5 e6 e7 e8 e9 ea f1 f2 f3 f4 f5 f6 f7 f8 f9 "
-        "fa"
-    ).split()
-)
-
-AC_CHROMA_BITS = (0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 119)
-AC_CHROMA_VALS = tuple(
-    int(x, 16)
-    for x in (
-        "00 01 02 03 11 04 05 21 31 06 12 41 51 07 61 71 13 22 32 81 08 14 42 "
-        "91 a1 b1 c1 09 23 33 52 f0 15 62 72 d1 0a 16 24 34 e1 25 f1 17 18 19 "
-        "1a 26 27 28 29 2a 35 36 37 38 39 3a 43 44 45 46 47 48 49 4a 53 54 55 "
-        "56 57 58 59 5a 63 64 65 66 67 68 69 6a 73 74 75 76 77 78 79 7a 82 83 "
-        "84 85 86 87 88 89 8a 92 93 94 95 96 97 98 99 9a a2 a3 a4 a5 a6 a7 a8 "
-        "a9 aa b2 b3 b4 b5 b6 b7 b8 b9 ba c2 c3 c4 c5 c6 c7 c8 c9 ca d2 d3 d4 "
-        "d5 d6 d7 d8 d9 da e2 e3 e4 e5 e6 e7 e8 e9 ea f2 f3 f4 f5 f6 f7 f8 f9 "
         "fa"
     ).split()
 )
@@ -191,8 +155,8 @@ class _BitWriter:
 
 
 class _BitReader:
-    """Reads entropy-coded bits, handling 0xFF00 stuffing; stops cleanly
-    at any non-RST marker (caller resumes marker parsing there)."""
+    """Reads entropy-coded bits, handling 0xFF00 stuffing; past the end
+    of the scan (a marker or the end of the data) it reads zero bits."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
@@ -215,7 +179,7 @@ class _BitReader:
                     self._acc = (self._acc << 8) | 0xFF
                     self._n += 8
                     continue
-                # real marker: feed zeros (decoder layer handles RST/EOI)
+                # real marker: end of the entropy-coded data, feed zeros
                 self._acc = self._acc << 8
                 self._n += 8
                 continue
@@ -245,18 +209,6 @@ class _BitReader:
                 return sym
         raise ValueError("invalid Huffman code")
 
-    def align(self) -> None:
-        self._acc = 0
-        self._n = 0
-
-    def at_rst(self) -> bool:
-        """After align(): is an RSTn marker next in the raw stream?"""
-        d, p = self.data, self.pos
-        return p + 1 < len(d) and d[p] == 0xFF and 0xD0 <= d[p + 1] <= 0xD7
-
-    def skip_rst(self) -> None:
-        self.pos += 2
-
 
 def _extend(v: int, s: int) -> int:
     """DC/AC magnitude decode (spec F.2.2.1 EXTEND)."""
@@ -275,20 +227,14 @@ def _magnitude(v: int) -> tuple[int, int]:
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline OR progressive JPEG bytes → (h, w) or (h, w, 3) uint8.
+    """Grayscale baseline JPEG bytes → (h, w) uint8.
 
-    Progressive (SOF2) streams accumulate coefficients across scans —
-    DC first/refine, AC spectral-selection bands with EOB runs, and AC
-    successive-approximation refinement (T.81 Annex G) — and reconstruct
-    at EOI. Corrupt or truncated input raises ``ValueError`` (one
-    exception type for the pipeline to catch); genuinely
-    unsupported-but-valid variants (arithmetic-coded,
-    hierarchical) raise ``NotImplementedError`` so the caller can route
-    to an optional fuller decoder."""
+    Corrupt or truncated input, and every JPEG variant outside the
+    module's scope, raise ``ValueError`` — one exception type for the
+    pipeline to catch."""
     try:
         return _decode_jpeg(payload)
-    except (struct.error, IndexError, KeyError, ZeroDivisionError,
-            StopIteration) as e:
+    except (struct.error, IndexError, KeyError) as e:
         raise ValueError(f"corrupt JPEG: {type(e).__name__}: {e}") from e
 
 
@@ -299,11 +245,7 @@ def _decode_jpeg(payload: bytes) -> np.ndarray:
     qt: dict[int, np.ndarray] = {}
     dc_tabs: dict[int, dict] = {}
     ac_tabs: dict[int, dict] = {}
-    restart_interval = 0
-    frame = None  # (h, w, comps, prec) ; comps = [(cid, hs, vs, tq)]
-    progressive = False
-    adobe_transform = None  # APP14: 0=CMYK/RGB, 1=YCbCr, 2=YCCK
-    coefs: list[np.ndarray] | None = None  # per comp: (bh, bw, 64) zigzag
+    frame = None  # (h, w, quant table id)
 
     while pos < len(payload):
         if payload[pos] != 0xFF:
@@ -311,28 +253,21 @@ def _decode_jpeg(payload: bytes) -> np.ndarray:
         marker = payload[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
-            if progressive and coefs is not None:
-                return _reconstruct_from_coefs(frame, coefs, qt, adobe_transform)
             break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
+        if marker == 0x01:  # TEM: no segment
             continue
         (seglen,) = struct.unpack_from(">H", payload, pos)
         seg = payload[pos + 2 : pos + seglen]
+        pos += seglen
         if marker == 0xDB:  # DQT
             i = 0
             while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                if pq:
-                    vals = np.frombuffer(seg[i : i + 128], dtype=">u2").astype(np.int32)
-                    i += 128
-                else:
-                    vals = np.frombuffer(seg[i : i + 64], dtype=np.uint8).astype(np.int32)
-                    i += 64
-                qt[tq] = vals[UNZIGZAG].reshape(8, 8)
-            pos += seglen
-            continue
-        if marker == 0xC4:  # DHT
+                if seg[i] >> 4:
+                    raise ValueError("16-bit quantization table in an 8-bit JPEG")
+                vals = np.frombuffer(seg[i + 1 : i + 65], dtype=np.uint8)
+                qt[seg[i] & 0xF] = vals.astype(np.int32)[UNZIGZAG].reshape(8, 8)
+                i += 65
+        elif marker == 0xC4:  # DHT
             i = 0
             while i < len(seg):
                 tc, th = seg[i] >> 4, seg[i] & 0xF
@@ -341,303 +276,48 @@ def _decode_jpeg(payload: bytes) -> np.ndarray:
                 vals = tuple(seg[i + 17 : i + 17 + n])
                 (ac_tabs if tc else dc_tabs)[th] = _build_decode_map(bits, vals)
                 i += 17 + n
-            pos += seglen
-            continue
-        if marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", seg, 0)
-            pos += seglen
-            continue
-        if marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
+        elif marker == 0xDD:  # DRI
+            if struct.unpack_from(">H", seg, 0)[0]:
+                raise ValueError("JPEG restart intervals unsupported")
+        elif marker == 0xC0:  # SOF0: baseline sequential
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
-            if prec not in (8, 12):
-                raise NotImplementedError(f"{prec}-bit JPEG unsupported")
-            if nc not in (1, 3, 4):
-                raise NotImplementedError(f"{nc}-component JPEG unsupported")
-            progressive = marker == 0xC2
-            comps = []
-            for ci in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", seg, 6 + 3 * ci)
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-            frame = (h, w, comps, prec)
-            pos += seglen
-            continue
-        if marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(f"non-baseline SOF 0x{marker:02x}")
-        if marker == 0xDA:  # SOS
+            if prec != 8 or nc != 1:
+                raise ValueError(
+                    f"unsupported JPEG: {prec}-bit, {nc} components "
+                    "(8-bit grayscale only)"
+                )
+            frame = (h, w, seg[8])
+        elif 0xC1 <= marker <= 0xCF and marker not in (0xC8, 0xCC):  # JPG, DAC
+            raise ValueError(f"unsupported JPEG frame type SOF 0x{marker:02x}")
+        elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
-            ns = seg[0]
-            scan = []  # (comp_index, dc_tab, ac_tab)
-            for si in range(ns):
-                cs, t = seg[1 + 2 * si], seg[2 + 2 * si]
-                ci = next(i for i, c in enumerate(frame[2]) if c[0] == cs)
-                scan.append((ci, t >> 4, t & 0xF))
-            if not progressive:
-                pos += seglen
-                return _decode_scan(
-                    payload, pos, frame, scan, qt, dc_tabs, ac_tabs,
-                    restart_interval, adobe_transform,
-                )
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            if coefs is None:
-                cs_ = frame[2]
-                hmax = max(c[1] for c in cs_)
-                vmax = max(c[2] for c in cs_)
-                mcux = -(-frame[1] // (8 * hmax))
-                mcuy = -(-frame[0] // (8 * vmax))
-                coefs = [
-                    np.zeros((mcuy * vs, mcux * hs, 64), dtype=np.int32)
-                    for _, hs, vs, _ in cs_
-                ]
-            pos = _decode_progressive_scan(
-                payload, pos + seglen, frame, scan,
-                (ss, se, ahal >> 4, ahal & 0xF),
-                dc_tabs, ac_tabs, restart_interval, coefs,
+            h, w, tq = frame
+            t = seg[2]  # the one component's DC/AC table selectors
+            return _decode_scan(
+                payload, pos, h, w, qt[tq], dc_tabs[t >> 4], ac_tabs[t & 0xF]
             )
-            continue
-        if marker == 0xEE and seg[:5] == b"Adobe":  # APP14 color hint
-            adobe_transform = seg[11] if len(seg) > 11 else 0
-        pos += seglen  # APPn / COM / others: skip
-    if progressive and coefs is not None:  # stream without explicit EOI
-        return _reconstruct_from_coefs(frame, coefs, qt, adobe_transform)
+        # APPn / COM / others: skip
     raise ValueError("no scan found")
 
 
-def _decode_progressive_scan(
-    data, pos, frame, scan, band, dc_tabs, ac_tabs, restart_interval, coefs
-) -> int:
-    """One progressive scan (T.81 Annex G): updates ``coefs`` in place,
-    returns the stream position of the next marker. Four scan kinds: DC
-    first / DC refine (may be interleaved), AC first / AC refine (always
-    single-component, over the spectral band [ss, se])."""
-    h, w, comps = frame[0], frame[1], frame[2]
-    ss, se, ah, al = band
+def _decode_scan(data, pos, h, w, q, dct, act) -> np.ndarray:
+    bh, bw = -(-h // 8), -(-w // 8)
+    plane = np.zeros((bh * 8, bw * 8), dtype=np.float64)
     r = _BitReader(data, pos)
-    pred = [0] * len(comps)
-    eob = [0]  # EOB run survives across blocks within a scan
-
-    def check_restart(n_unit: int) -> None:
-        if restart_interval and n_unit and n_unit % restart_interval == 0:
-            r.align()
-            if r.at_rst():
-                r.skip_rst()
-            pred[:] = [0] * len(comps)
-            eob[0] = 0
-
-    def dc_unit(ci: int, tdc: int, c: np.ndarray) -> None:
-        if ah == 0:
-            s = r.huff(dc_tabs[tdc])
-            diff = _extend(r.bits(s), s) if s else 0
-            pred[ci] += diff
-            c[0] = pred[ci] << al
-        else:
-            c[0] |= r.bit() << al
-
-    if len(scan) > 1:  # interleaved: MCU order (DC scans only, per spec)
-        if ss != 0:
-            raise ValueError("interleaved AC scan is not legal JPEG")
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcux = -(-w // (8 * hmax))
-        mcuy = -(-h // (8 * vmax))
-        n_mcu = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                check_restart(n_mcu)
-                for ci, tdc, _tac in scan:
-                    _, hs, vs, _ = comps[ci]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            dc_unit(ci, tdc, coefs[ci][my * vs + by, mx * hs + bx])
-                n_mcu += 1
-    else:  # non-interleaved: the component's own block order
-        ci, tdc, tac = scan[0]
-        _, hs, vs, _ = comps[ci]
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        comp_w = -(-(w * hs) // hmax)  # ceil(w * hs / hmax)
-        comp_h = -(-(h * vs) // vmax)
-        bw_c = -(-comp_w // 8)
-        bh_c = -(-comp_h // 8)
-        n_blk = 0
-        for by in range(bh_c):
-            for bx in range(bw_c):
-                check_restart(n_blk)
-                c = coefs[ci][by, bx]
-                if ss == 0:
-                    dc_unit(ci, tdc, c)
-                elif ah == 0:
-                    _ac_first(r, ac_tabs[tac], c, ss, se, al, eob)
-                else:
-                    _ac_refine(r, ac_tabs[tac], c, ss, se, al, eob)
-                n_blk += 1
-    r.align()
-    return r.pos
+    pred = 0
+    for by in range(bh):
+        for bx in range(bw):
+            block, pred = _decode_block(r, dct, act, pred)
+            plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = _C.T @ (block * q) @ _C
+    return np.clip(np.rint(plane[:h, :w] + 128), 0, 255).astype(np.uint8)
 
 
-def _ac_first(r, act, c, ss, se, al, eob) -> None:
-    """AC spectral-selection first pass (G.1.2.2): EOB runs span whole
-    blocks; new coefficients land at magnitude << al."""
-    if eob[0] > 0:
-        eob[0] -= 1
-        return
-    k = ss
-    while k <= se:
-        rs = r.huff(act)
-        run, size = rs >> 4, rs & 0xF
-        if size == 0:
-            if run < 15:
-                eob[0] = (1 << run) - 1
-                if run:
-                    eob[0] += r.bits(run)
-                return
-            k += 16  # ZRL
-            continue
-        k += run
-        if k > se:
-            raise ValueError("AC run past end of band")
-        c[k] = _extend(r.bits(size), size) << al
-        k += 1
-
-
-def _ac_refine(r, act, c, ss, se, al, eob) -> None:
-    """AC successive-approximation refinement (G.1.2.3): correction bits
-    for already-nonzero coefficients, +-1<<al insertions for new ones,
-    EOB runs carrying correction bits to the end of the band."""
-    p1 = 1 << al
-    m1 = -(1 << al)
-    k = ss
-    if eob[0] == 0:
-        while k <= se:
-            rs = r.huff(act)
-            run, size = rs >> 4, rs & 0xF
-            val = 0
-            if size == 0:
-                if run < 15:
-                    eob[0] = 1 << run
-                    if run:
-                        eob[0] += r.bits(run)
-                    break  # fall through to EOB correction sweep
-                # run == 15 (ZRL): advance over 16 zero-history coefs
-            else:
-                val = p1 if r.bit() else m1
-            while k <= se:
-                if c[k] != 0:
-                    if r.bit() and (c[k] & p1) == 0:
-                        c[k] += p1 if c[k] >= 0 else m1
-                else:
-                    if run == 0:
-                        break
-                    run -= 1
-                k += 1
-            if val and k <= se:
-                c[k] = val
-            k += 1
-    if eob[0] > 0:
-        while k <= se:
-            if c[k] != 0 and r.bit() and (c[k] & p1) == 0:
-                c[k] += p1 if c[k] >= 0 else m1
-            k += 1
-        eob[0] -= 1
-
-
-def _reconstruct_from_coefs(frame, coefs, qt, adobe_transform=None) -> np.ndarray:
-    """Dequantize + IDCT every accumulated block and hand off to the
-    shared upsample/color tail."""
-    h, w, comps, prec = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    planes = []
-    for (cid, hs, vs, tq), cf in zip(comps, coefs):
-        bh, bw_, _ = cf.shape
-        blocks = cf[:, :, UNZIGZAG].reshape(bh, bw_, 8, 8).astype(np.float64)
-        blocks *= qt[tq][None, None]
-        pix = np.einsum("ij,xyjk,kl->xyil", _C.T, blocks, _C)
-        plane = pix.transpose(0, 2, 1, 3).reshape(bh * 8, bw_ * 8)
-        planes.append(plane)
-    return _planes_to_image(planes, h, w, comps, hmax, vmax, prec, adobe_transform)
-
-
-def _decode_scan(data, pos, frame, scan, qt, dc_tabs, ac_tabs, restart_interval,
-                 adobe_transform=None):
-    h, w, comps, prec = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = []
-    for cid, hs, vs, tq in comps:
-        planes.append(np.zeros((mcuy * vs * 8, mcux * hs * 8), dtype=np.float64))
-    r = _BitReader(data, pos)
-    pred = [0] * len(comps)
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                r.align()
-                if r.at_rst():
-                    r.skip_rst()
-                pred = [0] * len(comps)
-            for ci, tdc, tac in scan:
-                cid, hs, vs, tq = comps[ci]
-                q = qt[tq]
-                for by in range(vs):
-                    for bx in range(hs):
-                        block = _decode_block(r, dc_tabs[tdc], ac_tabs[tac], pred, ci)
-                        pix = _C.T @ (block * q) @ _C
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = pix
-            n_mcu += 1
-    return _planes_to_image(planes, h, w, comps, hmax, vmax, prec, adobe_transform)
-
-
-def _planes_to_image(planes, h, w, comps, hmax, vmax, prec=8,
-                     adobe_transform=None) -> np.ndarray:
-    """Shared decoder tail: upsample subsampled planes to full size,
-    crop the MCU padding, level-shift (2^(P-1) per T.81), and
-    color-convert. 12-bit frames come back as uint16 in 0..4095.
-    4-component (Adobe CMYK/YCCK) frames return the four stored
-    component planes as (h, w, 4) — YCCK's first three are converted
-    back through the YCbCr inverse per the Adobe APP14 transform=2
-    convention; ink inversion is left to the caller (Adobe writers
-    disagree, and pixels-as-stored is the honest contract)."""
-    shift = 1 << (prec - 1)
-    maxval = (1 << prec) - 1
-    dtype = np.uint8 if prec == 8 else np.uint16
-    out = []
-    for (cid, hs, vs, tq), pl in zip(comps, planes):
-        if hs != hmax or vs != vmax:
-            pl = np.repeat(np.repeat(pl, vmax // vs, axis=0), hmax // hs, axis=1)
-        out.append(pl[:h, :w])
-    if len(out) == 1:
-        return np.clip(np.rint(out[0] + shift), 0, maxval).astype(dtype)
-    if len(out) == 4:
-        if adobe_transform == 2:  # YCCK: invert YCbCr on the first three
-            y, cb, cr = out[0] + shift, out[1], out[2]
-            c0 = y + 1.402 * cr
-            c1 = y - 0.344136 * cb - 0.714136 * cr
-            c2 = y + 1.772 * cb
-            chans = [c0, c1, c2, out[3] + shift]
-        else:  # transform 0 / absent: four independent components
-            chans = [p + shift for p in out]
-        four = np.stack(chans, axis=-1)
-        return np.clip(np.rint(four), 0, maxval).astype(dtype)
-    y, cb, cr = out[0] + shift, out[1], out[2]
-    r_ = y + 1.402 * cr
-    g_ = y - 0.344136 * cb - 0.714136 * cr
-    b_ = y + 1.772 * cb
-    rgb = np.stack([r_, g_, b_], axis=-1)
-    return np.clip(np.rint(rgb), 0, maxval).astype(dtype)
-
-
-def _decode_block(r: _BitReader, dct, act, pred: list, ci: int) -> np.ndarray:
+def _decode_block(r: _BitReader, dct, act, pred: int) -> tuple[np.ndarray, int]:
     zz = np.zeros(64, dtype=np.int32)
     s = r.huff(dct)
-    diff = _extend(r.bits(s), s) if s else 0
-    pred[ci] += diff
-    zz[0] = pred[ci]
+    pred += _extend(r.bits(s), s) if s else 0
+    zz[0] = pred
     k = 1
     while k < 64:
         rs = r.huff(act)
@@ -652,7 +332,7 @@ def _decode_block(r: _BitReader, dct, act, pred: list, ci: int) -> np.ndarray:
             raise ValueError("AC run past end of block")
         zz[k] = _extend(r.bits(size), size)
         k += 1
-    return zz[UNZIGZAG].reshape(8, 8).astype(np.float64)
+    return zz[UNZIGZAG].reshape(8, 8).astype(np.float64), pred
 
 
 # --------------------------------------------------------------------------
@@ -660,24 +340,13 @@ def _decode_block(r: _BitReader, dct, act, pred: list, ci: int) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def _scaled_quant(base: np.ndarray, quality: int) -> np.ndarray:
-    """IJG percent convention: 50 → base table, 100 → all-ones."""
-    quality = min(max(int(quality), 1), 100)
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    q = (base * scale + 50) // 100
-    return np.clip(q, 1, 255).astype(np.int32)
-
-
-def _encode_plane_block(bw, block, q, dc_codes, ac_codes, pred, ci) -> None:
+def _encode_block(bw, block, dc_codes, ac_codes, pred: int) -> int:
+    """Entropy-code one level-shifted 8×8 block; returns the new DC
+    predictor. At 8 bits and quality 50 every coefficient stays inside
+    the Annex K categories (DC diff <= 11 bits, AC <= 10)."""
     coef = _C @ block @ _C.T
-    zz = np.rint(coef / q).astype(np.int32).reshape(-1)[ZIGZAG]
-    # Annex K table ranges: AC size <= 10, DC category <= 11. 8-bit
-    # coefficients never leave them; 12-bit ones can in pathological
-    # blocks — clamp (quantization-grade loss, stream stays valid) and
-    # keep the predictor in sync with what the decoder reconstructs.
-    np.clip(zz[1:], -1023, 1023, out=zz[1:])
-    diff = min(max(int(zz[0]) - pred[ci], -2047), 2047)
-    pred[ci] += diff
+    zz = np.rint(coef / QUANT_LUMA).astype(np.int32).reshape(-1)[ZIGZAG]
+    diff = int(zz[0]) - pred
     s, low = _magnitude(diff) if diff else (0, 0)
     code, ln = dc_codes[s]
     bw.write(code, ln)
@@ -686,10 +355,8 @@ def _encode_plane_block(bw, block, q, dc_codes, ac_codes, pred, ci) -> None:
     # AC
     run = 0
     last_nz = max(np.nonzero(zz)[0]) if np.any(zz) else 0
-    for k in range(1, 64):
+    for k in range(1, last_nz + 1):
         v = int(zz[k])
-        if k > last_nz:
-            break
         if v == 0:
             run += 1
             continue
@@ -705,191 +372,51 @@ def _encode_plane_block(bw, block, q, dc_codes, ac_codes, pred, ci) -> None:
     if last_nz < 63:
         code, ln = ac_codes[0x00]  # EOB
         bw.write(code, ln)
+    return int(zz[0])
 
 
-def _pad_to(img: np.ndarray, bh: int, bw_: int) -> np.ndarray:
-    h, w = img.shape
-    ph = -(-h // bh) * bh
-    pw = -(-w // bw_) * bw_
-    return np.pad(img, ((0, ph - h), (0, pw - w)), mode="edge")
+def _segment(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
 
 
-def encode_jpeg(
-    img: np.ndarray,
-    *,
-    quality: int = 90,
-    subsample: str = "444",
-    restart_interval: int = 0,
-    precision: int = 8,
-    cmyk: bool = False,
-) -> bytes:
-    """(h, w) or (h, w, 3) uint8 → baseline JPEG bytes; with
-    ``precision=12``, uint16 input in 0..4095 → extended-sequential
-    (SOF1) 12-bit JPEG per T.81 §4.11.
-
-    12-bit framing: level shift 2^11, quantization tables scaled x16
-    (16-bit DQT, Pq=1) so quantized coefficients stay inside the Annex K
-    Huffman categories (AC clamped to |v| <= 1023 / size 10, DC diffs to
-    |d| <= 2047 / category 11 — the clamp is quantization-grade loss in
-    pathological blocks, never an invalid stream).
-
-    ``subsample``: '444' (no chroma subsampling) or '420'.
-    ``restart_interval``: emit RSTn every N MCUs (0 = none) — resync
-    points that let a parallel reader split the entropy stream."""
-    if precision not in (8, 12):
-        raise NotImplementedError(f"{precision}-bit JPEG encode unsupported")
-    if precision == 8 and img.dtype != np.uint8:
+def encode_jpeg(img: np.ndarray) -> bytes:
+    """(h, w) or (h, w, 1) uint8 → grayscale baseline JPEG bytes at IJG
+    quality 50 (Annex K luminance tables, unscaled)."""
+    if img.dtype != np.uint8:
         raise TypeError("uint8 input required")
-    if precision == 12:
-        if img.dtype != np.uint16:
-            raise TypeError("uint16 input required for 12-bit encode")
-        if img.max(initial=0) > 4095:
-            raise ValueError("12-bit samples must be in 0..4095")
-    if img.ndim not in (2, 3):
-        raise ValueError(f"expected (h, w) or (h, w, c) input, got ndim={img.ndim}")
     if img.ndim == 3 and img.shape[2] == 1:
         img = img[:, :, 0]
-    elif img.ndim == 3 and img.shape[2] == 4 and not cmyk:
-        img = img[:, :, :3]  # drop alpha (JPEG has no transparency)
-    elif img.ndim == 3 and img.shape[2] not in (3, 4):
-        raise ValueError(f"unsupported channel count {img.shape[2]}")
-    if cmyk and (img.ndim != 3 or img.shape[2] != 4):
-        raise ValueError("cmyk=True requires (h, w, 4) input")
-    gray = img.ndim == 2
-    four = img.ndim == 3 and img.shape[2] == 4
-    h, w = img.shape[:2]
-    ql = _scaled_quant(QUANT_LUMA, quality)
-    qc = _scaled_quant(QUANT_CHROMA, quality)
-    shift = float(1 << (precision - 1))
-    if precision == 12:
-        ql, qc = ql * 16, qc * 16
-
-    if gray:
-        planes = [img.astype(np.float64) - shift]
-        samp = [(1, 1)]
-        qsel = [0]
-    elif four:
-        # Adobe CMYK (APP14 transform 0): four independent components,
-        # no chroma model -> luma quant for all, 4:4:4 only
-        planes = [img[:, :, i].astype(np.float64) - shift for i in range(4)]
-        samp = [(1, 1)] * 4
-        qsel = [0] * 4
-    else:
-        rgb = img.astype(np.float64)
-        y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-        cb = -0.168736 * rgb[..., 0] - 0.331264 * rgb[..., 1] + 0.5 * rgb[..., 2]
-        cr = 0.5 * rgb[..., 0] - 0.418688 * rgb[..., 1] - 0.081312 * rgb[..., 2]
-        if subsample == "420":
-            # box-filter 2x2 means on edge-padded planes
-            cbp = _pad_to(cb, 2, 2)
-            crp = _pad_to(cr, 2, 2)
-            cb = cbp.reshape(cbp.shape[0] // 2, 2, cbp.shape[1] // 2, 2).mean((1, 3))
-            cr = crp.reshape(crp.shape[0] // 2, 2, crp.shape[1] // 2, 2).mean((1, 3))
-            samp = [(2, 2), (1, 1), (1, 1)]
-        elif subsample == "444":
-            samp = [(1, 1), (1, 1), (1, 1)]
-        else:
-            raise ValueError("subsample must be '444' or '420'")
-        planes = [y - shift, cb, cr]
-        qsel = [0, 1, 1]
-
+    if img.ndim != 2:
+        raise ValueError(
+            f"expected (h, w) or (h, w, 1) grayscale input, got shape {img.shape}"
+        )
+    h, w = img.shape
     out = bytearray(b"\xff\xd8")  # SOI
-    if four:
-        # Adobe APP14 (transform 0 = CMYK stored as-is); JFIF does not
-        # define 4-component streams
-        app14 = b"Adobe" + struct.pack(">BBHHB", 0x65, 0, 0, 0, 0)
-        out += b"\xff\xee" + struct.pack(">H", 2 + len(app14)) + app14
-    else:
-        # JFIF APP0
-        app0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-        out += b"\xff\xe0" + struct.pack(">H", 2 + len(app0)) + app0
-    # DQT (Pq=1 / 16-bit values for the x16-scaled 12-bit tables)
-    for tq, q in ((0, ql),) + (((1, qc),) if not (gray or four) else ()):
-        zz = q.reshape(-1)[ZIGZAG]
-        if precision == 12:
-            body = bytes([0x10 | tq]) + zz.astype(">u2").tobytes()
-        else:
-            body = bytes([tq]) + bytes(zz.astype(np.uint8))
-        out += b"\xff\xdb" + struct.pack(">H", 2 + len(body)) + body
-    # SOF0 (baseline) / SOF1 (extended sequential, required for 12-bit)
-    ncomp = 1 if gray else (4 if four else 3)
-    sof = struct.pack(">BHHB", precision, h, w, ncomp)
-    for ci in range(ncomp):
-        hs, vs = samp[ci]
-        sof += struct.pack(">BBB", ci + 1, (hs << 4) | vs, qsel[ci])
-    sof_marker = b"\xff\xc0" if precision == 8 else b"\xff\xc1"
-    out += sof_marker + struct.pack(">H", 2 + len(sof)) + sof
-    # DHT (Annex K tables)
-    hts = [(0x00, DC_LUMA_BITS, DC_LUMA_VALS), (0x10, AC_LUMA_BITS, AC_LUMA_VALS)]
-    if not (gray or four):
-        hts += [
-            (0x01, DC_CHROMA_BITS, DC_CHROMA_VALS),
-            (0x11, AC_CHROMA_BITS, AC_CHROMA_VALS),
-        ]
-    for tid, bits, vals in hts:
-        body = bytes([tid]) + bytes(bits) + bytes(vals)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    # SOS
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00 if (ci == 0 or four) else 0x11])
-    sos += b"\x00\x3f\x00"
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+    out += _segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _segment(0xDB, b"\x00" + bytes(QUANT_LUMA.reshape(-1)[ZIGZAG].astype(np.uint8)))
+    out += _segment(0xC0, struct.pack(">BHHBBBB", 8, h, w, 1, 1, 0x11, 0))
+    for tid, bits, vals in (
+        (0x00, DC_LUMA_BITS, DC_LUMA_VALS),
+        (0x10, AC_LUMA_BITS, AC_LUMA_VALS),
+    ):
+        out += _segment(0xC4, bytes([tid]) + bytes(bits) + bytes(vals))
+    out += _segment(0xDA, bytes([1, 1, 0x00, 0x00, 0x3F, 0x00]))
 
-    dc_l = _build_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_l = _build_codes(AC_LUMA_BITS, AC_LUMA_VALS)
-    dc_c = _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    ac_c = _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    padded = []
-    for ci, pl in enumerate(planes):
-        hs, vs = samp[ci]
-        # plane covers mcu grid at its own resolution
-        need_h = -(-h // (8 * vmax)) * 8 * vs
-        need_w = -(-w // (8 * hmax)) * 8 * hs
-        p = np.pad(
-            pl,
-            ((0, max(0, need_h - pl.shape[0])), (0, max(0, need_w - pl.shape[1]))),
-            mode="edge",
-        )[:need_h, :need_w]
-        padded.append(p)
-
+    dc = _build_codes(DC_LUMA_BITS, DC_LUMA_VALS)
+    ac = _build_codes(AC_LUMA_BITS, AC_LUMA_VALS)
+    bh, bw_ = -(-h // 8), -(-w // 8)
+    plane = np.pad(
+        img.astype(np.float64) - 128.0,
+        ((0, bh * 8 - h), (0, bw_ * 8 - w)),
+        mode="edge",
+    )
     bw = _BitWriter()
-    pred = [0] * ncomp
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                bw.flush()
-                out += bw.out
-                bw = _BitWriter()
-                out += bytes([0xFF, 0xD0 + ((n_mcu // restart_interval) - 1) % 8])
-                pred = [0] * ncomp
-            n_mcu += 1
-            for ci in range(ncomp):
-                hs, vs = samp[ci]
-                q = ql if qsel[ci] == 0 else qc
-                dcc = dc_l if (ci == 0 or four) else dc_c
-                acc = ac_l if (ci == 0 or four) else ac_c
-                for by in range(vs):
-                    for bx in range(hs):
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        _encode_plane_block(
-                            bw,
-                            padded[ci][y0 : y0 + 8, x0 : x0 + 8],
-                            q,
-                            dcc,
-                            acc,
-                            pred,
-                            ci,
-                        )
+    pred = 0
+    for by in range(bh):
+        for bx in range(bw_):
+            pred = _encode_block(
+                bw, plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8], dc, ac, pred
+            )
     bw.flush()
     out += bw.out
     out += b"\xff\xd9"  # EOI

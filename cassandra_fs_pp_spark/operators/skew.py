@@ -23,6 +23,7 @@ import logging
 import re
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -105,8 +106,10 @@ def spread_if_narrow(df: DataFrame, n_parts: int | None = None) -> DataFrame:
     the pre-AQE plan, so it cannot fix runtime coalescing of
     post-shuffle stages — pin those with an explicit
     ``repartition(n, key)`` instead (AQE never coalesces a
-    user-specified partition count).  If the plan cannot be sized, the
-    input is returned as-is and the reason is logged."""
+    user-specified partition count).  If the plan cannot be sized (a
+    ``Py4JError`` from the JVM calls, or a ``ValueError`` from the size
+    conf), the input is returned as-is and the reason is logged; any
+    other exception propagates."""
     spark = df.sparkSession
     if n_parts is None:
         n_parts = spark.sparkContext.defaultParallelism
@@ -118,7 +121,7 @@ def spread_if_narrow(df: DataFrame, n_parts: int | None = None) -> DataFrame:
         maxpb = _bytes_conf(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
         )
-    except Exception as exc:
+    except (Py4JError, ValueError) as exc:
         log.warning(
             "spread_if_narrow: could not size the plan (%s); not spreading",
             exc, exc_info=True,

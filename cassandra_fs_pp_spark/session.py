@@ -153,7 +153,13 @@ def local_table(spark: SparkSession, rows, schema: str):
     are bit-identical: int64/float64/strings/array<double> round-trip
     exactly through Arrow, and the explicit ``schema`` pins types on
     both routes.  Falls back to the plain path for empty inputs or when
-    pandas/Arrow conversion rejects the shape (r17).
+    the pandas route rejects the shape (r17): a ``ValueError`` or
+    ``TypeError``, which covers ``PySparkTypeError``/``PySparkValueError``
+    and pyarrow's ``ArrowInvalid``/``ArrowTypeError``.  Most Arrow
+    refusals never reach this handler: with
+    ``spark.sql.execution.arrow.pyspark.fallback.enabled`` (Spark's
+    default) ``createDataFrame(pdf)`` already retries them without Arrow
+    and only warns.  Any other exception propagates.
     """
     # materialize first: the comprehension below iterates ``rows`` once
     # per COLUMN, so a generator input would exhaust on the first column
@@ -169,7 +175,7 @@ def local_table(spark: SparkSession, rows, schema: str):
                 {c: [r[i] for r in rows] for i, c in enumerate(cols)}
             )
             return spark.createDataFrame(pdf, schema=schema)
-        except Exception as exc:
+        except (ValueError, TypeError) as exc:
             log.debug("local_table: Arrow route refused %s (%s); using pickled rows",
                       schema, exc)
     return spark.createDataFrame(rows, schema)

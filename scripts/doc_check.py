@@ -185,8 +185,6 @@ REACH_ALLOW = frozenset({
     "_pq_reconstruct_sql",  # SQL form veckernels.pq_reconstruct must match
     "calibration_join",  # join form calibration_group_mean must match
     "encode_fixed_point",  # column arithmetic to_netcdf's int32 bytes must match
-    "encode_tiff",  # builds the fixtures for multimodal.decode_tiff
-    "encode_wav",  # builds the fixtures for multimodal.decode_wav
     # paper workflows not wired into SiteEngine or the CLI yet:
     "load_position_csv",  # S7: EC sensor position CSV
     "to_netcdf_long",  # K3: 2-D (time, sensor) NetCDF export

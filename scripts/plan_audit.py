@@ -2,7 +2,8 @@
 
 For every registry query (bench headliners first, then registry order),
 capture the plan-health signals the 100 TB stance depends on: every scan's
-pushed filters and read schema, join strategies, and exchange count.
+pushed filters and read schema, scans per table (a lineage that re-plans
+a table shows up as a high count), join strategies, and exchange count.
 Regenerate after plan-affecting changes: ``python scripts/plan_audit.py``.
 """
 
@@ -11,6 +12,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,14 +39,24 @@ def audit(spark, name, fn) -> str:
     n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
     n_bcast = len(re.findall(r"\(\d+\) BroadcastExchange", plan))
     n_scans = len(re.findall(r"\(\d+\) Scan (?:parquet|text|csv)", plan))
+    # one Location line per scan; the table is the first path's file name
+    tables = Counter(
+        os.path.splitext(os.path.basename(paths.split(",")[0].strip().rstrip("/")))[0]
+        for paths in re.findall(
+            r"Location: InMemoryFileIndex(?:\(\d+ paths\))?\s*\[([^\]]*)\]", plan
+        )
+    )
     lines = [f"## {name}", ""]
     lines.append(
         f"- scans: {n_scans}, shuffle exchanges: {n_exchange}, "
         f"broadcast exchanges: {n_bcast}"
     )
+    if tables:
+        lines.append(
+            "- scans by table: "
+            + ", ".join(f"{k}×{v}" for k, v in sorted(tables.items()))
+        )
     if joins:
-        from collections import Counter
-
         c = Counter(joins)
         lines.append("- joins: " + ", ".join(f"{k}×{v}" for k, v in sorted(c.items())))
     for i, (p, rs) in enumerate(zip(pushed, schemas)):

@@ -167,6 +167,57 @@ def test_fleet_normalise_matches_sequential(spark, fleet_l1):
 DAY = dt.timedelta(days=1)
 
 
+def test_local_table_propagates_other_errors(spark, monkeypatch):
+    """``local_table`` falls back to pickled rows on a ValueError or
+    TypeError from the pandas route only; any other exception propagates
+    instead of being logged away."""
+    from cassandra_fs_pp_spark import session
+
+    def broken(schema):
+        raise RuntimeError("not a conversion refusal")
+
+    monkeypatch.setattr(session, "_split_ddl", broken)
+    with pytest.raises(RuntimeError, match="not a conversion refusal"):
+        session.local_table(spark, [("a", 1)], "s string, k int")
+
+
+def test_fleet_normalise_64_sites_one_collect(spark, monkeypatch):
+    """64 stations with one explicit and two auto height-change events
+    each: every site equals the reference's sequential loop, and all 128
+    auto-event medians come back in ONE collect."""
+    n_sites, step_s = 64, 3600
+    ev1, ev2 = T0 + 3 * DAY, T0 + 6 * DAY
+    pdfs, events_by_site, frames = {}, {}, []
+    for i in range(n_sites):
+        site = f"S{i:02d}"
+        ts = [T0 + dt.timedelta(seconds=k * step_s) for k in range(9 * 24)]
+        vals = [
+            2.0 + 0.01 * i + 0.01 * (k % 3)
+            - (0.2 + 0.01 * (i % 5) if t >= ev1 else 0.0)
+            - (0.1 + 0.01 * (i % 7) if t >= ev2 else 0.0)
+            for k, t in enumerate(ts)
+        ]
+        pdfs[site] = pd.DataFrame({"TIMESTAMP": ts, "TCDT": vals})
+        events_by_site[site] = [[T0, 1.0 + 0.1 * (i % 4)], [ev1], [ev2]]
+        frames.append(pdfs[site].assign(site=site))
+    l1 = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+
+    df_cls = type(l1)  # the classic DataFrame class, not the pyspark.sql ABC
+    real_collect = df_cls.collect
+    calls: list[int] = []
+
+    def spy(self):
+        rows = real_collect(self)
+        calls.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(df_cls, "collect", spy)
+    fleet = fleet_normalise_udg(l1, events_by_site)
+    monkeypatch.setattr(df_cls, "collect", real_collect)
+    assert calls == [2 * n_sites], calls
+    _assert_normalise_matches_reference(fleet, pdfs, events_by_site)
+
+
 def _stepped_frame() -> pd.DataFrame:
     """Hourly TCDT over 6 days with jumps at days 2, 3 and 4 and a small
     3-hour ripple (no median lands on a rounding tie)."""

@@ -868,3 +868,26 @@ def test_kn5_perplexity_plan_shape(spark):
     assert _n(plan, "CartesianProduct") == 0, plan
     assert _n(plan, "Window") == 0, plan
     assert _n_shuffles(plan) <= 23, plan
+
+
+def test_plan_audit_counts_scans_by_table(spark, sf_dir, monkeypatch):
+    """``scripts/plan_audit.audit`` names each scan's table, so a lineage
+    that re-plans a table shows without a probe: a self-join of
+    documents is two scans of one table."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "scripts")
+    )
+    import plan_audit
+
+    monkeypatch.setattr(plan_audit, "SF_DIR", sf_dir)
+
+    def self_join(spark_, sf_dir):
+        d = spark_.read.parquet(f"{sf_dir}/documents.parquet")
+        return d.alias("a").join(d.alias("b"), "doc_id")
+
+    section = plan_audit.audit(spark, "self_join", self_join)
+    assert "- scans: 2," in section, section
+    assert "- scans by table: documents×2\n" in section, section

@@ -174,3 +174,18 @@ def test_spread_if_narrow_logs_when_it_cannot_size_the_plan(
     with caplog.at_level(logging.WARNING, logger=skew.__name__):
         assert skew.spread_if_narrow(df) is df
     assert "unparseable size" in caplog.text
+
+
+def test_spread_if_narrow_propagates_other_errors(spark, tmp_path, monkeypatch):
+    """Only a Py4JError or a ValueError means "cannot size the plan"; any
+    other exception is a bug and must not be logged away."""
+    import pytest
+
+    df = _one_file_table(spark, tmp_path, "doc_id")
+
+    def broken(value, default=0):
+        raise RuntimeError("not a sizing failure")
+
+    monkeypatch.setattr(skew, "_bytes_conf", broken)
+    with pytest.raises(RuntimeError, match="not a sizing failure"):
+        skew.spread_if_narrow(df)
