@@ -109,6 +109,18 @@ def test_out_of_scope_variants_raise_value_error(name):
         decode_jpeg(_variant(name))
 
 
+def test_progressive_through_dispatcher():
+    """A progressive (SOF2) stream reaches decode_jpeg through the image
+    dispatcher and fails there with ValueError naming its frame type; the
+    baseline stream it was made from decodes."""
+    from cassandra_fs_pp_spark.functions.multimodal import decode_real_image
+
+    img = np.full((16, 16), 100, dtype=np.uint8)
+    assert (decode_real_image(encode_jpeg(img)) == img).all()
+    with pytest.raises(ValueError, match="SOF 0xc2"):
+        decode_real_image(_variant("progressive"))
+
+
 def test_truncated_and_corrupt_input_raise_value_error_only():
     """Any corrupt/truncated payload fails with ValueError (or decodes to
     wrong-but-valid pixels — that's lossy entropy data), never a leaked

@@ -73,9 +73,10 @@ def test_real_decode_dispatch():
         decode_real_image(b"\xff\xd8\xff\xe0 not really a jpeg")
 
 
-def _png_variant(interlace: int = 0, filt: int = 0) -> bytes:
-    """A 2x2 RGB PNG laid out as encode_png writes it, with the IHDR
-    interlace flag or the first scanline's filter byte changed."""
+def _png(img: np.ndarray, *, interlace: int = 0, filters=None) -> bytes:
+    """An (h, w, c) uint8 image laid out as encode_png writes it (one IDAT,
+    raw scanlines), with the IHDR interlace flag or the per-row filter
+    bytes set to other values."""
     import struct
     import zlib
 
@@ -86,13 +87,94 @@ def _png_variant(interlace: int = 0, filt: int = 0) -> bytes:
             ">I", zlib.crc32(t + d) & 0xFFFFFFFF
         )
 
-    raw = bytes([filt]) + bytes(6) + bytes([0]) + bytes(6)
+    h, w, c = img.shape
+    color = {1: 0, 2: 4, 3: 2, 4: 6}[c]
+    filters = filters or [0] * h
+    raw = b"".join(bytes([f]) + img[y].tobytes() for y, f in enumerate(filters))
     return (
         PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, interlace))
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, interlace))
         + chunk(b"IDAT", zlib.compress(raw))
         + chunk(b"IEND", b"")
     )
+
+
+def test_png_decode_all_filter_types():
+    """encode_png writes filter 0 on every scanline and only that decodes:
+    a scanline tagged Sub/Up/Average/Paeth (1-4) on any row raises
+    ValueError naming the filter instead of returning unfiltered bytes."""
+    from cassandra_fs_pp_spark.functions.multimodal import decode_png, encode_png
+
+    rng = np.random.RandomState(3)
+    img = rng.randint(0, 256, size=(5, 4, 3), dtype=np.uint8)
+    assert _png(img) == encode_png(img)
+    np.testing.assert_array_equal(decode_png(_png(img)), img)
+    for f in (1, 2, 3, 4):
+        for row in (0, 4):
+            filters = [0] * 5
+            filters[row] = f
+            with pytest.raises(ValueError, match=f"unsupported PNG filter {f}"):
+                decode_real_image(_png(img, filters=filters))
+
+
+def test_decode_png_adam7_interlaced():
+    """Adam7-interlaced PNGs (all sizes incl. degenerate passes) raise
+    ValueError; the same pixels laid out sequentially decode exactly."""
+    from cassandra_fs_pp_spark.functions.multimodal import decode_png
+
+    rng = np.random.RandomState(41)
+    for h, w, c in [(1, 1, 1), (3, 3, 3), (8, 8, 4), (5, 7, 2), (13, 4, 3)]:
+        img = rng.randint(0, 256, (h, w, c), dtype=np.uint8)
+        np.testing.assert_array_equal(decode_png(_png(img)), img)
+        with pytest.raises(ValueError, match="interlace=1"):
+            decode_png(_png(img, interlace=1))
+
+
+def _tiff(img: np.ndarray, *, endian: str = "<", compression: int = 1) -> bytes:
+    """A well-formed one-strip baseline grayscale TIFF of an (h, w) uint8
+    image; ``compression`` is written into tag 259 as given."""
+    import struct
+
+    h, w = img.shape
+    n, ifd_off = 8, 8
+    data_off = ifd_off + 2 + n * 12 + 4
+
+    def entry(tag: int, typ: int, val: int) -> bytes:
+        if typ == 3:  # SHORT values are left-justified in the 4-byte field
+            return struct.pack(endian + "HHIHH", tag, typ, 1, val, 0)
+        return struct.pack(endian + "HHII", tag, typ, 1, val)
+
+    entries = [
+        entry(256, 4, w),
+        entry(257, 4, h),
+        entry(258, 3, 8),
+        entry(259, 3, compression),
+        entry(262, 3, 1),
+        entry(273, 4, data_off),
+        entry(278, 4, h),
+        entry(279, 4, h * w),
+    ]
+    magic = b"II*\x00" if endian == "<" else b"MM\x00*"
+    return (
+        magic
+        + struct.pack(endian + "I", ifd_off)
+        + struct.pack(endian + "H", n)
+        + b"".join(entries)
+        + struct.pack(endian + "I", 0)
+        + img.tobytes()
+    )
+
+
+def test_tiff_unsupported_raises():
+    """The engine writes no TIFF, so even a well-formed baseline TIFF, in
+    either byte order and with any compression, is rejected by the image
+    dispatcher with the ValueError corrupt input gets."""
+    img = np.arange(16, dtype=np.uint8).reshape(4, 4)
+    for endian in ("<", ">"):
+        for compression in (1, 5, 8, 32773):
+            payload = _tiff(img, endian=endian, compression=compression)
+            with pytest.raises(ValueError, match="unsupported image format"):
+                decode_real_image(payload)
 
 
 WAVE_PCM16_EMPTY = (
@@ -115,8 +197,6 @@ WAVE_PCM16_EMPTY = (
         pytest.param(decode_real_image, b"GIF89a\x01\x00\x01\x00\x00", id="gif"),
         pytest.param(decode_real_image, b"\x00\x01garbage", id="garbage"),
         pytest.param(decode_real_image, b"", id="empty"),
-        pytest.param(decode_real_image, _png_variant(interlace=1), id="png-adam7"),
-        pytest.param(decode_real_image, _png_variant(filt=1), id="png-filter-sub"),
         pytest.param(decode_real_audio, WAVE_PCM16_EMPTY, id="wave"),
     ],
 )

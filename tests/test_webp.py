@@ -1,540 +1,36 @@
-"""From-spec WebP-lossless (VP8L) decoder tests.
+"""WebP payloads at the image dispatcher.
 
-A test-local minimal VP8L ENCODER produces streams exercising each
-decoder feature — simple and normal prefix codes, LZ77 backrefs, the
-color cache, and every transform — and the decoder must reproduce the
-source pixels exactly (VP8L is lossless, so equality is the contract).
-The encoder mirrors the spec independently of the decoder, so agreement
-is evidence both follow it (same convention as the TIFF/LZW and
-progressive-JPEG test pairs)."""
-
-from __future__ import annotations
+The engine writes no WebP, so it carries no WebP decoder: every RIFF/WEBP
+container (lossless VP8L, lossy VP8, extended VP8X) and a RIFF of another
+form fail in ``decode_real_image`` with the ValueError corrupt input gets."""
 
 import struct
 
-import numpy as np
 import pytest
 
-from cassandra_fs_pp_spark.webp import _CLC_ORDER, _PrefixCode, decode_webp
+from cassandra_fs_pp_spark.functions.multimodal import decode_real_image
 
 
-class _W:
-    """LSB-first bit writer (the stream layout VP8L uses)."""
-
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def b(self, v: int, n: int) -> None:
-        for i in range(n):
-            self.bits.append((v >> i) & 1)
-
-    def code(self, code: int, length: int) -> None:
-        # prefix codes are packed code-MSB-first into the LSB-first stream
-        for i in range(length - 1, -1, -1):
-            self.bits.append((code >> i) & 1)
-
-    def payload(self) -> bytes:
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            byte = 0
-            for j, bit in enumerate(self.bits[i : i + 8]):
-                byte |= bit << j
-            out.append(byte)
-        return bytes(out)
-
-
-def _codes_from_lengths(lengths):
-    """Invert the decoder's canonical assignment -> {sym: (code, len)}."""
-    pc = _PrefixCode(list(lengths))
-    if pc.single is not None:
-        return {pc.single: (0, 0)}
-    return {sym: (code, ln) for (ln, code), sym in pc.table.items()}
-
-
-class _SymWriter:
-    """Writes one alphabet's code definition + symbols.
-
-    mode 'simple': <= 2 distinct symbols, all < 256.
-    mode 'flat': all `n` symbols get equal length L (byte-transparent:
-    canonical code of symbol s is s itself) via a single-symbol
-    code-length code and the max-symbol shortcut.
-    """
-
-    def __init__(self, w: _W, alphabet: int, syms_used: list[int]):
-        self.w = w
-        distinct = sorted(set(syms_used))
-        if len(distinct) <= 2 and all(s < 256 for s in distinct):
-            w.b(1, 1)  # simple
-            w.b(len(distinct) - 1, 1)
-            first = distinct[0]
-            if first > 1:
-                w.b(1, 1)
-                w.b(first, 8)
-            else:
-                w.b(0, 1)
-                w.b(first, 1)
-            if len(distinct) == 2:
-                w.b(distinct[1], 8)
-            lengths = [0] * alphabet
-            for s in distinct:
-                lengths[s] = 1
-            self.codes = _codes_from_lengths(lengths)
-            return
-        # flat normal-form code over the whole alphabet
-        nbits = max(8, (alphabet - 1).bit_length())
-        w.b(0, 1)  # normal
-        w.b(19 - 4, 4)  # transmit all 19 code-length-code lengths
-        clc_lengths = [0] * 19
-        clc_lengths[nbits] = 1  # single-symbol clc -> 0 bits per read
-        for sym in _CLC_ORDER:
-            w.b(clc_lengths[sym], 3)
-        # max_symbol shortcut: stop after `alphabet` zero-cost reads
-        w.b(1, 1)
-        w.b(4, 3)  # length_nbits = 2 + 2*4 = 10
-        w.b(alphabet - 2, 10)
-        lengths = [nbits] * alphabet
-        self.codes = _codes_from_lengths(lengths)
-
-    def sym(self, s: int) -> None:
-        code, ln = self.codes[s]
-        self.w.code(code, ln)
-
-
-def _lz_sym(value: int) -> tuple[int, int, int]:
-    """value -> (prefix sym, extra bits, extra value), spec §4.2.1."""
-    if value <= 4:
-        return value - 1, 0, 0
-    x = value - 1
-    extra = x.bit_length() - 2
-    base_sym = 2 * extra + ((x >> extra) & 1)
-    offset = (2 + ((x >> extra) & 1)) << extra
-    return base_sym + 2, extra, x - offset
-
-
-def _vp8l_container(w: int, h: int, body_bits: _W) -> bytes:
-    head = _W()
-    head.b(w - 1, 14)
-    head.b(h - 1, 14)
-    head.b(0, 1)  # alpha hint
-    head.b(0, 3)  # version
-    payload = b"\x2f" + _W.payload(
-        type("m", (), {"bits": head.bits + body_bits.bits})()
-    )
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
+def _riff(form: bytes, fourcc: bytes, body: bytes) -> bytes:
+    chunk = fourcc + struct.pack("<I", len(body)) + body
+    if len(body) & 1:
         chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-
-
-def _emit_argb_literals(
-    w: _W, px: np.ndarray, *, cache_bits: int = 0, sub: bool = False
-):
-    """Entropy-code an (n, 4) ARGB pixel list as pure literals.
-    ``sub=True`` for transform/entropy sub-images, which carry no
-    meta-prefix bit."""
-    w.b(1 if cache_bits else 0, 1)
-    if cache_bits:
-        w.b(cache_bits, 4)
-    if not sub:
-        w.b(0, 1)  # no meta prefix
-    galpha = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    g = _SymWriter(w, galpha, [int(p[2]) for p in px])
-    r = _SymWriter(w, 256, [int(p[1]) for p in px])
-    b = _SymWriter(w, 256, [int(p[3]) for p in px])
-    a = _SymWriter(w, 256, [int(p[0]) for p in px])
-    _SymWriter(w, 40, [0])  # distance code, never used
-    for p in px:
-        g.sym(int(p[2]))
-        r.sym(int(p[1]))
-        b.sym(int(p[3]))
-        a.sym(int(p[0]))
-
-
-def _rgba_to_argb_list(img: np.ndarray) -> np.ndarray:
-    return img.reshape(-1, 4)[:, [3, 0, 1, 2]]
-
-
-def _rand_rgba(h, w, seed, values=(40, 200)):
-    rng = np.random.RandomState(seed)
-    return rng.choice(values, size=(h, w, 4)).astype(np.uint8)
-
-
-def test_literals_simple_codes():
-    img = _rand_rgba(7, 9, seed=1)
-    w = _W()
-    w.b(0, 1)  # no transform
-    _emit_argb_literals(w, _rgba_to_argb_list(img))
-    out = decode_webp(_vp8l_container(9, 7, w))
-    np.testing.assert_array_equal(out, img)
-
-
-def test_literals_flat_normal_codes():
-    rng = np.random.RandomState(2)
-    img = rng.randint(0, 256, (5, 6, 4)).astype(np.uint8)
-    w = _W()
-    w.b(0, 1)
-    _emit_argb_literals(w, _rgba_to_argb_list(img))
-    out = decode_webp(_vp8l_container(6, 5, w))
-    np.testing.assert_array_equal(out, img)
-
-
-def test_subtract_green_transform():
-    rng = np.random.RandomState(3)
-    g = rng.choice([10, 250], size=(6, 5)).astype(np.uint8)
-    img = np.stack(
-        [(g + 3) % 256, g, (g + 7) % 256, np.full_like(g, 255)], axis=-1
-    ).astype(np.uint8)
-    w = _W()
-    w.b(1, 1)
-    w.b(2, 2)  # subtract-green
-    w.b(0, 1)  # no more transforms
-    t = img.astype(np.int32).copy()
-    t[..., 0] = (t[..., 0] - t[..., 1]) % 256  # R -= G
-    t[..., 2] = (t[..., 2] - t[..., 1]) % 256  # B -= G
-    _emit_argb_literals(w, _rgba_to_argb_list(t.astype(np.uint8)))
-    out = decode_webp(_vp8l_container(5, 6, w))
-    np.testing.assert_array_equal(out, img)
-
-
-def _forward_predict(img_argb: np.ndarray, h, w, mode) -> np.ndarray:
-    """Reference FORWARD predictor (mirrors the spec text, written
-    independently of the decoder's inverse)."""
-    from cassandra_fs_pp_spark.webp import (
-        _avg2,
-        _clamp_add_subtract_full,
-        _clamp_add_subtract_half,
-        _select,
-    )
-
-    src = img_argb.reshape(h, w, 4).astype(np.int32)
-    res = np.zeros_like(src)
-    for y in range(h):
-        for x in range(w):
-            if x == 0 and y == 0:
-                pred = np.array([255, 0, 0, 0])
-            elif y == 0:
-                pred = src[0, x - 1]
-            elif x == 0:
-                pred = src[y - 1, 0]
-            else:
-                l_ = src[y, x - 1].astype(np.uint8)
-                t = src[y - 1, x].astype(np.uint8)
-                tr = (src[y - 1, x + 1] if x + 1 < w else src[y, 0]).astype(
-                    np.uint8
-                )
-                tl = src[y - 1, x - 1].astype(np.uint8)
-                preds = {
-                    0: np.array([255, 0, 0, 0], np.uint8),
-                    1: l_, 2: t, 3: tr, 4: tl,
-                    5: _avg2(_avg2(l_, tr), t),
-                    6: _avg2(l_, tl), 7: _avg2(l_, t), 8: _avg2(tl, t),
-                    9: _avg2(t, tr), 10: _avg2(_avg2(l_, tl), _avg2(t, tr)),
-                    11: _select(l_[None], t[None], tl[None])[0],
-                    12: _clamp_add_subtract_full(l_, t, tl),
-                    13: _clamp_add_subtract_half(_avg2(l_, t), tl),
-                }
-                pred = preds[mode].astype(np.int32)
-            res[y, x] = (src[y, x] - pred) % 256
-    return res.reshape(-1, 4)
-
-
-@pytest.mark.parametrize("mode", list(range(14)))
-def test_predictor_modes(mode):
-    rng = np.random.RandomState(20 + mode)
-    img = rng.randint(0, 256, (4, 5, 4)).astype(np.uint8)
-    h, w_px = 4, 5
-    w = _W()
-    w.b(1, 1)
-    w.b(0, 2)  # predictor transform
-    w.b(3, 3)  # tile_bits = 5 -> one 32x32 tile
-    # 1x1 transform image: green channel = mode
-    _emit_argb_literals(
-        w, np.array([[255, 0, mode, 0]], dtype=np.uint8), sub=True
-    )
-    w.b(0, 1)  # no more transforms
-    res = _forward_predict(_rgba_to_argb_list(img), h, w_px, mode)
-    _emit_argb_literals(w, res.astype(np.uint8))
-    out = decode_webp(_vp8l_container(w_px, h, w))
-    np.testing.assert_array_equal(out, img, err_msg=f"mode={mode}")
-
-
-def test_color_transform():
-    rng = np.random.RandomState(40)
-    img = rng.randint(0, 256, (6, 4, 4)).astype(np.uint8)
-    h, w_px = 6, 4
-    g2r, g2b, r2b = 50, 200, 13  # stored as uint8, interpreted int8
-
-    def s8(v):
-        return v - 256 if v >= 128 else v
-
-    def delta(t, c):
-        return (s8(t) * s8(c if c < 128 else c)) >> 5
-
-    # forward: subtract deltas computed from ORIGINAL g and r
-    argb = _rgba_to_argb_list(img).astype(np.int32).copy()
-    for p in argb:
-        a, r, g, b = p
-        dr = (s8(g2r) * s8(g if g < 128 else g - 256)) >> 5
-        db = ((s8(g2b) * s8(g if g < 128 else g - 256)) >> 5) + (
-            (s8(r2b) * s8(r if r < 128 else r - 256)) >> 5
-        )
-        p[1] = (r - dr) % 256
-        p[3] = (b - db) % 256
-    w = _W()
-    w.b(1, 1)
-    w.b(1, 2)  # color transform
-    w.b(3, 3)  # tile_bits = 5 -> one tile
-    # transform pixel: [A, R=r2b, G=g2b, B=g2r]
-    _emit_argb_literals(
-        w, np.array([[255, r2b, g2b, g2r]], dtype=np.uint8), sub=True
-    )
-    w.b(0, 1)
-    _emit_argb_literals(w, argb.astype(np.uint8))
-    out = decode_webp(_vp8l_container(w_px, h, w))
-    np.testing.assert_array_equal(out, img)
-
-
-def test_lz77_backref_and_color_cache():
-    # row of pixels: 3 literals, then an overlapping dist-1 backref of
-    # length 6, then a color-cache hit of the first color
-    cache_bits = 4
-    # chosen so the three colors land in THREE DISTINCT cache slots
-    # (13 / 11 / 7) — colliding colors would be overwritten by the
-    # backref's inserts and make the final cache hit ambiguous
-    colors = [
-        (255, 68, 32, 130),
-        (255, 60, 253, 230),
-        (255, 241, 194, 107),
-    ]
-    px = colors + [colors[2]] * 6  # the backref copies color 2
-    # cache state after 9 pixels: all three colors inserted
-    a0, r0, g0, b0 = colors[0]
-    argb0 = (a0 << 24) | (r0 << 16) | (g0 << 8) | b0
-    idx0 = ((argb0 * 0x1E35A7BD) & 0xFFFFFFFF) >> (32 - cache_bits)
-    px.append(colors[0])  # via cache
-    expected = np.array(px, dtype=np.uint8)[:, [1, 2, 3, 0]].reshape(1, 10, 4)
-
-    w = _W()
-    w.b(0, 1)  # no transforms
-    w.b(1, 1)
-    w.b(cache_bits, 4)
-    w.b(0, 1)  # no meta
-    galpha = 256 + 24 + (1 << cache_bits)
-    g = _SymWriter(w, galpha, list(range(galpha)))  # flat
-    r = _SymWriter(w, 256, list(range(256)))
-    b = _SymWriter(w, 256, list(range(256)))
-    a = _SymWriter(w, 256, list(range(256)))
-    d = _SymWriter(w, 40, list(range(40)))
-    for c in colors:
-        g.sym(c[2])
-        r.sym(c[1])
-        b.sym(c[3])
-        a.sym(c[0])
-    # backref: length 6 (sym for value 6), distance code 1+120=121 -> dist 1
-    lsym, lex, lev = _lz_sym(6)
-    g.sym(256 + lsym)
-    w.b(lev, lex)
-    dsym, dex, dev = _lz_sym(121)
-    d.sym(dsym)
-    w.b(dev, dex)
-    g.sym(256 + 24 + idx0)  # cache hit for color 0
-    out = decode_webp(_vp8l_container(10, 1, w))
-    np.testing.assert_array_equal(out, expected)
-
-
-def test_palette_with_pixel_bundling():
-    # 2-color palette -> 8 pixels bundled per byte
-    h, w_px = 3, 11
-    rng = np.random.RandomState(50)
-    idx = rng.randint(0, 2, (h, w_px))
-    pal = np.array([[255, 9, 8, 7], [255, 200, 150, 100]], dtype=np.uint8)
-    img = pal[idx][:, :, [1, 2, 3, 0]]  # RGBA expected
-
-    w = _W()
-    w.b(1, 1)
-    w.b(3, 2)  # color indexing
-    w.b(1, 8)  # n_colors - 1
-    # palette image: delta-coded second entry
-    delta = (pal[1].astype(np.int32) - pal[0].astype(np.int32)) % 256
-    _emit_argb_literals(
-        w, np.vstack([pal[0], delta.astype(np.uint8)]), sub=True
-    )
-    w.b(0, 1)  # no more transforms
-    packed_w = -(-w_px // 8)
-    packed = np.zeros((h, packed_w), dtype=np.uint8)
-    for y in range(h):
-        for x in range(w_px):
-            packed[y, x // 8] |= idx[y, x] << (x % 8)
-    px = np.zeros((h * packed_w, 4), dtype=np.uint8)
-    px[:, 0] = 255
-    px[:, 2] = packed.reshape(-1)
-    _emit_argb_literals(w, px)
-    out = decode_webp(_vp8l_container(w_px, h, w))
-    np.testing.assert_array_equal(out, img)
+    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + form + chunk
 
 
 def test_dispatcher_and_unsupported():
-    from cassandra_fs_pp_spark.functions.multimodal import decode_real_image
-
-    img = _rand_rgba(4, 4, seed=7)
-    w = _W()
-    w.b(0, 1)
-    _emit_argb_literals(w, _rgba_to_argb_list(img))
-    payload = _vp8l_container(4, 4, w)
-    np.testing.assert_array_equal(decode_real_image(payload), img)
-    with pytest.raises(ValueError):
-        decode_webp(b"RIFF\x04\x00\x00\x00WAVE")
-
-
-def test_pillow_crosscheck():
-    """Where Pillow exists it must decode our VP8L stream identically
-    (skips cleanly in this container)."""
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    img = _rand_rgba(5, 8, seed=9)
-    w = _W()
-    w.b(0, 1)
-    _emit_argb_literals(w, _rgba_to_argb_list(img))
-    payload = _vp8l_container(8, 5, w)
-    theirs = np.asarray(Image.open(io.BytesIO(payload)).convert("RGBA"))
-    np.testing.assert_array_equal(theirs, img)
-
-
-def test_vp8l_literal_roundtrip_property():
-    """Property: ANY small RGBA image round-trips through the test
-    encoder's literal path (simple or flat codes chosen per channel) and
-    the decoder."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        h=st.integers(1, 9),
-        w_px=st.integers(1, 9),
-        nvals=st.sampled_from([1, 2, 256]),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    def prop(h, w_px, nvals, seed):
-        rng = np.random.RandomState(seed)
-        if nvals == 256:
-            img = rng.randint(0, 256, (h, w_px, 4)).astype(np.uint8)
-        else:
-            vals = rng.choice(256, size=nvals, replace=False)
-            img = rng.choice(vals, size=(h, w_px, 4)).astype(np.uint8)
-        w = _W()
-        w.b(0, 1)
-        _emit_argb_literals(w, _rgba_to_argb_list(img))
-        out = decode_webp(_vp8l_container(w_px, h, w))
-        np.testing.assert_array_equal(out, img)
-
-    prop()
-
-
-def test_simple_code_transmission_order():
-    """VP8L simple 2-symbol codes assign code 0 to the FIRST TRANSMITTED
-    symbol even when it is numerically larger (spec ordering, not
-    canonical-by-value — libwebp happens to emit ascending, so only a
-    hand-built stream exercises this)."""
-    from cassandra_fs_pp_spark.webp import _LsbReader, _read_prefix_code
-
-    w = _W()
-    w.b(1, 1)  # simple code
-    w.b(1, 1)  # two symbols
-    w.b(1, 1)  # first symbol uses 8 bits
-    w.b(200, 8)  # transmitted first -> must get code 0
-    w.b(10, 8)  # transmitted second -> code 1
-    w.b(0, 1)  # one coded symbol: bit 0 -> 200
-    w.b(1, 1)  # next coded symbol: bit 1 -> 10
-    r = _LsbReader(w.payload())
-    code = _read_prefix_code(r, 256)
-    assert code.read(r) == 200
-    assert code.read(r) == 10
-
-
-def _vp8l_chunk(img: np.ndarray) -> bytes:
-    """Bare VP8L chunk (header+payload, no RIFF wrapper) for one frame."""
-    h, w = img.shape[:2]
-    bw = _W()
-    bw.b(0, 1)  # no transforms
-    _emit_argb_literals(bw, _rgba_to_argb_list(img))
-    head = _W()
-    head.b(w - 1, 14)
-    head.b(h - 1, 14)
-    head.b(0, 1)
-    head.b(0, 3)
-    payload = b"\x2f" + _W.payload(
-        type("m", (), {"bits": head.bits + bw.bits})()
-    )
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    return chunk
-
-
-def _anim_container(cw, ch, frames):
-    """frames: [(x, y, img, blend, dispose)] -> animated WebP bytes."""
-    body = b""
-    vp8x = struct.pack("<B3x", 0x02)  # animation flag
-    vp8x += (cw - 1).to_bytes(3, "little") + (ch - 1).to_bytes(3, "little")
-    body += b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x
-    anim = struct.pack("<IH", 0, 0)  # bg color, infinite loop
-    body += b"ANIM" + struct.pack("<I", len(anim)) + anim
-    for x, y, img, blend, dispose in frames:
-        h, w = img.shape[:2]
-        sub = _vp8l_chunk(img)
-        flags = (0 if blend else 0x02) | (0x01 if dispose else 0)
-        head = (
-            (x // 2).to_bytes(3, "little")
-            + (y // 2).to_bytes(3, "little")
-            + (w - 1).to_bytes(3, "little")
-            + (h - 1).to_bytes(3, "little")
-            + (40).to_bytes(3, "little")  # duration ms
-            + bytes([flags])
-        )
-        anmf = head + sub
-        body += b"ANMF" + struct.pack("<I", len(anmf)) + anmf
-        if len(anmf) & 1:
-            body += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
-
-
-def test_animated_webp_composition():
-    """ANMF frame pipeline: offsets place frames on the canvas, no-blend
-    copies (incl. alpha), src-over blending composites, and dispose-to-
-    background clears the frame rect AFTER the snapshot."""
-    from cassandra_fs_pp_spark.webp import decode_webp, decode_webp_frames
-
-    f1 = np.zeros((4, 4, 4), np.uint8)
-    f1[:, :] = (200, 10, 10, 255)  # opaque red-ish, top-left
-    f2 = np.zeros((2, 2, 4), np.uint8)
-    f2[:, :] = (10, 200, 10, 255)  # opaque green, offset (4, 2), dispose
-    f3 = np.zeros((2, 2, 4), np.uint8)
-    f3[:, :] = (0, 0, 200, 128)    # half-alpha blue, blended over f1
-
-    payload = _anim_container(
-        8, 6,
-        [
-            (0, 0, f1, False, False),
-            (4, 2, f2, False, True),
-            (0, 0, f3, True, False),
-        ],
-    )
-    frames = decode_webp_frames(payload)
-    assert len(frames) == 3
-    c1 = frames[0][1]
-    assert tuple(c1[0, 0]) == (200, 10, 10, 255)
-    assert tuple(c1[5, 7]) == (0, 0, 0, 0)  # untouched canvas
-    c2 = frames[1][1]
-    assert tuple(c2[2, 4]) == (10, 200, 10, 255)
-    assert tuple(c2[0, 0]) == (200, 10, 10, 255)  # frame 1 persists
-    c3 = frames[2][1]
-    assert tuple(c3[2, 4]) == (0, 0, 0, 0)  # f2 rect disposed
-    # src-over of half-alpha blue on opaque red-ish
-    r, g, b, a = c3[0, 0]
-    assert a == 255 and b > 90 and r > 90
-    assert frames[1][0]["dispose"] and not frames[1][0]["blend"]
-    # decode_webp returns the first composed frame
-    np.testing.assert_array_equal(decode_webp(payload), c1)
+    # VP8L: signature 0x2f, then 14-bit (w-1), 14-bit (h-1), alpha, version
+    vp8l = b"\x2f" + struct.pack("<I", (4 - 1) | (4 - 1) << 14) + b"\x00" * 6
+    # VP8: 3-byte frame tag, start code, 14-bit w and h
+    vp8 = b"\x10\x02\x00\x9d\x01\x2a" + struct.pack("<HH", 4, 4) + b"\x00" * 8
+    # VP8X: flags (animation bit set), 24-bit (w-1) and (h-1)
+    vp8x = b"\x02\x00\x00\x00" + b"\x03\x00\x00" + b"\x03\x00\x00"
+    payloads = [
+        _riff(b"WEBP", b"VP8L", vp8l),
+        _riff(b"WEBP", b"VP8 ", vp8),
+        _riff(b"WEBP", b"VP8X", vp8x),
+        b"RIFF\x04\x00\x00\x00WAVE",
+    ]
+    for payload in payloads:
+        with pytest.raises(ValueError, match="unsupported image format"):
+            decode_real_image(payload)
