@@ -784,7 +784,7 @@ def logreg_train_select(
     def _wlit() -> Column:
         # ONE F.expr string, not buckets+1 F.lit py4j round-trips: the
         # Column-builder form cost ~1k driver calls per GD round just to
-        # rebuild this literal (the lsh_bucket_sql lesson, r18) — same
+        # rebuild this literal (measured r18) — same
         # expression tree, same BIGINT literals, bit-identical plan.
         return F.expr(
             "array(" + ", ".join(f"{int(x)}L" for x in weights) + ")"

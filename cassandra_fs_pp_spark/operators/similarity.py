@@ -36,13 +36,21 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from cassandra_fs_pp_spark.operators.veckernels import (
     blas_topk_map,
     gram_partials_map,
     lsh_buckets_map,
     pca_project_map,
+    pq_codes_map,
     query_matrix,
     score_fp32_map,
     score_pq_map,
@@ -71,13 +79,6 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _dlit(x: float) -> str:
-    """SQL DOUBLE literal with full round-trip precision (repr is the
-    shortest decimal that parses back to the same IEEE double in both
-    Python and the JVM)."""
-    return repr(float(x)) + "D"
 
 
 def l2_norm(a: Column) -> Column:
@@ -234,7 +235,7 @@ def ivf_topk(
 
 def hyperplane_lsh_perms(bits: int, dim: int, seed: int = 7) -> list[list[float]]:
     """``bits`` random hyperplanes in R^dim, deterministic (seeded PRNG,
-    embedded as plan literals in BOTH engines — oracle-checkable)."""
+    the same planes the DuckDB oracles embed as literals)."""
     import random
 
     rng = random.Random(seed)
@@ -243,51 +244,18 @@ def hyperplane_lsh_perms(bits: int, dim: int, seed: int = 7) -> list[list[float]
     ]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit b set when dot(vec, plane_b) >= 0.
-
-    The Column-API reference form of :func:`lsh_bucket_sql`, which the
-    registry runs; tests pin the two bit-identical. Both keep the compact
-    ``zip_with``/``aggregate`` form on purpose: an unrolled variant
-    (bits x dim explicit terms, x tables call sites) multiplies Catalyst
-    analysis time by seconds-per-query, and at dim=64 evaluates ~3x
-    slower than :func:`dot` because whole-stage codegen gives up on the
-    chain and interprets it."""
-    bucket = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array([F.lit(float(x)) for x in plane]),
-                lambda x, p: x.cast("double") * p,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(d >= 0, F.lit(1 << b)).otherwise(F.lit(0)).cast(
-            "long"
-        )
-    return bucket
-
-
-def lsh_bucket_sql(vec: str, planes: list[list[float]]) -> str:
-    """SQL text of :func:`lsh_bucket` over a column NAME — same compact
-    ``zip_with``/``aggregate`` expression tree, but one ``F.expr`` string
-    instead of bits*dim ``F.lit`` py4j round-trips per plan build (at
-    4 tables x 6 bits x 64 dims that is ~1500 driver calls ~= 3-4 s of
-    pure plan-construction latency per query run)."""
-    parts = []
-    for b, plane in enumerate(planes):
-        arr = ", ".join(_dlit(x) for x in plane)
-        d = (
-            f"aggregate(zip_with({vec}, array({arr}),"
-            f" (x, p) -> CAST(x AS DOUBLE) * p),"
-            f" 0.0D, (acc, x) -> acc + x)"
-        )
-        parts.append(
-            f"CAST(CASE WHEN {d} >= 0 THEN {1 << b} ELSE 0 END AS BIGINT)"
-        )
-    return "CAST(0 AS BIGINT) + " + " + ".join(parts)
+def _lsh_buckets(keyed: DataFrame, planes, tables: int, bits: int) -> DataFrame:
+    """``(key, vec)`` rows plus ``__n`` (the norm) and ``__bt`` (one
+    ``bits``-bit sign bucket per table): the
+    :func:`veckernels.lsh_buckets_map` kernel."""
+    schema = StructType(
+        [
+            *keyed.schema.fields,
+            StructField("__n", DoubleType()),
+            StructField("__bt", ArrayType(LongType())),
+        ]
+    )
+    return keyed.mapInArrow(lsh_buckets_map(planes, tables, bits), schema=schema)
 
 
 def lsh_topk(
@@ -367,30 +335,16 @@ def lsh_topk(
     # the tables*bits*dim bucket eval run on distinct vectors only, and
     # the result is pinned: the consumers (two bucket-join sides, two
     # score attaches) would otherwise each re-run the grouping shuffle.
-    #
-    # Bucket/norm eval is an Arrow kernel (veckernels.lsh_buckets_map),
-    # NOT the zip_with/aggregate SQL form: Catalyst does not codegen
-    # lambda (higher-order) functions, so the fold runs interpreted —
-    # measured ~0.55 s for 2000 rows x 2048 terms vs ~5 ms vectorized.
-    # The kernel folds over DIMENSION INDEX in ascending order, the
-    # left-to-right fold's IEEE operation sequence — bit-identical buckets
-    # and norms, so the DuckDB oracle (sequential list fold) is untouched.
+    # The bucket kernel folds in the SQL form's IEEE order (bit-identical
+    # to the DuckDB oracle's list fold); the interpreted form measured
+    # ~0.55 s for 2000 rows x 2048 terms vs ~5 ms vectorized.
     planes = [
         p for t in range(tables) for p in hyperplane_lsh_perms(bits, dim, seed + t)
     ]
     agg_df = reps.groupBy("__g").agg(
         F.min_by(F.col(vec_col), F.col(id_col)).alias(vec_col)
     )
-    assign_schema = StructType(
-        list(agg_df.schema.fields)
-        + [
-            StructField("__n", DoubleType()),
-            StructField("__bt", ArrayType(LongType())),
-        ]
-    )
-    gbase = agg_df.mapInArrow(
-        lsh_buckets_map(planes, tables, bits), schema=assign_schema
-    ).localCheckpoint(
+    gbase = _lsh_buckets(agg_df, planes, tables, bits).localCheckpoint(
         eager=False  # same one-barrier saving as the reps pin above
     )
     # Stage 1 — GROUP-level candidate generation stays narrow: the bucket
@@ -625,32 +579,6 @@ def _sq_stats_row(
             F.array_sort(F.collect_list(F.struct("pos", "mx"))),
             lambda s: s["mx"],
         ).alias("__mx"),
-    )
-
-
-def _dq_vec_sql(vec_col: str, levels: int) -> str:
-    """SQL text of the dequantized vector from ``vec_col`` and the 1-row
-    stats arrays ``__mn``/``__mx`` (r17): per element,
-    ``code = round(((v - mn) / rng) * levels)`` (0 when ``rng = 0``) and
-    ``dq = mn + code * (rng / levels)`` — operation-for-operation the
-    arithmetic of :func:`scalar_quantize` (same rounding, same order), so
-    the values are bit-identical to the explode/join/re-assemble form this
-    replaces; the corpus side becomes one narrow whole-stage-codegen
-    projection (no explode, no per-id collect_list shuffle, no stats
-    join), matching the PQ path's shape."""
-    lv = repr(float(levels))
-    mn = "element_at(__mn, i)"
-    mx = "element_at(__mx, i)"
-    rng = f"({mx} - {mn})"
-    v = f"cast(element_at({vec_col}, i) as double)"
-    code = (
-        f"cast(CASE WHEN {rng} = cast(0 as double) THEN 0"
-        f" ELSE cast(round((({v} - {mn}) / {rng}) * {lv}, 0) as int)"
-        f" END as double)"
-    )
-    return (
-        f"transform(sequence(1, size({vec_col})),"
-        f" i -> {mn} + {code} * ({rng} / {lv}))"
     )
 
 
@@ -1009,21 +937,6 @@ def block_matmul_topk(
     return _rank_topk(cand, "cosine", k, "rank")
 
 
-def _qdist2_sql(vec: str, centroid: list[float]) -> str:
-    """Quantized squared distance as ONE SQL string: sum over dims of
-    ``round((x_i - c_i)^2 * VEC_FIXED_SCALE)`` as an exact integer —
-    order-independent and bit-identical across engines (no float sum).
-    String form for the same reason as :func:`lsh_bucket_sql`: k x dim
-    ``F.lit`` calls per iteration are pure py4j latency."""
-    arr = ", ".join(_dlit(c) for c in centroid)
-    return (
-        f"aggregate(zip_with({vec}, array({arr}),"
-        f" (x, c) -> CAST(round((CAST(x AS DOUBLE) - c)"
-        f" * (CAST(x AS DOUBLE) - c) * {VEC_FIXED_SCALE}) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, t) -> acc + t)"
-    )
-
-
 def kmeans_assign(
     vectors: DataFrame,
     *,
@@ -1032,89 +945,24 @@ def kmeans_assign(
     k: int = 4,
     iterations: int = 2,
 ) -> DataFrame:
-    """Deterministic Lloyd k-means assignment (the canonical iterative
-    Spark pattern: per round, broadcast the tiny centroid set as literal
-    expressions, one agg shuffle to recompute means).
-
-    Fully reproducible at any parallelism:
-    * init = the vectors with the ``k`` smallest ids (must exist);
-    * distances are quantized integer sums (:func:`_qdist2`) so argmin
-      never depends on float summation order;
-    * ties pick the lowest cluster id;
-    * centroid means use the exact fixed-point reduction
-      (see ``VEC_FIXED_SCALE``).
-
-    Per iteration one k x dim collect (the centroid table) — identical in
-    shape to MLlib's KMeans driver loop. Returns ``(id_col, cluster)``.
-    """
+    """Deterministic Lloyd k-means assignment, ``(id_col, cluster)``:
+    :func:`pq_train_codebooks` with one subspace (``m=1``, ``ks=k``) for
+    ``iterations - 1`` rounds, then one final assignment by the same
+    kernel (it IS the answer, so no means are computed from it).  So it
+    keeps PQ training's contract: init from the ``k`` smallest ids,
+    quantized integer distances with ties to the lowest cluster, exact
+    fixed-point means, an empty cluster keeps its centroid — the same
+    result at any parallelism.  Per round one k x dim collect, like
+    MLlib's KMeans driver loop."""
     if iterations < 1:
         raise ValueError("kmeans needs iterations >= 1")
-    if k < 1:
-        raise ValueError("kmeans needs k >= 1")
-    first = (
-        vectors.filter(F.col(id_col) < k)
-        .orderBy(id_col)
-        .select(id_col, vec_col)
-        .collect()
+    cb = pq_train_codebooks(
+        vectors, id_col=id_col, vec_col=vec_col, m=1, ks=k,
+        iterations=iterations - 1,
     )
-    if len(first) != k:
-        raise ValueError(f"kmeans init needs ids 0..{k - 1} present")
-    cents: dict[int, list[float]] = {
-        i: [float(x) for x in r[vec_col]] for i, r in enumerate(first)
-    }
-
-    assigned = None
-    for it in range(iterations):
-        d = [
-            F.expr(_qdist2_sql(vec_col, cents[c])).alias(f"__d{c}")
-            for c in range(k)
-        ]
-        scored = vectors.select(id_col, vec_col, *d)
-        if k == 1:
-            cluster = F.lit(0)
-        else:
-            cluster = None
-            for c in range(k - 1):
-                cond = None
-                for o in range(c + 1, k):
-                    leq = F.col(f"__d{c}") <= F.col(f"__d{o}")
-                    cond = leq if cond is None else (cond & leq)
-                step = F.when(cond, F.lit(c))
-                cluster = (
-                    step if cluster is None else cluster.when(cond, F.lit(c))
-                )
-            cluster = cluster.otherwise(F.lit(k - 1))
-        # localCheckpoint: the centroid collect below AND the caller's
-        # final action both consume this round's assignment — without it
-        # each one re-runs the k-way distance scan from the source
-        # (2x the passes over 100 TB); with it the round materializes once
-        # and lineage stays flat across iterations (same pattern as
-        # operators/graph.py connected_components).
-        assigned = scored.select(
-            id_col, vec_col, cluster.alias("cluster")
-        ).localCheckpoint(eager=False)
-        if it == iterations - 1:
-            # the final assignment IS the answer: recomputing centroids
-            # from it would cost one more full exploded-corpus pass whose
-            # result nobody reads
-            break
-        # exact fixed-point means per (cluster, pos) -> next centroids
-        ex = assigned.select(
-            "cluster", F.posexplode(F.col(vec_col)).alias("pos", "v")
-        )
-        mrows = (
-            ex.groupBy("cluster", "pos")
-            .agg(_fixed_mean(F.col("v")).alias("m"))
-            .collect()
-        )
-        nxt: dict[int, dict[int, float]] = {}
-        for r in mrows:
-            nxt.setdefault(r["cluster"], {})[r["pos"]] = r["m"]
-        for c in range(k):
-            if c in nxt:
-                cents[c] = [nxt[c][p] for p in sorted(nxt[c])]
-            # empty cluster: keep previous centroid (deterministic)
-    return assigned.select(id_col, "cluster")
+    return _assign_codes(vectors, cb, id_col, vec_col).select(
+        id_col, F.col("__ks")[0].alias("cluster")
+    )
 
 
 def coarse_centroids(
@@ -1177,37 +1025,45 @@ def residualize(
     )
 
 
+def _assign_codes(vectors: DataFrame, cb, *cols: str) -> DataFrame:
+    """``cols`` plus ``__ks``, each row's ``array<int>`` of PQ codes under
+    the codebooks ``cb`` (the :func:`veckernels.pq_codes_map` kernel); the
+    last of ``cols`` is the vector."""
+    src = vectors.select(*cols)
+    field = StructField("__ks", ArrayType(IntegerType()))
+    schema = StructType([*src.schema.fields, field])
+    return src.mapInArrow(pq_codes_map(cb), schema=schema)
+
+
 def pq_train_codebooks(
     vectors: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     m: int = 4,
     ks: int = 8,
     iterations: int = 2,
 ) -> list[list[list[float]]]:
     """Train product-quantization codebooks: ``m`` independent Lloyd
-    k-means runs, one per ``dim/m``-wide subspace, with the SAME
-    determinism contract as :func:`kmeans_assign` (quantized integer
-    distances, exact fixed-point means, ties to the lowest code, empty
-    cells keep their previous centroid, init = the ``ks`` smallest ids'
-    subvectors).
+    k-means runs, one per ``dim/m``-wide subspace (``dim`` is the length
+    of the init vectors), under one determinism contract: quantized
+    integer distances, exact fixed-point means, ties to the lowest code,
+    empty cells keep their previous centroid, init = the ``ks`` smallest
+    ids' subvectors.  :func:`kmeans_assign` is the ``m=1`` case.
 
     All ``m`` subspaces train in the SAME pass: each round is ONE corpus
-    scan computing every per-subspace argmin (the centroids are literal
-    expressions — nothing joins, nothing shuffles except the
-    ``m*ks*dsub``-key mean aggregate, which map-side combines).  The
-    returned codebooks are plain Python floats — a ``m x ks x dsub``
-    table (bounded by the codebook, never the corpus) that downstream
-    operators embed as literals, exactly like the LSH plane tables.
+    scan whose per-subspace argmins run in one Arrow kernel
+    (:func:`_assign_codes`, snapshotting the round's centroids), and the
+    only shuffle is the ``m*ks*dsub``-key mean aggregate, which map-side
+    combines.  The returned codebooks are plain Python floats — a
+    ``m x ks x dsub`` table (bounded by the codebook, never the corpus)
+    that downstream kernels close over, like the LSH plane tables.
 
     Returns ``cb`` with ``cb[j][c]`` = the ``dsub``-dim centroid of code
     ``c`` in subspace ``j``.
     """
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
+    if ks < 1:
+        raise ValueError("pq needs ks >= 1")
     first = (
         vectors.filter(F.col(id_col) < ks)
         .orderBy(id_col)
@@ -1216,6 +1072,10 @@ def pq_train_codebooks(
     )
     if len(first) != ks:
         raise ValueError(f"pq init needs ids 0..{ks - 1} present")
+    dim = len(first[0][vec_col])
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    dsub = dim // m
     cb: list[list[list[float]]] = [
         [
             [float(x) for x in r[vec_col]][j * dsub : (j + 1) * dsub]
@@ -1223,18 +1083,8 @@ def pq_train_codebooks(
         ]
         for j in range(m)
     ]
-    from cassandra_fs_pp_spark.operators.veckernels import pq_codes_udf
-
     for _ in range(iterations):
-        # r18 (VERDICT r17 item 3): the per-subspace argmin runs as ONE
-        # Arrow-vectorized pandas_udf (operation-for-operation the
-        # _pq_code_sql quantized-integer argmin with lowest-code ties;
-        # the factory snapshots this round's centroids) — the m
-        # interpreted higher-order projections per corpus row gone.
-        codes = vectors.select(
-            F.col(vec_col),
-            pq_codes_udf(cb, dsub, dim)(F.col(vec_col)).alias("__ks"),
-        )
+        codes = _assign_codes(vectors, cb, vec_col)
         # exact fixed-point means per (subspace, code, pos-in-subspace):
         # one posexplode of the full vector, subspace derived from pos
         lf = codes.select(
@@ -1265,52 +1115,6 @@ def pq_train_codebooks(
     return cb
 
 
-def _pq_code_sql(
-    book: list[list[float]], vec_col: str, start: int, dsub: int
-) -> str:
-    """SQL text of the PQ code assignment for ONE subspace: quantized
-    integer distance from ``slice(vec_col, start, dsub)`` to each literal
-    centroid in ``book``, folded to the lowest-index argmin in a single
-    pass (strict ``<`` keeps the earlier code on ties — the same tie rule
-    as :func:`kmeans_assign` and the oracle's ``ORDER BY d, c``).
-
-    One higher-order expression per subspace — vs a ``ks``-column CASE
-    chain this shrank the training plan ~5x (the m*ks qdist columns were
-    the dominant plan-build/codegen cost, not the data)."""
-    cb_lit = "array(" + ", ".join(
-        "array(" + ", ".join(_dlit(x) for x in cent) + ")" for cent in book
-    ) + ")"
-    sub = f"slice({vec_col}, {start}, {dsub})"
-    qd = (
-        f"aggregate(zip_with({sub}, cent, (x, c) ->"
-        f" CAST(round((CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)"
-        f" * {VEC_FIXED_SCALE}) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, t) -> acc + t)"
-    )
-    return (
-        "aggregate("
-        f"zip_with(transform({cb_lit}, cent -> {qd}), sequence(1, {len(book)}),"
-        " (d, i) -> named_struct('d', d, 'i', i)),"
-        " cast(null as struct<d: bigint, i: int>),"
-        " (acc, s) -> case when acc is null or s.d < acc.d then s else acc end"
-        ").i - 1"
-    )
-
-
-def _pq_reconstruct_sql(cb: list[list[list[float]]], code_prefix: str) -> str:
-    """SQL text reconstructing the PQ vector from per-row code columns
-    ``{code_prefix}{j}`` and the literal codebooks — the ADC lookup table
-    as an expression (one ``element_at`` per subspace into an
-    array-of-arrays literal; the corpus keeps only the m small codes)."""
-    parts = []
-    for j, book in enumerate(cb):
-        arrs = ", ".join(
-            "array(" + ", ".join(_dlit(x) for x in cent) + ")" for cent in book
-        )
-        parts.append(f"element_at(array({arrs}), {code_prefix}{j} + 1)")
-    return "concat(" + ", ".join(parts) + ")"
-
-
 def ivf_pq_topk(
     vectors: DataFrame,
     *,
@@ -1332,50 +1136,32 @@ def ivf_pq_topk(
     """IVF + product quantization + exact rerank — the canonical 100 TB
     ANN compression (FAISS ``IVF,PQ``): :func:`ivf_adc_topk` with the
     per-dimension scalar quantizer upgraded to m-subspace codebooks
-    (``m * log2(ks)`` bits/vector instead of ``dim`` bytes) and LUT-based
-    ADC distances.
+    (``m * log2(ks)`` bits/vector instead of ``dim`` bytes).
 
-    r14: RESIDUAL encoding — codes quantize ``x - centroid(cell)``
-    (what FAISS ``IVF,PQ`` encodes), not the raw vector, and the ADC
-    vector is ``centroid(cell) + reconstruct(codes)``.  Residuals
-    cluster far tighter around 0 than raw vectors, so the same m*ks
-    budget buys measurably higher recall (SCALE.md r14 row).  The coarse
-    centroids are exact fixed-point means (:func:`coarse_centroids`) —
-    a plain double avg() is summation-order dependent and a ulp flip in
-    ``cent_cos`` can change which cells are probed.
-
-    Scale shape — strictly better than the SQ8 form:
+    Codes quantize the RESIDUAL ``x - centroid(cell)`` (what FAISS
+    encodes; residuals cluster tighter around 0, so the same m*ks budget
+    buys higher recall) and the ADC vector is ``centroid(cell) +
+    reconstruct(codes)``.  The coarse centroids are exact fixed-point
+    means (:func:`coarse_centroids`): a ulp flip in ``cent_cos`` would
+    change which cells are probed.
 
     * **Training** (:func:`pq_train_codebooks`): ``iterations`` corpus
-      scans, each map-side-combining into an ``m*ks*dsub``-key mean;
-      the codebooks come back to the driver (bounded by codebook size).
-    * **Corpus side**: ONE narrow projection — codes are per-row argmins
-      over literal centroids, and the ADC vector is reconstructed
-      in-expression from the literal codebooks
-      (:func:`_pq_reconstruct_sql`), so unlike the SQ8 path there is NO
-      explode, NO per-dimension aggregate, and NO re-join on the corpus:
-      the 100 TB table is scanned once, inside whole-stage codegen.
-    * **Probe / ADC / rerank**: the serving path of :func:`ivf_adc_topk`
-      (:func:`_ivf_serve`) — broadcast centroid probe, broadcast of the
-      |q|-bounded probe table into the corpus scan, exact fp32 rerank of
-      ``rerank`` survivors.
+      scans, each map-side-combining into an ``m*ks*dsub``-key mean.
+    * **Corpus side**: ONE narrow pass — encode, reconstruct and the
+      candidate cosine run in one kernel (:func:`veckernels.score_pq_map`),
+      so there is no explode, no per-dimension aggregate and no re-join.
+    * **Probe / ADC / rerank**: :func:`_ivf_serve`, shared with
+      :func:`ivf_adc_topk`.
 
-    Cross-engine exactness: codebook training is the proven fixed-point
-    Lloyd class (bit-identical means, quantized argmin, lowest-code
-    ties), reconstruction uses full-precision double literals, and every
-    ranking boundary ties on ``neighbor_id`` — so the composition
-    carries a FULL SQL oracle that replays training as unrolled CTEs.
+    Every step is deterministic (fixed-point means, quantized argmin with
+    lowest-code ties, exact float64 folds, ``neighbor_id`` tie-breaks), so
+    the composition carries a FULL SQL oracle that replays training as
+    unrolled CTEs.  ``centroids`` and ``codebooks`` pass an offline index
+    (the serving form: FAISS never retrains per query batch); otherwise
+    the |cells|-row centroid table is collected once and re-injected as a
+    local table, so its corpus aggregate is not re-run by every training
+    action.
     """
-    # --- coarse centroids: exact fixed-point means; ``centroids`` passes
-    # the offline-collected table (serving form — the cell table is part
-    # of the index, so serving skips this corpus scan entirely).  r17:
-    # otherwise the |cells|-row table is collected ONCE (bounded by the
-    # codebook, never the corpus — the same driver-collect class as the
-    # trained codebooks below) and re-injected as a local table.  Lazily
-    # it sat inside the lineage of every training action AND twice in the
-    # final plan (probes + residualize), so the corpus-sized centroid
-    # aggregate ran ~5x per invocation.  Values round-trip as IEEE
-    # doubles — bit-identical, oracles unchanged. ---
     if centroids is None:
         centroids = coarse_centroids(
             vectors, cell_col=cell_col, vec_col=vec_col
@@ -1384,10 +1170,6 @@ def ivf_pq_topk(
     cent = local_table(
         vectors.sparkSession, cent_pairs, "cell int, centroid array<double>"
     )
-    # ``codebooks``: pass offline-trained codebooks to skip the training
-    # scans — the production serving reality (FAISS never retrains per
-    # query batch); training here is deterministic, so a cached table is
-    # bit-identical to a fresh one
     cb = codebooks
     if cb is None:
         res = residualize(
@@ -1397,16 +1179,10 @@ def ivf_pq_topk(
             res,
             id_col=id_col,
             vec_col="rvec",
-            dim=dim,
             m=m,
             ks=ks,
             iterations=iterations,
         )
-    # --- compressed corpus + ADC scan (r18, VERDICT r17 item 3): residual
-    # encode + LUT reconstruct + candidate cosine run as ONE fused numpy
-    # kernel (operation-for-operation the literal-expression forms:
-    # quantized integer argmin with lowest-code ties, exact float64
-    # reconstruct/fold — interpreted higher-order lambdas gone). ---
     return _ivf_serve(
         vectors, cent, score_pq_map(dim, dim // m, cb, dict(cent_pairs)),
         with_cell=True, id_col=id_col, vec_col=vec_col, cell_col=cell_col,
@@ -1434,29 +1210,22 @@ def semantic_dedup(
     ``bits``; the expected bucket occupancy is n / 2^bits, so candidate
     work stays O(n).
 
-    r17 de-skew (the VERDICT r16 item 1 window class, applied here):
-    the per-bucket representative was ``min(id).over(partitionBy
-    (bucket))`` — an unbounded window that executes a hot bucket (a
-    mega-duplicate embedding class) as ONE sorted straggler task, with
-    no map-side combine and no AQE splitting for WindowExec.  Now the
-    (id, bucket) projection is pinned once (lazy localCheckpoint — 16
-    bytes/row, far smaller than re-running the interpreted ``bits x
-    dim`` plane fold that produces it, the DSIR count-table lesson),
-    the representative is a ``groupBy(bucket).agg(min)`` (partial
-    aggregation collapses the hot bucket map-side), and the join back
-    is an explicit BROADCAST — sound at ANY scale because the rep
-    table is bounded by 2^bits rows, so the attach is skew-immune by
-    construction.  Rows identical: a per-key unbounded-window min is
-    definitionally the per-key aggregate broadcast back."""
+    De-skewed: the (id, bucket) projection is pinned once (lazy
+    localCheckpoint, 16 bytes/row), the representative is a
+    ``groupBy(bucket).agg(min)`` (partial aggregation collapses a hot
+    bucket map-side, where a ``min().over(partitionBy(bucket))`` window
+    ran it as one straggler task), and the join back is a BROADCAST of
+    the at most 2^bits-row rep table.  The bucket is one table of
+    :func:`lsh_topk`'s kernel (:func:`_lsh_buckets`), so both operators
+    share one bucket definition."""
     if dim is None:
-        # infer: a wrong dim would NULL every plane dot (zip_with pads
-        # with nulls) and silently collapse the corpus into bucket 0
         dim = len(vectors.select(vec_col).first()[0])
     planes = hyperplane_lsh_perms(bits, dim, seed)
-    bucket = F.expr(lsh_bucket_sql(vec_col, planes))
-    keyed = vectors.select(
-        F.col(id_col), bucket.alias("bucket")
-    ).localCheckpoint(eager=False)
+    keyed = (
+        _lsh_buckets(vectors.select(id_col, vec_col), planes, 1, bits)
+        .select(F.col(id_col), F.col("__bt")[0].alias("bucket"))
+        .localCheckpoint(eager=False)
+    )
     reps = keyed.groupBy("bucket").agg(F.min(id_col).alias("rep_id"))
     # the rep table is bounded by 2^bits rows — an explicit broadcast is
     # safe for the practical bits range, but a caller raising bits past

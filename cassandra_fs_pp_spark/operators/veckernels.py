@@ -27,13 +27,28 @@ BIT-EXACTLY:
 * a cosine with a zero denominator is NULL (:func:`cosine_array`,
   :func:`unit_rows`), as ``try_divide`` gives, so it ranks last.
 
+NULL/NaN contract: a kernel returns what its expression form (kept in
+``tests/vecref.py``) returns with ``spark.sql.ansi.enabled=false``;
+under ANSI (the Spark 4 default) that form raises ``DIVIDE_BY_ZERO`` or
+``CAST_OVERFLOW`` where the kernel returns NULL, 0 or a saturated value.
+
+* The PQ/k-means argmin (:func:`pq_assign_codes`) adds, per element,
+  ``CAST(round((x - c)^2 * 1e9) AS BIGINT)``: NaN casts to 0, a term at
+  or above 2^63 saturates to ``Long.MAX_VALUE``, the BIGINT sums wrap,
+  and ties go to the lowest code.  A NULL element adds 0 like NaN, so a
+  NULL component is ignored and a NULL vector takes code 0.
+* An LSH sign bit (:func:`lsh_buckets_map`) is set on ``dot >= 0`` in
+  Spark's order, where NaN sorts above every double, and cleared on a
+  NULL dot.
+
 The kernels fall in three groups, built on three row helpers —
 :func:`seq_l2` (the exact-fold norm), :func:`unit_rows` (the zero-safe
 normaliser) and :func:`fixed_rows` (the ``floor(X * scale)`` quantiser):
 
-* exact-fold scorers for the quantized ANN path and LSH
-  (:func:`score_sq8_map`, :func:`score_pq_map`, :func:`score_fp32_map`,
-  :func:`lsh_buckets_map`), bit-identical to the SQL expression forms;
+* exact-fold kernels for the quantized ANN path, PQ training and LSH
+  (:func:`pq_codes_map`, :func:`score_sq8_map`, :func:`score_pq_map`,
+  :func:`score_fp32_map`, :func:`lsh_buckets_map`), bit-identical to the
+  SQL expression forms;
 * BLAS scorers over unit rows for the exact small-query-set top-k
   (:func:`blas_topk_map`, :func:`unit_cosine_map`);
 * fixed-point integer kernels (:func:`gram_partials_map`,
@@ -55,8 +70,8 @@ from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 
 def round_half_up(y: np.ndarray) -> np.ndarray:
@@ -89,22 +104,28 @@ def round_half_up(y: np.ndarray) -> np.ndarray:
     return out
 
 
-def _mat(col, dim: int) -> np.ndarray:
-    """pandas Series of fixed-``dim`` arrays -> (n, dim) float64 matrix.
-    float32 -> float64 widening is exact (same as ``CAST(x AS DOUBLE)``)."""
-    return np.array([np.asarray(v) for v in col], dtype=np.float64).reshape(
-        len(col), dim
-    )
-
-
 def _mat_arrow(col, dim: int) -> np.ndarray:
     """Arrow list<float|double> array -> (n, dim) float64 matrix via the
     FLAT values buffer (guide §4.2: a list column is one contiguous data
     buffer plus offsets, so this is a zero-copy view + one exact-widening
     astype — measured ~20x cheaper than materializing a pandas Series of
-    per-row ndarrays at 250k x 64)."""
+    per-row ndarrays at 250k x 64).  A NULL element, and every element of
+    a NULL vector, reads as NaN (:func:`_null_rows` tells them apart)."""
+    if col.null_count:
+        col = pc.fill_null(col, pa.scalar([None] * dim, col.type))
     flat = col.flatten()
     return np.asarray(flat).reshape(len(col), dim).astype(np.float64)
+
+
+def _null_rows(col) -> np.ndarray:
+    """Mask of the rows whose vector is NULL or holds a NULL element: a
+    Spark fold over such a row is NULL."""
+    null = np.array(col.is_null(), dtype=bool)
+    flat = col.flatten()
+    if flat.null_count:
+        parent = np.asarray(pc.list_parent_indices(col))
+        null[parent[np.array(flat.is_null(), dtype=bool)]] = True
+    return null
 
 
 def _np_col(batch, name: str) -> np.ndarray:
@@ -128,10 +149,7 @@ def seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 def seq_l2(A: np.ndarray) -> np.ndarray:
     """Row-wise ``sqrt(((0 + a0*a0) + a1*a1) + ...)`` — the op sequence
     of :func:`similarity.l2_norm`."""
-    acc = np.zeros(A.shape[0], dtype=np.float64)
-    for i in range(A.shape[1]):
-        acc = acc + A[:, i] * A[:, i]
-    return np.sqrt(acc)
+    return np.sqrt(seq_dot(A, A))
 
 
 def cosine_array(dots: np.ndarray, qn: np.ndarray, nn: np.ndarray):
@@ -163,7 +181,8 @@ def fixed_rows(X: np.ndarray, scale: int) -> np.ndarray:
 
 
 def sq_dequantize(X: np.ndarray, mn: np.ndarray, mx: np.ndarray, levels: int) -> np.ndarray:
-    """SQ8 dequantize, operation-for-operation ``_dq_vec_sql``:
+    """SQ8 dequantize, operation-for-operation the SQL form
+    ``tests/vecref.py`` keeps:
     per element ``code = round(((v - mn) / rng) * levels)`` (0 where
     ``rng = 0``), ``dq = mn + code * (rng / levels)``."""
     lv = float(levels)
@@ -177,12 +196,11 @@ def sq_dequantize(X: np.ndarray, mn: np.ndarray, mx: np.ndarray, levels: int) ->
 def pq_assign_codes(
     X: np.ndarray, books: list[np.ndarray], dsub: int
 ) -> np.ndarray:
-    """PQ code assignment over residual rows ``X`` (n, m*dsub):
-    per subspace j, ``argmin_c sum_p CAST(round((x-c)^2 * 1e9) AS
-    BIGINT)`` with ties to the LOWEST code — operation-for-operation
-    ``_pq_code_sql`` under non-ANSI Spark (quantized integer distances,
-    the CAST's saturation, wrapping int64 sums, ``np.argmin`` keeps the
-    first minimum like the strict-< fold)."""
+    """PQ code assignment over rows ``X`` (n, m*dsub): per subspace j,
+    ``argmin_c sum_p CAST(round((x-c)^2 * 1e9) AS BIGINT)`` with ties to
+    the LOWEST code (``np.argmin`` keeps the first minimum), under the
+    module's argmin contract: a NaN or NULL element adds 0, a term at or
+    above 2^63 saturates, the sums wrap."""
     n = X.shape[0]
     m = len(books)
     codes = np.empty((n, m), dtype=np.int32)
@@ -212,19 +230,40 @@ def pq_reconstruct(
     )
 
 
-def score_sq8_map(dim: int, mn, mx, levels: int):
-    """mapInArrow factory: fused SQ8 dequantize + candidate cosine.
+def pq_codes_map(cb):
+    """mapInArrow factory: PQ code assignment.  Input rows end with the
+    vector column; output the input columns plus ``__ks``, the
+    ``array<int>`` of the :func:`pq_assign_codes` codes under the
+    ``m x ks x dsub`` codebooks ``cb``."""
+    books = [np.asarray(b, dtype=np.float64) for b in cb]
+    m, dsub = len(books), books[0].shape[1]
 
-    Input rows ``(query_id, neighbor_id, qn, qv, vec)`` (one per probed
-    candidate); output ``(query_id, neighbor_id, adc_cos)`` with
-    ``adc_cos = dot(qv, dq(vec)) / (qn * l2(dq(vec)))`` — bit-identical
-    to the ``_dq_vec_sql`` + ``dot``/``l2_norm`` expression form.
-    Dequantizing per CANDIDATE (not per corpus row) recomputes a
-    deterministic function of ``vec`` — identical values, and the
-    candidate stream ships the narrower fp32 codes instead of the
-    float64 dq vectors."""
-    mnv = np.asarray(mn, dtype=np.float64)
-    mxv = np.asarray(mx, dtype=np.float64)
+    def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            n = b.num_rows
+            if not n:
+                continue
+            X = _mat_arrow(b.column(b.num_columns - 1), m * dsub)
+            codes = pq_assign_codes(X, books, dsub)
+            offsets = np.arange(0, n * m + 1, m, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns, pa.ListArray.from_arrays(offsets, codes.reshape(-1))],
+                names=[*b.schema.names, "__ks"],
+            )
+
+    return _fn
+
+
+def _adc_map(dim: int, encode):
+    """mapInArrow factory of the ADC scorers.  Input rows ``(query_id,
+    neighbor_id, qn, qv, vec[, cell])`` (one per probed candidate);
+    output ``(query_id, neighbor_id, adc_cos)`` with ``adc_cos = dot(qv,
+    a) / (qn * l2(a))``, ``a`` the ADC vector ``encode(V, b, first)`` of
+    the batch's DISTINCT neighbors (rows ``first`` of batch ``b``, fp32
+    vectors ``V``).  A neighbor appears once per probing query, so each
+    is encoded once and scattered: the same deterministic function of its
+    row, ~|queries|x less work, and the candidate stream ships fp32
+    vectors instead of float64 ADC vectors."""
 
     def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -232,15 +271,11 @@ def score_sq8_map(dim: int, mn, mx, levels: int):
                 continue
             Q = _mat_arrow(_arrow_col(b, "qv"), dim)
             V = _mat_arrow(_arrow_col(b, "vec"), dim)
-            # a neighbor appears once per probing query: dequantize each
-            # DISTINCT neighbor once and scatter (same deterministic
-            # function of vec — identical values, ~|queries|x less work)
             _, first, inv = np.unique(
                 _np_col(b, "neighbor_id"), return_index=True, return_inverse=True
             )
-            DQu = sq_dequantize(V[first], mnv, mxv, levels)
-            NNu = seq_l2(DQu)
-            cos = cosine_array(seq_dot(Q, DQu[inv]), _np_col(b, "qn"), NNu[inv])
+            A = encode(V[first], b, first)
+            cos = cosine_array(seq_dot(Q, A[inv]), _np_col(b, "qn"), seq_l2(A)[inv])
             yield pa.RecordBatch.from_arrays(
                 [_arrow_col(b, "query_id"), _arrow_col(b, "neighbor_id"), cos],
                 names=["query_id", "neighbor_id", "adc_cos"],
@@ -249,16 +284,21 @@ def score_sq8_map(dim: int, mn, mx, levels: int):
     return _fn
 
 
-def score_pq_map(dim: int, dsub: int, cb, cent_map: dict):
-    """mapInArrow factory: fused PQ residual-encode + reconstruct +
-    candidate cosine.
+def score_sq8_map(dim: int, mn, mx, levels: int):
+    """:func:`_adc_map` over SQ8-dequantized vectors: ``adc_cos =
+    dot(qv, dq(vec)) / (qn * l2(dq(vec)))``, bit-identical to the
+    ``_dq_vec_sql`` + ``dot``/``l2_norm`` expression form."""
+    mnv = np.asarray(mn, dtype=np.float64)
+    mxv = np.asarray(mx, dtype=np.float64)
+    return _adc_map(dim, lambda V, b, first: sq_dequantize(V, mnv, mxv, levels))
 
-    Input rows ``(query_id, neighbor_id, qn, qv, cell, vec)``; output
-    ``(query_id, neighbor_id, adc_cos)``.  Per candidate:
-    ``rvec = CAST(vec AS DOUBLE) - centroid(cell)`` (residualize),
-    ``codes = argmin`` (``_pq_code_sql``), ``pqv = centroid +
-    reconstruct(codes)``, ``adc_cos = dot(qv, pqv) / (qn * l2(pqv))``
-    — all operation-for-operation the expression forms."""
+
+def score_pq_map(dim: int, dsub: int, cb, cent_map: dict):
+    """:func:`_adc_map` over PQ-reconstructed residuals.  Per candidate
+    (input rows carry ``cell``): ``rvec = CAST(vec AS DOUBLE) -
+    centroid(cell)``, ``codes = argmin`` (``_pq_code_sql``), ``pqv =
+    centroid + reconstruct(codes)``, ``adc_cos = dot(qv, pqv) / (qn *
+    l2(pqv))`` — all operation-for-operation the expression forms."""
     books = [np.asarray(b, dtype=np.float64) for b in cb]
     cells = sorted(cent_map)
     cell_idx = {c: i for i, c in enumerate(cells)}
@@ -266,35 +306,13 @@ def score_pq_map(dim: int, dsub: int, cb, cent_map: dict):
         len(cells), dim
     )
 
-    def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if not b.num_rows:
-                continue
-            Q = _mat_arrow(_arrow_col(b, "qv"), dim)
-            V = _mat_arrow(_arrow_col(b, "vec"), dim)
-            # a neighbor appears once per probing query: encode each
-            # DISTINCT neighbor once and scatter (same deterministic
-            # function of (cell, vec) — identical values, ~|queries|x
-            # less argmin work)
-            _, first, inv = np.unique(
-                _np_col(b, "neighbor_id"), return_index=True, return_inverse=True
-            )
-            ci = np.array(
-                [cell_idx[c] for c in _np_col(b, "cell")[first]],
-                dtype=np.int64,
-            )
-            cent = C[ci]
-            R = V[first] - cent
-            codes = pq_assign_codes(R, books, dsub)
-            PQVu = cent + pq_reconstruct(codes, books)
-            NNu = seq_l2(PQVu)
-            cos = cosine_array(seq_dot(Q, PQVu[inv]), _np_col(b, "qn"), NNu[inv])
-            yield pa.RecordBatch.from_arrays(
-                [_arrow_col(b, "query_id"), _arrow_col(b, "neighbor_id"), cos],
-                names=["query_id", "neighbor_id", "adc_cos"],
-            )
+    def encode(V, b, first):
+        ci = [cell_idx[c] for c in _np_col(b, "cell")[first]]
+        cent = C[np.array(ci, dtype=np.int64)]
+        codes = pq_assign_codes(V - cent, books, dsub)
+        return cent + pq_reconstruct(codes, books)
 
-    return _fn
+    return _adc_map(dim, encode)
 
 
 def score_fp32_map(dim: int, ids: tuple[str, str] = ("query_id", "neighbor_id")):
@@ -325,11 +343,14 @@ def lsh_buckets_map(planes, tables: int, bits: int):
     """mapInArrow factory: hyperplane-LSH bucket ids and norms.  Input rows
     ``(key, vec)``; output ``(key, vec, __n, __bt)`` with ``__n`` the
     :func:`seq_l2` norm and ``__bt[t]`` the ``bits``-bit sign bucket of
-    table ``t`` (bit b set when ``dot(vec, plane) >= 0``).  ``planes`` is
-    the ``(tables * bits, dim)`` table of :func:`similarity.lsh_bucket_sql`;
-    the dot folds run over the dimension index in ascending order, the
-    SQL fold's exact IEEE sequence, so buckets and norms are
-    bit-identical to the expression form."""
+    table ``t``.  ``planes`` is the ``(tables * bits, dim)`` table of
+    :func:`similarity.hyperplane_lsh_perms` rows.  Bit b is set when
+    ``dot(vec, plane_b) >= 0`` in Spark's order, where NaN sorts above
+    every double, so a NaN dot sets it; a NULL dot (a NULL vector or
+    element) clears it and makes ``__n`` NULL.  The dot folds run over the
+    dimension index in ascending order, the SQL fold's exact IEEE
+    sequence, so buckets and norms are bit-identical to the
+    ``zip_with``/``aggregate`` expression form."""
     P = np.asarray(planes, dtype=np.float64)
     dim = P.shape[1]
     weights = 1 << np.arange(bits, dtype=np.int64)
@@ -340,16 +361,18 @@ def lsh_buckets_map(planes, tables: int, bits: int):
             if not n:
                 continue
             X = _mat_arrow(b.column(1), dim)
+            null = _null_rows(b.column(1))
             acc = np.zeros((n, P.shape[0]))
             for i in range(dim):
                 acc += X[:, i][:, None] * P[None, :, i]
-            bt = ((acc >= 0.0).reshape(n, tables, bits) * weights).sum(axis=2)
+            bit = ((acc >= 0.0) | np.isnan(acc)) & ~null[:, None]
+            bt = (bit.reshape(n, tables, bits) * weights).sum(axis=2)
             offsets = np.arange(0, n * tables + 1, tables, dtype=np.int32)
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(0),
                     b.column(1),
-                    pa.array(seq_l2(X)),
+                    pa.array(seq_l2(X), mask=null),
                     pa.ListArray.from_arrays(offsets, bt.reshape(-1)),
                 ],
                 names=[*b.schema.names, "__n", "__bt"],
@@ -493,22 +516,3 @@ def pca_project_map(va: np.ndarray, vb: np.ndarray, den_a: float, den_b: float, 
             )
 
     return _fn
-
-
-def pq_codes_udf(cb, dsub: int, vec_dim: int):
-    """pandas_udf: residual vector -> ``array<int>`` of the m PQ codes
-    (the training-loop form of :func:`pq_assign_codes` — ArrowEvalPython
-    replaces m interpreted ``_pq_code_sql`` projections)."""
-    from pyspark.sql import functions as F
-
-    books = [np.asarray(b, dtype=np.float64) for b in cb]
-
-    @F.pandas_udf("array<int>")
-    def _codes(vec: pd.Series) -> pd.Series:
-        if not len(vec):
-            return pd.Series([], dtype=object)
-        X = _mat(vec, vec_dim)
-        codes = pq_assign_codes(X, books, dsub)
-        return pd.Series(list(codes))
-
-    return _codes

@@ -82,23 +82,15 @@ def rolling_median(
     frame: WindowSpec,
     *,
     min_periods: int = 0,
-    approx: bool = False,
 ) -> Column:
     """W1/W2/W3 — median over a window frame.
 
     Spark has no native median *window* function; exact ``percentile(x,0.5)``
     over the frame is the JVM-side equivalent. ``min_periods`` nulls the
     result when fewer non-null points are in frame (pandas parity).
-
-    ``approx=True`` switches to ``approx_percentile`` (KLL-sketch based) —
-    the SURVEY §7.4 scale valve when exact medians over wide time-range
-    frames get heavy (exact is O(frame) per row; the sketch is ~O(log)).
     """
     xcol = F.col(x) if isinstance(x, str) else x
-    if approx:
-        med = F.approx_percentile(xcol, F.lit(0.5), F.lit(10000)).over(frame)
-    else:
-        med = F.percentile(xcol, F.lit(0.5)).over(frame)
+    med = F.percentile(xcol, F.lit(0.5)).over(frame)
     if min_periods > 1:
         return F.when(F.count(xcol).over(frame) >= min_periods, med)
     return med
@@ -514,8 +506,7 @@ def step_detect(
     ``[t+after_s[0], t+after_s[1]]``; rows where ``|med_after - med_before|``
     exceeds ``threshold`` (with ``min_periods`` samples in each frame) are
     step candidates. Two range-frame medians over one partitioning — same
-    exchange, exact ``percentile`` (swap to ``rolling_median(approx=True)``
-    at scale if frames get very wide).
+    exchange, exact ``percentile``.
 
     Emits the flagged rows with ``med_before``, ``med_after``, ``step``.
     """

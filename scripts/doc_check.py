@@ -179,10 +179,6 @@ def _id_magnitude_scan(src: str) -> bool:
 REACH_ALLOW = frozenset({
     # tests compare the registry's SQL-string/Arrow path against this form:
     "cdc_chunk_expr",  # Column form of functions.text.cdc_chunks
-    "lsh_bucket",  # Column form of similarity.lsh_bucket_sql
-    "_pq_code_sql",  # SQL form veckernels.pq_assign_codes must match
-    "_dq_vec_sql",  # SQL form veckernels.sq_dequantize must match
-    "_pq_reconstruct_sql",  # SQL form veckernels.pq_reconstruct must match
     "calibration_join",  # join form calibration_group_mean must match
     "encode_fixed_point",  # column arithmetic to_netcdf's int32 bytes must match
     # paper workflows not wired into SiteEngine or the CLI yet:

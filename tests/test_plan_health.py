@@ -853,6 +853,68 @@ def test_ivf_pq_plan_shape(spark):
     assert "LessThan(vec_id,162)" in serving.replace(" ", ""), serving
 
 
+def _run_plans(monkeypatch, build) -> list[str]:
+    """Executed plans of every frame ``build()`` collects or
+    localCheckpoints, then of the frame it returns (if any): a query's
+    Spark work includes what its function runs before the final action."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    for name in ("collect", "localCheckpoint"):
+
+        def rec(self, *a, _orig=getattr(DataFrame, name), **kw):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, name, rec)
+    out = build()
+    if isinstance(out, DataFrame):
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+    return plans
+
+
+def test_vector_argmin_and_buckets_are_arrow_kernels(spark, monkeypatch):
+    """emb_kmeans_assign (Lloyd rounds and final assignment), the PQ
+    training pass and emb_semantic_dedup's bucket run their vector
+    decision in a MapInArrow kernel: no plan they run holds an
+    interpreted ``aggregate(zip_with(...))`` argmin or bucket fold."""
+    from cassandra_fs_pp_spark.operators.similarity import (
+        coarse_centroids,
+        pq_train_codebooks,
+        residualize,
+    )
+    from cassandra_fs_pp_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF, "embeddings")
+    builds = {
+        "emb_kmeans_assign": lambda: entrymod.queries()["emb_kmeans_assign"](spark, SF),
+        "emb_semantic_dedup": lambda: entrymod.queries()["emb_semantic_dedup"](spark, SF),
+        "pq_train_codebooks": lambda: pq_train_codebooks(
+            residualize(emb, coarse_centroids(emb)), vec_col="rvec", m=8, ks=8,
+            iterations=1,
+        ),
+    }
+    for name, build in builds.items():
+        plans = _run_plans(monkeypatch, build)
+        assert any("MapInArrow" in p for p in plans), (name, plans)
+        for p in plans:
+            assert "aggregate(zip_with" not in p, (name, p)
+
+
+def test_veckernels_imports_no_pandas():
+    """Every kernel is a mapInArrow factory over Arrow buffers; the
+    module imports no pandas."""
+    import ast
+    import inspect
+
+    from cassandra_fs_pp_spark.operators import veckernels
+
+    tree = ast.parse(inspect.getsource(veckernels))
+    mods = {a.name for n in ast.walk(tree) if isinstance(n, ast.Import) for a in n.names}
+    mods |= {n.module for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)}
+    assert not {m for m in mods if m and m.split(".")[0] == "pandas"}, mods
+
+
 def test_kn5_perplexity_plan_shape(spark):
     """text_kn5_perplexity (r13): the kn3 topology two orders up — all
     nine model tables attach broadcast (each is a narrow aggregate of

@@ -632,27 +632,6 @@ def test_shuffle_shard_deterministic_and_balanced(spark):
     assert max(sizes.values()) < 2 * n / 8  # no hot shard
 
 
-def test_dot_and_bucket_sql_forms_bit_identical(spark):
-    """The F.expr string builder produces bit-identical results to the
-    Column builder (same left-to-right fold order): guards the SQL-text
-    fast path against accidental reassociation, which would silently
-    break oracle hash parity."""
-    from cassandra_fs_pp_spark.operators.similarity import (
-        hyperplane_lsh_perms,
-        lsh_bucket,
-        lsh_bucket_sql,
-    )
-    from cassandra_fs_pp_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    planes = hyperplane_lsh_perms(6, 64, 9)
-    buckets = emb.select(
-        lsh_bucket(F.col("embedding"), planes).alias("col_form"),
-        F.expr(lsh_bucket_sql("embedding", planes)).alias("sql_form"),
-    )
-    assert buckets.filter(F.col("col_form") != F.col("sql_form")).count() == 0
-
-
 def test_semantic_dedup_identical_vectors_collapse(spark):
     from cassandra_fs_pp_spark.operators.similarity import semantic_dedup
 

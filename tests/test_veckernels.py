@@ -3,9 +3,10 @@
 VERDICT r17 item 3's gate: the vectorized kernels must reproduce the
 interpreted SQL expression forms EXACTLY — same HALF_UP decimal-string
 rounding, same left-to-right float64 fold order, same lowest-code
-argmin ties — verified here against the still-committed SQL helpers
-(`_dq_vec_sql`, `_pq_code_sql`, `_pq_reconstruct_sql`, `dot`,
-`l2_norm`) on adversarial `.5`-boundary fixtures plus real corpus data.
+argmin ties — verified here against the reference forms in
+`tests/vecref.py` (`_dq_vec_sql`, `_pq_code_sql`, `_pq_reconstruct_sql`,
+`lsh_bucket`) and `dot`/`l2_norm` on adversarial `.5`-boundary fixtures
+plus real corpus data.
 """
 
 from __future__ import annotations
@@ -14,13 +15,11 @@ import math
 import random
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from cassandra_fs_pp_spark.operators.similarity import (
-    _dq_vec_sql,
-    _pq_code_sql,
-    _pq_reconstruct_sql,
     _sq_stats_and_centroids,
     _sq_stats_row,
     coarse_centroids,
@@ -35,6 +34,7 @@ from cassandra_fs_pp_spark.operators.veckernels import (
     seq_l2,
     sq_dequantize,
 )
+from tests.vecref import _dq_vec_sql, _pq_code_sql, _pq_reconstruct_sql
 
 SF001 = "/root/testdata/sf0.01"
 
@@ -163,6 +163,13 @@ def test_sq_dequantize_zero_range_and_tie_rows(spark):
 
 
 def test_pq_codes_match_sql_with_ties(spark):
+    """pq_assign_codes and the pq_codes_map kernel vs the _pq_code_sql
+    reference form, ANSI off (the argmin contract in the veckernels
+    docstring): ties to the lowest code, a term saturating at 2^63 with
+    wrapping sums, a NULL element adding 0 like a NaN one, and an empty
+    batch."""
+    from cassandra_fs_pp_spark.operators.veckernels import pq_codes_map
+
     dsub, ks = 4, 4
     rng = random.Random(3)
     book = [[rng.uniform(-1, 1) for _ in range(dsub)] for _ in range(ks)]
@@ -175,18 +182,57 @@ def test_pq_codes_match_sql_with_ties(spark):
     # a vector EXACTLY on centroid 3 (distance 0) and one exactly between
     # centroids 0 and 1 in the quantized-integer domain
     rows.append((300, list(book[3])))
-    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    sql_codes = {
-        r["vec_id"]: r["c"]
-        for r in df.selectExpr(
-            "vec_id", f"{_pq_code_sql(book, 'v', 1, dsub)} AS c"
-        ).collect()
-    }
+    edges = [
+        (301, [1e5, 0.0, 0.0, 0.0]),  # the first term saturates
+        (302, [None, 0.5, -0.5, 0.25]),
+        (303, [float("nan"), 0.5, -0.5, 0.25]),
+    ]
+
+    def sql_codes(book, rows, dsub):
+        df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+        ansi = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            want = {
+                r["vec_id"]: r["c"]
+                for r in df.selectExpr(
+                    "vec_id", f"{_pq_code_sql(book, 'v', 1, dsub)} AS c"
+                ).collect()
+            }
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+        got = {
+            r["vec_id"]: r["__ks"][0]
+            for r in df.mapInArrow(
+                pq_codes_map([book]),
+                schema="vec_id long, v array<double>, __ks array<int>",
+            ).collect()
+        }
+        assert got == want
+        return want
+
+    want = sql_codes(book, rows + edges, dsub)
     X = np.array([r[1] for r in rows])
     codes = pq_assign_codes(X, [np.asarray(book)], dsub)[:, 0]
     for row_i, (i, _) in enumerate(rows):
-        assert sql_codes[i] == codes[row_i], i
+        assert want[i] == codes[row_i], i
     assert 2 not in set(codes.tolist())  # duplicate centroid loses ties
+    assert want[302] == want[303]  # NULL and NaN both add 0
+    # the contract's worked example: [NULL, 4] ignores its first
+    # component and [NaN, 1] is nearest to [1, 1]
+    small = [[0.0, 0.0], [1.0, 1.0], [5.0, 5.0]]
+    ex = sql_codes(small, [(0, [None, 4.0]), (1, [float("nan"), 1.0])], 2)
+    assert ex == {0: 2, 1: 1}
+    # a NULL vector has every distance 0: code 0, not the code nearest
+    # the origin
+    assert sql_codes(small[::-1], [(0, None)], 2) == {0: 0}
+    # an empty batch: no codes, and the kernel yields nothing
+    assert pq_assign_codes(np.empty((0, dsub)), [np.asarray(book)], dsub).shape == (0, 1)
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64()), pa.array([], pa.list_(pa.float64()))],
+        names=["vec_id", "v"],
+    )
+    assert list(pq_codes_map([book])(iter([empty]))) == []
 
 
 def test_pq_reconstruct_matches_sql(spark):
@@ -305,7 +351,7 @@ def test_fused_pq_scoring_matches_expression_form(spark):
         "cell int, centroid array<double>",
     )
     res = residualize(emb, cent)
-    cb = pq_train_codebooks(res, vec_col="rvec", dim=dim, m=m, ks=ks, iterations=1)
+    cb = pq_train_codebooks(res, vec_col="rvec", m=m, ks=ks, iterations=1)
     q = emb.filter(F.col("vec_id") < 40).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
@@ -364,11 +410,10 @@ def test_fused_pq_scoring_matches_expression_form(spark):
     assert want == got
 
 
-def test_pq_codes_udf_matches_sql_on_corpus(spark):
-    """The training-loop pandas_udf vs the m literal _pq_code_sql
+def test_pq_codes_map_matches_sql_on_corpus(spark):
+    """The training-loop kernel vs the m literal _pq_code_sql
     projections on the real residual corpus."""
-    from cassandra_fs_pp_spark.operators.similarity import residualize
-    from cassandra_fs_pp_spark.operators.veckernels import pq_codes_udf
+    from cassandra_fs_pp_spark.operators.similarity import _assign_codes, residualize
     from cassandra_fs_pp_spark.session import local_table
 
     m, ks, dim = 8, 8, 64
@@ -406,9 +451,7 @@ def test_pq_codes_udf_matches_sql_on_corpus(spark):
     }
     got = {
         r["vec_id"]: list(r["__ks"])
-        for r in res.select(
-            "vec_id", pq_codes_udf(cb, dsub, dim)(F.col("rvec")).alias("__ks")
-        ).collect()
+        for r in _assign_codes(res, cb, "vec_id", "rvec").collect()
     }
     assert want == got
 
@@ -420,7 +463,7 @@ def test_ann_kernel_plans_use_arrow_python(spark):
     on the corpus-scoring side (probe-side folds over the bounded
     |q| x |cells| table are allowed)."""
     import __spark_entry__ as entrymod
-    from cassandra_fs_pp_spark.operators.veckernels import pq_codes_udf
+    from cassandra_fs_pp_spark.operators.similarity import _assign_codes
 
     for name in ["ann_ivf_adc_topk", "ann_ivf_pq_topk"]:
         df = entrymod.queries()[name](spark, SF001)
@@ -430,12 +473,12 @@ def test_ann_kernel_plans_use_arrow_python(spark):
         # the interpreted SQ8/PQ projections are gone from the corpus side
         assert "dqv" not in plan, name
         assert "pqv" not in plan, name
-    # the training-loop code assignment is an ArrowEvalPython projection
+    # the training-loop code assignment is a MapInArrow kernel
     emb = _emb(spark)
     cb0 = [[[0.0] * 8] * 8] * 8
-    codes = emb.select(pq_codes_udf(cb0, 8, 64)(F.col("embedding")))
+    codes = _assign_codes(emb, cb0, "embedding")
     tplan = codes._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in tplan, tplan
+    assert "MapInArrow" in tplan, tplan
 
 
 def test_kernel_cosines_null_on_zero_denominator(spark):
@@ -664,3 +707,52 @@ def test_python_workers_import_shipped_package(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "rows 4 4" in out.stdout, out.stdout
+
+
+def test_lsh_buckets_match_column_form(spark):
+    """The LSH bucket kernel vs the Column form ``vecref.lsh_bucket`` on
+    the sf0.01 corpus and on the edges: a NaN dot sets its bit (Spark
+    orders NaN above every double, numpy's ``NaN >= 0`` is false), a
+    NULL element or a NULL vector clears every bit and nulls the norm,
+    and a zero vector's 0.0 dots set every bit."""
+    from cassandra_fs_pp_spark.operators.similarity import (
+        _lsh_buckets,
+        hyperplane_lsh_perms,
+    )
+    from tests.vecref import lsh_bucket
+
+    def both(df, planes):
+        want = {
+            r["vec_id"]: r["b"]
+            for r in df.select(
+                "vec_id", lsh_bucket(F.col("embedding"), planes).alias("b")
+            ).collect()
+        }
+        got = {
+            r["vec_id"]: (r["__bt"][0], r["__n"])
+            for r in _lsh_buckets(
+                df.select("vec_id", "embedding"), planes, 1, len(planes)
+            ).collect()
+        }
+        assert {i: b for i, (b, _) in got.items()} == want
+        return want, {i: n for i, (_, n) in got.items()}
+
+    nan, inf = float("nan"), float("inf")
+    edges = spark.createDataFrame(
+        [
+            (0, [nan, 1.0]),
+            (1, [None, 1.0]),
+            (2, None),
+            (3, [0.0, 0.0]),
+            (4, [inf, -1.0]),
+            (5, [0.5, -2.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    want, norms = both(edges, [[1.0, 0.0], [0.0, 1.0], [-1.0, -1.0]])
+    assert want[0] == 7 and want[3] == 7
+    assert want[1] == 0 and want[2] == 0
+    assert norms[1] is None and norms[2] is None and norms[3] == 0.0
+    emb = _emb(spark)
+    want, _ = both(emb, hyperplane_lsh_perms(6, 64, 9))
+    assert len(set(want.values())) > 8  # a real spread of buckets

@@ -156,29 +156,6 @@ def test_piecewise_offset(spark):
     assert out["adj"].tolist() == expected
 
 
-def test_rolling_median_approx_close_to_exact(spark):
-    import numpy as np
-    import pandas as pd
-
-    from cassandra_fs_pp_spark.operators.windows import rolling_median, time_frame
-
-    rng = np.random.default_rng(5)
-    idx = pd.date_range("2024-01-01", periods=500, freq="h")
-    sdf = spark.createDataFrame(
-        pd.DataFrame({"t": idx, "v": rng.normal(10, 3, 500)})
-    )
-    frame = time_frame("t", before_s=86400)
-    out = sdf.select(
-        rolling_median("v", frame).alias("exact"),
-        rolling_median("v", frame, approx=True).alias("approx"),
-    ).collect()
-    err = max(abs(r["exact"] - r["approx"]) for r in out)
-    # approx_percentile returns an actual element (no interpolation), so
-    # even-count frames differ by up to one inter-element gap; on N(10,3)
-    # hourly data that's well under 1.5
-    assert err < 1.5
-
-
 def test_debounce_keep_first_bursts(spark):
     from cassandra_fs_pp_spark.operators.dedup import debounce_keep_first
 
