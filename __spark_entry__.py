@@ -86,9 +86,12 @@ def _t(
     (one mapInPandas or one explode+map-side agg over the corpus —
     emb_gram_matrix, emb_label_inertia, ann_matryoshka_topk,
     emb_semantic_dedup, curation_pipeline, ann_block_topk) while heavy
-    per-row compute (PQ/kmeans argmin, tokenize+md5, minhash) keeps it.
-    At 100 TB the flag is moot — the guard never fires on a multi-split
-    scan."""
+    per-row compute (interpreted PQ argmin, tokenize+md5, minhash) keeps
+    it.  emb_kmeans_assign opts out too: its argmin is one Arrow kernel
+    pass per round, and at sf0.1 on a 4-core host its warm time went
+    0.98 -> 0.81 s at local[4] and 4.6 -> 0.93 s at local[32] without the
+    spread (each spread task pays a Python worker round trip).  At 100 TB
+    the flag is moot — the guard never fires on a multi-split scan."""
     tune(spark)
     df = load_table(spark, sf_dir, name)
     if spread and name in _SPREAD_TABLES:
@@ -5940,7 +5943,7 @@ def emb_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_fs_pp_spark.operators.similarity import kmeans_assign
 
     return kmeans_assign(
-        _t(spark, sf_dir, "embeddings"), k=4, iterations=2
+        _t(spark, sf_dir, "embeddings", spread=False), k=4, iterations=2
     )
 
 

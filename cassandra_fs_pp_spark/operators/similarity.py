@@ -244,18 +244,18 @@ def hyperplane_lsh_perms(bits: int, dim: int, seed: int = 7) -> list[list[float]
     ]
 
 
-def _lsh_buckets(keyed: DataFrame, planes, tables: int, bits: int) -> DataFrame:
-    """``(key, vec)`` rows plus ``__n`` (the norm) and ``__bt`` (one
-    ``bits``-bit sign bucket per table): the
-    :func:`veckernels.lsh_buckets_map` kernel."""
-    schema = StructType(
-        [
-            *keyed.schema.fields,
-            StructField("__n", DoubleType()),
-            StructField("__bt", ArrayType(LongType())),
-        ]
+def _lsh_buckets(
+    keyed: DataFrame, planes, tables: int, bits: int, keep_vec: bool = False
+) -> DataFrame:
+    """``(key, vec)`` rows -> ``(key, __bt)``, one ``bits``-bit sign bucket
+    per table, or ``(key, vec, __n, __bt)`` with the norm when
+    ``keep_vec``: the :func:`veckernels.lsh_buckets_map` kernel."""
+    key, vec = keyed.schema.fields
+    extra = [vec, StructField("__n", DoubleType())] if keep_vec else []
+    schema = StructType([key, *extra, StructField("__bt", ArrayType(LongType()))])
+    return keyed.mapInArrow(
+        lsh_buckets_map(planes, tables, bits, keep_vec), schema=schema
     )
-    return keyed.mapInArrow(lsh_buckets_map(planes, tables, bits), schema=schema)
 
 
 def lsh_topk(
@@ -344,9 +344,9 @@ def lsh_topk(
     agg_df = reps.groupBy("__g").agg(
         F.min_by(F.col(vec_col), F.col(id_col)).alias(vec_col)
     )
-    gbase = _lsh_buckets(agg_df, planes, tables, bits).localCheckpoint(
-        eager=False  # same one-barrier saving as the reps pin above
-    )
+    gbase = _lsh_buckets(
+        agg_df, planes, tables, bits, keep_vec=True
+    ).localCheckpoint(eager=False)  # same one-barrier saving as the reps pin
     # Stage 1 — GROUP-level candidate generation stays narrow: the bucket
     # self-join, repartition, and pair dedup move only (hash, hash) pairs,
     # never vectors. Both join sides are the same checkpoint-backed plan,
@@ -1025,14 +1025,18 @@ def residualize(
     )
 
 
-def _assign_codes(vectors: DataFrame, cb, *cols: str) -> DataFrame:
+def _assign_codes(
+    vectors: DataFrame, cb, *cols: str, keep_vec: bool = False
+) -> DataFrame:
     """``cols`` plus ``__ks``, each row's ``array<int>`` of PQ codes under
     the codebooks ``cb`` (the :func:`veckernels.pq_codes_map` kernel); the
-    last of ``cols`` is the vector."""
+    last of ``cols`` is the vector, which stays in the output only when
+    ``keep_vec``."""
     src = vectors.select(*cols)
+    fields = src.schema.fields if keep_vec else src.schema.fields[:-1]
     field = StructField("__ks", ArrayType(IntegerType()))
-    schema = StructType([*src.schema.fields, field])
-    return src.mapInArrow(pq_codes_map(cb), schema=schema)
+    schema = StructType([*fields, field])
+    return src.mapInArrow(pq_codes_map(cb, keep_vec), schema=schema)
 
 
 def pq_train_codebooks(
@@ -1084,7 +1088,7 @@ def pq_train_codebooks(
         for j in range(m)
     ]
     for _ in range(iterations):
-        codes = _assign_codes(vectors, cb, vec_col)
+        codes = _assign_codes(vectors, cb, vec_col, keep_vec=True)
         # exact fixed-point means per (subspace, code, pos-in-subspace):
         # one posexplode of the full vector, subspace derived from pos
         lf = codes.select(

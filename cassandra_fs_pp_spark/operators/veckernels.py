@@ -31,6 +31,10 @@ NULL/NaN contract: a kernel returns what its expression form (kept in
 ``tests/vecref.py``) returns with ``spark.sql.ansi.enabled=false``;
 under ANSI (the Spark 4 default) that form raises ``DIVIDE_BY_ZERO`` or
 ``CAST_OVERFLOW`` where the kernel returns NULL, 0 or a saturated value.
+Only the argmin and the LSH bucket kernels define NULL input; the
+scorers and the Gram/PCA kernels take non-NULL vectors: a NULL vector
+fails their batch (:func:`_mat_arrow`'s reshape), and a NULL element
+reads as NaN there, where the expression form's fold is NULL.
 
 * The PQ/k-means argmin (:func:`pq_assign_codes`) adds, per element,
   ``CAST(round((x - c)^2 * 1e9) AS BIGINT)``: NaN casts to 0, a term at
@@ -104,14 +108,15 @@ def round_half_up(y: np.ndarray) -> np.ndarray:
     return out
 
 
-def _mat_arrow(col, dim: int) -> np.ndarray:
+def _mat_arrow(col, dim: int, null_rows: bool = False) -> np.ndarray:
     """Arrow list<float|double> array -> (n, dim) float64 matrix via the
     FLAT values buffer (guide §4.2: a list column is one contiguous data
     buffer plus offsets, so this is a zero-copy view + one exact-widening
     astype — measured ~20x cheaper than materializing a pandas Series of
-    per-row ndarrays at 250k x 64).  A NULL element, and every element of
-    a NULL vector, reads as NaN (:func:`_null_rows` tells them apart)."""
-    if col.null_count:
+    per-row ndarrays at 250k x 64).  A NULL element reads as NaN.  A NULL
+    vector fails the reshape unless ``null_rows``, which reads it as a
+    row of NaNs; only the kernels that mask such rows afterwards set it."""
+    if null_rows and col.null_count:
         col = pc.fill_null(col, pa.scalar([None] * dim, col.type))
     flat = col.flatten()
     return np.asarray(flat).reshape(len(col), dim).astype(np.float64)
@@ -230,11 +235,13 @@ def pq_reconstruct(
     )
 
 
-def pq_codes_map(cb):
+def pq_codes_map(cb, keep_vec: bool = False):
     """mapInArrow factory: PQ code assignment.  Input rows end with the
-    vector column; output the input columns plus ``__ks``, the
-    ``array<int>`` of the :func:`pq_assign_codes` codes under the
-    ``m x ks x dsub`` codebooks ``cb``."""
+    vector column; output the input columns before it (and the vector
+    itself when ``keep_vec``) plus ``__ks``, the ``array<int>`` of the
+    :func:`pq_assign_codes` codes under the ``m x ks x dsub`` codebooks
+    ``cb``.  Spark cannot prune a column through ``mapInArrow``, so a
+    caller that reads only the codes leaves the vector here."""
     books = [np.asarray(b, dtype=np.float64) for b in cb]
     m, dsub = len(books), books[0].shape[1]
 
@@ -243,12 +250,13 @@ def pq_codes_map(cb):
             n = b.num_rows
             if not n:
                 continue
-            X = _mat_arrow(b.column(b.num_columns - 1), m * dsub)
+            X = _mat_arrow(b.column(b.num_columns - 1), m * dsub, null_rows=True)
             codes = pq_assign_codes(X, books, dsub)
             offsets = np.arange(0, n * m + 1, m, dtype=np.int32)
+            keep = b.num_columns if keep_vec else b.num_columns - 1
+            ks = pa.ListArray.from_arrays(offsets, codes.reshape(-1))
             yield pa.RecordBatch.from_arrays(
-                [*b.columns, pa.ListArray.from_arrays(offsets, codes.reshape(-1))],
-                names=[*b.schema.names, "__ks"],
+                [*b.columns[:keep], ks], names=[*b.schema.names[:keep], "__ks"]
             )
 
     return _fn
@@ -339,12 +347,12 @@ def score_fp32_map(dim: int, ids: tuple[str, str] = ("query_id", "neighbor_id"))
     return _fn
 
 
-def lsh_buckets_map(planes, tables: int, bits: int):
-    """mapInArrow factory: hyperplane-LSH bucket ids and norms.  Input rows
-    ``(key, vec)``; output ``(key, vec, __n, __bt)`` with ``__n`` the
-    :func:`seq_l2` norm and ``__bt[t]`` the ``bits``-bit sign bucket of
-    table ``t``.  ``planes`` is the ``(tables * bits, dim)`` table of
-    :func:`similarity.hyperplane_lsh_perms` rows.  Bit b is set when
+def lsh_buckets_map(planes, tables: int, bits: int, keep_vec: bool = False):
+    """mapInArrow factory: hyperplane-LSH bucket ids.  Input rows ``(key,
+    vec)``; output ``(key, __bt)``, or ``(key, vec, __n, __bt)`` when
+    ``keep_vec``, with ``__n`` the :func:`seq_l2` norm and ``__bt[t]`` the
+    ``bits``-bit sign bucket of table ``t``.  ``planes`` is the ``(tables
+    * bits, dim)`` table of :func:`similarity.hyperplane_lsh_perms` rows.  Bit b is set when
     ``dot(vec, plane_b) >= 0`` in Spark's order, where NaN sorts above
     every double, so a NaN dot sets it; a NULL dot (a NULL vector or
     element) clears it and makes ``__n`` NULL.  The dot folds run over the
@@ -360,7 +368,7 @@ def lsh_buckets_map(planes, tables: int, bits: int):
             n = b.num_rows
             if not n:
                 continue
-            X = _mat_arrow(b.column(1), dim)
+            X = _mat_arrow(b.column(1), dim, null_rows=True)
             null = _null_rows(b.column(1))
             acc = np.zeros((n, P.shape[0]))
             for i in range(dim):
@@ -368,14 +376,13 @@ def lsh_buckets_map(planes, tables: int, bits: int):
             bit = ((acc >= 0.0) | np.isnan(acc)) & ~null[:, None]
             bt = (bit.reshape(n, tables, bits) * weights).sum(axis=2)
             offsets = np.arange(0, n * tables + 1, tables, dtype=np.int32)
+            cols, names = [b.column(0)], [b.schema.names[0]]
+            if keep_vec:
+                cols += [b.column(1), pa.array(seq_l2(X), mask=null)]
+                names += [b.schema.names[1], "__n"]
             yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    b.column(1),
-                    pa.array(seq_l2(X), mask=null),
-                    pa.ListArray.from_arrays(offsets, bt.reshape(-1)),
-                ],
-                names=[*b.schema.names, "__n", "__bt"],
+                [*cols, pa.ListArray.from_arrays(offsets, bt.reshape(-1))],
+                names=[*names, "__bt"],
             )
 
     return _fn

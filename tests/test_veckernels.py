@@ -204,8 +204,7 @@ def test_pq_codes_match_sql_with_ties(spark):
         got = {
             r["vec_id"]: r["__ks"][0]
             for r in df.mapInArrow(
-                pq_codes_map([book]),
-                schema="vec_id long, v array<double>, __ks array<int>",
+                pq_codes_map([book]), schema="vec_id long, __ks array<int>"
             ).collect()
         }
         assert got == want
@@ -539,6 +538,21 @@ def test_kernel_cosines_null_on_zero_denominator(spark):
     assert want[(0, 1)] is None and want[(1, 0)] is None
     got = kernel(pairs.withColumnRenamed("vec", "nv"), score_fp32_map(dim), ["nv"], "cos_raw")
     assert got == want
+    # a scorer takes no NULL vector: the batch fails instead of a NaN
+    # cosine, which would rank FIRST where the expression form's NULL
+    # ranks last
+    null_nv = pa.RecordBatch.from_arrays(
+        [
+            pa.array([0, 1], pa.int64()),
+            pa.array([2, 3], pa.int64()),
+            pa.array([1.0, 1.0]),
+            pa.array([[1.0] * dim, [1.0] * dim], pa.list_(pa.float64())),
+            pa.array([[1.0] * dim, None], pa.list_(pa.float64())),
+        ],
+        names=["query_id", "neighbor_id", "qn", "qv", "nv"],
+    )
+    with pytest.raises(ValueError):
+        list(score_fp32_map(dim)(iter([null_nv])))
 
     stats = _sq_stats_row(emb, vec_col="embedding")
     st = stats.collect()[0]
@@ -731,7 +745,8 @@ def test_lsh_buckets_match_column_form(spark):
         got = {
             r["vec_id"]: (r["__bt"][0], r["__n"])
             for r in _lsh_buckets(
-                df.select("vec_id", "embedding"), planes, 1, len(planes)
+                df.select("vec_id", "embedding"), planes, 1, len(planes),
+                keep_vec=True,
             ).collect()
         }
         assert {i: b for i, (b, _) in got.items()} == want
