@@ -380,7 +380,8 @@ GROUP BY delta_s ORDER BY n DESC, delta_s ASC LIMIT 1
 
 def a3_per_key_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 fleet form — dominant sampling interval PER series key (the
-    per-site step filter_udg collects once per lineage)."""
+    per-site step that the L2 lineage fetches in its one build-time
+    collect, with the height-change medians)."""
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 25)
     deltas = ev.select(
         "user_id",

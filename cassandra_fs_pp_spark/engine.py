@@ -75,10 +75,12 @@ class SiteEngine:
 
         The reference builds L2 once in memory and writes it to CSV and
         to NetCDF (``bin/fs_process_l2.py:60-204``). A lazy L2 would
-        re-plan and re-run its whole lineage (six exchanges, three
-        broadcasts, five scans of the L1 CSV) for each sink and for a
+        re-plan and re-run its whole lineage (its shuffles, broadcasts
+        and three scans of the L1 CSV) for each sink and for a
         ``count()``; the checkpoint runs it once here and every later
-        action reads the stored rows.
+        action reads the stored rows. Building the lineage runs one more
+        job, the collect of the per-site scalars
+        (:func:`~cassandra_fs_pp_spark.plans.levels.fleet_normalise_udg`).
 
         The barrier sits here, not in :mod:`~cassandra_fs_pp_spark.plans.levels`:
         ``levels.level1_to_level2`` and ``fleet_level1_to_level2`` stay

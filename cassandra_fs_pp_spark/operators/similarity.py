@@ -94,9 +94,19 @@ def l2_norm(a: Column) -> Column:
 def _fixed_mean(v: Column) -> Column:
     """Exact fixed-point mean aggregate of ``v``: the long sum of
     ``round(v * VEC_FIXED_SCALE)`` over ``count(*)``, one final double
-    divide — bit-identical at any partitioning and in DuckDB."""
+    divide — bit-identical at any partitioning and in DuckDB.  The term
+    is the non-ANSI ``CAST(... AS BIGINT)`` of the ``veckernels``
+    NULL/NaN contract, which the session's ANSI cast would raise on: NaN
+    adds 0 and a term at or beyond +-2^63 saturates."""
+    q = F.round(v.cast("double") * VEC_FIXED_SCALE)
+    term = (
+        F.when(F.isnan(q), F.lit(0))
+        .when(q >= F.lit(2.0**63), F.lit(2**63 - 1))
+        .when(q <= F.lit(-(2.0**63)), F.lit(-(2**63)))
+        .otherwise(q.cast("long"))
+    )
     return (
-        F.sum(F.round(v.cast("double") * VEC_FIXED_SCALE).cast("long")).cast("double")
+        F.sum(term).cast("double")
         / F.lit(float(VEC_FIXED_SCALE))
         / F.count(F.lit(1))
     )

@@ -31,10 +31,12 @@ NULL/NaN contract: a kernel returns what its expression form (kept in
 ``tests/vecref.py``) returns with ``spark.sql.ansi.enabled=false``;
 under ANSI (the Spark 4 default) that form raises ``DIVIDE_BY_ZERO`` or
 ``CAST_OVERFLOW`` where the kernel returns NULL, 0 or a saturated value.
-Only the argmin and the LSH bucket kernels define NULL input; the
+Only the argmin and the LSH bucket kernels define a NULL vector; the
 scorers and the Gram/PCA kernels take non-NULL vectors: a NULL vector
-fails their batch (:func:`_mat_arrow`'s reshape), and a NULL element
-reads as NaN there, where the expression form's fold is NULL.
+fails their batch (:func:`_mat_arrow`'s reshape).  A NULL element makes
+a scorer's cosine NULL, as the expression form's fold is, so it ranks
+last (:func:`_null_rows`); the PQ ADC score is the exception, since its
+argmin ignores the element and the reconstructed vector has none.
 
 * The PQ/k-means argmin (:func:`pq_assign_codes`) adds, per element,
   ``CAST(round((x - c)^2 * 1e9) AS BIGINT)``: NaN casts to 0, a term at
@@ -157,16 +159,17 @@ def seq_l2(A: np.ndarray) -> np.ndarray:
     return np.sqrt(seq_dot(A, A))
 
 
-def cosine_array(dots: np.ndarray, qn: np.ndarray, nn: np.ndarray):
+def cosine_array(dots: np.ndarray, qn: np.ndarray, nn: np.ndarray, null: np.ndarray):
     """``dots / (qn * nn)`` as a float64 Arrow array, NULL where the
-    denominator is 0 — Spark's non-ANSI ``Divide`` (``try_divide``).
-    numpy gives NaN or +-inf there instead, and under ``desc()`` NaN
-    sorts first while NULL sorts last: a zero-norm vector would jump
-    from the tail of a top-k to its head."""
+    denominator is 0 — Spark's non-ANSI ``Divide`` (``try_divide``) —
+    and on the ``null`` rows (a NULL vector element).  numpy gives NaN
+    or +-inf there instead, and under ``desc()`` NaN sorts first while
+    NULL sorts last: a zero-norm vector would jump from the tail of a
+    top-k to its head."""
     denom = np.asarray(qn, dtype=np.float64) * nn
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = dots / denom
-    return pa.array(cos, type=pa.float64(), mask=denom == 0.0)
+    return pa.array(cos, type=pa.float64(), mask=(denom == 0.0) | null)
 
 
 def unit_rows(M: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -262,7 +265,7 @@ def pq_codes_map(cb, keep_vec: bool = False):
     return _fn
 
 
-def _adc_map(dim: int, encode):
+def _adc_map(dim: int, encode, vec_nulls: bool):
     """mapInArrow factory of the ADC scorers.  Input rows ``(query_id,
     neighbor_id, qn, qv, vec[, cell])`` (one per probed candidate);
     output ``(query_id, neighbor_id, adc_cos)`` with ``adc_cos = dot(qv,
@@ -271,19 +274,25 @@ def _adc_map(dim: int, encode):
     vectors ``V``).  A neighbor appears once per probing query, so each
     is encoded once and scattered: the same deterministic function of its
     row, ~|queries|x less work, and the candidate stream ships fp32
-    vectors instead of float64 ADC vectors."""
+    vectors instead of float64 ADC vectors.  A NULL ``qv`` element makes
+    ``adc_cos`` NULL, and so does a NULL ``vec`` element when
+    ``vec_nulls`` (the encoding carries it into ``a``)."""
 
     def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             if not b.num_rows:
                 continue
-            Q = _mat_arrow(_arrow_col(b, "qv"), dim)
-            V = _mat_arrow(_arrow_col(b, "vec"), dim)
+            qv, vec = _arrow_col(b, "qv"), _arrow_col(b, "vec")
+            Q = _mat_arrow(qv, dim)
+            V = _mat_arrow(vec, dim)
             _, first, inv = np.unique(
                 _np_col(b, "neighbor_id"), return_index=True, return_inverse=True
             )
             A = encode(V[first], b, first)
-            cos = cosine_array(seq_dot(Q, A[inv]), _np_col(b, "qn"), seq_l2(A)[inv])
+            null = _null_rows(qv) | (_null_rows(vec) if vec_nulls else False)
+            cos = cosine_array(
+                seq_dot(Q, A[inv]), _np_col(b, "qn"), seq_l2(A)[inv], null
+            )
             yield pa.RecordBatch.from_arrays(
                 [_arrow_col(b, "query_id"), _arrow_col(b, "neighbor_id"), cos],
                 names=["query_id", "neighbor_id", "adc_cos"],
@@ -298,7 +307,9 @@ def score_sq8_map(dim: int, mn, mx, levels: int):
     ``_dq_vec_sql`` + ``dot``/``l2_norm`` expression form."""
     mnv = np.asarray(mn, dtype=np.float64)
     mxv = np.asarray(mx, dtype=np.float64)
-    return _adc_map(dim, lambda V, b, first: sq_dequantize(V, mnv, mxv, levels))
+    return _adc_map(
+        dim, lambda V, b, first: sq_dequantize(V, mnv, mxv, levels), vec_nulls=True
+    )
 
 
 def score_pq_map(dim: int, dsub: int, cb, cent_map: dict):
@@ -320,7 +331,7 @@ def score_pq_map(dim: int, dsub: int, cb, cent_map: dict):
         codes = pq_assign_codes(V - cent, books, dsub)
         return cent + pq_reconstruct(codes, books)
 
-    return _adc_map(dim, encode)
+    return _adc_map(dim, encode, vec_nulls=False)
 
 
 def score_fp32_map(dim: int, ids: tuple[str, str] = ("query_id", "neighbor_id")):
@@ -335,10 +346,12 @@ def score_fp32_map(dim: int, ids: tuple[str, str] = ("query_id", "neighbor_id"))
         for b in batches:
             if not b.num_rows:
                 continue
-            Q = _mat_arrow(_arrow_col(b, "qv"), dim)
-            N = _mat_arrow(_arrow_col(b, "nv"), dim)
+            qv, nv = _arrow_col(b, "qv"), _arrow_col(b, "nv")
+            Q = _mat_arrow(qv, dim)
+            N = _mat_arrow(nv, dim)
             nn = _np_col(b, "nn") if "nn" in b.schema.names else seq_l2(N)
-            cos = cosine_array(seq_dot(Q, N), _np_col(b, "qn"), nn)
+            null = _null_rows(qv) | _null_rows(nv)
+            cos = cosine_array(seq_dot(Q, N), _np_col(b, "qn"), nn, null)
             yield pa.RecordBatch.from_arrays(
                 [_arrow_col(b, ids[0]), _arrow_col(b, ids[1]), cos],
                 names=[*ids, "cos_raw"],
@@ -389,12 +402,14 @@ def lsh_buckets_map(planes, tables: int, bits: int, keep_vec: bool = False):
 
 
 def query_matrix(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Collected ``(id, vector)`` query rows -> ``(ids, unit rows, zero
+    """Collected ``(id, vector)`` query rows -> ``(ids, unit rows, NULL
     mask)``, the broadcast operand of :func:`blas_topk_map` and
-    :func:`unit_cosine_map`."""
+    :func:`unit_cosine_map`.  A row with zero norm or a NULL element
+    scores NULL against every candidate."""
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     qm, zero = unit_rows(np.array([r[1] for r in rows], dtype=np.float64))
-    return ids, qm, zero
+    null = np.array([any(x is None for x in r[1]) for r in rows], dtype=bool)
+    return ids, qm, zero | null
 
 
 def blas_topk_map(bc, k: int, score: str, prefix_dim: int | None = None):
@@ -415,6 +430,7 @@ def blas_topk_map(bc, k: int, score: str, prefix_dim: int | None = None):
                 continue
             cid = np.asarray(b.column(0)).astype(np.int64, copy=False)
             cm, czero = unit_rows(_mat_arrow(b.column(1), qmat.shape[1]))
+            czero |= _null_rows(b.column(1))
             scores = q @ (cm if prefix_dim is None else cm[:, :prefix_dim]).T
             null = qzero[:, None] | czero[None, :]
             key = -scores
@@ -454,7 +470,9 @@ def unit_cosine_map(bc):
         for b in batches:
             if not b.num_rows:
                 continue
-            cm, czero = unit_rows(_mat_arrow(_arrow_col(b, "__cv"), qmat.shape[1]))
+            cv = _arrow_col(b, "__cv")
+            cm, czero = unit_rows(_mat_arrow(cv, qmat.shape[1]))
+            czero |= _null_rows(cv)
             qi = np.array([idx[q] for q in _np_col(b, "query_id").tolist()], dtype=np.int64)
             cos = np.einsum("ij,ij->i", qmat[qi], cm)
             yield pa.RecordBatch.from_arrays(

@@ -117,7 +117,8 @@ def per_key_dominant_freq(
 ) -> DataFrame:
     """A3 — the dominant sampling interval PER series key: the mode of
     successive timestamp deltas, smallest wins ties (pandas
-    ``Series.mode()`` order).
+    ``Series.mode()`` order; Spark's ``mode(deterministic=True)`` returns
+    the lowest of the tied values).
 
     A fleet of stations with mixed logger programs (15-min summer /
     hourly winter) needs each series regularized on ITS OWN grid; with no
@@ -127,12 +128,11 @@ def per_key_dominant_freq(
     deltas = df.select(
         *keys, ts_delta_seconds(t, partition_by=keys).alias("delta")
     ).filter(F.col("delta").isNotNull())
-    counts = deltas.groupBy(*keys, "delta").count()
-    w = Window.partitionBy(*keys).orderBy(F.desc("count"), F.asc("delta"))
+    # the filter drops the no-key aggregate's one NULL row on < 2 rows
     return (
-        counts.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*keys, F.col("delta").alias("__freq_s"))
+        deltas.groupBy(*keys)
+        .agg(F.mode("delta", deterministic=True).alias("__freq_s"))
+        .filter(F.col("__freq_s").isNotNull())
     )
 
 

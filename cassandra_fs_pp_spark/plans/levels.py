@@ -9,7 +9,7 @@ Reference-parity flows, re-expressed as lazy DataFrame lineages:
   dedup).
 * :func:`fleet_normalise_udg` — ``_normalise_udg`` (``fs_pp.py:452-511``):
   the piecewise height-change offset (W9) with auto-derived deltas from
-  pre/post-event medians (A1).
+  pre/post-event medians (A1), plus each site's dominant step (A3).
 * :func:`filter_udg` — ``_filter_udg`` (``fs_pp.py:514-567``): quality gate
   (P8), dominant-frequency regularization + limited ffill (A3/W5), trailing
   rolling-median despike (W1/P9), re-alignment to original timestamps (J2).
@@ -31,16 +31,19 @@ reference's one-station run, :func:`level1_to_level2` /
 literal site key added, then dropped).
 
 Scale stance: every per-row transformation stays a single lazy lineage that
-Catalyst optimizes end-to-end. Each per-site scalar is computed once per
-lineage, by one build-time job over all sites, and folded back into the
-plan, so no sink recomputes it: the auto height-change medians (one
-aggregation, O(auto events) rows) and the dominant sampling step (one
-collect, O(sites) rows). The at-install UDG reading needs no job: it is a
-``first`` window in the depth lineage.
+Catalyst optimizes end-to-end. The per-site scalars, the auto
+height-change medians (O(auto events) rows) and the dominant sampling
+step (O(sites) rows), come back in ONE build-time collect over all sites
+and are folded back into the plan, so no sink recomputes them. The
+despiked UDG re-enters L2 through one left join on ``(site, time)``. The
+at-install UDG reading needs no job: it is a ``first`` window in the
+depth lineage. The engine's own CSVs are re-read with declared types
+(:func:`load_level1_csv`), so loading L1 runs no job.
 """
 
 from __future__ import annotations
 
+import csv
 import datetime as _dt
 import glob
 import os
@@ -65,7 +68,7 @@ from cassandra_fs_pp_spark.operators.windows import (
     rolling_median,
     time_frame,
 )
-from cassandra_fs_pp_spark.sources.toa5 import read_toa5
+from cassandra_fs_pp_spark.sources.toa5 import _head_lines, read_toa5, toa5_schema_ddl
 
 TIME = "TIMESTAMP"
 # the literal site key that runs one station as a one-site fleet
@@ -208,7 +211,7 @@ def _utc(d: _dt.datetime) -> _dt.datetime:
 def filter_udg(
     l1: DataFrame,
     *,
-    udg: DataFrame | None = None,
+    steps: dict[tuple, int] | None = None,
     udg_col: str = "TCDT",
     q_col: str = "Q",
     t: str = TIME,
@@ -227,34 +230,63 @@ def filter_udg(
     4. null out points ``abs(median - x) >= threshold``;
     5. re-align onto the original (irregular) timestamps.
 
-    ``udg`` (optional) supplies already-normalized values for ``l1``'s
-    rows, ``(*partition_by, t, udg_col)``; Q and the original timestamps
-    always come from ``l1``. Every window partitions by
-    ``partition_by`` (none: the frame is one series). Building the
-    lineage runs one job, the per-key dominant step; a key with fewer
-    than two rows has no grid and drops out.
+    ``l1`` carries ``(*partition_by, t, udg_col, q_col)``; every window
+    partitions by ``partition_by`` (none: the frame is one series).
+    ``steps`` gives each key's dominant step, ``{key tuple: seconds}``
+    as :func:`per_key_dominant_freq` computes it; without it, building
+    the lineage runs that one job. A key with fewer than two rows has no
+    grid and drops out.
     """
     keys = list(partition_by or [])
-    src = (udg if udg is not None else l1.select(*keys, t, udg_col)).join(
-        l1.select(*keys, t, q_col), on=keys + [t], how="left"
+    despiked = _despike(
+        l1,
+        steps,
+        udg_col=udg_col,
+        q_col=q_col,
+        t=t,
+        med_window_s=med_window_s,
+        threshold=threshold,
+        ffill_limit=ffill_limit,
+        keys=keys,
     )
-    gated = src.select(
+    # J2: back to the original sampling instants
+    return despiked.join(l1.select(*keys, t), on=keys + [t], how="inner")
+
+
+def _despike(
+    l1: DataFrame,
+    steps: dict[tuple, int] | None,
+    *,
+    udg_col: str,
+    q_col: str,
+    t: str,
+    keys: list[str],
+    med_window_s: int = 2 * 86400,
+    threshold: float = 0.5,
+    ffill_limit: int = 3,
+) -> DataFrame:
+    """Steps 1-4 of :func:`filter_udg`: ``(*keys, t, udg_col)`` on each
+    key's regular grid, one row per grid instant. The L2 lineage
+    re-aligns it with its own left join on ``(*keys, t)``; L1 is unique
+    on that key, so the inner J2 join would only repeat it."""
+    gated = l1.select(
         *keys, t, quality_gate(F.col(udg_col), F.col(q_col)).alias(udg_col)
     )
-
-    # A3: every key's dominant step in one build-time job (O(keys) rows),
-    # folded into the plan, so the lineage's sinks do not recompute it
-    steps = {
-        tuple(r[k] for k in keys): r["__freq_s"]
-        for r in per_key_dominant_freq(gated, t, keys).collect()
-    }
+    if steps is None:
+        # A3: every key's dominant step in one build-time job (O(keys)
+        # rows), folded into the plan, so the lineage's sinks do not
+        # recompute it
+        steps = {
+            tuple(r[k] for k in keys): r["__freq_s"]
+            for r in per_key_dominant_freq(gated, t, keys).collect()
+        }
     if not steps:
         raise ValueError("need >=2 rows to detect sampling frequency")
     filled = resample_ffill(
         gated, t, steps, limit=ffill_limit, partition_by=keys, origin="start_day"
     )
     frame = time_frame(t, before_s=med_window_s - 1, partition_by=keys)
-    despiked = filled.select(
+    return filled.select(
         *keys,
         t,
         F.when(
@@ -263,8 +295,6 @@ def filter_udg(
             F.col(udg_col),
         ).alias(udg_col),
     )
-    # J2: back to the original sampling instants
-    return despiked.join(l1.select(*keys, t), on=keys + [t], how="inner")
 
 
 def fleet_normalise_udg(
@@ -274,9 +304,10 @@ def fleet_normalise_udg(
     udg_col: str = "TCDT",
     site_col: str = "site",
     t: str = TIME,
-) -> DataFrame:
+) -> tuple[DataFrame, dict[tuple, int]]:
     """W9 — stitch UDG height-change jumps at N stations at once
-    (``fs_pp.py:452-511``).
+    (``fs_pp.py:452-511``), and fetch every site's dominant sampling step
+    (A3) in the same collect.
 
     ``events_by_site``: per site, the config ``udg_height_change`` rows,
     ``[date, delta]`` or ``[date]``. The FIRST event zeroes the series at
@@ -288,10 +319,13 @@ def fleet_normalise_udg(
     All sites' auto-delta medians come from ONE distributed aggregation:
     a broadcast-sized (site, event, date) table range-joins the fleet
     frame, pre/post medians aggregate per (site, event) in a single
-    shuffle, and one collect of #auto_events rows lets the driver finish
-    the (cheap, order-dependent) rounding recurrence. Offsets re-enter the
-    lineage as a per-site event array via one broadcast join; the
-    subtraction runs per event in config order (``acc - delta``).
+    shuffle, and one collect of #auto_events + #sites rows (the medians
+    and :func:`per_key_dominant_freq` over ``l1``'s timestamps) lets the
+    driver finish the (cheap, order-dependent) rounding recurrence. That
+    collect is the L1 -> L2 lineage's one build-time job. Offsets
+    re-enter the lineage as a per-site event array via one broadcast
+    join; the subtraction runs per event in config order (``acc -
+    delta``).
 
     The medians are taken on the raw series and shifted by the earlier
     offsets, which equals the reference's sequential recurrence when every
@@ -300,11 +334,11 @@ def fleet_normalise_udg(
     breaks this raises (tested against a pandas re-statement of the
     reference loop in tests/test_fleet.py).
 
-    Returns ``(site_col, t, udg_col)``.
+    Returns ``l1`` with ``udg_col`` normalised, as ``(site_col, t,
+    udg_col, *other columns)``, and ``{(site,): step seconds}`` for
+    :func:`filter_udg`'s ``steps``.
     """
     spark = l1.sparkSession
-    u = l1.select(site_col, t, udg_col)
-
     # -- driver-side event bookkeeping (metadata plane) --
     auto_rows = []  # (site, event_index, date)
     parsed: dict[str, list[tuple[int, _dt.datetime, float | None]]] = {}
@@ -336,8 +370,16 @@ def fleet_normalise_udg(
             out.append((k, date, user_delta))
         parsed[site] = out
 
-    # -- one distributed aggregation for every auto event's medians --
-    raw_medians: dict[tuple[str, int], tuple[float | None, float | None]] = {}
+    # -- one collect for every auto event's medians and every site's step --
+    # A3: the step needs only the timestamps, and the despike gates
+    # l1's rows without dropping any
+    scalars = per_key_dominant_freq(l1, t, [site_col]).select(
+        F.col(site_col).cast("string").alias("__site"),
+        F.lit(None).cast("int").alias("__k"),
+        F.lit(None).cast("double").alias("pre_m"),
+        F.lit(None).cast("double").alias("post_m"),
+        "__freq_s",
+    )
     if auto_rows:
         # r18 (VERDICT r17 item 8): LocalTableScan route instead of a
         # pickled-row RDD — the broadcast build below reads it driver-
@@ -354,9 +396,9 @@ def fleet_normalise_udg(
         )
         d1 = F.expr("INTERVAL 1 DAY")
         h4 = F.expr("INTERVAL 4 HOURS")
-        near = u.join(
+        near = l1.join(
             F.broadcast(ev_df),
-            (u[site_col] == ev_df[site_col])
+            (l1[site_col] == ev_df[site_col])
             & (F.col(t) >= F.col("__date") - d1)
             & (F.col(t) <= F.col("__date") + d1),
         ).select(
@@ -372,7 +414,13 @@ def fleet_normalise_udg(
         med = near.groupBy("__site", "__k").agg(
             F.median("__pre").alias("pre_m"), F.median("__post").alias("post_m")
         )
-        for r in med.collect():
+        scalars = med.withColumn("__freq_s", F.lit(None).cast("long")).union(scalars)
+    raw_medians: dict[tuple[str, int], tuple[float | None, float | None]] = {}
+    steps: dict[tuple, int] = {}
+    for r in scalars.collect():
+        if r["__k"] is None:
+            steps[(r["__site"],)] = r["__freq_s"]
+        else:
             raw_medians[(r["__site"], r["__k"])] = (r["pre_m"], r["post_m"])
 
     # -- cheap sequential rounding recurrence per site (driver, no jobs) --
@@ -430,10 +478,11 @@ def fleet_normalise_udg(
         F.col(udg_col).cast("double"),
         lambda acc, e: acc - e["delta"],
     )
-    return (
-        u.join(F.broadcast(dim), on=site_col, how="left")
-        .select(site_col, t, applied.alias(udg_col))
+    carried = [c for c in l1.columns if c not in (site_col, t, udg_col)]
+    norm = l1.join(F.broadcast(dim), on=site_col, how="left").select(
+        site_col, t, applied.alias(udg_col), *carried
     )
+    return norm, steps
 
 
 def fleet_level1_to_level2(
@@ -460,12 +509,23 @@ def fleet_level1_to_level2(
     """
     bounded = null_out_of_range(l1, valid_ranges)
 
-    udg_col = cfg.udg_key
-    norm = fleet_normalise_udg(
-        bounded, events_by_site, udg_col=udg_col, site_col=site_col, t=t
+    udg_col, q_col = cfg.udg_key, "Q"
+    # Q rides through the offset join to the quality gate; the medians
+    # and the dominant steps come back in one collect
+    norm, steps = fleet_normalise_udg(
+        bounded.select(site_col, t, udg_col, q_col),
+        events_by_site,
+        udg_col=udg_col,
+        site_col=site_col,
+        t=t,
     )
-    udg_l2 = filter_udg(
-        bounded, udg=norm, udg_col=udg_col, t=t, partition_by=[site_col]
+    udg_l2 = _despike(
+        norm,
+        steps,
+        udg_col=udg_col,
+        q_col=q_col,
+        t=t,
+        keys=[site_col],
     )
 
     ec_exprs = calibrate_ec(bounded, calibrations) if calibrations else {}
@@ -476,6 +536,8 @@ def fleet_level1_to_level2(
     )
     level2 = rename_columns(level2, rename)
 
+    # the left join is J2 as well: it keeps L1's instants, which are
+    # unique per site, and drops the grid-only ones
     udg_l2_name = rename.get(udg_col, udg_col)
     level2 = level2.drop(udg_l2_name).join(
         udg_l2.select(site_col, t, F.col(udg_col).alias(udg_l2_name)),
@@ -579,18 +641,32 @@ def calibrate_ec(
 def load_level1_csv(
     spark: SparkSession, path: str, *, t: str = TIME
 ) -> DataFrame:
-    """S4 — re-read a written L1 CSV (``fs_pp.py:168-183``): header row,
-    inferred numeric dtypes, timestamp index column parsed."""
-    df = spark.read.csv(
+    """S4 — re-read a CSV the engine wrote, L1 or L2 (``fs_pp.py:168-183``):
+    header row, timestamp index column parsed.
+
+    The types are declared, not inferred, so the read runs no Spark job:
+    the header line is read on the driver (the first part file of a local
+    sink directory; through Spark for any other path) and every column
+    takes the TOA5 rule of :func:`~cassandra_fs_pp_spark.sources.toa5.toa5_schema_ddl`:
+    ``t`` timestamp, ``RECORD`` and ``Q`` long, the rest double. That is
+    what ``inferSchema`` gives on the engine's own CSVs, except that it
+    reads ``RECORD`` and ``Q`` as int."""
+    head = path
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        if parts:
+            head = os.path.join(path, parts[0])
+    lines = _head_lines(head, 1, spark)
+    names = next(csv.reader([lines[0].rstrip("\r\n")])) if lines else []
+    if not names:
+        raise ValueError(f"{path}: no CSV header line")
+    return spark.read.csv(
         path,
+        schema=toa5_schema_ddl(names, t),
         header=True,
-        inferSchema=True,
         nullValue="",
         timestampFormat="yyyy-MM-dd HH:mm:ss",
     )
-    if dict(df.dtypes).get(t) == "string":
-        df = df.withColumn(t, F.to_timestamp(t, "yyyy-MM-dd HH:mm:ss"))
-    return df
 
 
 def load_position_csv(spark: SparkSession, path: str) -> list[float]:
@@ -602,10 +678,13 @@ def load_position_csv(spark: SparkSession, path: str) -> list[float]:
 
 
 def load_calibrations(spark: SparkSession, path: str) -> dict[str, tuple[float, float]]:
-    """S5 — calibration-coefficients scan: CSV ``(sensor, m, c, r2)`` ->
-    driver dict (broadcast-sized dim; ``fs_pp.py:597-603``)."""
+    """S5 — calibration-coefficients scan: CSV ``(sensor, m, c, r2)``, in
+    that column order, -> driver dict (broadcast-sized dim;
+    ``fs_pp.py:597-603``). Declared types: one Spark job, the collect."""
     rows = (
-        spark.read.csv(path, header=True, inferSchema=True)
+        spark.read.csv(
+            path, header=True, schema="_c0 string, m double, c double, r2 double"
+        )
         .select(F.col("_c0").alias("sensor"), "m", "c")
         .collect()
     )

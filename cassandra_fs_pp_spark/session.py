@@ -200,6 +200,14 @@ def _split_ddl(schema: str) -> list[str]:
     return out
 
 
+def _local_master() -> str:
+    """``local[n]`` with ``n`` from ``SPARK_GRAFT_CPUS``, else the cores
+    this process may run on: one task slot per core, so a Python kernel
+    pass pays one worker round trip per core, not per default slot."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "cassandra_fs_pp_spark",
     master: str | None = None,
@@ -208,16 +216,14 @@ def get_spark(
     """Build (or fetch) a tuned local session.
 
     Honors ``SPARK_GRAFT_CPUS`` for local core count (driver contract).
+    Unset, it runs on every core this process may use.
     When a session already exists, ``getOrCreate()`` returns it and drops
     the static confs set here without a word; a codegen cache size other
     than :data:`CODEGEN_CACHE_ENTRIES` is logged as a warning.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(master or _local_master())
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         .config("spark.ui.enabled", "false")

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import csv
 import io
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,13 +77,14 @@ def read_toa5_header(path: str, spark=None) -> Toa5Header:
     )
 
 
-def toa5_schema_ddl(header: Toa5Header) -> str:
-    """Schema from the names line: TIMESTAMP -> timestamp, RECORD/Q -> long,
-    everything else double (the TOA5 numeric convention; overridable by
-    passing an explicit DDL to read_toa5)."""
+def toa5_schema_ddl(names: Sequence[str], time_col: str = "TIMESTAMP") -> str:
+    """Schema from a names line: ``time_col`` -> timestamp, RECORD/Q ->
+    long, everything else double (the TOA5 numeric convention; overridable
+    by passing an explicit DDL to read_toa5). The engine's own L1/L2 CSVs
+    are re-read with the same rule (``plans.levels.load_level1_csv``)."""
     parts = []
-    for name in header.names:
-        if name == "TIMESTAMP":
+    for name in names:
+        if name == time_col:
             typ = "timestamp"
         elif name in ("RECORD", "Q"):
             typ = "long"
@@ -107,7 +109,7 @@ def read_toa5(
     if isinstance(paths, str):
         paths = [paths]
     if schema_ddl is None:
-        schema_ddl = toa5_schema_ddl(read_toa5_header(paths[0], spark))
+        schema_ddl = toa5_schema_ddl(read_toa5_header(paths[0], spark).names)
     txt = spark.read.text(paths).select(
         F.input_file_name().alias("_file"), F.col("value")
     )

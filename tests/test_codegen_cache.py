@@ -12,6 +12,7 @@ set.
 from __future__ import annotations
 
 import logging
+import os
 from functools import reduce
 
 import pytest
@@ -136,3 +137,13 @@ def test_get_spark_warns_on_existing_session_with_other_cache_size(
     warned = [r for r in caplog.records if CODEGEN_CACHE_CONF in r.getMessage()]
     assert len(warned) == 1, caplog.text
     assert str(CODEGEN_CACHE_ENTRIES) in warned[0].getMessage()
+
+
+def test_local_master_defaults_to_usable_cores(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the session runs one task slot per
+    core this process may use (not a fixed 32, which on a small host
+    pays a Python worker round trip per surplus slot)."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session._local_master() == f"local[{len(os.sched_getaffinity(0))}]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session._local_master() == "local[3]"

@@ -159,7 +159,7 @@ def test_fleet_normalise_matches_sequential(spark, fleet_l1):
     """The one-pass fleet delta aggregation reproduces the reference's
     sequential per-site recurrence (incl. the auto-derived delta at FS_B)."""
     events_by_site = {s: ev for s, (_, _, ev) in SITES.items()}
-    fleet = fleet_normalise_udg(fleet_l1, events_by_site)
+    fleet, _ = fleet_normalise_udg(fleet_l1, events_by_site)
     pdfs = {s: _site_frame(*spec) for s, spec in SITES.items()}
     _assert_normalise_matches_reference(fleet, pdfs, events_by_site)
 
@@ -184,7 +184,8 @@ def test_local_table_propagates_other_errors(spark, monkeypatch):
 def test_fleet_normalise_64_sites_one_collect(spark, monkeypatch):
     """64 stations with one explicit and two auto height-change events
     each: every site equals the reference's sequential loop, and all 128
-    auto-event medians come back in ONE collect."""
+    auto-event medians and the 64 dominant steps come back in ONE
+    collect."""
     n_sites, step_s = 64, 3600
     ev1, ev2 = T0 + 3 * DAY, T0 + 6 * DAY
     pdfs, events_by_site, frames = {}, {}, []
@@ -212,9 +213,10 @@ def test_fleet_normalise_64_sites_one_collect(spark, monkeypatch):
         return rows
 
     monkeypatch.setattr(df_cls, "collect", spy)
-    fleet = fleet_normalise_udg(l1, events_by_site)
+    fleet, _ = fleet_normalise_udg(l1, events_by_site)
     monkeypatch.setattr(df_cls, "collect", real_collect)
-    assert calls == [2 * n_sites], calls
+    # the medians, two per site, and each site's dominant step
+    assert calls == [3 * n_sites], calls
     _assert_normalise_matches_reference(fleet, pdfs, events_by_site)
 
 
@@ -268,7 +270,7 @@ def test_fleet_normalise_event_spacing_and_order(spark, events, ok):
         with pytest.raises(ValueError, match="at least 1 day before it"):
             fleet_normalise_udg(sdf, {"S": events})
         return
-    fleet = fleet_normalise_udg(sdf, {"S": events})
+    fleet, _ = fleet_normalise_udg(sdf, {"S": events})
     _assert_normalise_matches_reference(fleet, {"S": pdf}, {"S": events})
 
 
@@ -280,7 +282,7 @@ def test_udg_event_dims_local_table(spark, fleet_l1):
     with the old route is pinned by the sequential differentials above
     (timestamps land as session-tz UTC on both routes)."""
     events_by_site = {s: ev for s, (_, _, ev) in SITES.items()}
-    fleet = fleet_normalise_udg(fleet_l1, events_by_site)
+    fleet, _ = fleet_normalise_udg(fleet_l1, events_by_site)
     plan = fleet._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan, plan
     assert "ExistingRDD" not in plan, plan
@@ -381,7 +383,7 @@ def test_udg_event_dims_tz_independent(spark, fleet_l1, monkeypatch):
 
     def run():
         dims.clear()
-        out = fleet_normalise_udg(fleet_l1, events_by_site)
+        out, _ = fleet_normalise_udg(fleet_l1, events_by_site)
         plans = [d._jdf.queryExecution().executedPlan().toString() for d in dims]
         # casts render in the session time zone (UTC), not the host's
         got = sorted(

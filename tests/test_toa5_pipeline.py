@@ -271,10 +271,11 @@ def test_normalise_udg_auto_step(l1, site):
     cfg = load_config(str(site / "site.toml"))
     # the auto step sits 1.5 days after the install event: accepted, as
     # the install event lies before the step's [date-1d, date+1d] window
-    norm = fleet_normalise_udg(
+    norm, _ = fleet_normalise_udg(
         l1.withColumn("site", F.lit(cfg.site)),
         {cfg.site: cfg.udg_height_changes},
-    ).orderBy("TIMESTAMP")
+    )
+    norm = norm.orderBy("TIMESTAMP")
     rows = norm.collect()
     # zeroed at install height, and the auto-detected -0.24 step re-zeroes
     assert rows[0]["TCDT"] == pytest.approx(0.0, abs=1e-9)
@@ -536,6 +537,18 @@ def test_filter_udg_fleet_partitioned(spark):
         .orderBy("site", "TIMESTAMP")
         .toPandas()
     )
+    # known steps: the same rows, and building the lineage runs no job
+    given = {}
+
+    def build():
+        given["df"] = filter_udg(
+            sdf, steps={("A",): 900, ("B",): 3600}, partition_by=["site"]
+        )
+
+    assert _jobs(spark, "filter-udg-steps", build) == 0
+    pd.testing.assert_frame_equal(
+        given["df"].orderBy("site", "TIMESTAMP").toPandas(), out
+    )
     for site in ("A", "B"):
         got = out[out["site"] == site].set_index("TIMESTAMP")["TCDT"]
         want = pandas_truth[site]
@@ -630,6 +643,18 @@ def test_engine_l2_sinks_match_lazy_lineage(engine_l1, tmp_path):
     assert got[1] == want[1]
 
 
+def _jobs(spark, group: str, action) -> int:
+    """Number of Spark jobs ``action()`` runs (one job group per call)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_engine_l2_runs_its_lineage_once(spark, engine_l1, tmp_path):
     """SiteEngine.level1_to_level2 returns rows read from a checkpoint
     (ExistingRDD scan, no FileScan of the L1 CSV), so each L2 sink runs
@@ -640,25 +665,64 @@ def test_engine_l2_runs_its_lineage_once(spark, engine_l1, tmp_path):
     assert "ExistingRDD" in plan, plan
     assert "FileScan" not in plan, plan
 
-    sc = spark.sparkContext
-
-    def jobs(group, action) -> int:
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    csv_jobs = jobs(
-        "engine-l2-csv", lambda: eng.write_l2_csv(l2, str(tmp_path / "l2"))
+    csv_jobs = _jobs(
+        spark, "engine-l2-csv", lambda: eng.write_l2_csv(l2, str(tmp_path / "l2"))
     )
-    nc_jobs = jobs(
-        "engine-l2-nc", lambda: eng.to_netcdf(l2, str(tmp_path / "l2.nc"))
+    nc_jobs = _jobs(
+        spark, "engine-l2-nc", lambda: eng.to_netcdf(l2, str(tmp_path / "l2.nc"))
     )
     assert 1 <= csv_jobs <= 3, csv_jobs
     assert 1 <= nc_jobs <= 3, nc_jobs
+
+
+def test_l1_to_l2_job_budget(spark, site, l1, engine_l1, tmp_path):
+    """The L1 -> L2 half runs a constant number of Spark jobs: loading L1
+    runs none (declared types, header read on the driver), loading the
+    calibrations one (the collect), and SiteEngine.level1_to_level2 one
+    collect of every per-site scalar plus the checkpoint of the lineage,
+    at most 12 (19 with a collect per scalar and a second UDG join)."""
+    eng, _, _ = engine_l1
+    path = eng.write_l1(l1, str(tmp_path / "l1"))
+    got = {}
+
+    def load_l1():
+        got["l1"] = eng.load_level1(path)
+
+    def load_cal():
+        got["cal"] = eng.load_calibrations(str(site / "cal.csv"))
+
+    assert _jobs(spark, "load-l1", load_l1) == 0
+    assert _jobs(spark, "load-cal", load_cal) == 1
+    n = _jobs(spark, "l1-to-l2", lambda: eng.level1_to_level2(got["l1"], got["cal"]))
+    assert 1 <= n <= 12, n
+
+
+def test_load_level1_csv_matches_infer_schema(spark, l1, engine_l1, tmp_path):
+    """The declared-type read of an engine-written L1 and L2 CSV gives
+    the names, values and types ``inferSchema`` gives, except RECORD and
+    Q, which the TOA5 rule reads as long where inference says int; the
+    sink directory's name holds a space."""
+    from cassandra_fs_pp_spark.plans.levels import load_level1_csv
+    from cassandra_fs_pp_spark.sinks import write_csv_single
+
+    eng, back, cal = engine_l1
+    for name, df in (("l1", l1), ("l2", level1_to_level2(back, eng.config, cal))):
+        path = str(tmp_path / f"{name} csv")
+        write_csv_single(df, path)
+        got = load_level1_csv(spark, path)
+        want = spark.read.csv(
+            path,
+            header=True,
+            inferSchema=True,
+            nullValue="",
+            timestampFormat="yyyy-MM-dd HH:mm:ss",
+        )
+        assert got.columns == want.columns
+        widened = {c: "bigint" for c in ("RECORD", "Q") if c in want.columns}
+        assert name == "l2" or "RECORD" in widened
+        assert all(dict(want.dtypes)[c] == "int" for c in widened)
+        assert got.dtypes == [(c, widened.get(c, d)) for c, d in want.dtypes]
+        assert got.orderBy("TIMESTAMP").collect() == want.orderBy("TIMESTAMP").collect()
 
 
 def test_toa5_malformed_rows_tolerated(spark, tmp_path):

@@ -607,6 +607,153 @@ def test_kernel_cosines_null_on_zero_denominator(spark):
             assert r["rank"] == n_q, r  # NULL cosine ranks last
 
 
+def test_scorers_null_element_scores_null(spark):
+    """A NULL vector element makes the expression form's dot fold NULL,
+    so the cosine is NULL and ranks last under DESC.  The scorers read
+    the element as NaN, whose cosine would rank FIRST; each must give
+    NULL there.  The PQ ADC score is the exception on the candidate
+    side: its argmin ignores the element, and the kernel keeps the
+    expression form's number."""
+    from types import SimpleNamespace
+
+    from cassandra_fs_pp_spark.operators.veckernels import (
+        blas_topk_map,
+        query_matrix,
+        score_fp32_map,
+        score_pq_map,
+        score_sq8_map,
+        unit_cosine_map,
+    )
+
+    dim = 2
+    pairs = spark.createDataFrame(
+        [
+            (0, 1, [1.0, 0.0], [None, 1.0]),
+            (0, 2, [1.0, 0.0], [3.0, 4.0]),
+            (1, 2, [None, 1.0], [3.0, 4.0]),
+        ],
+        "query_id long, neighbor_id long, qv array<double>, vec array<double>",
+    ).withColumn("qn", l2_norm(F.col("qv")))
+
+    def cos_of(df, vec):
+        return {
+            (r[0], r[1]): r[2]
+            for r in df.select(
+                "query_id",
+                "neighbor_id",
+                F.try_divide(
+                    dot(F.col("qv"), F.col(vec)), F.col("qn") * l2_norm(F.col(vec))
+                ),
+            ).collect()
+        }
+
+    def kernel(df, fn, cols, out):
+        return {
+            (r[0], r[1]): r[2]
+            for r in df.select("query_id", "neighbor_id", "qn", "qv", *cols)
+            .mapInArrow(fn, schema=f"query_id long, neighbor_id long, {out} double")
+            .collect()
+        }
+
+    want = cos_of(pairs, "vec")
+    assert want == {(0, 1): None, (0, 2): 0.6, (1, 2): None}
+    nv = pairs.withColumnRenamed("vec", "nv")
+    assert kernel(nv, score_fp32_map(dim), ["nv"], "cos_raw") == want
+
+    dq = pairs.select(
+        "*",
+        F.array(F.lit(0.0), F.lit(0.0)).alias("__mn"),
+        F.array(F.lit(4.0), F.lit(4.0)).alias("__mx"),
+    ).withColumn("dqv", F.expr(_dq_vec_sql("vec", 255)))
+    got = kernel(pairs, score_sq8_map(dim, [0.0, 0.0], [4.0, 4.0], 255), ["vec"], "c")
+    assert got == cos_of(dq, "dqv") and got[(0, 1)] is None
+
+    cb = [[[0.0], [1.0]], [[1.0], [4.0]]]
+    pq = pairs.select(
+        "*",
+        *[F.expr(_pq_code_sql(cb[j], "vec", j + 1, 1)).alias(f"__k{j}") for j in range(2)],
+    ).withColumn("pqv", F.expr(_pq_reconstruct_sql(cb, "__k")))
+    want_pq = cos_of(pq, "pqv")
+    assert want_pq[(0, 1)] == 0.0 and want_pq[(1, 2)] is None
+    got = kernel(
+        pairs.withColumn("cell", F.lit(0)),
+        score_pq_map(dim, 1, cb, {0: [0.0, 0.0]}),
+        ["cell", "vec"],
+        "c",
+    )
+    assert got == want_pq
+
+    # the unit-row scorers: a NULL element on either side scores NULL
+    bc = SimpleNamespace(value=query_matrix([(0, [1.0, 0.0]), (1, [None, 1.0])]))
+    vecs = pa.array([[None, 1.0], [3.0, 4.0], [3.0, 4.0]], pa.list_(pa.float64()))
+    ids = pa.array([1, 2, 2], pa.int64())
+    want = {(0, 1): None, (0, 2): pytest.approx(0.6), (1, 2): None}
+
+    def scored(batch) -> dict:
+        cols = [c.to_pylist() for c in batch.columns]
+        return dict(zip(zip(cols[0], cols[1]), cols[2]))
+
+    (out,) = unit_cosine_map(bc)(
+        iter(
+            [
+                pa.RecordBatch.from_arrays(
+                    [ids, vecs, pa.array([0, 0, 1], pa.int64())],
+                    names=["neighbor_id", "__cv", "query_id"],
+                )
+            ]
+        )
+    )
+    assert scored(out) == want
+    (top,) = blas_topk_map(bc, 2, "cosine")(
+        iter([pa.RecordBatch.from_arrays([ids[:2], vecs[:2]], names=["id", "vec"])])
+    )
+    assert scored(top) == want
+
+
+def test_fixed_mean_follows_non_ansi_cast(spark):
+    """The fixed-point mean's BIGINT term is the non-ANSI cast of the
+    vector kernels' contract: NaN adds 0 and a term at or beyond +-2^63
+    saturates.  The session's ANSI cast raised CAST_OVERFLOW on one NaN
+    element instead, so kmeans_assign with ``iterations >= 2`` failed."""
+    from cassandra_fs_pp_spark.operators.similarity import kmeans_assign
+
+    nan = float("nan")
+    cells = spark.createDataFrame(
+        [(0, [nan, 1.0]), (0, [2.0, 3.0]), (1, [1e10, -1e10])],
+        "label int, embedding array<double>",
+    )
+    got = {r["cell"]: list(r["centroid"]) for r in coarse_centroids(cells).collect()}
+    assert got[0] == [1.0, 2.0]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        sums = (
+            cells.select(F.col("label").alias("cell"), F.posexplode("embedding"))
+            .groupBy("cell", "pos")
+            .agg(
+                (
+                    F.sum(F.round(F.col("col") * 1e9).cast("long")).cast("double")
+                    / 1e9
+                    / F.count(F.lit(1))
+                ).alias("m")
+            )
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert {(r["cell"], r["pos"]): r["m"] for r in sums} == {
+        (c, p): m for c, ms in got.items() for p, m in enumerate(ms)
+    }
+    assert got[1] == [(2**63 - 1) / 1e9, -(2**63) / 1e9]
+
+    vecs = spark.createDataFrame(
+        [(0, [nan, 1.0]), (1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, [5.0, 5.0]), (4, [5.0, 6.0])],
+        "vec_id long, embedding array<float>",
+    )
+    rows = kmeans_assign(vecs, k=3, iterations=2).collect()
+    assert sorted(r["vec_id"] for r in rows) == [0, 1, 2, 3, 4]
+
+
 def test_pq_codes_saturate_like_cast(spark):
     """A residual element above ~9.6e4 quantizes to >= 2^63. Non-ANSI
     ``CAST(... AS BIGINT)`` saturates it to Long.MAX_VALUE (NaN casts to

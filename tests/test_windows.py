@@ -69,13 +69,19 @@ def test_ts_delta_and_dominant_freq(spark):
     assert per_key_dominant_freq(union, "time", []).collect() == [(15 * 60,)]
     # per key: the mode of each series' deltas, the smallest on a tie;
     # a one-row key has no delta and no row
-    minutes = {"a": [0, 15, 30, 45, 105], "b": [0, 10, 30, 40, 60], "c": [0]}
+    # ("d" ties with the larger delta first)
+    minutes = {
+        "a": [0, 15, 30, 45, 105],
+        "b": [0, 10, 30, 40, 60],
+        "c": [0],
+        "d": [0, 20, 30, 50, 60],
+    }
     keyed = spark.createDataFrame(
         [(k, T0 + dt.timedelta(minutes=m)) for k, ms in minutes.items() for m in ms],
         "k string, time timestamp",
     )
     got = per_key_dominant_freq(keyed, "time", ["k"]).collect()
-    assert sorted(map(tuple, got)) == [("a", 900), ("b", 600)]
+    assert sorted(map(tuple, got)) == [("a", 900), ("b", 600), ("d", 600)]
     deltas = (
         df.select(ts_delta_seconds("time").alias("d")).orderBy("d").toPandas()
     )
