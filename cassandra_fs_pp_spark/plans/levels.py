@@ -73,6 +73,11 @@ from cassandra_fs_pp_spark.sources.toa5 import _head_lines, read_toa5, toa5_sche
 TIME = "TIMESTAMP"
 # the literal site key that runs one station as a one-site fleet
 _SITE = "__site"
+# the UDG despike's parameters (``fs_pp.py:514-567``): one copy for
+# filter_udg's defaults and the L2 lineage
+_MED_WINDOW_S = 2 * 86400
+_SPIKE_THRESHOLD = 0.5
+_FFILL_LIMIT = 3
 
 
 # --------------------------------------------------------------------------- #
@@ -211,13 +216,12 @@ def _utc(d: _dt.datetime) -> _dt.datetime:
 def filter_udg(
     l1: DataFrame,
     *,
-    steps: dict[tuple, int] | None = None,
     udg_col: str = "TCDT",
     q_col: str = "Q",
     t: str = TIME,
-    med_window_s: int = 2 * 86400,
-    threshold: float = 0.5,
-    ffill_limit: int = 3,
+    med_window_s: int = _MED_WINDOW_S,
+    threshold: float = _SPIKE_THRESHOLD,
+    ffill_limit: int = _FFILL_LIMIT,
     partition_by: Sequence[str] | None = None,
 ) -> DataFrame:
     """P8 + W5 + W1 + P9 + J2 — the UDG despike filter (``fs_pp.py:514-567``).
@@ -232,15 +236,13 @@ def filter_udg(
 
     ``l1`` carries ``(*partition_by, t, udg_col, q_col)``; every window
     partitions by ``partition_by`` (none: the frame is one series).
-    ``steps`` gives each key's dominant step, ``{key tuple: seconds}``
-    as :func:`per_key_dominant_freq` computes it; without it, building
-    the lineage runs that one job. A key with fewer than two rows has no
-    grid and drops out.
+    Building the lineage runs one job, :func:`per_key_dominant_freq`'s
+    collect. A key with fewer than two rows has no grid and drops out.
     """
     keys = list(partition_by or [])
     despiked = _despike(
         l1,
-        steps,
+        None,
         udg_col=udg_col,
         q_col=q_col,
         t=t,
@@ -261,14 +263,17 @@ def _despike(
     q_col: str,
     t: str,
     keys: list[str],
-    med_window_s: int = 2 * 86400,
-    threshold: float = 0.5,
-    ffill_limit: int = 3,
+    med_window_s: int,
+    threshold: float,
+    ffill_limit: int,
 ) -> DataFrame:
     """Steps 1-4 of :func:`filter_udg`: ``(*keys, t, udg_col)`` on each
-    key's regular grid, one row per grid instant. The L2 lineage
-    re-aligns it with its own left join on ``(*keys, t)``; L1 is unique
-    on that key, so the inner J2 join would only repeat it."""
+    key's regular grid, one row per grid instant. ``steps`` is each key's
+    dominant step, ``{key tuple: seconds}``; None computes it with
+    :func:`per_key_dominant_freq`. The L2 lineage passes the steps it
+    already fetched and re-aligns the result with its own left join on
+    ``(*keys, t)``; L1 is unique on that key, so the inner J2 join would
+    only repeat it."""
     gated = l1.select(
         *keys, t, quality_gate(F.col(udg_col), F.col(q_col)).alias(udg_col)
     )
@@ -335,8 +340,8 @@ def fleet_normalise_udg(
     reference loop in tests/test_fleet.py).
 
     Returns ``l1`` with ``udg_col`` normalised, as ``(site_col, t,
-    udg_col, *other columns)``, and ``{(site,): step seconds}`` for
-    :func:`filter_udg`'s ``steps``.
+    udg_col, *other columns)``, and ``{(site,): step seconds}``, the
+    grid the L2 lineage's despike regularizes on.
     """
     spark = l1.sparkSession
     # -- driver-side event bookkeeping (metadata plane) --
@@ -526,6 +531,9 @@ def fleet_level1_to_level2(
         q_col=q_col,
         t=t,
         keys=[site_col],
+        med_window_s=_MED_WINDOW_S,
+        threshold=_SPIKE_THRESHOLD,
+        ffill_limit=_FFILL_LIMIT,
     )
 
     ec_exprs = calibrate_ec(bounded, calibrations) if calibrations else {}
@@ -638,19 +646,10 @@ def calibrate_ec(
     return out
 
 
-def load_level1_csv(
-    spark: SparkSession, path: str, *, t: str = TIME
-) -> DataFrame:
-    """S4 — re-read a CSV the engine wrote, L1 or L2 (``fs_pp.py:168-183``):
-    header row, timestamp index column parsed.
-
-    The types are declared, not inferred, so the read runs no Spark job:
-    the header line is read on the driver (the first part file of a local
-    sink directory; through Spark for any other path) and every column
-    takes the TOA5 rule of :func:`~cassandra_fs_pp_spark.sources.toa5.toa5_schema_ddl`:
-    ``t`` timestamp, ``RECORD`` and ``Q`` long, the rest double. That is
-    what ``inferSchema`` gives on the engine's own CSVs, except that it
-    reads ``RECORD`` and ``Q`` as int."""
+def _csv_header(spark: SparkSession, path: str) -> list[str]:
+    """The names on a CSV's header line, read on the driver: the file
+    itself, or the first part file of a local sink directory; any other
+    path goes through Spark (:func:`~cassandra_fs_pp_spark.sources.toa5._head_lines`)."""
     head = path
     if os.path.isdir(path):
         parts = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
@@ -660,10 +659,30 @@ def load_level1_csv(
     names = next(csv.reader([lines[0].rstrip("\r\n")])) if lines else []
     if not names:
         raise ValueError(f"{path}: no CSV header line")
+    return names
+
+
+def load_level1_csv(
+    spark: SparkSession, path: str, *, t: str = TIME
+) -> DataFrame:
+    """S4 — re-read a CSV the engine wrote, L1 or L2 (``fs_pp.py:168-183``):
+    header row, timestamp index column parsed.
+
+    The types are declared, not inferred, so the read runs no Spark job:
+    the names come from the header line (:func:`_csv_header`) and every
+    column takes the TOA5 rule of :func:`~cassandra_fs_pp_spark.sources.toa5.toa5_schema_ddl`:
+    ``t`` timestamp, ``RECORD`` and ``Q`` long, the rest double. On the
+    engine's own L1/L2 CSVs that is what ``inferSchema`` gives, except
+    that it reads ``RECORD`` and ``Q`` as int; any other integer column
+    (``_seq`` of ``level0_to_level1(keep_provenance=True)``) is widened
+    to double. The parse is FAILFAST: a value that is not a number (or,
+    in ``t``, not a ``yyyy-MM-dd HH:mm:ss`` time) raises when the frame
+    is read, instead of turning NULL."""
     return spark.read.csv(
         path,
-        schema=toa5_schema_ddl(names, t),
+        schema=toa5_schema_ddl(_csv_header(spark, path), t),
         header=True,
+        mode="FAILFAST",
         nullValue="",
         timestampFormat="yyyy-MM-dd HH:mm:ss",
     )
@@ -678,13 +697,25 @@ def load_position_csv(spark: SparkSession, path: str) -> list[float]:
 
 
 def load_calibrations(spark: SparkSession, path: str) -> dict[str, tuple[float, float]]:
-    """S5 — calibration-coefficients scan: CSV ``(sensor, m, c, r2)``, in
-    that column order, -> driver dict (broadcast-sized dim;
-    ``fs_pp.py:597-603``). Declared types: one Spark job, the collect."""
+    """S5 — calibration-coefficients scan: CSV ``(sensor, m, c, r2)`` ->
+    driver dict (broadcast-sized dim; ``fs_pp.py:597-603``).
+
+    The sensor is the first column; ``m`` and ``c`` are found by their
+    header names, in any order, and a header without exactly one of each
+    raises ``ValueError``. Declared types, FAILFAST parse: one Spark job,
+    the collect."""
+    names = _csv_header(spark, path)
+    for need in ("m", "c"):
+        if names[1:].count(need) != 1:
+            raise ValueError(
+                f"{path}: calibration header {names} needs one {need!r} column"
+            )
+    fields = ["`_c0` string"] + [
+        f"`{n}` double" if n in ("m", "c") else f"`_c{i}` string"
+        for i, n in enumerate(names[1:], 1)
+    ]
     rows = (
-        spark.read.csv(
-            path, header=True, schema="_c0 string, m double, c double, r2 double"
-        )
+        spark.read.csv(path, header=True, mode="FAILFAST", schema=", ".join(fields))
         .select(F.col("_c0").alias("sensor"), "m", "c")
         .collect()
     )

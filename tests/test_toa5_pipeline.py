@@ -537,18 +537,6 @@ def test_filter_udg_fleet_partitioned(spark):
         .orderBy("site", "TIMESTAMP")
         .toPandas()
     )
-    # known steps: the same rows, and building the lineage runs no job
-    given = {}
-
-    def build():
-        given["df"] = filter_udg(
-            sdf, steps={("A",): 900, ("B",): 3600}, partition_by=["site"]
-        )
-
-    assert _jobs(spark, "filter-udg-steps", build) == 0
-    pd.testing.assert_frame_equal(
-        given["df"].orderBy("site", "TIMESTAMP").toPandas(), out
-    )
     for site in ("A", "B"):
         got = out[out["site"] == site].set_index("TIMESTAMP")["TCDT"]
         want = pandas_truth[site]
@@ -723,6 +711,50 @@ def test_load_level1_csv_matches_infer_schema(spark, l1, engine_l1, tmp_path):
         assert all(dict(want.dtypes)[c] == "int" for c in widened)
         assert got.dtypes == [(c, widened.get(c, d)) for c, d in want.dtypes]
         assert got.orderBy("TIMESTAMP").collect() == want.orderBy("TIMESTAMP").collect()
+
+
+def test_load_level1_csv_fails_on_non_numeric(spark, tmp_path):
+    """A value the declared double type cannot parse raises, instead of
+    reading as NULL."""
+    f = tmp_path / "l2.csv"
+    f.write_text("TIMESTAMP,TCDT(m),note\n2024-01-01 00:00:00,1.5,ok\n")
+    from cassandra_fs_pp_spark.plans.levels import load_level1_csv
+
+    df = load_level1_csv(spark, str(f))
+    assert df.dtypes == [
+        ("TIMESTAMP", "timestamp"), ("TCDT(m)", "double"), ("note", "double")
+    ]
+    with pytest.raises(Exception, match="FAILFAST|MALFORMED"):
+        df.collect()
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        ",m,c,r2\nEC(1),2.0,0.5,0.99\nEC(2),4.0,1.5,0.9\n",
+        ",c,m,r2\nEC(1),0.5,2.0,0.99\nEC(2),1.5,4.0,0.9\n",
+        "sensor,r2,note,c,m\nEC(1),0.99,x,0.5,2.0\nEC(2),0.9,y,1.5,4.0\n",
+    ],
+    ids=["m-c", "c-m", "named-sensor-extra-columns"],
+)
+def test_load_calibrations_picks_columns_by_name(spark, tmp_path, text):
+    """m and c are read by their header names, in any column order; the
+    sensor is the first column."""
+    f = tmp_path / "cal.csv"
+    f.write_text(text)
+    assert load_calibrations(spark, str(f)) == {
+        "EC(1)": (2.0, 0.5), "EC(2)": (4.0, 1.5)
+    }
+
+
+@pytest.mark.parametrize(
+    "header", [",c,r2", ",m,c,m,r2", ""], ids=["no-m", "two-m", "empty"]
+)
+def test_load_calibrations_rejects_a_bad_header(spark, tmp_path, header):
+    f = tmp_path / "cal.csv"
+    f.write_text(f"{header}\nEC(1),2.0,0.5,0.99\n")
+    with pytest.raises(ValueError):
+        load_calibrations(spark, str(f))
 
 
 def test_toa5_malformed_rows_tolerated(spark, tmp_path):
