@@ -49,10 +49,13 @@ def connected_components(
         .distinct()
     )
     # eager=False (r17): each round's `changed` count is a FULL-partition
-    # action over `updated`, so it materializes the checkpoint inside the
-    # job that was running anyway — same lineage truncation, one fewer
-    # driver-blocking job per round. (k_core/bfs pace the same way: their
-    # frontier emptiness tests are full counts over a lazy checkpoint.)
+    # action over `updated`, so the checkpoint's final stage runs inside
+    # the job that was running anyway — same lineage truncation, one
+    # fewer job per round. Under AQE the call itself still runs every
+    # shuffle-map stage of the plan it checkpoints (the `distinct` here is
+    # one job at the call); only the final stage is deferred. (k_core/bfs
+    # pace the same way: their frontier emptiness tests are full counts
+    # over a lazy checkpoint.)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -145,12 +148,14 @@ def pagerank_exact(
     :func:`connected_components`).
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    # eager=False (r17): `nodes` is materialized by the n_total count right
-    # below; `e_deg` / per-round `ranks` materialize inside the first job
-    # that consumes them. The iteration count is FIXED (no convergence
-    # action), so the loop needs no blocking job at all — lineage is still
-    # truncated per round, the plan stays O(1)-deep, and the caller's
-    # single action executes the chained rounds back to back.
+    # eager=False (r17): the final stage of `nodes` runs in the n_total
+    # count right below; those of `e_deg` / per-round `ranks` run inside
+    # the first job that consumes them. Under AQE each call still runs the
+    # shuffle-map stages of the plan it checkpoints (each round's join and
+    # groupBy are jobs at build time); only the final stage is deferred.
+    # The iteration count is FIXED (no convergence action), so the loop
+    # adds no job of its own — lineage is still truncated per round and
+    # the plan stays O(1)-deep.
     nodes = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("t").alias("node")))
@@ -207,6 +212,11 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     and not. Count is identical under any orientation; degree ordering is
     purely the cost bound (an id orientation gives the same number, which
     is what the SQL oracle uses).
+
+    The other three counts come from ONE aggregate over the degree table,
+    cross-joined with the triangle count: ``n_nodes`` is its row count,
+    ``n_edges`` half the degree sum (each edge adds 2) and ``n_wedges``
+    the sum of ``d * (d - 1) / 2``.
     """
     # und / deg / oriented are each referenced several times below; without
     # checkpoints every reference re-expands the full upstream lineage
@@ -258,18 +268,12 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         on=["u", "w"],
     )
     tri = closed.agg(F.count(F.lit(1)).alias("n_triangles"))
-    summary = (
-        und.agg(F.count(F.lit(1)).alias("n_edges"))
-        .crossJoin(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
-        .crossJoin(
-            deg.agg(
-                F.sum(F.col("d") * (F.col("d") - 1) / 2)
-                .cast("long")
-                .alias("n_wedges")
-            )
-        )
-        .crossJoin(tri)
-    )
+    summary = deg.agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        # each undirected edge adds 2 to the degree sum; 0 on no edges
+        F.coalesce(F.expr("sum(d) div 2"), F.lit(0).cast("long")).alias("n_edges"),
+        F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("n_wedges"),
+    ).crossJoin(tri)
     return summary.select("n_nodes", "n_edges", "n_wedges", "n_triangles")
 
 
@@ -297,8 +301,10 @@ def k_core(
     handful of rounds.
     """
     # eager=False (r17): the per-round `weak` pacing count below is a
-    # full aggregate over `sym`, so it materializes the lazily-checkpointed
-    # edge set inside its own job — one fewer blocking job per round.
+    # full aggregate over `sym`, so the lazily-checkpointed edge set's
+    # final stage runs inside its job — one fewer job per round. Under AQE
+    # the call itself still runs the shuffle-map stages of the plan it
+    # checkpoints (the `distinct`); only the final stage is deferred.
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -361,12 +367,14 @@ def bfs_levels(
     like :func:`connected_components`.  At 100 TB the frontier is the
     only growing shuffle side and is bounded by the reachable set.
     """
-    # eager=False (r17): `sym` and the per-round `visited` union are
-    # materialized inside the round's pacing job (a full join+anti-join
-    # over both), so their own blocking jobs are saved; `nxt` is lazy too,
-    # with the emptiness test switched from limit(1) to a FULL count() so
-    # the pacing job itself materializes the checkpoint (limit(1) over a
-    # lazy checkpoint would half-materialize it).
+    # eager=False (r17): the final stages of `sym` and the per-round
+    # `visited` union run inside the round's pacing job (a full
+    # join+anti-join over both) instead of as jobs of their own; `nxt` is
+    # lazy too, with the emptiness test switched from limit(1) to a FULL
+    # count() so the pacing job itself finishes the checkpoint (limit(1)
+    # over a lazy checkpoint would half-materialize it). Under AQE each
+    # call still runs the shuffle-map stages of the plan it checkpoints
+    # (a `distinct`, a join); only the final stage is deferred.
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))

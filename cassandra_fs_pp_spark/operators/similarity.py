@@ -332,12 +332,14 @@ def lsh_topk(
         )
         .repartition(n_parts, "__g")
         # eager=False: the pin still materializes exactly once (first
-        # consumer computes, later consumers read the checkpoint), but no
-        # standalone checkpoint job runs at plan-build time. The eager
-        # form cost two extra sequential job barriers per query — ~0.7 s
-        # of pure scheduler latency at bench scale (measured: median
-        # 2.43 s eager vs 1.68 s lazy, identical results) and nothing at
-        # 100 TB where compute dominates.
+        # consumer computes, later consumers read the checkpoint). Under
+        # AQE the call itself runs the pinned plan's shuffle-map stages (the
+        # repartition's, at least) at plan-build time; only the final
+        # stage, which writes the checkpoint blocks, waits for the first
+        # consumer. The eager form cost two extra sequential job barriers
+        # per query — ~0.7 s of pure scheduler latency at bench scale
+        # (measured: median 2.43 s eager vs 1.68 s lazy, identical
+        # results) and nothing at 100 TB where compute dominates.
         .localCheckpoint(eager=False)
     )
     # One row per DISTINCT vector (deterministic representative: the

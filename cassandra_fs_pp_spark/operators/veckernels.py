@@ -191,13 +191,17 @@ def fixed_rows(X: np.ndarray, scale: int) -> np.ndarray:
 def sq_dequantize(X: np.ndarray, mn: np.ndarray, mx: np.ndarray, levels: int) -> np.ndarray:
     """SQ8 dequantize, operation-for-operation the SQL form
     ``tests/vecref.py`` keeps:
-    per element ``code = round(((v - mn) / rng) * levels)`` (0 where
-    ``rng = 0``), ``dq = mn + code * (rng / levels)``."""
+    per element ``code = CAST(round(((v - mn) / rng) * levels) AS INT)``
+    (0 where ``rng = 0``), ``dq = mn + code * (rng / levels)``.  The
+    non-ANSI cast turns a NaN into code 0 and saturates +-inf and every
+    out-of-range value to the int32 range, as Java's ``d2i`` does."""
     lv = float(levels)
     rng = mx - mn
     with np.errstate(divide="ignore", invalid="ignore"):
         scaled = ((X - mn) / rng) * lv
-    code = np.where(rng == 0.0, 0.0, round_half_up(np.where(rng == 0.0, 0.0, scaled)))
+        code = round_half_up(np.where(rng == 0.0, 0.0, scaled))
+    i32 = np.iinfo(np.int32)
+    code = np.clip(np.where(np.isnan(code), 0.0, code), i32.min, i32.max)
     return mn + code * (rng / lv)
 
 

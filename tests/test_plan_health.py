@@ -953,3 +953,26 @@ def test_plan_audit_counts_scans_by_table(spark, sf_dir, monkeypatch):
     section = plan_audit.audit(spark, "self_join", self_join)
     assert "- scans: 2," in section, section
     assert "- scans by table: documents×2\n" in section, section
+
+
+def test_bpe_build_and_triangle_census_job_budget(spark):
+    """Building ``text_bpe_tokenize_trie`` runs the trainer's one corpus
+    pass and one collect of the word-type table, then learns every merge
+    on the driver: at most 4 Spark jobs (19 with a pair count and an
+    argmax collect per round).  Executing ``graph_triangle_count`` runs
+    at most 9 (13 with a separate aggregate per node, edge and wedge
+    count)."""
+    from tests.test_toa5_pipeline import _jobs
+
+    qs = entrymod.queries()
+    n_build = _jobs(
+        spark, "bpe-trie-build", lambda: qs["text_bpe_tokenize_trie"](spark, SF)
+    )
+    assert n_build <= 4, n_build
+    tri = qs["graph_triangle_count"](spark, SF)
+    n_exec = _jobs(
+        spark,
+        "triangle-noop",
+        lambda: tri.write.format("noop").mode("overwrite").save(),
+    )
+    assert n_exec <= 9, n_exec

@@ -1286,17 +1286,16 @@ def test_bpe_batched_batch1_equals_sequential(spark):
 
 
 def test_sym_capped_top_matches_window_form(spark):
-    """r18 (VERDICT r17 item 7): the sym_cap pool filter folded into the
-    TakeOrdered (_sym_capped_top's per-symbol counter scan over a global
-    ordered prefix) must select EXACTLY the rows the two per-symbol
-    row_number windows selected — verified on a hot-symbol flood fixture
-    large enough to force the retry (prefix-exhausted) path, and on a
-    random pair table."""
+    """The trainer's driver-side pool (_pair_pool's per-symbol counter
+    scan over the ordered pair table) must select EXACTLY the rows the
+    two per-symbol row_number windows of the SQL form select — on a
+    hot-symbol flood, on a random pair table, and when the cap leaves
+    fewer survivors than wanted (whole-table exhaustion)."""
     import random
 
     from pyspark.sql import Window
 
-    from cassandra_fs_pp_spark.functions.text import _sym_capped_top
+    from cassandra_fs_pp_spark.functions.text import _pair_pool
 
     def window_form(cnts, want, cap):
         order = (F.desc("cnt"), F.asc("a"), F.asc("b"))
@@ -1315,9 +1314,8 @@ def test_sym_capped_top_matches_window_form(spark):
         return capped.orderBy(*order).limit(want).collect()
 
     rng = random.Random(18)
-    # flood: one hot left symbol owns the 600 highest counts, so the
-    # first 512-row prefix proves only `cap` survivors and the scan
-    # must retry with a larger prefix — still exact.
+    # flood: one hot left symbol owns the 600 highest counts, so all but
+    # `cap` of them must be skipped before the tail enters the pool
     flood = [("h", f"r{i:04d}", 10_000 - i) for i in range(600)]
     tail = [(f"a{i:03d}", f"b{i:03d}", 100 - (i % 7)) for i in range(80)]
     rnd_rows = [
@@ -1329,7 +1327,7 @@ def test_sym_capped_top_matches_window_form(spark):
         (rnd_rows, 24, 3),
         (tail, 200, 1),  # want > survivors: whole-table exhaustion
     ]:
-        # (a, b) must be unique (the trainer groupBy guarantees it)
+        # (a, b) must be unique (the trainer's pair count guarantees it)
         uniq = {}
         for a, b, c in rows:
             uniq[(a, b)] = c
@@ -1340,11 +1338,7 @@ def test_sym_capped_top_matches_window_form(spark):
         want_rows = [
             (r["a"], r["b"], r["cnt"]) for r in window_form(cnts, want, cap)
         ]
-        got_rows = [
-            (r["a"], r["b"], r["cnt"])
-            for r in _sym_capped_top(cnts, want, cap)
-        ]
-        assert got_rows == want_rows, (want, cap)
+        assert _pair_pool(uniq, want, cap) == want_rows, (want, cap)
 
 
 def test_bpe_batched_selected_rules_disjoint(spark):
@@ -1513,25 +1507,11 @@ def test_bpe_pipeline_batch1_equals_sequential_tokenize(spark):
         assert r["compression"] == round(r["n_chars"] / r["n_bpe_tokens"], 6)
 
 
-def test_bpe_pipeline_blank_doc_oracle_parity(spark, tmp_path):
-    """ADVICE r16: a whitespace-only document must survive BOTH engines
-    with the same (n_words=0, n_chars=0, n_bpe_tokens=0,
-    compression=NULL) row — the engine drives per-doc stats from the
-    documents table itself, and the oracles now mirror that with a
-    LEFT JOIN from documents instead of grouping only over non-empty
-    words (which silently dropped blank docs)."""
-    import duckdb
+def _write_documents(tmp_path, texts) -> None:
+    """``texts`` as a one-file ``documents`` table under ``tmp_path``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import __spark_entry__ as entrymod
-
-    texts = [
-        "low low low lower lowest",
-        "   \t  ",  # whitespace-only: the row under test
-        "newest newest new news",
-        "banana bandana cabana",
-    ]
     tbl = pa.table(
         {
             "doc_id": pa.array(range(len(texts)), pa.int64()),
@@ -1543,6 +1523,38 @@ def test_bpe_pipeline_blank_doc_oracle_parity(spark, tmp_path):
     )
     pq.write_table(tbl, f"{tmp_path}/documents.parquet")
 
+
+def _oracle_rows(tmp_path, qname) -> list:
+    """The DuckDB oracle's rows of ``qname`` over ``tmp_path``'s
+    documents table."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    return con.execute(entrymod.oracle_sql()[qname]).fetchall()
+
+
+def test_bpe_pipeline_blank_doc_oracle_parity(spark, tmp_path):
+    """ADVICE r16: a whitespace-only document must survive BOTH engines
+    with the same (n_words=0, n_chars=0, n_bpe_tokens=0,
+    compression=NULL) row — the engine drives per-doc stats from the
+    documents table itself, and the oracles now mirror that with a
+    LEFT JOIN from documents instead of grouping only over non-empty
+    words (which silently dropped blank docs)."""
+    import __spark_entry__ as entrymod
+
+    texts = [
+        "low low low lower lowest",
+        "   \t  ",  # whitespace-only: the row under test
+        "newest newest new news",
+        "banana bandana cabana",
+    ]
+    _write_documents(tmp_path, texts)
+
     for qname in ("text_bpe_pipeline", "text_bpe_tokenize"):
         got = {
             r["doc_id"]: (
@@ -1551,20 +1563,43 @@ def test_bpe_pipeline_blank_doc_oracle_parity(spark, tmp_path):
             )
             for r in entrymod.queries()[qname](spark, str(tmp_path)).collect()
         }
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW documents AS"
-            f" SELECT * FROM '{tmp_path}/documents.parquet'"
-        )
-        want = {
-            row[0]: tuple(row[1:])
-            for row in con.execute(
-                entrymod.oracle_sql()[qname]
-            ).fetchall()
-        }
+        want = {row[0]: tuple(row[1:]) for row in _oracle_rows(tmp_path, qname)}
         assert set(got) == set(range(len(texts))), qname
         assert got == want, qname
         assert got[1] == (0, 0, 0, None), qname
+
+
+def test_bpe_non_ascii_ties_oracle_parity(spark, tmp_path):
+    """Ten pairs tie at count 3, over the symbols ``_ z é ｚ 😀`` (1-, 2-,
+    3- and 4-byte UTF-8; ``ｚ`` U+FF5A sorts after ``😀`` in UTF-16 but
+    before it by code point), so every merge the trainers learn is
+    decided by the ``(a ASC, b ASC)`` tie-break.  The driver's string
+    order must be Spark's and DuckDB's: byte order of the UTF-8
+    encoding.  Checked against each BPE query's DuckDB oracle, and the
+    sequential merges pinned."""
+    import __spark_entry__ as entrymod
+
+    syms = ["_", "z", "é", "ｚ", "😀"]
+    words = [f"x{s}" for s in syms] + [f"{s}y" for s in syms]
+    _write_documents(tmp_path, [" ".join(words)] * 3)
+    qs = entrymod.queries()
+
+    merges = [
+        (r["lhs"], r["rhs"])
+        for r in qs["text_bpe_merges"](spark, str(tmp_path))
+        .orderBy("round")
+        .collect()
+    ]
+    assert merges == [
+        ("_", "y"), ("x", "_"), ("x", "z"), ("x", "é"), ("x", "ｚ"),
+        ("x", "😀"), ("z", "y"), ("é", "y"),
+    ], merges
+    for qname in (
+        "text_bpe_merges", "text_bpe_merges_batched", "text_bpe_pipeline",
+        "text_bpe_tokenize", "text_bpe_tokenize_trie",
+    ):
+        got = sorted(tuple(r) for r in qs[qname](spark, str(tmp_path)).collect())
+        assert got == sorted(_oracle_rows(tmp_path, qname)), qname
 
 
 def test_bpe_tokenize_counts_vs_python_reference(spark):

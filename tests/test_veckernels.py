@@ -129,6 +129,32 @@ def test_sq_dequantize_matches_sql(spark):
     for row_i, i in enumerate(sorted(raw)):
         assert sql_rows[i] == DQ[row_i].tolist(), i
 
+    # NaN, +-inf and finite values past the int range, with ANSI off:
+    # cast(round(...) as int) makes NaN code 0 and saturates the rest to
+    # the int32 range (Java d2i)
+    nan, inf = float("nan"), float("inf")
+    edge = [[nan, 1.0], [inf, -inf], [1e12, -1e12]]
+    df = spark.createDataFrame(
+        [(i, v, [0.0, 0.0], [4.0, 4.0]) for i, v in enumerate(edge)],
+        "vec_id long, embedding array<double>, __mn array<double>,"
+        " __mx array<double>",
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        sql_edge = [
+            list(r["dqv"])
+            for r in df.selectExpr(
+                "vec_id", f"{_dq_vec_sql('embedding', 255)} AS dqv"
+            )
+            .orderBy("vec_id")
+            .collect()
+        ]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    DQ = sq_dequantize(np.array(edge), np.zeros(2), np.full(2, 4.0), 255)
+    assert sql_edge == DQ.tolist(), (sql_edge, DQ.tolist())
+
 
 def test_sq_dequantize_zero_range_and_tie_rows(spark):
     # engineered: dim 0 constant (rng = 0 -> code 0, dq = mn); dim 1 has
